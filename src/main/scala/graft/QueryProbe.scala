@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 /** Stage-level wall attribution for ONE declared query — the r20
   * optimization round's "measure first" tool (guide §1): a bench
   * second is a sum of stages and jobs, and guessing which one
-  * dominates has been wrong before (BuildProbe's scaladoc lists the
-  * precedents). Reuses BuildProbe's listener shape on the bench's own
-  * session config so the attribution matches what graft.Bench times.
+  * dominates has been wrong before (SURVEY §22 lists the r18
+  * precedents). Runs on the bench's own session config so the
+  * attribution matches what graft.Bench times.
   *
   * Warmup runs the query once at SPARK_GRAFT_WARMUP_DIR (default
   * sf0.001) so JIT/codegen land outside the attributed run — same

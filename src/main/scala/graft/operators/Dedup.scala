@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators over `documents` — exact, n-gram Jaccard,
@@ -540,49 +540,23 @@ object Dedup {
     * the split exactly. */
   private[graft] def isDeltaBatch(id: Column): Column = id % 5 === 4
 
-  private def shingleIndexNames(d: String): (String, String, String) = {
-    val tag = (scala.util.hashing.MurmurHash3.stringHash(d).toLong
-      & 0xffffffffL).toHexString
-    (s"graft_shidx_post_$tag", s"graft_shidx_sets_$tag",
-      s"graft_shidx_df_$tag")
-  }
+  /** The persisted shingle index of dir `d`: postings, sets and df
+    * tables, all derived from one name tag ([[PersistedIndex]]). */
+  private def shingleIndex(d: String): PersistedIndex.Spec =
+    PersistedIndex.Spec("graft_shidx", "shingle index", d,
+      Seq("post" -> Some("s"), "sets" -> Some("doc_id"), "df" -> Some("s")))
 
-  private def shingleManifestPath(s: SparkSession, d: String)
-      : org.apache.hadoop.fs.Path = {
-    val tag = (scala.util.hashing.MurmurHash3.stringHash(d).toLong
-      & 0xffffffffL).toHexString
-    IndexManifest.path(s, "graft_shidx", tag)
-  }
-
-  private[graft] def readShingleManifest(s: SparkSession, d: String)
-      : Option[(String, Seq[(String, Long)])] =
-    IndexManifest.read(s, shingleManifestPath(s, d))
+  private def shingleNames(ix: PersistedIndex.Spec): (String, String, String) =
+    (ix.tables(0), ix.tables(1), ix.tables(2))
 
   /** Has `batchId` already been folded into `d`'s shingle index?
-    * The replay detector for maintaining streams: a manifest-listed
-    * batch arriving again is a foreachBatch replay whose append
-    * committed before the crash — probe it in [[deltaDedupOf]]'s
-    * excludeBatch mode and let the append no-op, instead of wedging
-    * the stream on the disjointness guard. One small file read. */
+    * The replay detector for maintaining streams: a replayed batch is
+    * probed in [[deltaDedupOf]]'s excludeBatch mode and its append
+    * no-ops, instead of wedging the stream on the disjointness
+    * guard. */
   def isShingleBatchApplied(s: SparkSession, d: String,
                             batchId: String): Boolean =
-    readShingleManifest(s, d).exists(_._2.exists(_._1 == batchId))
-
-  /** Durable store of every appended batch's (doc_id, text) rows —
-    * batch-sized, written BEFORE the table appends so a crash that
-    * leaves the index in a partial-append state (row counts short of
-    * baseRows + manifest batches) can be repaired by rebuilding the
-    * base and refolding the manifest-listed batches, instead of
-    * silently rebuilding from the corpus dir alone and LOSING
-    * stream-only arrivals whose checkpoints already committed (they
-    * would never replay). */
-  private def shingleBatchStore(s: SparkSession, d: String)
-      : org.apache.hadoop.fs.Path = {
-    val tag = (scala.util.hashing.MurmurHash3.stringHash(d).toLong
-      & 0xffffffffL).toHexString
-    new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"graft_shidx_batches_$tag")
-  }
+    PersistedIndex.isApplied(s, shingleIndex(d), batchId)
 
   /** Order-independent content fingerprint of a (doc_id, text) slice:
     * XOR of per-row xxhash64. Catches what a bare row count cannot —
@@ -621,7 +595,8 @@ object Dedup {
     * manifest tracks them, and the sets-row reconciliation
     * (baseRows + appended) doubles as the crash guard — an append
     * that died between table writes and the manifest update shows up
-    * as a count mismatch and triggers a clean rebuild.
+    * as a count mismatch, repaired by a base rebuild that refolds the
+    * manifest-listed batches ([[PersistedIndex.ensure]]).
     *
     * Bucket count scales with the slice ([[Tables.indexBuckets]]):
     * 32 (= local parallelism) through 1M rows, doubling per doubling
@@ -629,141 +604,46 @@ object Dedup {
     * tracks corpus size instead of capping at 32. */
   def ensureShingleIndex(s: SparkSession, d: String)
       : (String, String, String) = {
-    val names @ (postT, setsT, dfT) = shingleIndexNames(d)
-    // per-(context, dir) memo: a probe-heavy caller (Bench reps, a
-    // real ingest loop) pays the freshness counts + fingerprint scan
-    // once, not per batch. Keyed by applicationId — unique per
-    // SparkContext, and sessions of one context share the SharedState
-    // catalog the tables live in, so sharing the memo across them is
-    // correct (an identity-hash key could collide with a dead
-    // context's and skip the existence check against a fresh empty
-    // catalog). Only ever set AFTER the check/build below succeeds;
-    // dropping the tables mid-session is outside the contract
-    // (nothing does), and appends keep the manifest invariant.
-    val memoKey = s.sparkContext.applicationId + ":" + d
-    if (freshIndexMemo.contains(memoKey)) return names
+    val ix = shingleIndex(d)
+    val names @ (_, setsT, _) = shingleNames(ix)
+    if (PersistedIndex.isFresh(s, ix)) return names
     val corpus = Tables.documents(s, d)
       .filter(!isDeltaBatch(col("doc_id")))
-    val nCorpus = corpus.count()
-    val buckets = Tables.indexBuckets(nCorpus)
-    val expect = IndexManifest.Manifest(d, nCorpus,
-      corpusFingerprint(corpus), buckets, Nil)
-    val stored = readShingleManifest(s, d)
-    val sameBase = stored.exists(_._1.startsWith(expect.basePrefix))
-    // cross-JVM re-attach (the per-JVM catalog vs persistent warehouse
-    // split): recreate missing catalog entries from surviving files +
-    // their bucket-spec markers BEFORE the existence check, so a fresh
-    // session with a fresh manifest reuses the artifact instead of
-    // rebuilding. Only attempted when the manifest base matches this
-    // corpus — attaching stale tables just to drop them would pay
-    // pointless schema inference. Declined attaches (missing
-    // location/marker) fall through to the rebuild below.
-    if (sameBase) IndexManifest.reattachTables(s, Seq(
-      (postT, Some("s")), (setsT, Some("doc_id")), (dfT, Some("s"))))
-    val fresh = Seq(postT, setsT, dfT).forall(s.catalog.tableExists) &&
-      sameBase && stored.exists { case (_, batches) =>
-        s.table(setsT).count() == nCorpus + batches.map(_._2).sum
-      }
-    if (!fresh) {
-      // Two distinct not-fresh states, and they must NOT be conflated
-      // (the r14 advice): a manifest whose base prefix matches but
-      // whose sets count disagrees with baseRows + batches is a
-      // PARTIAL APPEND (a crash between an append's table writes and
-      // its manifest update) — the manifest-listed batches are
-      // stream-only arrivals whose checkpoints committed, so a plain
-      // rebuild-from-corpus would lose them FOREVER (they never
-      // replay). Those batches are refolded from the durable batch
-      // store after the base rebuild. Only a base-prefix mismatch (a
-      // real corpus change) discards the store: appends were folded
-      // against the old generation and their pair/probe semantics
-      // died with it.
-      val refold: Seq[(String, Long)] =
-        if (sameBase) stored.map(_._2).getOrElse(Nil) else Nil
-      val store = shingleBatchStore(s, d)
-      val storeFs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!sameBase && storeFs.exists(store)) storeFs.delete(store, true)
-      refold.foreach { case (bid, _) =>
-        val p = new org.apache.hadoop.fs.Path(store, bid)
-        if (!storeFs.exists(p)) throw new IllegalStateException(
-          s"shingle index for $d is in a partial-append state (sets " +
-            s"rows != baseRows + manifest batches) and appended batch " +
-            s"'$bid' has no persisted rows at $p — refusing to rebuild " +
-            "from the corpus dir alone because that silently drops " +
-            "stream-only arrivals whose checkpoints committed. " +
-            "Restore the batch store, or drop the index explicitly " +
-            "(dropShingleIndex) to accept the loss.")
-      }
-      Seq(postT, setsT, dfT).foreach { t =>
-        // the default catalog is per-session but the warehouse DIR
-        // persists; clear both entry and orphan location (the
-        // ensureIvfIndex rule)
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val wh = s.conf.get("spark.sql.warehouse.dir")
-        val p = new org.apache.hadoop.fs.Path(wh, t)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+    PersistedIndex.ensure(s, ix, {
+      val n = corpus.count()
+      IndexManifest.Manifest(d, n, corpusFingerprint(corpus),
+        Tables.indexBuckets(n), Nil)
+    }, setsT, fresh = true) { m =>
+      val buckets = m.buckets
       val sh = explodedShingles(corpus).cache()
-      writeShingleTables(s, names, sh,
-        (buckets, buckets, buckets),
-        org.apache.spark.sql.SaveMode.Overwrite)
+      writeShingleTables(s, names, sh, (buckets, buckets, buckets),
+        SaveMode.Overwrite)
       sh.unpersist(blocking = false)
-      refold.foreach { case (bid, _) =>
-        val bdf = s.read.parquet(
-          new org.apache.hadoop.fs.Path(store, bid).toString)
+      bdf => {
         val bsh = explodedShingles(bdf).cache()
-        writeShingleTables(s, names, bsh,
-          (buckets, buckets, buckets),
-          org.apache.spark.sql.SaveMode.Append)
+        writeShingleTables(s, names, bsh, (buckets, buckets, buckets),
+          SaveMode.Append)
         bsh.unpersist(blocking = false)
       }
-      // manifest LAST: its presence (with the full refolded batch
-      // list) asserts the tables are complete. A crash anywhere above
-      // leaves the OLD manifest in place — the next ensure re-detects
-      // the partial state and re-runs this recovery from the top
-      // (idempotent: every step is a rebuild or an Overwrite-less
-      // append onto freshly rebuilt tables).
-      IndexManifest.write(s, shingleManifestPath(s, d),
-        expect.copy(batches = refold))
     }
-    freshIndexMemo.add(memoKey)
     names
   }
 
   /** The three bucketed table writes shared by the base build, the
-    * append path, and partial-append refolds — ONE copy of the
-    * repartition-before-bucketed-write rule: a bucketed write emits
-    * one file per (task x present-bucket), so an unaligned upstream
-    * layout sprays tasks x buckets tiny files (the r14 AppendSmoke
-    * measured appends growing with corpus size from exactly this).
-    * repartition(buckets, key) uses the same murmur3 HashPartitioning
-    * as the bucket spec, so each task holds exactly one bucket -> one
-    * file; for aggregated frames whose shuffle already
-    * hash-partitions on the key, the explicit node collapses. */
+    * append path, and partial-append refolds. */
   private def writeShingleTables(s: SparkSession,
                                  names: (String, String, String),
                                  sh: DataFrame,
                                  buckets: (Int, Int, Int),
-                                 mode: org.apache.spark.sql.SaveMode)
-      : Unit = {
+                                 mode: SaveMode): Unit = {
     val (postT, setsT, dfT) = names
     val (postB, setsB, dfB) = buckets
-    sh.repartition(postB, col("s"))
-      .write.mode(mode).bucketBy(postB, "s").sortBy("s")
-      .format("parquet").saveAsTable(postT)
-    IndexManifest.markBuckets(s, postT, postB)
-    sh.groupBy("doc_id")
+    PersistedIndex.writeBucketed(s, sh, postT, "s", postB, mode)
+    PersistedIndex.writeBucketed(s, sh.groupBy("doc_id")
       .agg(sort_array(collect_list(col("s"))).as("ss"),
-        count(lit(1)).as("c"))
-      .repartition(setsB, col("doc_id"))
-      .write.mode(mode).bucketBy(setsB, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(setsT)
-    IndexManifest.markBuckets(s, setsT, setsB)
-    sh.groupBy("s").agg(count(lit(1)).as("gdf"))
-      .repartition(dfB, col("s"))
-      .write.mode(mode).bucketBy(dfB, "s").sortBy("s")
-      .format("parquet").saveAsTable(dfT)
-    IndexManifest.markBuckets(s, dfT, dfB)
+        count(lit(1)).as("c")), setsT, "doc_id", setsB, mode)
+    PersistedIndex.writeBucketed(s,
+      sh.groupBy("s").agg(count(lit(1)).as("gdf")), dfT, "s", dfB, mode)
   }
 
   /** Fold an already-probed batch into the persisted shingle index —
@@ -788,43 +668,25 @@ object Dedup {
     * Returns true if the batch was appended, false if it was already
     * in the manifest. Crash between a table append and the manifest
     * write leaves sets.count != baseRows + appended, which the next
-    * [[ensureShingleIndex]] freshness check turns into a rebuild. */
+    * [[ensureShingleIndex]] repairs from the batch store. */
   def appendToShingleIndex(s: SparkSession, d: String, batch: DataFrame,
                            batchId: String): Boolean = {
-    require(batchId.matches("[A-Za-z0-9_.\\-]+"),
-      s"batchId must match [A-Za-z0-9_.-]+ (manifest round-trip): $batchId")
-    val (postT, setsT, dfT) = ensureShingleIndex(s, d)
-    val stored = readShingleManifest(s, d).getOrElse(
-      throw new IllegalStateException(
-        s"shingle index for $d has no manifest after ensure"))
-    if (stored._2.exists(_._1 == batchId)) return false
-    requireDisjointFromIndex(s, setsT, batch,
-      s"appendToShingleIndex($batchId)")
-    // persist the batch rows FIRST (batch-sized, idempotent per id):
-    // a crash between the table appends below and the manifest update
-    // leaves the index partial-append, and ensureShingleIndex repairs
-    // that by refolding manifest-listed batches from this store —
-    // without it the repair could only rebuild from the corpus dir,
-    // silently dropping stream-only arrivals that never replay
-    batch.select(col("doc_id"), col("text"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        shingleBatchStore(s, d), batchId).toString)
-    val sh = explodedShingles(batch).cache()
-    // per-TABLE actual specs, not the manifest record: a crash inside
-    // a re-bucketing compact can leave tables with mixed specs (each
-    // rewrite renames independently) — appends must match each table
-    // or Spark's spec validation wedges the ingest until the compact
-    // converges them
-    def b(t: String): Int =
-      IndexManifest.appendBucketsOf(s, t, stored._1, s"shingle index $d")
-    writeShingleTables(s, (postT, setsT, dfT), sh,
-      (b(postT), b(setsT), b(dfT)), org.apache.spark.sql.SaveMode.Append)
-    sh.unpersist(blocking = false)
-    val nNew = batch.select("doc_id").distinct().count()
-    IndexManifest.appendBatch(s, shingleManifestPath(s, d),
-      stored._1, stored._2, batchId, nNew)
-    true
+    val ix = shingleIndex(d)
+    val names @ (postT, setsT, dfT) = shingleNames(ix)
+    PersistedIndex.append(s, ix, batch, batchId, "doc_id",
+      Seq("doc_id", "text"), setsT, () => ensureShingleIndex(s, d)) { txt =>
+      val sh = explodedShingles(batch).cache()
+      // per-TABLE actual specs, not the manifest record: a crash inside
+      // a re-bucketing compact can leave tables with mixed specs —
+      // appends must match each table or Spark's spec validation
+      // wedges the ingest until the compact converges them
+      def b(t: String): Int =
+        IndexManifest.appendBucketsOf(s, t, txt, s"shingle index $d")
+      writeShingleTables(s, names, sh, (b(postT), b(setsT), b(dfT)),
+        SaveMode.Append)
+      sh.unpersist(blocking = false)
+      batch.select("doc_id").distinct().count()
+    }
   }
 
   /** Fold the df table's append-accumulated partial rows back into
@@ -835,97 +697,30 @@ object Dedup {
     * layout stores; DedupSpec pins probe-before == probe-after), so
     * the cadence is pure cost tuning: run it when the per-probe
     * re-agg tax outgrows one df rewrite — e.g. nightly against a day
-    * of streamed micro-batches. Postings/sets appends need no
-    * folding (extra files per bucket keep the bucketed distribution;
-    * only df has mergeable rows).
+    * of streamed micro-batches.
     *
-    * The rewrite goes through a staging table + catalog RENAME so the
-    * df table is never read and overwritten in one plan; a crash
-    * mid-swap leaves the df table missing, which the next
-    * [[ensureShingleIndex]] turns into a clean rebuild. Returns true
-    * if a compaction ran, false when every applied batch was already
-    * folded (idempotent, the append-path convention). */
+    * Postings/sets rewrite too, as pure FILE-LAYOUT folds: every
+    * append added one file per bucket, so after N batches each
+    * probe's bucketed scan reads N+1 files per bucket; rows are
+    * untouched. All three tables re-bucket together against the GROWN
+    * doc count (the exchange-free probe joins align on the shared
+    * spec); `rebucketTo` overrides the sizing (tests / operator hook).
+    * The staging + rename rewrite ([[PersistedIndex.rewrite]]) means a
+    * crash mid-swap leaves a table missing, which the next
+    * [[ensureShingleIndex]] rebuilds. Returns true if a compaction
+    * ran, false when every applied batch was already folded and the
+    * spec matches (idempotent, the append-path convention). */
   def compactShingleIndex(s: SparkSession, d: String,
                           rebucketTo: Option[Int] = None): Boolean = {
+    val ix = shingleIndex(d)
     val (postT, setsT, dfT) = ensureShingleIndex(s, d)
-    val stored = readShingleManifest(s, d).getOrElse(
-      throw new IllegalStateException(
-        s"shingle index for $d has no manifest after ensure"))
-    val storedBuckets =
-      IndexManifest.bucketsOf(stored._1, s"shingle index $d")
-    // re-bucket against the GROWN doc count (base + appends) while we
-    // rewrite anyway: an index that grew past a Tables.indexBuckets
-    // threshold through appends would otherwise keep its build-time
-    // spec forever, capping probe-scan parallelism at the original
-    // bucket count. All three tables move together (the exchange-free
-    // probe joins align on the shared spec). rebucketTo overrides the
-    // sizing (tests / operator hook).
-    val buckets = rebucketTo.getOrElse(Tables.indexBuckets(
-      IndexManifest.indexRowsOf(stored._1, stored._2)))
-    if (stored._2.size <= IndexManifest.compactedOf(stored._1) &&
-        buckets == storedBuckets)
-      return false
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    def dropWithLocation(t: String): Unit = {
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(wh, t)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    def files(t: String) = PersistedIndex.files(s, t)
+    PersistedIndex.compact(s, ix, rebucketTo) { (_, _) => Seq(
+      PersistedIndex.Staged(dfT,
+        files(dfT).groupBy("s").agg(sum(col("gdf")).as("gdf")), Some("s")),
+      PersistedIndex.Staged(postT, files(postT), Some("s")),
+      PersistedIndex.Staged(setsT, files(setsT), Some("doc_id")))
     }
-    // each table rewrite goes through a staging table + catalog RENAME
-    // so a table is never read and overwritten in one plan; a crash
-    // mid-swap leaves that table missing, which the next
-    // ensureShingleIndex turns into a rebuild + batch refold. The
-    // rewrites are independent — a crash between them leaves some
-    // tables compacted and some not, which is correct in every
-    // combination (row CONTENT is unchanged for postings/sets, and a
-    // merged-but-unrecorded df just re-aggregates already-merged rows
-    // to the same sums).
-    def rewrite(t: String, key: String,
-                fold: DataFrame => DataFrame): Unit = {
-      val tmpT = t + "_c"
-      dropWithLocation(tmpT)
-      // read the table's FILES, not the catalog table: the bucketed
-      // scan advertises HashPartitioning(key, buckets), which makes
-      // the explicit repartition below "redundant" and elided — while
-      // AQE's DisableUnnecessaryBucketedScan (no join/agg downstream
-      // for the identity folds) simultaneously degrades the actual
-      // scan to arbitrary coalesced file splits. Net effect: tasks
-      // hold many buckets each and the bucketed write sprays
-      // tasks x buckets files — the exact layout this compaction
-      // exists to fold (caught by the DedupSpec layout test). A plain
-      // parquet read reports unknown partitioning, so the shuffle
-      // really runs and each task lands exactly one bucket.
-      val files = s.read.parquet(
-        new org.apache.hadoop.fs.Path(wh, t).toString)
-      fold(files).repartition(buckets, col(key))
-        .write.bucketBy(buckets, key).sortBy(key)
-        .format("parquet").saveAsTable(tmpT)
-      // marker while still at the staging path; the RENAME moves the
-      // managed directory, marker included, so it always describes
-      // exactly the files beside it (the reattach contract)
-      IndexManifest.markBuckets(s, tmpT, buckets)
-      dropWithLocation(t)
-      s.sql(s"ALTER TABLE $tmpT RENAME TO $t")
-    }
-    // df: fold append-accumulated partial counts back to one row per
-    // shingle (the original compaction — restores the no-reagg probe)
-    rewrite(dfT, "s", _.groupBy("s").agg(sum(col("gdf")).as("gdf")))
-    // postings/sets: pure FILE-LAYOUT folds — every append added one
-    // file per bucket, so after N daily batches each probe's bucketed
-    // scan reads N+1 files per bucket (open/seek overhead, broken
-    // within-bucket sort runs). Rows are untouched; the rewrite
-    // collapses each bucket back to one file (probes exactly
-    // unchanged — DedupSpec pins probe-before == probe-after).
-    rewrite(postT, "s", identity)
-    rewrite(setsT, "doc_id", identity)
-    val mp = shingleManifestPath(s, d)
-    IndexManifest.setCompacted(s, mp, stored._1, stored._2,
-      stored._2.size)
-    if (buckets != storedBuckets)
-      IndexManifest.read(s, mp).foreach { case (txt, _) =>
-        IndexManifest.setBuckets(s, mp, txt, buckets) }
-    true
   }
 
   /** Condition-driven maintenance for the persisted shingle index —
@@ -934,8 +729,8 @@ object Dedup {
     * are frozen by design — the prefix theorem holds for any rarity
     * order and verification is exact, so staleness can reorder
     * prefixes but never change the verified pair set; and the 64-bit
-    * shingle hash leaves nothing to concentrate — the 5.12M-doc
-    * SkewAudit measured bucket max/median 1.01x). What remains is
+    * shingle hash leaves nothing to concentrate — a 5.12M-doc audit
+    * measured bucket max/median 1.01x, SURVEY §19). What remains is
     * layout: >= `compactAfter` uncompacted appended batches (each adds
     * one file per bucket and partial df rows) or a bucket spec the
     * grown doc count has outsized trigger [[compactShingleIndex]];
@@ -947,62 +742,18 @@ object Dedup {
                              Maintenance.DefaultCompactAfter,
                            dryRun: Boolean = false): MaintenanceReport = {
     ensureShingleIndex(s, d)
-    val stored = readShingleManifest(s, d).getOrElse(
-      throw new IllegalStateException(
-        s"shingle index for $d has no manifest after ensure"))
-    val applied = stored._2.size
-    val uncompacted = applied - IndexManifest.compactedOf(stored._1)
-    val storedBuckets =
-      IndexManifest.bucketsOf(stored._1, s"shingle index $d")
-    val target = Tables.indexBuckets(
-      IndexManifest.indexRowsOf(stored._1, stored._2))
-    def report(action: String, ran: Boolean) =
-      MaintenanceReport("shingle", action, ran, applied, uncompacted,
-        storedBuckets, target, -1L, -1L)
-    if (applied == 0) report("none", ran = false)
-    else if (uncompacted >= compactAfter || target != storedBuckets)
-      report("compact", ran = !dryRun && compactShingleIndex(s, d))
-    else report("none", ran = false)
+    val l = PersistedIndex.layout(s, shingleIndex(d))
+    if (l.wantsCompact(compactAfter))
+      l.report("shingle", "compact", ran = !dryRun && compactShingleIndex(s, d))
+    else l.report("shingle", "none", ran = false)
   }
 
-  /** The runtime face of the disjointness contract: batch doc_ids
-    * must not already be in the indexed sets table — a violation
-    * corrupts pair orientation and join multiplicities SILENTLY, so
-    * it must fail loudly instead ([[IndexManifest.requireDisjoint]]). */
-  private def requireDisjointFromIndex(s: SparkSession, setsT: String,
-                                       batch: DataFrame,
-                                       who: String): Unit =
-    IndexManifest.requireDisjoint(s, setsT, "doc_id", batch, who)
-
-  private val freshIndexMemo =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  /** Test hook: forget memoized freshness so the next
-    * [[ensureShingleIndex]] re-runs the real check (DedupSpec's
-    * reuse law must exercise the check, not the memo). */
-  private[graft] def forgetFreshIndexMemo(): Unit = freshIndexMemo.clear()
-
-  /** Drop the persisted shingle index (tables + manifest + memo) so
-    * the next ensure rebuilds from scratch — the measurement hook
-    * [[graft.AppendSmoke]] uses to time a cold build against an
-    * append on the same corpus. */
-  private[graft] def dropShingleIndex(s: SparkSession, d: String): Unit = {
-    val (postT, setsT, dfT) = shingleIndexNames(d)
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    Seq(postT, setsT, dfT).foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(wh, t)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val mp = shingleManifestPath(s, d)
-    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(mp)) fs.delete(mp, false)
-    val bs = shingleBatchStore(s, d)
-    if (fs.exists(bs)) fs.delete(bs, true)
-    freshIndexMemo.remove(s.sparkContext.applicationId + ":" + d)
-  }
+  /** Drop the persisted shingle index (tables, staging leftovers,
+    * manifest, batch store, memo) so the next ensure rebuilds from
+    * scratch — the measurement hook [[graft.AppendSmoke]] uses to
+    * time a cold build against an append on the same corpus. */
+  private[graft] def dropShingleIndex(s: SparkSession, d: String): Unit =
+    PersistedIndex.drop(s, shingleIndex(d))
 
   /** The UNmaterialized q_dedup_delta pipeline — exposed so PlanSpec
     * can assert the index-probe plan shape (the query entry
@@ -1023,7 +774,8 @@ object Dedup {
     // hasAppends gate deltaDedupOf already pays). Every path taking
     // CALLER data keeps the guard on unconditionally.
     ensureShingleIndex(s, d)
-    val appended = readShingleManifest(s, d).exists(_._2.nonEmpty)
+    val appended =
+      PersistedIndex.read(s, shingleIndex(d)).exists(_._2.nonEmpty)
     deltaDedupOf(s, d,
       Tables.documents(s, d).filter(isDeltaBatch(col("doc_id"))),
       checkDisjoint = appended)
@@ -1066,8 +818,10 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val tau = 0.8
     val (postT, setsT, dfT) = ensureShingleIndex(s, d)
+    // batch doc_ids already in the sets table corrupt pair orientation
+    // and join multiplicities SILENTLY — fail loudly instead
     if (checkDisjoint)
-      requireDisjointFromIndex(s, setsT, batch, "deltaDedupOf")
+      IndexManifest.requireDisjoint(s, setsT, "doc_id", batch, "deltaDedupOf")
     val bids =
       if (excludeBatch) Some(batch.select("doc_id").distinct()) else None
     def minusBatch(t: DataFrame): DataFrame =
@@ -1087,8 +841,8 @@ object Dedup {
     // manifest listing appended batches NOT yet folded by
     // [[compactShingleIndex]] (one small file read; the expensive
     // freshness work stays memoized in ensure).
-    val hasAppends = readShingleManifest(s, d).exists { case (txt, bs) =>
-      bs.size > IndexManifest.compactedOf(txt)
+    val hasAppends = PersistedIndex.read(s, shingleIndex(d)).exists {
+      case (txt, bs) => bs.size > IndexManifest.compactedOf(txt)
     }
     val gdfTbl =
       if (hasAppends)

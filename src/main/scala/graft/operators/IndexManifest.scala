@@ -16,7 +16,10 @@ import org.apache.spark.sql.SparkSession
   * the base prefix for EXACT equality, so no token-level parse can
   * false-positive; only the append list — whose ids are restricted to
   * `[A-Za-z0-9_.-]` at append time — is parsed back, plus the bucket
-  * count appends must match. */
+  * count appends must match.
+  *
+  * This object is the FORMAT (render, parse, pure text edits);
+  * [[PersistedIndex]] decides when a manifest is written. */
 private[graft] object IndexManifest {
 
   final case class Manifest(src: String, baseRows: Long, fp: Long,
@@ -55,19 +58,10 @@ private[graft] object IndexManifest {
 
   /** Insert or replace the refined-through count, leaving every other
     * field byte-identical. */
-  def setRefinedThrough(s: SparkSession, p: org.apache.hadoop.fs.Path,
-                        storedTxt: String, n: Int): Unit = {
-    val txt =
-      if (RefinedRe.findFirstIn(storedTxt).isDefined)
-        RefinedRe.replaceFirstIn(storedTxt, s""""rfThrough":$n""")
-      else {
-        val at = storedTxt.indexOf("\"batches\":")
-        require(at >= 0, s"manifest has no batches field: $storedTxt")
-        storedTxt.substring(0, at) + s""""rfThrough":$n,""" +
-          storedTxt.substring(at)
-      }
-    writeText(s, p, txt)
-  }
+  def withRefinedThrough(storedTxt: String, n: Int): String =
+    if (RefinedRe.findFirstIn(storedTxt).isDefined)
+      RefinedRe.replaceFirstIn(storedTxt, s""""rfThrough":$n""")
+    else insertBeforeBatches(storedTxt, s""""rfThrough":$n,""")
 
   /** Assignment-fit baseline (micro-units: cosine x 1e6) recorded at
     * build/refresh time — the fit canary's reference quantile
@@ -79,18 +73,15 @@ private[graft] object IndexManifest {
 
   /** Insert or replace the fit baseline, leaving every other field
     * byte-identical (base identity, buckets, batch list unchanged). */
-  def setFitBaseline(s: SparkSession, p: org.apache.hadoop.fs.Path,
-                     storedTxt: String, micro: Long): Unit = {
-    val txt =
-      if (FitRe.findFirstIn(storedTxt).isDefined)
-        FitRe.replaceFirstIn(storedTxt, s""""fitq":$micro""")
-      else {
-        val at = storedTxt.indexOf("\"batches\":")
-        require(at >= 0, s"manifest has no batches field: $storedTxt")
-        storedTxt.substring(0, at) + s""""fitq":$micro,""" +
-          storedTxt.substring(at)
-      }
-    writeText(s, p, txt)
+  def withFitBaseline(storedTxt: String, micro: Long): String =
+    if (FitRe.findFirstIn(storedTxt).isDefined)
+      FitRe.replaceFirstIn(storedTxt, s""""fitq":$micro""")
+    else insertBeforeBatches(storedTxt, s""""fitq":$micro,""")
+
+  private def insertBeforeBatches(storedTxt: String, field: String): String = {
+    val at = storedTxt.indexOf("\"batches\":")
+    require(at >= 0, s"manifest has no batches field: $storedTxt")
+    storedTxt.substring(0, at) + field + storedTxt.substring(at)
   }
 
   /** How many of the applied batches have had their partial stat rows
@@ -132,9 +123,6 @@ private[graft] object IndexManifest {
     val out = fs.create(p, true)
     try out.write(txt.getBytes("UTF-8")) finally out.close()
   }
-
-  def write(s: SparkSession, p: org.apache.hadoop.fs.Path,
-            m: Manifest): Unit = writeText(s, p, m.render)
 
   /** The bucket spec recorded at build time — appends must match it
     * without re-counting the corpus (append cost tracks the batch). */
@@ -230,10 +218,9 @@ private[graft] object IndexManifest {
     * freshness checks then fall through to the normal rebuild. Purely
     * catalog-side: no file is written, so a declined or half-applied
     * re-attach is repaired by the ensure's existing drop-and-rebuild.
-    * Re-attached tables are EXTERNAL (explicit LOCATION) — every drop
-    * site in this codebase already pairs DROP with an explicit
-    * location delete, so the managed/external distinction never
-    * leaks. */
+    * Re-attached tables are EXTERNAL (explicit LOCATION) — the one
+    * drop ([[PersistedIndex]]) pairs DROP with an explicit location
+    * delete, so the managed/external distinction never leaks. */
   def reattachTables(s: SparkSession,
                      tables: Seq[(String, Option[String])]): Boolean = {
     val wh = s.conf.get("spark.sql.warehouse.dir")
@@ -292,22 +279,19 @@ private[graft] object IndexManifest {
           "multiplicities); rebuild the index or re-key the batch")
   }
 
-  /** Rewrite the stored manifest with one more applied batch; the
-    * validated stored text is kept verbatim and only the batch list
-    * extended (base fields were checked by the ensure that preceded
-    * the append, this app). */
-  def appendBatch(s: SparkSession, p: org.apache.hadoop.fs.Path,
-                  storedTxt: String, batches: Seq[(String, Long)],
-                  id: String, rows: Long): Unit =
-    rewriteBatches(s, p, storedTxt, batches :+ (id, rows),
-      compactedOf(storedTxt))
+  /** The stored manifest with one more applied batch; the validated
+    * stored text is kept verbatim and only the batch list extended
+    * (base fields were checked by the ensure that preceded the
+    * append, this app). */
+  def withBatch(storedTxt: String, batches: Seq[(String, Long)],
+                id: String, rows: Long): String =
+    rewriteBatches(storedTxt, batches :+ (id, rows), compactedOf(storedTxt))
 
   /** Record that the first `compacted` applied batches' partial stat
     * rows have been folded into one-row-per-key form. */
-  def setCompacted(s: SparkSession, p: org.apache.hadoop.fs.Path,
-                   storedTxt: String, batches: Seq[(String, Long)],
-                   compacted: Int): Unit =
-    rewriteBatches(s, p, storedTxt, batches, compacted)
+  def withCompacted(storedTxt: String, batches: Seq[(String, Long)],
+                    compacted: Int): String =
+    rewriteBatches(storedTxt, batches, compacted)
 
   /** Sum of base + applied-batch rows — the GROWN size an
     * append-accumulated index actually holds, which re-bucketing
@@ -325,20 +309,17 @@ private[graft] object IndexManifest {
     * rewritten with `buckets`); appends pick the new spec up via
     * [[bucketsOf]]. The stored text is kept verbatim apart from the
     * buckets field — base identity and batch list unchanged. */
-  def setBuckets(s: SparkSession, p: org.apache.hadoop.fs.Path,
-                 storedTxt: String, buckets: Int): Unit =
-    writeText(s, p, BucketsRe.replaceFirstIn(storedTxt,
-      s""""buckets":$buckets"""))
+  def withBuckets(storedTxt: String, buckets: Int): String =
+    BucketsRe.replaceFirstIn(storedTxt, s""""buckets":$buckets""")
 
-  private def rewriteBatches(s: SparkSession, p: org.apache.hadoop.fs.Path,
-                             storedTxt: String,
+  private def rewriteBatches(storedTxt: String,
                              batches: Seq[(String, Long)],
-                             compacted: Int): Unit = {
+                             compacted: Int): String = {
     val prefix = storedTxt.substring(0,
       storedTxt.indexOf("\"batches\":") + "\"batches\":".length)
     val tail = if (compacted > 0) s""","dfCompacted":$compacted}"""
       else "}"
-    writeText(s, p, prefix + batches.map { case (bid, r) =>
-      s"""{"id":"$bid","rows":$r}""" }.mkString("[", ",", "]") + tail)
+    prefix + batches.map { case (bid, r) =>
+      s"""{"id":"$bid","rows":$r}""" }.mkString("[", ",", "]") + tail
   }
 }

@@ -54,7 +54,7 @@ object Maintenance {
     * batches ([[Similarity.refineKnnGraphIndex]]): folds keep exact
     * top-k algebra but skip the NN-descent pass, so refinement
     * coverage goes stale batch by batch. Measured at the 512k rung
-    * (r20, GraphFoldDecayProbe — 8 x 2k fresh-id corpus-slice folds,
+    * (r20 fold-decay probe, SURVEY §24 — 8 x 2k fresh-id corpus-slice folds,
     * the duplicate-shaped production ingest): tau-recall HOLDS
     * within probe noise across all 8 folds (0.796-0.822 vs fresh
     * 0.803 — duplicate arrivals' tau-mates share the argmax cell, so
@@ -65,7 +65,8 @@ object Maintenance {
     * measured few-point lift; a distribution-SHIFTED ingest (novel
     * directions, not duplicates) would decay faster — the
     * drift-repair path (occupancy/fit canary -> refresh -> rebuild)
-    * covers that regime, measured separately by GraphDriftSmoke. */
+    * covers that regime, measured separately (r20 drift smoke,
+    * SURVEY §24). */
   val DefaultRefineAfter = 8
   /** Fit-GAP canary trigger: refresh when the fraction of sampled
     * indexed rows whose gap — (max cosine to any other row of its own

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Lexical retrieval and hybrid rank fusion — the search face of a
@@ -138,38 +138,11 @@ object Retrieval {
   // grown corpus (Tables.indexBuckets).
   // ---------------------------------------------------------------
 
-  private def lexIndexNames(d: String): (String, String) = {
-    val tag = (scala.util.hashing.MurmurHash3.stringHash(d).toLong
-      & 0xffffffffL).toHexString
-    (s"graft_lexidx_post_$tag", s"graft_lexidx_dl_$tag")
-  }
-
-  private def lexManifestPath(s: SparkSession, d: String)
-      : org.apache.hadoop.fs.Path = {
-    val tag = (scala.util.hashing.MurmurHash3.stringHash(d).toLong
-      & 0xffffffffL).toHexString
-    IndexManifest.path(s, "graft_lexidx", tag)
-  }
-
-  private[graft] def readLexManifest(s: SparkSession, d: String)
-      : Option[(String, Seq[(String, Long)])] =
-    IndexManifest.read(s, lexManifestPath(s, d))
-
-  /** Durable (doc_id, text) store of every appended batch — written
-    * BEFORE the table appends so a partial-append crash repairs by
-    * refolding manifest-listed batches instead of silently dropping
-    * stream-only arrivals (the shingle-index posture, r14 advice). */
-  private def lexBatchStore(s: SparkSession, d: String)
-      : org.apache.hadoop.fs.Path = {
-    val tag = (scala.util.hashing.MurmurHash3.stringHash(d).toLong
-      & 0xffffffffL).toHexString
-    new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"graft_lexidx_batches_$tag")
-  }
-
-  private val freshLexMemo =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
+  /** The persisted lexical index of dir `d`: postings + doclen, all
+    * names from one tag ([[PersistedIndex]]). */
+  private def lexIndex(d: String): PersistedIndex.Spec =
+    PersistedIndex.Spec("graft_lexidx", "lexical index", d,
+      Seq("post" -> Some("th"), "dl" -> Some("doc_id")))
 
   /** (n_docs, sum_dl) per index GENERATION — keyed by the manifest
     * text, so any append (which rewrites the manifest) invalidates
@@ -182,111 +155,57 @@ object Retrieval {
   private val lexStatsMemo =
     new scala.collection.concurrent.TrieMap[String, (Long, Long)]()
 
-  private[graft] def forgetLexMemo(): Unit = {
-    freshLexMemo.clear(); lexStatsMemo.clear()
-  }
-
-  /** The two bucketed writes shared by build, append and refold — the
-    * repartition-before-bucketed-write rule (CLAUDE.md 20) in one
-    * place. `docs` is (doc_id, text); rows written to doclen == rows
-    * of `docs` (dl=0 docs kept), the manifest reconciliation unit. */
+  /** The two bucketed writes shared by build, append and refold.
+    * `docs` is (doc_id, text); rows written to doclen == rows of
+    * `docs` (dl=0 docs kept), the manifest reconciliation unit. */
   private def writeLexTables(s: SparkSession, names: (String, String),
                              docs: DataFrame, buckets: (Int, Int),
-                             mode: org.apache.spark.sql.SaveMode): Unit = {
+                             mode: SaveMode): Unit = {
     val (postT, dlT) = names
     val (postB, dlB) = buckets
     val toks = tokensOf(docs).cache()
-    toks.groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-      .withColumn("th", xxhash64(col("t")))
-      .select("th", "t", "doc_id", "tf")
-      .repartition(postB, col("th"))
-      .write.mode(mode).bucketBy(postB, "th").sortBy("th")
-      .format("parquet").saveAsTable(postT)
-    IndexManifest.markBuckets(s, postT, postB)
-    docs.select("doc_id")
+    PersistedIndex.writeBucketed(s,
+      toks.groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
+        .withColumn("th", xxhash64(col("t")))
+        .select("th", "t", "doc_id", "tf"), postT, "th", postB, mode)
+    PersistedIndex.writeBucketed(s, docs.select("doc_id")
       .join(toks.groupBy("doc_id").agg(count(lit(1)).as("dl")),
         Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
-      .repartition(dlB, col("doc_id"))
-      .write.mode(mode).bucketBy(dlB, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(dlT)
-    IndexManifest.markBuckets(s, dlT, dlB)
+      .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl")),
+      dlT, "doc_id", dlB, mode)
     toks.unpersist(blocking = false)
   }
 
   /** Persisted lexical index over dir `d`'s FULL documents table
     * (retrieval serves the whole corpus — there is no held-out delta
     * slice here). Freshness, staleness, partial-append repair and
-    * memoization all follow [[Dedup.ensureShingleIndex]]: manifest
-    * identity is src + row count + xxhash64 content fingerprint; a
-    * partial append (manifest base matches, doclen rows short of
-    * baseRows + batches) rebuilds the base and REFOLDS manifest-listed
-    * batches from the durable batch store, failing loudly if the
-    * store is gone. */
+    * memoization are [[PersistedIndex.ensure]]'s: manifest identity is
+    * src + row count + xxhash64 content fingerprint; a partial append
+    * (manifest base matches, doclen rows short of baseRows + batches)
+    * rebuilds the base and REFOLDS manifest-listed batches from the
+    * durable batch store, failing loudly if the store is gone. */
   def ensureLexIndex(s: SparkSession, d: String): (String, String) = {
-    val names @ (postT, dlT) = lexIndexNames(d)
-    val memoKey = s.sparkContext.applicationId + ":" + d
-    if (freshLexMemo.contains(memoKey)) return names
+    val ix = lexIndex(d)
+    val names @ (_, dlT) = (ix.tables(0), ix.tables(1))
+    if (PersistedIndex.isFresh(s, ix)) return names
     val corpus = Tables.documents(s, d)
-    val nCorpus = corpus.count()
-    val buckets = Tables.indexBuckets(nCorpus)
-    val expect = IndexManifest.Manifest(d, nCorpus,
-      Dedup.corpusFingerprint(corpus), buckets, Nil)
-    val stored = readLexManifest(s, d)
-    val sameBase = stored.exists(_._1.startsWith(expect.basePrefix))
-    // cross-JVM re-attach (the ensureShingleIndex rule): recreate
-    // missing catalog entries from surviving warehouse files + bucket
-    // markers; declined attaches fall through to the rebuild below
-    if (sameBase) IndexManifest.reattachTables(s, Seq(
-      (postT, Some("th")), (dlT, Some("doc_id"))))
-    val fresh = Seq(postT, dlT).forall(s.catalog.tableExists) &&
-      sameBase && stored.exists { case (_, batches) =>
-        s.table(dlT).count() == nCorpus + batches.map(_._2).sum
-      }
-    if (!fresh) {
-      val refold: Seq[(String, Long)] =
-        if (sameBase) stored.map(_._2).getOrElse(Nil) else Nil
-      val store = lexBatchStore(s, d)
-      val storeFs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!sameBase && storeFs.exists(store)) storeFs.delete(store, true)
-      refold.foreach { case (bid, _) =>
-        val p = new org.apache.hadoop.fs.Path(store, bid)
-        if (!storeFs.exists(p)) throw new IllegalStateException(
-          s"lexical index for $d is in a partial-append state and " +
-            s"appended batch '$bid' has no persisted rows at $p — " +
-            "refusing to rebuild from the corpus dir alone (stream-only " +
-            "arrivals whose checkpoints committed would be lost). " +
-            "Restore the batch store or drop the index explicitly " +
-            "(dropLexIndex) to accept the loss.")
-      }
-      Seq(postT, dlT).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val wh = s.conf.get("spark.sql.warehouse.dir")
-        val p = new org.apache.hadoop.fs.Path(wh, t)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      writeLexTables(s, names, corpus, (buckets, buckets),
-        org.apache.spark.sql.SaveMode.Overwrite)
-      refold.foreach { case (bid, _) =>
-        val bdf = s.read.parquet(
-          new org.apache.hadoop.fs.Path(store, bid).toString)
-        writeLexTables(s, names, bdf, (buckets, buckets),
-          org.apache.spark.sql.SaveMode.Append)
-      }
-      // manifest LAST — a crash above leaves the old manifest and the
-      // next ensure re-detects and re-runs the recovery (idempotent)
-      IndexManifest.write(s, lexManifestPath(s, d),
-        expect.copy(batches = refold))
+    PersistedIndex.ensure(s, ix, {
+      val n = corpus.count()
+      IndexManifest.Manifest(d, n, Dedup.corpusFingerprint(corpus),
+        Tables.indexBuckets(n), Nil)
+    }, dlT, fresh = true) { m =>
+      val buckets = m.buckets
+      writeLexTables(s, names, corpus, (buckets, buckets), SaveMode.Overwrite)
+      bdf => writeLexTables(s, names, bdf, (buckets, buckets),
+        SaveMode.Append)
     }
-    freshLexMemo.add(memoKey)
     names
   }
 
   /** Has `batchId` already been folded in? The replay detector. */
   def isLexBatchApplied(s: SparkSession, d: String,
                         batchId: String): Boolean =
-    readLexManifest(s, d).exists(_._2.exists(_._1 == batchId))
+    PersistedIndex.isApplied(s, lexIndex(d), batchId)
 
   /** Fold a new batch of (doc_id, text) rows into the lexical index.
     * Idempotent per batchId; batch doc_ids must be disjoint from the
@@ -298,83 +217,32 @@ object Retrieval {
     * scores update to the new corpus statistics immediately. */
   def appendToLexIndex(s: SparkSession, d: String, batch: DataFrame,
                        batchId: String): Boolean = {
-    require(batchId.matches("[A-Za-z0-9_.\\-]+"),
-      s"batchId must match [A-Za-z0-9_.-]+ (manifest round-trip): $batchId")
-    val (postT, dlT) = ensureLexIndex(s, d)
-    val stored = readLexManifest(s, d).getOrElse(
-      throw new IllegalStateException(
-        s"lexical index for $d has no manifest after ensure"))
-    if (stored._2.exists(_._1 == batchId)) return false
-    IndexManifest.requireDisjoint(s, dlT, "doc_id", batch,
-      s"appendToLexIndex($batchId)")
-    batch.select(col("doc_id"), col("text"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        lexBatchStore(s, d), batchId).toString)
-    def b(t: String): Int =
-      IndexManifest.appendBucketsOf(s, t, stored._1, s"lexical index $d")
-    writeLexTables(s, (postT, dlT), batch.select("doc_id", "text"),
-      (b(postT), b(dlT)), org.apache.spark.sql.SaveMode.Append)
-    val nNew = batch.count()
-    IndexManifest.appendBatch(s, lexManifestPath(s, d),
-      stored._1, stored._2, batchId, nNew)
-    true
+    val ix = lexIndex(d)
+    val names @ (postT, dlT) = (ix.tables(0), ix.tables(1))
+    PersistedIndex.append(s, ix, batch, batchId, "doc_id",
+      Seq("doc_id", "text"), dlT, () => ensureLexIndex(s, d)) { txt =>
+      def b(t: String): Int =
+        IndexManifest.appendBucketsOf(s, t, txt, s"lexical index $d")
+      writeLexTables(s, names, batch.select("doc_id", "text"),
+        (b(postT), b(dlT)), SaveMode.Append)
+      batch.count()
+    }
   }
 
   /** Fold the append-grown FILE layout back to one file per bucket
     * and re-bucket to the grown corpus size — the lexical index has
     * no mergeable stat rows (postings are per (doc, term), doclen per
     * doc), so compaction is pure layout + bucket-spec maintenance.
-    * Probes are exactly unchanged. Staging + catalog RENAME per
-    * table; a crash mid-swap leaves a missing table the next ensure
-    * rebuilds + refolds. */
+    * Probes are exactly unchanged. Staging + catalog RENAME
+    * ([[PersistedIndex.rewrite]]); a crash mid-swap leaves a missing
+    * table the next ensure rebuilds + refolds. */
   def compactLexIndex(s: SparkSession, d: String,
                       rebucketTo: Option[Int] = None): Boolean = {
     val (postT, dlT) = ensureLexIndex(s, d)
-    val stored = readLexManifest(s, d).getOrElse(
-      throw new IllegalStateException(
-        s"lexical index for $d has no manifest after ensure"))
-    val storedBuckets =
-      IndexManifest.bucketsOf(stored._1, s"lexical index $d")
-    val buckets = rebucketTo.getOrElse(Tables.indexBuckets(
-      IndexManifest.indexRowsOf(stored._1, stored._2)))
-    if (stored._2.size <= IndexManifest.compactedOf(stored._1) &&
-        buckets == storedBuckets)
-      return false
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    def dropWithLocation(t: String): Unit = {
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(wh, t)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    PersistedIndex.compact(s, lexIndex(d), rebucketTo) { (_, _) => Seq(
+      PersistedIndex.Staged(postT, PersistedIndex.files(s, postT), Some("th")),
+      PersistedIndex.Staged(dlT, PersistedIndex.files(s, dlT), Some("doc_id")))
     }
-    def rewrite(t: String, key: String): Unit = {
-      val tmpT = t + "_c"
-      dropWithLocation(tmpT)
-      // read the table's FILES, not the catalog table (CLAUDE.md
-      // 20a): the bucketed scan's advertised partitioning elides the
-      // alignment repartition while AQE degrades the actual scan to
-      // coalesced splits — the write would spray tasks x buckets
-      // files, the exact layout this fold exists to collapse
-      val files = s.read.parquet(
-        new org.apache.hadoop.fs.Path(wh, t).toString)
-      files.repartition(buckets, col(key))
-        .write.bucketBy(buckets, key).sortBy(key)
-        .format("parquet").saveAsTable(tmpT)
-      // marker at the staging path; the RENAME carries it (reattach)
-      IndexManifest.markBuckets(s, tmpT, buckets)
-      dropWithLocation(t)
-      s.sql(s"ALTER TABLE $tmpT RENAME TO $t")
-    }
-    rewrite(postT, "th")
-    rewrite(dlT, "doc_id")
-    val mp = lexManifestPath(s, d)
-    IndexManifest.setCompacted(s, mp, stored._1, stored._2,
-      stored._2.size)
-    if (buckets != storedBuckets)
-      IndexManifest.read(s, mp).foreach { case (txt, _) =>
-        IndexManifest.setBuckets(s, mp, txt, buckets) }
-    true
   }
 
   /** Condition-driven maintenance ([[Dedup.maintainShingleIndex]]
@@ -386,39 +254,16 @@ object Retrieval {
                        compactAfter: Int = Maintenance.DefaultCompactAfter,
                        dryRun: Boolean = false): MaintenanceReport = {
     ensureLexIndex(s, d)
-    val stored = readLexManifest(s, d).getOrElse(
-      throw new IllegalStateException(
-        s"lexical index for $d has no manifest after ensure"))
-    val applied = stored._2.size
-    val uncompacted = applied - IndexManifest.compactedOf(stored._1)
-    val storedBuckets =
-      IndexManifest.bucketsOf(stored._1, s"lexical index $d")
-    val target = Tables.indexBuckets(
-      IndexManifest.indexRowsOf(stored._1, stored._2))
-    val wants = uncompacted >= compactAfter || target != storedBuckets
-    val action = if (wants) "compact" else "none"
-    val ran = wants && !dryRun && compactLexIndex(s, d)
-    MaintenanceReport("lex", action, ran, applied, uncompacted,
-      storedBuckets, target, -1L, -1L)
+    val l = PersistedIndex.layout(s, lexIndex(d))
+    if (l.wantsCompact(compactAfter))
+      l.report("lex", "compact", ran = !dryRun && compactLexIndex(s, d))
+    else l.report("lex", "none", ran = false)
   }
 
-  /** Drop the lexical index (tables + manifest + batch store + memos)
-    * — the cold-build measurement hook. */
+  /** Drop the lexical index (tables, staging leftovers, manifest,
+    * batch store, memos) — the cold-build measurement hook. */
   private[graft] def dropLexIndex(s: SparkSession, d: String): Unit = {
-    val (postT, dlT) = lexIndexNames(d)
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    Seq(postT, dlT, postT + "_c", dlT + "_c").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(wh, t)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val mp = lexManifestPath(s, d)
-    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(mp)) fs.delete(mp, false)
-    val bs = lexBatchStore(s, d)
-    if (fs.exists(bs)) fs.delete(bs, true)
-    freshLexMemo.remove(s.sparkContext.applicationId + ":" + d)
+    PersistedIndex.drop(s, lexIndex(d))
     lexStatsMemo.clear()
   }
 
@@ -434,7 +279,7 @@ object Retrieval {
     * rewrites it → auto-invalidation). */
   private def lexStats(s: SparkSession, d: String, dlT: String)
       : (Long, Long) = {
-    val gen = readLexManifest(s, d).map(_._1).getOrElse("")
+    val gen = PersistedIndex.read(s, lexIndex(d)).map(_._1).getOrElse("")
     lexStatsMemo.getOrElseUpdate(
       s.sparkContext.applicationId + ":" + d + ":" + gen, {
         val r = s.table(dlT).filter(col("dl") > 0)

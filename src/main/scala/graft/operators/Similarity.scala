@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over `embeddings` (64-dim float vectors) — the
@@ -361,35 +361,32 @@ object Similarity {
         (Array[Long], Array[Double], Array[Double])] =
     s.sparkContext.broadcast(centroidConsts(centroids))
 
-  /** Catalog names for the persisted IVF index of corpus `d` —
-    * deterministic per corpus dir so every query (and every Verify
-    * run) of the same data converges on one artifact. */
-  private def ivfTableNames(d: String): (String, String) = {
-    val tag = (scala.util.hashing.MurmurHash3.stringHash(d).toLong
-      & 0xffffffffL).toHexString
-    (s"graft_ivf_assign_$tag", s"graft_ivf_cent_$tag")
-  }
-
-  /** Catalog name of the index's PQ codebook sidecar (m x ks x dsub
+  /** The persisted IVF index of corpus `d` — assignments (bucketed
+    * by cell), centroids, and the PQ codebook sidecar (m x ks x dsub
     * entries as (s, j, d, v) rows — ~16k rows at the standard shape,
-    * read once per probe session). */
-  private def ivfPqTableName(d: String): String = {
-    val tag = (scala.util.hashing.MurmurHash3.stringHash(d).toLong
-      & 0xffffffffL).toHexString
-    s"graft_ivf_pq_$tag"
+    * read once per probe session). Names are deterministic per
+    * corpus dir ([[PersistedIndex]]) so every query (and every Verify
+    * run) of the same data converges on one artifact. */
+  private def ivfIndex(d: String): PersistedIndex.Spec =
+    PersistedIndex.Spec("graft_ivf", "IVF index", d,
+      Seq("assign" -> Some("cid"), "cent" -> None, "pq" -> None))
+
+  private def ivfTableNames(d: String): (String, String) = {
+    val ix = ivfIndex(d)
+    (ix.tables(0), ix.tables(1))
   }
 
-  private def writePqCodebooks(s: SparkSession, pqT: String,
-                               cb: graft.functions.PqCodebooks): Unit = {
+  private def ivfPqTableName(d: String): String = ivfIndex(d).tables(2)
+
+  /** The codebook sidecar's rows, as one file. */
+  private def pqCodebookRows(s: SparkSession,
+                             cb: graft.functions.PqCodebooks): DataFrame = {
     val flat = cb.flat
     val rows = for {
       si <- 0 until cb.m; j <- 0 until cb.ks; di <- 0 until cb.dsub
     } yield (si, j, di, flat((si * cb.ks + j) * cb.dsub + di))
     val sp = s; import sp.implicits._
-    rows.toDF("s", "j", "d", "v")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(pqT)
+    rows.toDF("s", "j", "d", "v").coalesce(1)
   }
 
   // per-(app, dir) codebook memo: the sidecar read + broadcast is
@@ -450,66 +447,20 @@ object Similarity {
     * Bucket count scales with n ([[Tables.indexBuckets]]: 32 at test
     * scales, doubling past 1M rows). */
   def ensureIvfIndex(s: SparkSession, d: String): (String, String) = {
-    val (at, ct) = ivfTableNames(d)
-    val pqT = ivfPqTableName(d)
-    val memoKey = s.sparkContext.applicationId + ":ivf:" + d
-    if (freshIvfMemo.contains(memoKey)) return (at, ct)
+    val ix = ivfIndex(d)
+    val names @ (at, ct) = ivfTableNames(d)
+    if (PersistedIndex.isFresh(s, ix)) return names
     val emb = Tables.embeddings(s, d)
-    val n = math.max(1L, emb.count())
-    val buckets = Tables.indexBuckets(n)
-    val expect = IndexManifest.Manifest(d, n, ivfFingerprint(emb),
-      buckets, Nil)
-    val stored = IndexManifest.read(s, ivfManifestPath(s, d))
-    val sameBase = stored.exists(_._1.startsWith(expect.basePrefix))
-    // cross-JVM re-attach (the ensureShingleIndex rule): a fresh
-    // session's empty catalog over an intact warehouse recreates the
-    // entries from the files + bucket markers instead of paying the
-    // O(n x nlist) rebuild; declined attaches fall through to rebuild
-    if (sameBase) IndexManifest.reattachTables(s, Seq(
-      (at, Some("cid")), (ct, None), (pqT, None)))
     // the code-column check migrates pre-PQ indexes (and the pq-table
-    // check catches a refresh crash that left the sidecar missing):
-    // either absence forces the same clean rebuild as any staleness
-    val fresh = s.catalog.tableExists(at) && s.catalog.tableExists(ct) &&
-      s.catalog.tableExists(pqT) &&
-      sameBase && stored.exists { case (_, batches) =>
-        s.table(at).columns.contains("code") &&
-          s.table(at).count() == n + batches.map(_._2).sum
-      }
-    if (!fresh) {
-      // partial-append vs stale-index distinction (the shingle-index
-      // rule, Dedup.ensureShingleIndex): same base prefix + count
-      // mismatch = a crashed append whose manifest-listed batches are
-      // stream-only arrivals that never replay — refold them from the
-      // batch store after the rebuild instead of silently dropping
-      // them. Only a real corpus change discards the store.
-      val refold: Seq[(String, Long)] =
-        if (sameBase) stored.map(_._2).getOrElse(Nil) else Nil
-      val store = ivfBatchStore(s, d)
-      val storeFs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!sameBase && storeFs.exists(store)) storeFs.delete(store, true)
-      refold.foreach { case (bid, _) =>
-        val p = new org.apache.hadoop.fs.Path(store, bid)
-        if (!storeFs.exists(p)) throw new IllegalStateException(
-          s"IVF index for $d is in a partial-append state and appended " +
-            s"batch '$bid' has no persisted rows at $p — refusing to " +
-            "rebuild from the corpus dir alone (that drops stream-only " +
-            "arrivals whose checkpoints committed). Restore the batch " +
-            "store, or dropIvfIndex to accept the loss.")
-      }
-      // the default (non-Hive) catalog is per-session but the
-      // warehouse DIRECTORY persists: a table written by an earlier
-      // JVM is an orphan location this session's saveAsTable refuses
-      // to overwrite (LOCATION_ALREADY_EXISTS). The names are
-      // graft-owned and corpus-deterministic, so clearing both the
-      // catalog entry and the on-disk location is safe.
-      Seq(at, ct, pqT).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val wh = s.conf.get("spark.sql.warehouse.dir")
-        val p = new org.apache.hadoop.fs.Path(wh, t)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+    // existence check catches a refresh crash that left the sidecar
+    // missing): either absence forces the same clean rebuild as any
+    // staleness
+    val repaired = PersistedIndex.ensure(s, ix, {
+      val n = math.max(1L, emb.count())
+      IndexManifest.Manifest(d, n, ivfFingerprint(emb),
+        Tables.indexBuckets(n), Nil)
+    }, at, fresh = s.table(at).columns.contains("code")) { m =>
+      val (n, buckets) = (m.baseRows, m.buckets)
       val mod = centroidMod(n)
       val centroids = emb.filter(centroidPick(mod))
         .select(col("vec_id").as("cid"), col("embedding").as("ke"),
@@ -521,97 +472,48 @@ object Similarity {
       // carries its 8-byte code so [[ivfPqProbe]]'s scoring scan can
       // column-prune the 256 B vector away
       val cb = pqTrain(s, emb, n)
-      val assigned = scorable(emb)
+      // bucket count scales with n (Tables.indexBuckets — 32 at test
+      // scales, the local parallelism); sortBy co-sorts within
+      // buckets so a cell's rows are contiguous pages
+      PersistedIndex.writeBucketed(s, scorable(emb)
         .withColumn("cid",
           graft.functions.GraftFunctions.nearestCentroid(col("ce"), handle))
         .withColumn("code",
           graft.functions.GraftFunctions.pqEncode(col("ce"), cb))
         .select(col("cid"), col("vec_id"), col("ce"), col("cn"),
-          col("code"))
-      // bucket count scales with n (Tables.indexBuckets — 32 at test
-      // scales, the local parallelism; a cluster gets counts that
-      // track corpus size); sortBy co-sorts within buckets so a
-      // cell's rows are contiguous pages. repartition by the bucket
-      // column first (the ensureShingleIndex rule): a bucketed write
-      // emits one file per (task x present-bucket), so the unaligned
-      // map-only assignment layout would spray tasks x buckets files
-      assigned.repartition(buckets, col("cid"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .bucketBy(buckets, "cid").sortBy("cid")
-        .format("parquet").saveAsTable(at)
-      IndexManifest.markBuckets(s, at, buckets)
-      centroids.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          col("code")), at, "cid", buckets, SaveMode.Overwrite)
+      centroids.write.mode(SaveMode.Overwrite)
         .format("parquet").saveAsTable(ct)
-      writePqCodebooks(s, pqT, cb)
+      pqCodebookRows(s, cb).write.mode(SaveMode.Overwrite)
+        .format("parquet").saveAsTable(ivfPqTableName(d))
       forgetPqCodebooks(s, d)
-      refold.foreach { case (bid, _) =>
-        appendIvfAssignments(s, at, ct, cb,
-          s.read.parquet(
-            new org.apache.hadoop.fs.Path(store, bid).toString),
-          buckets)
-      }
-      // manifest LAST (with the refolded batch list): its presence
-      // asserts the tables are complete; a crash above leaves the OLD
-      // manifest, so the next ensure re-runs this recovery
-      IndexManifest.write(s, ivfManifestPath(s, d),
-        expect.copy(batches = refold))
-      // a SAME-BASE repair carries the pre-crash fit baseline forward:
-      // re-measuring over the refolded rows would absorb any
-      // pre-crash drift into the reference and silently disarm the
-      // canary for it (a real corpus change starts fresh below)
-      stored.filter(_ => sameBase)
-        .flatMap(m => IndexManifest.fitBaselineOf(m._1))
-        .foreach { micro =>
-          IndexManifest.read(s, ivfManifestPath(s, d)).foreach {
-            case (txt, _) => IndexManifest.setFitBaseline(s,
-              ivfManifestPath(s, d), txt, micro) }
-        }
+      bdf => appendIvfAssignments(s, at, ct, cb, bdf, buckets)
     }
-    freshIvfMemo.add(memoKey)
+    // a SAME-BASE repair carries the pre-crash fit baseline forward:
+    // re-measuring over the refolded rows would absorb any pre-crash
+    // drift into the reference and silently disarm the canary for it
+    // (a real corpus change starts fresh below)
+    repaired.flatMap(IndexManifest.fitBaselineOf).foreach { micro =>
+      PersistedIndex.updateManifest(s, ix)(
+        IndexManifest.withFitBaseline(_, micro))
+    }
     // fit-canary baseline: a fresh build defines its own healthy fit
     // distribution; also migrates pre-baseline manifests in place
     // (one manifest read on the first ensure per session — memoized
     // callers never reach here)
-    if (IndexManifest.read(s, ivfManifestPath(s, d))
+    if (PersistedIndex.read(s, ix)
         .flatMap(m => IndexManifest.fitBaselineOf(m._1)).isEmpty)
       writeFitBaseline(s, d)
-    (at, ct)
+    names
   }
 
-  private val freshIvfMemo =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  /** Test hook: forget memoized freshness so the next
-    * [[ensureIvfIndex]] re-runs the real check. */
-  private[graft] def forgetFreshIvfMemo(): Unit = freshIvfMemo.clear()
-
-  /** Drop the persisted IVF index (tables + manifest + memo) — the
-    * [[graft.AppendSmoke]] cold-build measurement hook. */
+  /** Drop the persisted IVF index (tables, staging leftovers,
+    * manifest, batch store, memos) — the [[graft.AppendSmoke]]
+    * cold-build measurement hook. */
   private[graft] def dropIvfIndex(s: SparkSession, d: String): Unit = {
-    val (at, ct) = ivfTableNames(d)
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    Seq(at, ct, ivfPqTableName(d)).foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(wh, t)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val mp = ivfManifestPath(s, d)
-    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(mp)) fs.delete(mp, false)
-    val bs = ivfBatchStore(s, d)
-    if (fs.exists(bs)) fs.delete(bs, true)
-    freshIvfMemo.remove(s.sparkContext.applicationId + ":ivf:" + d)
+    PersistedIndex.drop(s, ivfIndex(d))
     forgetPqCodebooks(s, d)
     forgetKnngMemoFor(s, d)
-  }
-
-  private def ivfManifestPath(s: SparkSession, d: String)
-      : org.apache.hadoop.fs.Path = {
-    val tag = (scala.util.hashing.MurmurHash3.stringHash(d).toLong
-      & 0xffffffffL).toHexString
-    IndexManifest.path(s, "graft_ivf", tag)
   }
 
   /** Has `batchId` already been folded into `d`'s IVF index? The
@@ -622,21 +524,7 @@ object Similarity {
     * and let the append no-op. One small file read. */
   def isIvfBatchApplied(s: SparkSession, d: String,
                         batchId: String): Boolean =
-    IndexManifest.read(s, ivfManifestPath(s, d))
-      .exists(_._2.exists(_._1 == batchId))
-
-  /** Durable store of appended batches' (vec_id, embedding) rows —
-    * the [[Dedup.shingleBatchStore]] analog: written before the
-    * assignment-table append so a partial-append crash can be
-    * repaired by refolding, never by silently dropping stream-only
-    * arrivals. */
-  private def ivfBatchStore(s: SparkSession, d: String)
-      : org.apache.hadoop.fs.Path = {
-    val tag = (scala.util.hashing.MurmurHash3.stringHash(d).toLong
-      & 0xffffffffL).toHexString
-    new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"graft_ivf_batches_$tag")
-  }
+    PersistedIndex.isApplied(s, ivfIndex(d), batchId)
 
   /** Assign `batch` against the STORED centroid table, encode against
     * the STORED PQ codebooks (frozen between re-calibrations — the
@@ -649,18 +537,13 @@ object Similarity {
                                    batch: DataFrame,
                                    buckets: Int): Unit = {
     val handle = centroidHandle(s, s.table(ct))
-    val assigned = scorable(batch)
+    PersistedIndex.writeBucketed(s, scorable(batch)
       .withColumn("cid",
         graft.functions.GraftFunctions.nearestCentroid(col("ce"), handle))
       .withColumn("code",
         graft.functions.GraftFunctions.pqEncode(col("ce"), cb))
       .select(col("cid"), col("vec_id"), col("ce"), col("cn"),
-        col("code"))
-    assigned.repartition(buckets, col("cid"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(buckets, "cid").sortBy("cid")
-      .format("parquet").saveAsTable(at)
-    IndexManifest.markBuckets(s, at, buckets)
+        col("code")), at, "cid", buckets, SaveMode.Append)
   }
 
   /** Content fingerprint of the embeddings slice (xxhash64 over
@@ -691,31 +574,18 @@ object Similarity {
     * nearestCentroid scan of the batch + a bucketed write. */
   def appendToIvfIndex(s: SparkSession, d: String, batch: DataFrame,
                        batchId: String): Boolean = {
-    require(batchId.matches("[A-Za-z0-9_.\\-]+"),
-      s"batchId must match [A-Za-z0-9_.-]+ (manifest round-trip): $batchId")
-    val (at, ct) = ensureIvfIndex(s, d)
-    val stored = IndexManifest.read(s, ivfManifestPath(s, d)).getOrElse(
-      throw new IllegalStateException(
-        s"IVF index for $d has no manifest after ensure"))
-    if (stored._2.exists(_._1 == batchId)) return false
-    IndexManifest.requireDisjoint(s, at, "vec_id", batch,
-      s"appendToIvfIndex($batchId)")
-    val buckets =
-      IndexManifest.appendBucketsOf(s, at, stored._1, s"IVF index $d")
-    // persist the batch FIRST (the appendToShingleIndex rule): the
-    // partial-append repair refolds from this store
-    batch.select(col("vec_id"), col("embedding"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(
-        ivfBatchStore(s, d), batchId).toString)
-    appendIvfAssignments(s, at, ct, loadPqCodebooks(s, d), batch, buckets)
-    val nNew = batch.select("vec_id").distinct().count()
-    IndexManifest.appendBatch(s, ivfManifestPath(s, d),
-      stored._1, stored._2, batchId, nNew)
-    // the graph index (if one exists for this corpus) now LAGS —
-    // its next ensure must re-run the lockstep check and fold
+    val (at, ct) = ivfTableNames(d)
+    // the graph index (if one exists for this corpus) is about to LAG
+    // — its next ensure must re-run the lockstep check and fold.
+    // Forgotten BEFORE the append, so a failure part-way through can
+    // never leave a memo vouching for the old lockstep.
     forgetKnngMemoFor(s, d)
-    true
+    PersistedIndex.append(s, ivfIndex(d), batch, batchId, "vec_id",
+      Seq("vec_id", "embedding"), at, () => ensureIvfIndex(s, d)) { txt =>
+      appendIvfAssignments(s, at, ct, loadPqCodebooks(s, d), batch,
+        IndexManifest.appendBucketsOf(s, at, txt, s"IVF index $d"))
+      batch.select("vec_id").distinct().count()
+    }
   }
 
   /** Fold the assignment table's append-accumulated files back to one
@@ -723,55 +593,17 @@ object Similarity {
     * every [[appendToIvfIndex]] adds one file per present bucket, so
     * after N daily batches each probe's bucket-pruned scan reads up
     * to N+1 files per probed cell. Rows are untouched (pure layout;
-    * probes exactly unchanged); staging table + catalog RENAME, crash
-    * mid-swap leaves the table missing -> rebuild + refold. Returns
+    * probes exactly unchanged), re-bucketed to the GROWN row count
+    * (`rebucketTo` overrides the sizing); staging table + catalog
+    * RENAME, crash mid-swap leaves the table missing -> rebuild +
+    * refold. Returns
     * true if a fold ran, false when already compact (idempotent). */
   def compactIvfIndex(s: SparkSession, d: String,
                       rebucketTo: Option[Int] = None): Boolean = {
     val (at, _) = ensureIvfIndex(s, d)
-    val mp = ivfManifestPath(s, d)
-    val stored = IndexManifest.read(s, mp).getOrElse(
-      throw new IllegalStateException(
-        s"IVF index for $d has no manifest after ensure"))
-    val storedBuckets = IndexManifest.bucketsOf(stored._1, s"IVF index $d")
-    // re-bucket against the GROWN row count (base + appends): an index
-    // that grew past a Tables.indexBuckets threshold through appends
-    // keeps its build-time spec forever otherwise, capping probe-scan
-    // parallelism at the original bucket count no matter how large it
-    // gets. rebucketTo overrides the sizing (tests / operator hook).
-    val buckets = rebucketTo.getOrElse(Tables.indexBuckets(
-      IndexManifest.indexRowsOf(stored._1, stored._2)))
-    if (stored._2.size <= IndexManifest.compactedOf(stored._1) &&
-        buckets == storedBuckets)
-      return false
-    val tmpT = at + "_c"
-    dropTableWithLocation(s, tmpT)
-    // plain file read, not s.table: the bucketed scan's advertised
-    // partitioning elides the repartition while the actual scan
-    // degrades to coalesced splits (the compactShingleIndex rule) —
-    // the write would spray tasks x buckets files
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    s.read.parquet(new org.apache.hadoop.fs.Path(wh, at).toString)
-      .repartition(buckets, col("cid"))
-      .write.bucketBy(buckets, "cid").sortBy("cid")
-      .format("parquet").saveAsTable(tmpT)
-    IndexManifest.markBuckets(s, tmpT, buckets)
-    dropTableWithLocation(s, at)
-    s.sql(s"ALTER TABLE $tmpT RENAME TO $at")
-    IndexManifest.setCompacted(s, mp, stored._1, stored._2,
-      stored._2.size)
-    if (buckets != storedBuckets)
-      IndexManifest.read(s, mp).foreach { case (txt, _) =>
-        IndexManifest.setBuckets(s, mp, txt, buckets) }
-    true
-  }
-
-  private def dropTableWithLocation(s: SparkSession, t: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val p = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), t)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    PersistedIndex.compact(s, ivfIndex(d), rebucketTo) { (_, _) =>
+      Seq(PersistedIndex.Staged(at, PersistedIndex.files(s, at), Some("cid")))
+    }
   }
 
   /** Re-fit the frozen coarse quantizer to the CURRENT index contents
@@ -800,8 +632,8 @@ object Similarity {
     * refreshes. Crash-safe by table ABSENCE: all three replacements
     * (assignments, centroids, PQ codebooks — the codebooks re-train
     * on the merged rows, extending the content-identity law to the
-    * code column) are staged first and `ct` is dropped before any
-    * swap, so every
+    * code column) are staged first and every live table is dropped
+    * before any rename ([[PersistedIndex.rewrite]]), so every
     * mid-swap crash state has a missing catalog table — which the next
     * [[ensureIvfIndex]] detects (not fresh) and repairs by rebuild +
     * batch-store refold. No crash window leaves a live
@@ -811,25 +643,12 @@ object Similarity {
     * the whole corpus, and a refresh would be an expensive no-op. */
   def refreshIvfCentroids(s: SparkSession, d: String): Boolean = {
     val (at, ct) = ensureIvfIndex(s, d)
-    val mp = ivfManifestPath(s, d)
-    val stored = IndexManifest.read(s, mp).getOrElse(
-      throw new IllegalStateException(
-        s"IVF index for $d has no manifest after ensure"))
-    if (stored._2.isEmpty) return false
-    val storedBuckets = IndexManifest.bucketsOf(stored._1, s"IVF index $d")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    // the compactIvfIndex rule: read the table's FILES, not s.table —
-    // the advertised bucketing elides the alignment repartition while
-    // AQE degrades the actual scan, spraying tasks x buckets files
-    val cur = s.read
-      .parquet(new org.apache.hadoop.fs.Path(wh, at).toString)
+    val ix = ivfIndex(d)
+    if (PersistedIndex.stored(s, ix)._2.isEmpty) return false
+    // the table's FILES, not s.table (rule 20a)
+    val cur = PersistedIndex.files(s, at)
       .select(col("vec_id"), col("ce"), col("cn"))
     val n = math.max(1L, cur.count())
-    // re-bucket to the GROWN size while we rewrite anyway (the
-    // compactIvfIndex rule) — keeps the content-identity law, since a
-    // one-shot build over the merged corpus sizes its buckets from
-    // the same n
-    val buckets = Tables.indexBuckets(n)
     val mod = centroidMod(n)
     val centroids = cur.filter(centroidPick(mod))
       .select(col("vec_id").as("cid"), col("ce").as("ke"),
@@ -842,43 +661,32 @@ object Similarity {
     // content-identity law extends to the code column
     val cb = pqTrain(s,
       cur.select(col("vec_id"), col("ce").as("embedding")), n)
-    val pqT = ivfPqTableName(d)
-    val (atS, ctS, pqS) = (at + "_r", ct + "_r", pqT + "_r")
-    Seq(atS, ctS, pqS).foreach(dropTableWithLocation(s, _))
-    cur.withColumn("cid",
-        graft.functions.GraftFunctions.nearestCentroid(col("ce"), handle))
-      .withColumn("code",
-        graft.functions.GraftFunctions.pqEncode(col("ce"), cb))
-      .select(col("cid"), col("vec_id"), col("ce"), col("cn"),
-        col("code"))
-      .repartition(buckets, col("cid"))
-      .write.bucketBy(buckets, "cid").sortBy("cid")
-      .format("parquet").saveAsTable(atS)
-    IndexManifest.markBuckets(s, atS, buckets)
-    centroids.write.format("parquet").saveAsTable(ctS)
-    writePqCodebooks(s, pqS, cb)
-    dropTableWithLocation(s, ct)
-    dropTableWithLocation(s, at)
-    dropTableWithLocation(s, pqT)
-    s.sql(s"ALTER TABLE $atS RENAME TO $at")
-    s.sql(s"ALTER TABLE $ctS RENAME TO $ct")
-    s.sql(s"ALTER TABLE $pqS RENAME TO $pqT")
+    // the quantizer is about to change: drop the codebook memo and
+    // every graph memo for this corpus FIRST (their manifests pin the
+    // OLD centroid fingerprint — the next graph ensure rebuilds), so a
+    // failure part-way through the swap leaves no memo vouching for
+    // either generation
     forgetPqCodebooks(s, d)
-    // the rewrite also folds append-accumulated files to one per
-    // bucket, so record the layout as compacted
-    IndexManifest.setCompacted(s, mp, stored._1, stored._2,
-      stored._2.size)
-    if (buckets != storedBuckets)
-      IndexManifest.read(s, mp).foreach { case (txt, _) =>
-        IndexManifest.setBuckets(s, mp, txt, buckets) }
+    forgetKnngMemoFor(s, d)
+    // re-bucket to the GROWN size while we rewrite anyway — keeps the
+    // content-identity law, since a one-shot build over the merged
+    // corpus sizes its buckets from the same n. The rewrite also folds
+    // append-accumulated files to one per bucket, so the manifest
+    // records the layout as compacted.
+    PersistedIndex.rewrite(s, ix, Tables.indexBuckets(n), Seq(
+      PersistedIndex.Staged(at, cur
+        .withColumn("cid",
+          graft.functions.GraftFunctions.nearestCentroid(col("ce"), handle))
+        .withColumn("code",
+          graft.functions.GraftFunctions.pqEncode(col("ce"), cb))
+        .select(col("cid"), col("vec_id"), col("ce"), col("cn"),
+          col("code")), Some("cid")),
+      PersistedIndex.Staged(ct, centroids, None),
+      PersistedIndex.Staged(ivfPqTableName(d), pqCodebookRows(s, cb), None)))
     // the re-fitted quantizer defines the new fit baseline (the fit
     // canary reads against the index's own healthy distribution, so a
     // refresh both clears the symptom and re-arms the trigger)
     writeFitBaseline(s, d)
-    // the quantizer changed: any graph index for this corpus is now
-    // structurally stale (its manifest pins the OLD centroid
-    // fingerprint — the next graph ensure rebuilds)
-    forgetKnngMemoFor(s, d)
     true
   }
 
@@ -964,9 +772,7 @@ object Similarity {
     // the s.table form reading a pre-refresh listing). Costs bucket
     // pruning: the scan is column-pruned but reads every cell —
     // still ~index-bytes, 2-3 orders under the refresh it arms.
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    def files(t: String) =
-      s.read.parquet(new org.apache.hadoop.fs.Path(wh, t).toString)
+    def files(t: String) = PersistedIndex.files(s, t)
     val rows = files(at)
     val n = math.max(1L, rows.count())
     val mod = math.max(1L, n / 512)
@@ -998,10 +804,8 @@ object Similarity {
     val gaps = sampledGaps(s, d)
     if (gaps.isEmpty) return
     val p995 = gaps(((gaps.length * 199) / 200).min(gaps.length - 1))
-    val mp = ivfManifestPath(s, d)
-    IndexManifest.read(s, mp).foreach { case (txt, _) =>
-      IndexManifest.setFitBaseline(s, mp, txt,
-        math.round(p995 * 1e6)) }
+    PersistedIndex.updateManifest(s, ivfIndex(d))(
+      IndexManifest.withFitBaseline(_, math.round(p995 * 1e6)))
   }
 
   /** Fraction of the current gap sample ABOVE the stored baseline —
@@ -1016,15 +820,12 @@ object Similarity {
   private[graft] def ivfFitGapFrac(s: SparkSession, d: String,
                                    readOnly: Boolean = false)
       : (Double, Double) = {
-    val mp = ivfManifestPath(s, d)
-    val storedTxt = IndexManifest.read(s, mp).map(_._1).getOrElse(
-      throw new IllegalStateException(
-        s"IVF index for $d has no manifest after ensure"))
-    val stored = IndexManifest.fitBaselineOf(storedTxt)
+    val ix = ivfIndex(d)
+    val stored = IndexManifest.fitBaselineOf(PersistedIndex.stored(s, ix)._1)
     if (readOnly && stored.isEmpty) return (-1.0, -1.0)
     val micro = stored.getOrElse {
       writeFitBaseline(s, d)
-      IndexManifest.read(s, mp).flatMap(m =>
+      PersistedIndex.read(s, ix).flatMap(m =>
         IndexManifest.fitBaselineOf(m._1)).getOrElse(Long.MaxValue)
     }
     val baseline = micro / 1e6
@@ -1040,19 +841,12 @@ object Similarity {
                          Maintenance.DefaultFitCanaryFrac,
                        dryRun: Boolean = false): MaintenanceReport = {
     ensureIvfIndex(s, d)
-    val stored = IndexManifest.read(s, ivfManifestPath(s, d)).getOrElse(
-      throw new IllegalStateException(
-        s"IVF index for $d has no manifest after ensure"))
-    val applied = stored._2.size
-    val uncompacted = applied - IndexManifest.compactedOf(stored._1)
-    val storedBuckets = IndexManifest.bucketsOf(stored._1, s"IVF index $d")
-    val target = Tables.indexBuckets(
-      IndexManifest.indexRowsOf(stored._1, stored._2))
+    val l = PersistedIndex.layout(s, ivfIndex(d))
     def report(action: String, ran: Boolean, hot: (Long, Long),
                fit: (Double, Double) = (-1.0, -1.0)) =
-      MaintenanceReport("ivf", action, ran, applied, uncompacted,
-        storedBuckets, target, hot._1, hot._2, fit._1, fit._2)
-    if (applied == 0) return report("none", ran = false, (-1L, -1L))
+      l.report("ivf", action, ran).copy(hotCellMax = hot._1,
+        hotCellMedian = hot._2, fitGapFrac = fit._1, fitBaseline = fit._2)
+    if (l.applied == 0) return report("none", ran = false, (-1L, -1L))
     val hot = ivfOccupancy(s, d)
     if (hot._2 > 0 && hot._1 > hotCellRatio * hot._2)
       return report("refresh",
@@ -1070,9 +864,8 @@ object Similarity {
     if (fit._1 >= fitCanaryFrac)
       report("refresh", ran = !dryRun && refreshIvfCentroids(s, d),
         hot, fit)
-    else if (uncompacted >= compactAfter || target != storedBuckets)
-      report("compact",
-        ran = !dryRun && compactIvfIndex(s, d), hot, fit)
+    else if (l.wantsCompact(compactAfter))
+      report("compact", ran = !dryRun && compactIvfIndex(s, d), hot, fit)
     else report("none", ran = false, hot, fit)
   }
 
@@ -2138,18 +1931,16 @@ object Similarity {
   // the graph lags, fold the suffix from the durable IVF batch store;
   // anything else -> rebuild over the IVF tables).
 
-  private def knngTag(d: String, k: Int): String =
-    (scala.util.hashing.MurmurHash3.stringHash(s"$d#k=$k").toLong
-      & 0xffffffffL).toHexString
+  /** The persisted graph of (corpus `d`, k): edges + rings, named from
+    * the tag of `d#k=k` ([[PersistedIndex]]). */
+  private def knngIndex(d: String, k: Int): PersistedIndex.Spec =
+    PersistedIndex.Spec("graft_knng", "kNN graph index", s"$d#k=$k",
+      Seq("edges" -> Some("src"), "rings" -> Some("qcid")))
 
   private[graft] def knngTableNames(d: String, k: Int): (String, String) = {
-    val tag = knngTag(d, k)
-    (s"graft_knng_edges_$tag", s"graft_knng_rings_$tag")
+    val ix = knngIndex(d, k)
+    (ix.tables(0), ix.tables(1))
   }
-
-  private def knngManifestPath(s: SparkSession, d: String, k: Int)
-      : org.apache.hadoop.fs.Path =
-    IndexManifest.path(s, "graft_knng", knngTag(d, k))
 
   /** Fingerprint of the stored centroid SET — the quantizer identity
     * every graph edge's candidate structure derives from. xxhash64
@@ -2160,44 +1951,24 @@ object Similarity {
       .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("fp"))
       .head.getLong(0)
 
-  private val freshKnngMemo =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  /** Test hook: forget memoized graph freshness. */
-  private[graft] def forgetFreshKnngMemo(): Unit = freshKnngMemo.clear()
-
   /** An IVF mutation (append/refresh/drop) may break graph lockstep —
-    * the next graph ensure must re-run the real check. */
-  private def forgetKnngMemoFor(s: SparkSession, d: String): Unit = {
-    val prefix = s.sparkContext.applicationId + s":knng:$d#"
-    freshKnngMemo.removeIf(
-      new java.util.function.Predicate[String] {
-        def test(key: String): Boolean = key.startsWith(prefix)
-      })
-  }
+    * the next graph ensure of any k must re-run the real check. */
+  private def forgetKnngMemoFor(s: SparkSession, d: String): Unit =
+    PersistedIndex.forget(s, "graft_knng", d + "#")
 
   /** Whether a graph index has ever been built for (d, k) — the Cli
     * maintain guard (maintenance must not BUILD an index on corpora
     * that never run graph queries; ensure inside maintain would). */
   private[graft] def hasKnnGraphIndex(s: SparkSession, d: String,
-                                      k: Int): Boolean = {
-    val mp = knngManifestPath(s, d, k)
-    mp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(mp)
-  }
+                                      k: Int): Boolean =
+    PersistedIndex.exists(s, knngIndex(d, k))
 
-  /** Drop the persisted kNN graph (tables + manifest + memo) — the
-    * AppendSmoke cold-build hook and the law tests' reset. */
+  /** Drop the persisted kNN graph (tables, staging leftovers, manifest,
+    * memo) — the AppendSmoke cold-build hook and the law tests'
+    * reset. */
   private[graft] def dropKnnGraphIndex(s: SparkSession, d: String,
-                                       k: Int): Unit = {
-    val (et, rt) = knngTableNames(d, k)
-    Seq(et, rt).foreach(dropTableWithLocation(s, _))
-    val mp = knngManifestPath(s, d, k)
-    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(mp)) fs.delete(mp, false)
-    freshKnngMemo.remove(
-      s.sparkContext.applicationId + s":knng:$d#k=$k")
-  }
+                                       k: Int): Unit =
+    PersistedIndex.drop(s, knngIndex(d, k))
 
   /** Build-once, probe-many for the semantic graph: persist each
     * node's REFINED top-k adjacency (+ its probe ring) as catalog
@@ -2215,14 +1986,11 @@ object Similarity {
   def ensureKnnGraphIndex(s: SparkSession, d: String, k: Int)
       : (String, String) = {
     require(k >= 1, s"k must be >= 1: $k")
-    val (et, rt) = knngTableNames(d, k)
-    val memoKey = s.sparkContext.applicationId + s":knng:$d#k=$k"
-    if (freshKnngMemo.contains(memoKey)) return (et, rt)
+    val ix = knngIndex(d, k)
+    val names @ (et, rt) = knngTableNames(d, k)
+    if (PersistedIndex.isFresh(s, ix)) return names
     val (at, ct) = ensureIvfIndex(s, d)
-    val ivfStored = IndexManifest.read(s, ivfManifestPath(s, d)).getOrElse(
-      throw new IllegalStateException(
-        s"IVF index for $d has no manifest after ensure"))
-    val ivfBatches = ivfStored._2
+    val ivfBatches = PersistedIndex.stored(s, ivfIndex(d))._2
     val emb = Tables.embeddings(s, d)
     val n = math.max(1L, emb.count())
     val cfp = centroidFingerprint(s, ct)
@@ -2236,60 +2004,48 @@ object Similarity {
     val rf = knngRefineRounds
     val expect = IndexManifest.Manifest(s"$d#k=$k#np=$np#rf=$rf#cfp=$cfp",
       n, ivfFingerprint(emb), eBuckets, Nil)
-    val mp = knngManifestPath(s, d, k)
-    val stored = IndexManifest.read(s, mp)
+    val stored = PersistedIndex.read(s, ix)
     val sameBase = stored.exists(_._1.startsWith(expect.basePrefix))
-    // cross-JVM re-attach (the ensureShingleIndex rule); the IVF
-    // tables were already re-attached by the ensureIvfIndex above
-    if (sameBase) IndexManifest.reattachTables(s, Seq(
-      (et, Some("src")), (rt, Some("qcid"))))
-    val tablesOk = s.catalog.tableExists(et) && s.catalog.tableExists(rt)
+    // cross-JVM re-attach; the IVF tables were already re-attached by
+    // the ensureIvfIndex above
+    if (sameBase) PersistedIndex.reattach(s, ix)
     val gBatches = stored.map(_._2).getOrElse(Nil)
-    val lockstep = sameBase && tablesOk &&
+    val lockstep = sameBase && ix.tables.forall(s.catalog.tableExists) &&
       gBatches == ivfBatches.take(gBatches.size)
-    if (lockstep && gBatches == ivfBatches) {
-      freshKnngMemo.add(memoKey)
-      return (et, rt)
-    }
-    val store = ivfBatchStore(s, d)
-    val fs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
     val lag = ivfBatches.drop(gBatches.size)
-    if (lockstep && lag.forall(b =>
-        fs.exists(new org.apache.hadoop.fs.Path(store, b._1)))) {
+    if (lockstep && lag.forall { case (bid, _) =>
+        val p = PersistedIndex.batchPath(s, ivfIndex(d), bid)
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p) }) {
       // the graph LAGS the vector index (an ingest appended vectors
       // without graph upkeep, or a crash fell between the two folds):
       // fold the missing suffix from the durable batch store —
       // incremental cost, never a rebuild
       lag.foreach { case (bid, rows) =>
         val batch = s.read.parquet(
-          new org.apache.hadoop.fs.Path(store, bid).toString)
-        foldGraphBatch(s, d, k, et, rt, at, ct, np, batch, bid)
-        val cur = IndexManifest.read(s, mp).get
-        IndexManifest.appendBatch(s, mp, cur._1, cur._2, bid, rows)
+          PersistedIndex.batchPath(s, ivfIndex(d), bid).toString)
+        PersistedIndex.foldBatch(s, ix, bid) {
+          foldGraphBatch(s, d, k, et, rt, at, ct, np, batch, bid)
+          rows
+        }
       }
-      freshKnngMemo.add(memoKey)
-      return (et, rt)
+    } else {
+      // rebuild over the IVF index contents: stale base, refreshed
+      // centroids (cfp), missing table, or un-foldable lag — all
+      // repair here, with the applied-batch list inherited so lockstep
+      // holds. Every row is written gen-null, so the inherited batches
+      // are recorded compacted (else every read pays the
+      // generation-resolve path for batches that can have no non-null
+      // gen rows) and refined (the build's refinement covered them).
+      val built = expect.copy(batches = ivfBatches).render
+      PersistedIndex.rebuild(s, ix, IndexManifest.withRefinedThrough(
+          if (ivfBatches.isEmpty) built
+          else IndexManifest.withCompacted(built, ivfBatches, ivfBatches.size),
+          ivfBatches.size)) {
+        buildKnnGraphTables(s, k, et, rt, at, ct, np, eBuckets)
+      }
     }
-    // rebuild over the IVF index contents: stale base, refreshed
-    // centroids (cfp), missing table, or un-foldable lag — all repair
-    // here, with the applied-batch list inherited so lockstep holds
-    Seq(et, rt).foreach(dropTableWithLocation(s, _))
-    buildKnnGraphTables(s, k, et, rt, at, ct, np, eBuckets)
-    IndexManifest.write(s, mp, expect.copy(batches = ivfBatches))
-    // a rebuild writes every row gen-null, so the inherited batch list
-    // is already fully folded: record it compacted, or every read pays
-    // the generation-resolve path (broadcast join + per-src window)
-    // for batches that can have no non-null gen rows (r16 advice)
-    if (ivfBatches.nonEmpty)
-      IndexManifest.read(s, mp).foreach { case (txt, bs) =>
-        IndexManifest.setCompacted(s, mp, txt, bs, bs.size) }
-    // the rebuild's refinement covered every inherited batch — record
-    // it, so the maintenance staleness condition (applied − refined)
-    // starts at zero
-    IndexManifest.read(s, mp).foreach { case (txt, _) =>
-      IndexManifest.setRefinedThrough(s, mp, txt, ivfBatches.size) }
-    freshKnngMemo.add(memoKey)
-    (et, rt)
+    PersistedIndex.markFresh(s, ix)
+    names
   }
 
   /** The one-shot build body: one probe-ring pass over the IVF
@@ -2529,14 +2285,11 @@ object Similarity {
         .select(col("src").as("qid"), col("dst").as("nid"))
         .localCheckpoint(),
       asg.select(col("vec_id"), col("ce"), col("cn")), k, r)
-    refined.select(col("qid").as("src"), col("nid").as("dst"),
-        col("score"), col("rn"))
-      .withColumn("gen", lit(null).cast("string"))
-      .repartition(eBuckets, col("src"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(eBuckets, "src").sortBy("src")
-      .format("parquet").saveAsTable(et)
-    IndexManifest.markBuckets(s, et, eBuckets)
+    PersistedIndex.writeBucketed(s,
+      refined.select(col("qid").as("src"), col("nid").as("dst"),
+          col("score"), col("rn"))
+        .withColumn("gen", lit(null).cast("string")),
+      et, "src", eBuckets, SaveMode.Overwrite)
   }
 
   private def buildKnnGraphTables(s: SparkSession, k: Int,
@@ -2625,11 +2378,8 @@ object Similarity {
         val edges = cellBlockTopK(qx, mates, k, rows,
           blockRowCap = blockGuardCap(rows, nlist))
           .withColumn("gen", lit(null).cast("string"))
-        edges.repartition(eBuckets, col("src"))
-          .write.mode(if (c == 0) org.apache.spark.sql.SaveMode.Overwrite
-            else org.apache.spark.sql.SaveMode.Append)
-          .bucketBy(eBuckets, "src").sortBy("src")
-          .format("parquet").saveAsTable(et)
+        PersistedIndex.writeBucketed(s, edges, et, "src", eBuckets,
+          if (c == 0) SaveMode.Overwrite else SaveMode.Append)
         // chunk shuffles are freed by the GC-driven ContextCleaner,
         // whose periodic-GC default (30 min) outlives a multi-chunk
         // build — without a prompt each chunk's ~budget of shuffle
@@ -2641,15 +2391,10 @@ object Similarity {
         // budget rather than chunks x budget.
         if (chunks > 1) System.gc()
       }
-      IndexManifest.markBuckets(s, et, eBuckets)
       refineBuiltEdges(s, bs, et, asg, k, eBuckets)
-      q.select(col("qid"), explode_outer(col("qcids")).as("qcid"),
-          col("acid"))
-        .repartition(eBuckets, col("qcid"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .bucketBy(eBuckets, "qcid").sortBy("qcid")
-        .format("parquet").saveAsTable(rt)
-      IndexManifest.markBuckets(s, rt, eBuckets)
+      PersistedIndex.writeBucketed(s,
+        q.select(col("qid"), explode_outer(col("qcids")).as("qcid"),
+          col("acid")), rt, "qcid", eBuckets, SaveMode.Overwrite)
       LastGraphBuild =
         (chunks, rows, (System.nanoTime() - buildT00) / 1e9)
       return
@@ -2749,21 +2494,13 @@ object Similarity {
             col("e.score").as("score"),
             (col("p") + 1).cast("long").as("rn")))
         .withColumn("gen", lit(null).cast("string"))
-      edges.repartition(eBuckets, col("src"))
-        .write.mode(if (c == 0) org.apache.spark.sql.SaveMode.Overwrite
-          else org.apache.spark.sql.SaveMode.Append)
-        .bucketBy(eBuckets, "src").sortBy("src")
-        .format("parquet").saveAsTable(et)
+      PersistedIndex.writeBucketed(s, edges, et, "src", eBuckets,
+        if (c == 0) SaveMode.Overwrite else SaveMode.Append)
     }
-    IndexManifest.markBuckets(s, et, eBuckets)
     refineBuiltEdges(s, bs, et, asg, k, eBuckets)
-    q.select(col("qid"), explode_outer(col("qcids")).as("qcid"),
-        col("acid"))
-      .repartition(eBuckets, col("qcid"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(eBuckets, "qcid").sortBy("qcid")
-      .format("parquet").saveAsTable(rt)
-    IndexManifest.markBuckets(s, rt, eBuckets)
+    PersistedIndex.writeBucketed(s,
+      q.select(col("qid"), explode_outer(col("qcids")).as("qcid"),
+        col("acid")), rt, "qcid", eBuckets, SaveMode.Overwrite)
     LastGraphBuild = (chunks, rows, (System.nanoTime() - buildT0) / 1e9)
   }
 
@@ -2806,9 +2543,7 @@ object Similarity {
   private[graft] def readKnnGraphEdges(s: SparkSession, d: String,
                                        k: Int): DataFrame = {
     val (et, _) = knngTableNames(d, k)
-    val stored = IndexManifest.read(s, knngManifestPath(s, d, k))
-      .getOrElse(throw new IllegalStateException(
-        s"kNN graph index for $d (k=$k) has no manifest"))
+    val stored = PersistedIndex.stored(s, knngIndex(d, k))
     resolveGraphEdges(s.table(et), stored._1, stored._2)
   }
 
@@ -2847,10 +2582,7 @@ object Similarity {
                              at: String, ct: String, np: Int,
                              batch: DataFrame, batchId: String): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val (storedTxt, storedBatches) =
-      IndexManifest.read(s0, knngManifestPath(s0, d, k))
-        .getOrElse(throw new IllegalStateException(
-          s"kNN graph index for $d (k=$k) has no manifest"))
+    val (storedTxt, storedBatches) = PersistedIndex.stored(s0, knngIndex(d, k))
     val eBuckets =
       IndexManifest.appendBucketsOf(s0, et, storedTxt, s"kNN graph $d")
     val rBuckets =
@@ -3029,20 +2761,12 @@ object Similarity {
         col("nid").as("dst"), col("score")))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= k)
-    bEdges.unionByName(updated)
-      .withColumn("gen", lit(batchId))
-      .repartition(eBuckets, col("src"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(eBuckets, "src").sortBy("src")
-      .format("parquet").saveAsTable(et)
-    IndexManifest.markBuckets(s, et, eBuckets)
-    b.select(col("bid").as("qid"), explode_outer(col("bring")).as("qcid"),
-        col("bcid").as("acid"))
-      .repartition(rBuckets, col("qcid"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(rBuckets, "qcid").sortBy("qcid")
-      .format("parquet").saveAsTable(rt)
-    IndexManifest.markBuckets(s, rt, rBuckets)
+    PersistedIndex.writeBucketed(s,
+      bEdges.unionByName(updated).withColumn("gen", lit(batchId)),
+      et, "src", eBuckets, SaveMode.Append)
+    PersistedIndex.writeBucketed(s,
+      b.select(col("bid").as("qid"), explode_outer(col("bring")).as("qcid"),
+        col("bcid").as("acid")), rt, "qcid", rBuckets, SaveMode.Append)
     // the fold wrote through the CLONE — the caller session's cached
     // relations would serve the pre-fold file listing (rule 33: a
     // cloned session's writes cannot invalidate other sessions'
@@ -3075,13 +2799,10 @@ object Similarity {
     * from the measured decay curve) restores it. */
   def appendToKnnGraphIndex(s: SparkSession, d: String, k: Int,
                             batch: DataFrame, batchId: String): Boolean = {
-    require(batchId.matches("[A-Za-z0-9_.\\-]+"),
-      s"batchId must match [A-Za-z0-9_.-]+ (manifest round-trip): $batchId")
+    PersistedIndex.checkBatchId(batchId)
+    val ix = knngIndex(d, k)
     val (et, rt) = ensureKnnGraphIndex(s, d, k) // folds any lag first
-    val mp = knngManifestPath(s, d, k)
-    val stored0 = IndexManifest.read(s, mp).getOrElse(
-      throw new IllegalStateException(
-        s"kNN graph index for $d (k=$k) has no manifest after ensure"))
+    val stored0 = PersistedIndex.stored(s, ix)
     if (stored0._2.exists(_._1 == batchId)) return false
     val (at, ct) = ivfTableNames(d)
     val np = knngNprobe(IndexManifest.indexRowsOf(stored0._1, Nil))
@@ -3091,8 +2812,8 @@ object Similarity {
     // caller's frame
     val rows =
       if (ivfFresh) batch
-      else s.read.parquet(new org.apache.hadoop.fs.Path(
-        ivfBatchStore(s, d), batchId).toString)
+      else s.read.parquet(
+        PersistedIndex.batchPath(s, ivfIndex(d), batchId).toString)
     // Precondition enforcement — the r18 block guard's INGEST-side
     // twin (r20, found by the 1M drift-in-stream smoke): a
     // concentrated batch can push one of its own cells past the
@@ -3126,13 +2847,13 @@ object Similarity {
       ensureKnnGraphIndex(s, d, k) // stale cfp: rebuild incl. batch
       return true
     }
-    foldGraphBatch(s, d, k, et, rt, at, ct, np, rows, batchId)
-    val stored1 = IndexManifest.read(s, mp).get
-    IndexManifest.appendBatch(s, mp, stored1._1, stored1._2, batchId,
-      rows.select("vec_id").distinct().count())
+    PersistedIndex.foldBatch(s, ix, batchId) {
+      foldGraphBatch(s, d, k, et, rt, at, ct, np, rows, batchId)
+      rows.select("vec_id").distinct().count()
+    }
     // lockstep provably holds — skip the next ensure's corpus-scan
     // freshness check (appendToIvfIndex cleared the memo)
-    freshKnngMemo.add(s.sparkContext.applicationId + s":knng:$d#k=$k")
+    PersistedIndex.markFresh(s, ix)
     true
   }
 
@@ -3144,47 +2865,14 @@ object Similarity {
   def compactKnnGraphIndex(s: SparkSession, d: String, k: Int,
                            rebucketTo: Option[Int] = None): Boolean = {
     val (et, rt) = ensureKnnGraphIndex(s, d, k)
-    val mp = knngManifestPath(s, d, k)
-    val stored = IndexManifest.read(s, mp).getOrElse(
-      throw new IllegalStateException(
-        s"kNN graph index for $d (k=$k) has no manifest after ensure"))
-    val storedBuckets =
-      IndexManifest.bucketsOf(stored._1, s"kNN graph $d")
-    val target = rebucketTo.getOrElse(Tables.indexBuckets(
-      IndexManifest.indexRowsOf(stored._1, stored._2)))
-    if (stored._2.size <= IndexManifest.compactedOf(stored._1) &&
-        target == storedBuckets)
-      return false
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    def files(t: String) =
-      s.read.parquet(new org.apache.hadoop.fs.Path(wh, t).toString)
-    // read the FILES, not s.table (rule 20a): the bucketed scan's
-    // advertised partitioning elides the alignment repartition while
-    // AQE degrades the actual scan — the write would spray
-    // tasks x buckets files
-    val (etTmp, rtTmp) = (et + "_c", rt + "_c")
-    Seq(etTmp, rtTmp).foreach(dropTableWithLocation(s, _))
-    resolveGraphEdges(files(et), stored._1, stored._2)
-      .withColumn("gen", lit(null).cast("string"))
-      .repartition(target, col("src"))
-      .write.bucketBy(target, "src").sortBy("src")
-      .format("parquet").saveAsTable(etTmp)
-    IndexManifest.markBuckets(s, etTmp, target)
-    files(rt).dropDuplicates("qid", "qcid")
-      .repartition(target, col("qcid"))
-      .write.bucketBy(target, "qcid").sortBy("qcid")
-      .format("parquet").saveAsTable(rtTmp)
-    IndexManifest.markBuckets(s, rtTmp, target)
-    dropTableWithLocation(s, et)
-    dropTableWithLocation(s, rt)
-    s.sql(s"ALTER TABLE $etTmp RENAME TO $et")
-    s.sql(s"ALTER TABLE $rtTmp RENAME TO $rt")
-    IndexManifest.setCompacted(s, mp, stored._1, stored._2,
-      stored._2.size)
-    if (target != storedBuckets)
-      IndexManifest.read(s, mp).foreach { case (txt, _) =>
-        IndexManifest.setBuckets(s, mp, txt, target) }
-    true
+    def files(t: String) = PersistedIndex.files(s, t)
+    PersistedIndex.compact(s, knngIndex(d, k), rebucketTo) {
+      case (_, (txt, batches)) => Seq(
+        PersistedIndex.Staged(et, resolveGraphEdges(files(et), txt, batches)
+          .withColumn("gen", lit(null).cast("string")), Some("src")),
+        PersistedIndex.Staged(rt, files(rt).dropDuplicates("qid", "qcid"),
+          Some("qcid")))
+    }
   }
 
   /** Re-refine the persisted graph in place — the r20 contract's
@@ -3193,7 +2881,7 @@ object Similarity {
     * a folded batch's own nodes carry ring-quality adjacency and no
     * existing node gains 2-hop candidates through the arrivals, so
     * refinement quality goes stale batch by batch (measured decay:
-    * see GraphFoldDecayProbe / SURVEY §24). This pass runs
+    * see SURVEY §24). This pass runs
     * [[knngRefineRounds]] rounds over the RESOLVED edge set with
     * vectors from the assignment table (folded nodes participate
     * fully), written back gen-null through the compact staging-rename
@@ -3204,48 +2892,29 @@ object Similarity {
     * candidate set contains the current edges — law-tested).
     * Returns false when every applied batch is already refined. */
   def refineKnnGraphIndex(s: SparkSession, d: String, k: Int): Boolean = {
-    val (et, rt) = ensureKnnGraphIndex(s, d, k)
-    val mp = knngManifestPath(s, d, k)
-    val stored = IndexManifest.read(s, mp).getOrElse(
-      throw new IllegalStateException(
-        s"kNN graph index for $d (k=$k) has no manifest after ensure"))
-    val applied = stored._2.size
-    if (IndexManifest.refinedThroughOf(stored._1) >= applied)
-      return false
+    val (et, _) = ensureKnnGraphIndex(s, d, k)
+    val ix = knngIndex(d, k)
+    val (txt, batches) = PersistedIndex.stored(s, ix)
+    val applied = batches.size
+    if (IndexManifest.refinedThroughOf(txt) >= applied) return false
     val (at, _) = ivfTableNames(d)
-    val target = Tables.indexBuckets(
-      IndexManifest.indexRowsOf(stored._1, stored._2))
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    // read the table's FILES, not s.table (rule 20a — the compact rule)
-    val raw = s.read.parquet(
-      new org.apache.hadoop.fs.Path(wh, et).toString)
     val refined = refineEdgeRounds(
-      resolveGraphEdges(raw, stored._1, stored._2)
+      resolveGraphEdges(PersistedIndex.files(s, et), txt, batches)
         .select(col("src").as("qid"), col("dst").as("nid"))
         .localCheckpoint(),
       s.table(at).select(col("vec_id"), col("ce"), col("cn")),
       k, math.max(1, knngRefineRounds))
-    val etTmp = et + "_r"
-    dropTableWithLocation(s, etTmp)
-    refined.select(col("qid").as("src"), col("nid").as("dst"),
-        col("score"), col("rn"))
-      .withColumn("gen", lit(null).cast("string"))
-      .repartition(target, col("src"))
-      .write.bucketBy(target, "src").sortBy("src")
-      .format("parquet").saveAsTable(etTmp)
-    IndexManifest.markBuckets(s, etTmp, target)
-    dropTableWithLocation(s, et)
-    s.sql(s"ALTER TABLE $etTmp RENAME TO $et")
-    // the rewrite resolved every generation down to gen-null rows:
-    // record compaction + refinement coverage together. The rings
+    // the rewrite resolves every generation down to gen-null rows, so
+    // it records compaction + refinement coverage together. The rings
     // table keeps its layout — compaction proper handles it when the
     // layout condition fires.
-    IndexManifest.setCompacted(s, mp, stored._1, stored._2, applied)
-    IndexManifest.read(s, mp).foreach { case (txt, _) =>
-      IndexManifest.setRefinedThrough(s, mp, txt, applied) }
-    if (target != IndexManifest.bucketsOf(stored._1, s"kNN graph $d"))
-      IndexManifest.read(s, mp).foreach { case (txt, _) =>
-        IndexManifest.setBuckets(s, mp, txt, target) }
+    PersistedIndex.rewrite(s, ix,
+      Tables.indexBuckets(IndexManifest.indexRowsOf(txt, batches)),
+      Seq(PersistedIndex.Staged(et,
+        refined.select(col("qid").as("src"), col("nid").as("dst"),
+            col("score"), col("rn"))
+          .withColumn("gen", lit(null).cast("string")), Some("src"))),
+      IndexManifest.withRefinedThrough(_, applied))
     true
   }
 
@@ -3263,24 +2932,15 @@ object Similarity {
       refineAfter: Int = Maintenance.DefaultRefineAfter,
       dryRun: Boolean = false): MaintenanceReport = {
     ensureKnnGraphIndex(s, d, k)
-    val stored = IndexManifest.read(s, knngManifestPath(s, d, k))
-      .getOrElse(throw new IllegalStateException(
-        s"kNN graph index for $d (k=$k) has no manifest after ensure"))
-    val applied = stored._2.size
-    val uncompacted = applied - IndexManifest.compactedOf(stored._1)
-    val unrefined = applied - IndexManifest.refinedThroughOf(stored._1)
-    val storedBuckets =
-      IndexManifest.bucketsOf(stored._1, s"kNN graph $d")
-    val target = Tables.indexBuckets(
-      IndexManifest.indexRowsOf(stored._1, stored._2))
-    def report(action: String, ran: Boolean) =
-      MaintenanceReport("knng", action, ran, applied, uncompacted,
-        storedBuckets, target, -1L, -1L)
+    val ix = knngIndex(d, k)
+    val l = PersistedIndex.layout(s, ix)
+    val unrefined = l.applied -
+      IndexManifest.refinedThroughOf(PersistedIndex.stored(s, ix)._1)
     if (unrefined >= refineAfter)
-      report("refine", ran = !dryRun && refineKnnGraphIndex(s, d, k))
-    else if (uncompacted >= compactAfter || target != storedBuckets)
-      report("compact", ran = !dryRun && compactKnnGraphIndex(s, d, k))
-    else report("none", ran = false)
+      l.report("knng", "refine", ran = !dryRun && refineKnnGraphIndex(s, d, k))
+    else if (l.wantsCompact(compactAfter))
+      l.report("knng", "compact", ran = !dryRun && compactKnnGraphIndex(s, d, k))
+    else l.report("knng", "none", ran = false)
   }
 
   /** The shared cluster-derivation oracle prefix (through

@@ -741,8 +741,8 @@ object CorpusStreams {
     * cadence): [[graft.operators.Similarity.maintainIvfIndex]] first
     * (hot-cell occupancy + the fit-gap canary; a drift-triggered
     * refresh changes the quantizer and the graph maintain's ensure
-    * rebuilds IN-STREAM — the drift-repair path GraphStreamSmoke's
-    * drift leg measures), then
+    * rebuilds IN-STREAM — the drift-repair path the r20 streamed
+    * ingest smoke measured, SURVEY §24), then
     * [[graft.operators.Similarity.maintainKnnGraphIndex]] (refine
     * staleness re-refines, layout compacts). `compactEvery` drives
     * the unconditional layout fold (probes exactly unchanged). First
@@ -781,8 +781,8 @@ object CorpusStreams {
           // scan + the fit canary): a concentrated-drift refresh
           // changes the quantizer fingerprint, which the graph
           // maintain's own ensure — next line — detects as staleness
-          // and REBUILDS right here, inside the stream (the
-          // GraphStreamSmoke drift leg measures this batch's wall).
+          // and REBUILDS right here, inside the stream (the r20
+          // streamed ingest smoke measured this batch's wall).
           // A healthy index makes this a measurement, not a rewrite.
           graft.operators.Similarity.maintainIvfIndex(s, dir)
           graft.operators.Similarity.maintainKnnGraphIndex(s, dir, k)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, PersistedIndex}
 import org.apache.spark.sql.functions._
 
 /** Laws for the oracle-exempt dedup operators (SURVEY.md §5: non-SQL ops
@@ -330,7 +330,7 @@ class DedupSpec extends SparkSuite {
     // whole point of persisting it; a rebuild rewrites every file.
     // Clear the session memo first so the REAL freshness check runs,
     // then once more memoized (both paths must reuse).
-    Dedup.forgetFreshIndexMemo()
+    PersistedIndex.forgetMemo()
     assert(Dedup.ensureShingleIndex(spark, sf) == names)
     assert(stamp() == first, "fresh index was rebuilt by the check path")
     assert(Dedup.ensureShingleIndex(spark, sf) == names)
@@ -522,7 +522,7 @@ class DedupSpec extends SparkSuite {
     // regen: same ids, same count, doc 1's text replaced
     writeCorpus(dir, idxCorpus.map { case (id, t) =>
       if (id == 1L) id -> txt(40) else id -> t })
-    Dedup.forgetFreshIndexMemo()
+    PersistedIndex.forgetMemo()
     // stale index would still claim 500 ~ old doc 1; the rebuilt one
     // must not (and must find a dup of the NEW text instead)
     assert(probe(d, Seq(500L -> txt(1, 2))).isEmpty,
@@ -551,7 +551,7 @@ class DedupSpec extends SparkSuite {
     // simulate the crash window: day2's table rows landed but its
     // manifest update did not
     graft.operators.IndexManifest.writeText(spark, mp, withDay1)
-    Dedup.forgetFreshIndexMemo()
+    PersistedIndex.forgetMemo()
     // the repair must rebuild the base AND refold day1 from the batch
     // store — NOT silently rebuild from the corpus dir alone (day1 is
     // a stream-only arrival whose checkpoint committed; it would be
@@ -580,7 +580,7 @@ class DedupSpec extends SparkSuite {
           & 0xffffffffL).toHexString)
     store.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(store, true)
-    Dedup.forgetFreshIndexMemo()
+    PersistedIndex.forgetMemo()
     val e = intercept[IllegalStateException] { probe(d, idxB2) }
     assert(e.getMessage.contains("partial-append"),
       s"wrong failure mode: ${e.getMessage}")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{IndexManifest, Retrieval}
+import graft.operators.{IndexManifest, PersistedIndex, Retrieval}
 import org.apache.spark.sql.functions._
 
 /** Laws for the persisted lexical (BM25) index: indexed == inline,
@@ -150,7 +150,7 @@ class LexIndexSpec extends SparkSuite {
     assert(Retrieval.appendToLexIndex(spark, d, docsDf(b2), "day2"))
     // crash window: day2's table rows landed, manifest update did not
     IndexManifest.writeText(spark, mp, withDay1)
-    Retrieval.forgetLexMemo()
+    PersistedIndex.forgetMemo()
     // repair must rebuild the base AND refold day1 from the store —
     // day1 is a stream-only arrival whose checkpoint committed
     val repaired = probe(d)
@@ -172,7 +172,7 @@ class LexIndexSpec extends SparkSuite {
           & 0xffffffffL).toHexString)
     store.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(store, true)
-    Retrieval.forgetLexMemo()
+    PersistedIndex.forgetMemo()
     val e = intercept[IllegalStateException] { probe(d) }
     assert(e.getMessage.contains("partial-append"), e.getMessage)
   }
@@ -228,7 +228,7 @@ class LexIndexSpec extends SparkSuite {
     // regen: same ids, same count, doc 0 now carries 5 'dup' tokens
     writeCorpus(dir, baseCorpus.map { case (id, t) =>
       if (id == 0L) id -> txt(0, dups = 5) else id -> t })
-    Retrieval.forgetLexMemo()
+    PersistedIndex.forgetMemo()
     val after = probe(d)
     assert(after != before,
       "stale index served after an equal-count content change")

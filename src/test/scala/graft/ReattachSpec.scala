@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Retrieval, Similarity}
+import graft.operators.{Dedup, PersistedIndex, Retrieval, Similarity}
 
 /** Cross-JVM artifact re-attach laws (IndexManifest.reattachTables):
   * the default catalog is per-JVM but the warehouse directory
@@ -101,10 +101,7 @@ class ReattachSpec extends SparkSuite {
   }
 
   private def forgetAllMemos(): Unit = {
-    Dedup.forgetFreshIndexMemo()
-    Similarity.forgetFreshIvfMemo()
-    Similarity.forgetFreshKnngMemo()
-    Retrieval.forgetLexMemo()
+    PersistedIndex.forgetMemo()
   }
 
   // ---- shingle index ----

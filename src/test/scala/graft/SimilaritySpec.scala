@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Maintenance, Similarity}
+import graft.operators.{Maintenance, PersistedIndex, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Laws for the similarity-search operators. The ANN variants are
@@ -644,7 +644,7 @@ class SimilaritySpec extends SparkSuite {
     (0L until 150L).map(i => (i, vec(i + 7000L)))
       .toDF("vec_id", "embedding").coalesce(1).write
       .mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Similarity.forgetFreshIvfMemo()
+    PersistedIndex.forgetMemo()
     Similarity.ensureIvfIndex(spark, dir)
     assert(spark.table(at).count() == 150L,
       "equal-count regen did not rebuild the IVF index")
@@ -717,7 +717,7 @@ class SimilaritySpec extends SparkSuite {
     assert(Similarity.appendToIvfIndex(spark, dir,
       Seq((1100L, vec(777L))).toDF("vec_id", "embedding"), "ann_1"))
     graft.operators.IndexManifest.writeText(spark, mp, withAnn0)
-    Similarity.forgetFreshIvfMemo()
+    PersistedIndex.forgetMemo()
     Similarity.ensureIvfIndex(spark, dir)
     assert(spark.table(at).count() == 152L,
       "repair must keep base + refolded ann_0 and wipe ann_1 partials")
@@ -852,7 +852,7 @@ class SimilaritySpec extends SparkSuite {
     // rename not yet run) is new-at + missing-ct — ensure must detect
     // and repair by rebuild + refold, never serve the mismatched pair
     spark.sql(s"DROP TABLE IF EXISTS $ct")
-    Similarity.forgetFreshIvfMemo()
+    PersistedIndex.forgetMemo()
     Similarity.ensureIvfIndex(spark, dir)
     assert(spark.table(at).count() == 191L &&
       spark.catalog.tableExists(ct),
@@ -1334,7 +1334,7 @@ class SimilaritySpec extends SparkSuite {
     def mtimes() = spark.table(et).inputFiles.map(f =>
       new java.io.File(new java.net.URI(f)).lastModified()).toSeq.sorted
     val before = mtimes()
-    Similarity.forgetFreshKnngMemo()
+    PersistedIndex.forgetMemo()
     Similarity.ensureKnnGraphIndex(spark, sf, 3)
     assert(mtimes() == before, "fresh graph index rebuilt on re-ensure")
     // delta probe = the foil filtered to the slice
@@ -1441,7 +1441,7 @@ class SimilaritySpec extends SparkSuite {
     val refinedFiles = spark.table(etBefore).inputFiles.toSet
     Similarity.KnngRefineOverride = Some(0)
     val ringMerged = try {
-      Similarity.forgetFreshKnngMemo()
+      PersistedIndex.forgetMemo()
       Similarity.ensureKnnGraphIndex(spark, dir, 3) // #rf=0: stale, rebuilds
       assert(spark.table(etBefore).inputFiles.toSet != refinedFiles,
         "changed refine-round rule did not read as staleness")
@@ -1454,7 +1454,7 @@ class SimilaritySpec extends SparkSuite {
     // back to the refined contract: the next ensure rebuilds (the
     // stored #rf=0 manifest is stale again) and a fresh build is
     // fully refined — refineKnnGraphIndex has nothing to do
-    Similarity.forgetFreshKnngMemo()
+    PersistedIndex.forgetMemo()
     Similarity.ensureKnnGraphIndex(spark, dir, 3)
     assert(!Similarity.refineKnnGraphIndex(spark, dir, 3),
       "fresh refined build reported unrefined batches")

@@ -948,7 +948,7 @@ class StreamingSpec extends SparkSuite {
     // stream appended its batches, so compare against a rebuilt-from-
     // dir index with the same docs as one batch)
     graft.operators.Dedup.dropShingleIndex(spark, dir)
-    graft.operators.Dedup.forgetFreshIndexMemo()
+    graft.operators.PersistedIndex.forgetMemo()
     val (fullFrame, fullSh) = graft.operators.Dedup.deltaDedupOf(
       spark, dir, (h1 ++ h2).toDS().toDF())
     val full = fullFrame.collect()
@@ -1097,7 +1097,7 @@ class StreamingSpec extends SparkSuite {
     try { input.addData(h2); q2.processAllAvailable() } finally q2.stop()
     // the one-big-batch comparator on a rebuilt-from-dir index
     graft.operators.Dedup.dropShingleIndex(spark, dir)
-    graft.operators.Dedup.forgetFreshIndexMemo()
+    graft.operators.PersistedIndex.forgetMemo()
     val (fullFrame, fullSh) = graft.operators.Dedup.deltaDedupOf(
       spark, dir, (h1 ++ h2).toDS().toDF())
     val full = fullFrame.collect()
@@ -1254,12 +1254,12 @@ class StreamingSpec extends SparkSuite {
       "re-refine over the streamed graph")
     Similarity.KnngRefineOverride = Some(0)
     val ringMerged = try {
-      Similarity.forgetFreshKnngMemo()
+      graft.operators.PersistedIndex.forgetMemo()
       Similarity.ensureKnnGraphIndex(spark, dir, 3)
       resolved()
     } finally {
       Similarity.KnngRefineOverride = None
-      Similarity.forgetFreshKnngMemo()
+      graft.operators.PersistedIndex.forgetMemo()
     }
     assertDominates(ranks(streamed), ranks(ringMerged),
       "stream-folded graph vs ring-only merged rebuild")
