@@ -54,6 +54,13 @@ object Export {
 
   /** Write the normalized rows as the backup artifact.
     *
+    * `rows` is evaluated more than once: `repartitionByRange` first runs
+    * a sampling job over it to pick the range bounds, then the shuffle
+    * reads it again. An uncached lineage re-runs its source each time —
+    * for a live walk, that is a second full HTTP walk of the database.
+    * Pass a materialized frame (LiveExport.export returns one; pin a
+    * DSv2 `firebase` frame with `localCheckpoint()` first).
+    *
     * @param numPartitions output page count; at cluster scale set from
     *        bytes/`maxPartitionBytes`, locally small.
     */
@@ -67,11 +74,11 @@ object Export {
       .parquet(s"$outDir/rows")
     // the manifest must describe the rows actually PERSISTED:
     // re-evaluating an uncached `rows` lineage would re-run its source
-    // — for a live export, a second full HTTP walk of the database
-    // (double wall-clock and API quota), and any concurrent write
-    // between the two walks would desynchronize manifest from rows,
-    // breaking the restore-verifies-completeness contract. Aggregate
-    // the written artifact instead.
+    // — for a live export, yet another full HTTP walk of the database
+    // (wall-clock and API quota), and any concurrent write between the
+    // walks would desynchronize manifest from rows, breaking the
+    // restore-verifies-completeness contract. Aggregate the written
+    // artifact instead.
     val sp = rows.sparkSession
     manifest(sp, readBackup(sp, outDir)).write
       .mode(SaveMode.Overwrite).json(s"$outDir/manifest")

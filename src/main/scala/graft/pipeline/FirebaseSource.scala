@@ -36,6 +36,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * recursion — BackupProcessor.php:71-199) and emits the engine's
   * canonical leaf-edge rows. Memory per reader is bounded by one
   * subtree, the same contract as the mapPartitions walk.
+  *
+  * Unlike [[LiveExport.export]], which returns a materialized snapshot,
+  * a DSv2 frame is a live scan: every action plans and walks the
+  * database again. Pin it (`localCheckpoint()`) before handing it to
+  * Export.writeBackup, whose range sampler and shuffle each evaluate
+  * their input — unpinned, that is two walks, and two different
+  * snapshots if the database changes in between.
   */
 class FirebaseSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "firebase"

@@ -173,6 +173,51 @@ object LiveExport {
       n == null || n.isNull || n.isMissingNode ||
         (n.isObject && n.size() == 0) || (n.isArray && n.size() == 0)
 
+    /** One page request of `itemsPerPage` children: the page (or the
+      * scalar the path holds), or None when the answer says "shrink"
+      * (an error status or an empty payload). */
+    private def fetchPage(path: String, startKey: Option[String],
+                          preserveLastKey: Boolean,
+                          itemsPerPage: Int): Option[PageOut] = {
+      val query = Map("orderBy" -> "\"$key\"",
+        "limitToFirst" -> itemsPerPage.toString) ++
+        startKey.map(k => "startAt" -> ("\"" + k + "\""))
+      val resp = client.getR(path, query)
+      failIfDenied(resp, path)
+      val node = mapper.readTree(resp.body)
+      if (isErrorResponse(resp) || isEmptyPayload(node)) None
+      else if (!node.isObject && !node.isArray)
+        Some(ScalarLeaf(mapper.writeValueAsString(node)))
+      else {
+        // Firebase serializes dense integer-keyed nodes as JSON
+        // ARRAYS (element index = key), padding skipped leading
+        // indices with nulls on filtered reads — an object-only
+        // fields() here returned an empty iterator and crashed on
+        // .last. Arrays translate to index-keyed fields; the normal
+        // startAt-duplicate drop and isLast logic then apply
+        // unchanged (the first non-null element IS the inclusive
+        // startAt key).
+        val fields: Vector[(String, JsonNode)] =
+          if (node.isArray)
+            node.elements().asScala.zipWithIndex.collect {
+              case (v, i) if !v.isNull => (i.toString, v)
+            }.toVector
+          else node.fields().asScala
+            .map(e => e.getKey -> e.getValue).toVector
+        if (fields.isEmpty)
+          // an all-null padded array page past the end: final page
+          Some(Page(Vector.empty, startKey.getOrElse(""), isLastPage = true))
+        else {
+          val lastKey = fields.last._1
+          val isLast = fields.size < itemsPerPage ||
+            (fields.size == 1 && startKey.contains(lastKey))
+          val data = if (startKey.isDefined && !preserveLastKey)
+            fields.drop(1) else fields
+          Some(Page(data, lastKey, isLast))
+        }
+      }
+    }
+
     /** BackupProcessor.php:150-199, one call = one successful page (or
       * a go-deeper verdict), shrinking inside the loop. */
     private def getPathsPaginated(path: String, startKey: Option[String],
@@ -180,20 +225,11 @@ object LiveExport {
       var itemsPerPage = ipp.getOrElse(path, (initIpp, 0))._1
       var out: PageOut = null
       while (out == null) {
-        val query = Map("orderBy" -> "\"$key\"",
-          "limitToFirst" -> itemsPerPage.toString) ++
-          startKey.map(k => "startAt" -> ("\"" + k + "\""))
-        val resp = client.getR(path, query)
-        failIfDenied(resp, path)
-        val node = mapper.readTree(resp.body)
-        val shrink = isErrorResponse(resp) || isEmptyPayload(node)
-        if (!shrink && !node.isObject && !node.isArray) {
-          out = ScalarLeaf(mapper.writeValueAsString(node))
-        } else if (shrink) {
-          if (itemsPerPage == MinIpp) {
+        fetchPage(path, startKey, preserveLastKey, itemsPerPage) match {
+          case None if itemsPerPage == MinIpp =>
             ipp(path) = (MinIpp, 0)
             out = GoDeeper
-          } else {
+          case None =>
             itemsPerPage =
               math.max(MinIpp, math.ceil(itemsPerPage / 2.0).toInt)
             // store the halved size AND reset the success streak —
@@ -202,40 +238,15 @@ object LiveExport {
             // one post-failure success inherits the old streak and
             // immediately re-grows toward the size that just failed
             ipp(path) = (itemsPerPage, 0)
-          }
-        } else {
-          // success: per-path IPP bookkeeping (:180-188)
-          val (_, succ) = ipp.getOrElse(path, (itemsPerPage, 0))
-          if (succ + 1 > GrowAfter)
-            ipp(path) = (math.min(maxIpp,
-              math.ceil(itemsPerPage * 1.2).toInt), 0)
-          else ipp(path) = (itemsPerPage, succ + 1)
-          // Firebase serializes dense integer-keyed nodes as JSON
-          // ARRAYS (element index = key), padding skipped leading
-          // indices with nulls on filtered reads — an object-only
-          // fields() here returned an empty iterator and crashed on
-          // .last. Arrays translate to index-keyed fields; the normal
-          // startAt-duplicate drop and isLast logic then apply
-          // unchanged (the first non-null element IS the inclusive
-          // startAt key).
-          val fields: Vector[(String, JsonNode)] =
-            if (node.isArray)
-              node.elements().asScala.zipWithIndex.collect {
-                case (v, i) if !v.isNull => (i.toString, v)
-              }.toVector
-            else node.fields().asScala
-              .map(e => e.getKey -> e.getValue).toVector
-          if (fields.isEmpty) {
-            // an all-null padded array page past the end: final page
-            out = Page(Vector.empty, startKey.getOrElse(""), isLastPage = true)
-          } else {
-            val lastKey = fields.last._1
-            val isLast = fields.size < itemsPerPage ||
-              (fields.size == 1 && startKey.contains(lastKey))
-            val data = if (startKey.isDefined && !preserveLastKey)
-              fields.drop(1) else fields
-            out = Page(data, lastKey, isLast)
-          }
+          case Some(leaf: ScalarLeaf) => out = leaf
+          case Some(page) =>
+            // success: per-path IPP bookkeeping (:180-188)
+            val (_, succ) = ipp.getOrElse(path, (itemsPerPage, 0))
+            if (succ + 1 > GrowAfter)
+              ipp(path) = (math.min(maxIpp,
+                math.ceil(itemsPerPage * 1.2).toInt), 0)
+            else ipp(path) = (itemsPerPage, succ + 1)
+            out = page
         }
       }
       out
@@ -367,20 +378,35 @@ object LiveExport {
     }
 
     /** Planning probe — the go-deeper verdict applied at PLAN time
-      * instead of mid-walk. One page fetch of `path`: if even the
-      * floor-sized page is too large (the exact condition the serial
-      * walker answers with recursion), the subtree is too fat to be
-      * one task's unit of work — return its shallow children as
-      * independent work items. Anything else (a normal page, a scalar
-      * leaf) means the path is walkable whole: return empty. The probe
-      * page is discarded — the walk stage re-fetches it, trading one
-      * duplicate page per work item for a dataflow where edge data
-      * never routes through the driver. */
+      * instead of mid-walk. ONE floor-size page request
+      * (`limitToFirst=MinIpp`): a floor page is a prefix of every larger
+      * first page, so if even it is too large (the exact condition the
+      * serial walker answers with recursion) no page size fits, and the
+      * subtree is too fat to be one task's unit of work — return its
+      * shallow children as independent work items. Anything else (a
+      * normal page, a scalar leaf) means the path is walkable whole:
+      * return empty. The probe page itself is discarded (edge data
+      * never routes through the driver) and the walker's IPP state is
+      * left untouched: the walk of a walkable path starts at its usual
+      * first page size, so the probe costs one small GET, not a second
+      * halving ladder. */
     def probeSplit(path: String): Seq[String] =
-      getPathsPaginated(path, None, preserveLastKey = false) match {
-        case GoDeeper => shallowKeys(path).map(childPath(path, _))
-        case _ => Nil
+      fetchPage(path, None, preserveLastKey = false, MinIpp) match {
+        case None => shallowKeys(path).map(childPath(path, _))
+        case Some(_) => Nil
       }
+  }
+
+  /** `items` dealt round-robin into at most `defaultParallelism`
+    * slices, one partition each — no shuffle stage in front of the
+    * HTTP stage, and neighbouring siblings (often alike in size) land
+    * in different tasks. */
+  private def slices(spark: SparkSession, items: Seq[String]) = {
+    val par = math.max(1, math.min(items.size,
+      spark.sparkContext.defaultParallelism))
+    val dealt = Vector.tabulate(par)(i =>
+      items.indices.drop(i).by(par).map(items).toVector)
+    spark.sparkContext.parallelize(dealt, par)
   }
 
   /** Work-list planner for the distributed export. Round 0 is the
@@ -395,24 +421,18 @@ object LiveExport {
     * subtrees to tasks, so one fat subtree (the exact case go-deeper
     * exists for, BackupProcessor.php:96-127) was walked serially by
     * ONE task while the rest of the cluster idled. Now that subtree
-    * splits into its children and drains cluster-wide. */
+    * splits into its children and drains cluster-wide. Page-size
+    * settings play no part: every probe is one floor page. */
   def plan(spark: SparkSession, clientFactory: () => RestClient,
-           root: String = "/", maxIpp: Int = DefaultMaxIpp,
-           startIpp: Option[Int] = None): Seq[String] = {
-    import spark.implicits._
-    def childPath(parent: String, key: String): String =
-      TreeCodec.childPath(parent, key)
-    var pending: Seq[String] = new Walker(clientFactory(), maxIpp)
-      .shallowKeys(root).map(childPath(root, _))
+           root: String = "/"): Seq[String] = {
+    var pending: Seq[String] = new Walker(clientFactory())
+      .shallowKeys(root).map(TreeCodec.childPath(root, _))
     val work = Seq.newBuilder[String]
     while (pending.nonEmpty) {
-      val par = math.max(1, math.min(pending.size,
-        spark.sparkContext.defaultParallelism))
-      val verdicts = spark.createDataset(pending)
-        .repartition(par)
-        .mapPartitions { ps =>
-          val w = new Walker(clientFactory(), maxIpp, startIpp = startIpp)
-          ps.map(p => p -> w.probeSplit(p))
+      val verdicts = slices(spark, pending)
+        .mapPartitions { it =>
+          val w = new Walker(clientFactory())
+          it.flatten.map(p => p -> w.probeSplit(p))
         }
         .collect()
       pending = verdicts.flatMap(_._2).toSeq
@@ -425,7 +445,13 @@ object LiveExport {
     * fat subtrees so no single task owns one), then each executor task
     * walks its assigned subtrees with its own Walker — the
     * cluster-wide form of the reference's single-process tree walk.
-    * The resulting frame feeds Export.writeBackup unchanged.
+    *
+    * The walk runs ONCE, here: the returned frame is an eager
+    * `localCheckpoint` of the walked edges, a materialized snapshot of
+    * the database as of this call. Export.writeBackup's range sampler
+    * and its shuffle (and any later action) read the stored edges
+    * instead of re-running the HTTP walk, so a write to the database
+    * after `export` returns never shows in the frame.
     *
     * @param clientFactory built once per partition ON THE EXECUTOR (the
     *        closure must be serializable; HttpRestClient instances are)
@@ -434,16 +460,13 @@ object LiveExport {
              root: String = "/", maxIpp: Int = DefaultMaxIpp,
              startIpp: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val items = plan(spark, clientFactory, root, maxIpp, startIpp)
-    val par = math.max(1, math.min(items.size,
-      spark.sparkContext.defaultParallelism))
-    spark.createDataset(items)
-      .repartition(par)
-      .mapPartitions { ps =>
-        val walker = new Walker(clientFactory(), maxIpp, startIpp = startIpp)
-        ps.flatMap(p => walker.fetchTree(p))
-      }
-      .toDF("path", "key", "value_json")
+    val items = plan(spark, clientFactory, root)
+    val edges = slices(spark, items).mapPartitions { it =>
+      val walker = new Walker(clientFactory(), maxIpp, startIpp = startIpp)
+      it.flatten.flatMap(p => walker.fetchTree(p))
+    }
+    spark.createDataset(edges).toDF("path", "key", "value_json")
+      .localCheckpoint(eager = true)
   }
 
   /** Single URL convenience mirroring the reference CLI surface

@@ -44,10 +44,18 @@ final class FirebaseStub(maxPayloadBytes: Int = Int.MaxValue,
   private val shallowFailsLeft = new AtomicInteger(failShallow)
   val getCount = new AtomicInteger(0)
   val patchCount = new AtomicInteger(0)
-  /** Every GET's tree path (".json" stripped), in arrival order — lets
-    * pushdown tests assert which subtrees were never requested. */
-  private val getLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def getPaths: Seq[String] = getLog.asScala.toVector
+  /** Every GET's tree path (".json" stripped) and raw query string
+    * ("" when absent), in arrival order — lets pushdown tests assert
+    * which subtrees were never requested, and cost tests count
+    * repeated (path, query) reads. */
+  private val getLog =
+    new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+  def getRequests: Seq[(String, String)] = getLog.asScala.toVector
+  def getPaths: Seq[String] = getRequests.map(_._1)
+  /** The client-side port of every request (GET and PATCH), in arrival
+    * order: requests sharing a port shared one kept-alive connection. */
+  private val portLog = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+  def remotePorts: Seq[Int] = portLog.asScala.toVector
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   server.createContext("/", (ex: HttpExchange) => handle(ex))
@@ -96,7 +104,9 @@ final class FirebaseStub(maxPayloadBytes: Int = Int.MaxValue,
         val p = uriPath.stripSuffix(".json")
         if (p.isEmpty) "/" else p
       }
-      val q = parseQuery(ex.getRequestURI.getRawQuery)
+      val rawQuery = Option(ex.getRequestURI.getRawQuery).getOrElse("")
+      val q = parseQuery(rawQuery)
+      portLog.add(ex.getRemoteAddress.getPort)
       val isPatch = ex.getRequestMethod == "PATCH" ||
         (ex.getRequestMethod == "POST" &&
           "PATCH" == ex.getRequestHeaders.getFirst("X-HTTP-Method-Override"))
@@ -131,7 +141,7 @@ final class FirebaseStub(maxPayloadBytes: Int = Int.MaxValue,
       }
       // GET
       getCount.incrementAndGet()
-      getLog.add(path)
+      getLog.add(path -> rawQuery)
       val node = nodeAt(path)
       if (q.get("shallow").contains("true")) {
         if (shallowFailsLeft.get() > 0) {

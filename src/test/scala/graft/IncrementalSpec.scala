@@ -92,13 +92,13 @@ class IncrementalSpec extends SparkSuite {
     try {
       stub.seed("""{"t": {"a": 1, "b": 2, "c": 3}}""")
       val u = stub.url
+      // export returns a materialized snapshot: snap1 must not see the
+      // mutation below
       val snap1 = LiveExport.export(spark, () => new HttpRestClient(u))
-        .localCheckpoint()
       // mutate the live db: change b, delete c, add d
       val sink = new Restore.HttpKVSink(u)
       sink.update("/t", Map("b" -> "22", "c" -> "null", "d" -> "4"))
       val snap2 = LiveExport.export(spark, () => new HttpRestClient(u))
-        .localCheckpoint()
       val diff = Export.diffBackups(snap1, snap2).collect()
         .map(r => (r.getString(1), r.getString(2))).toSet
       assert(diff == Set(("b", "changed"), ("c", "removed"), ("d", "added")))

@@ -23,6 +23,16 @@ class LiveSpec extends SparkSuite {
         "version": 7}"""
   }
 
+  /** The planner fixture: /fat's 30 children are each ~400 bytes, so
+    * even a floor page of /fat exceeds a 600-byte cap while every child
+    * pages whole. */
+  private val fatTree: String = {
+    val kids = (0 until 30).map(i =>
+      s""""c$i": {"k1": "${"x" * 180}", "k2": "${"y" * 180}"}""")
+      .mkString(",")
+    s"""{"fat": {$kids}, "tiny": 1, "cfg": {"m": "a"}}"""
+  }
+
   private def edgesOf(json: String): Set[TreeCodec.Edge] =
     TreeCodec.flatten(json).toSet
 
@@ -332,23 +342,29 @@ class LiveSpec extends SparkSuite {
     // children (31+ work items total) so the walk stage spreads it
     // over the cluster; the walked edges must still be exactly the
     // tree's.
-    val kids = (0 until 30).map(i =>
-      s""""c$i": {"k1": "${"x" * 180}", "k2": "${"y" * 180}"}""")
-      .mkString(",")
-    val json = s"""{"fat": {$kids}, "tiny": 1, "cfg": {"m": "a"}}"""
     val stub = new FirebaseStub(maxPayloadBytes = 600)
     try {
-      stub.seed(json)
+      stub.seed(fatTree)
       val u = stub.url
       val items = LiveExport.plan(spark, () => new HttpRestClient(u))
       assert(items.count(_.startsWith("/fat/")) == 30,
         s"fat subtree not split into its children: $items")
       assert(items.contains("/tiny") && items.contains("/cfg"))
       assert(!items.contains("/fat"))
+      // request budget: one shallow GET for the root, one floor-page
+      // GET per probed path (/fat, /tiny, /cfg and /fat's 30
+      // children), one shallow GET per split path (/fat): 1 + 33 + 1
+      val (shallow, pages) = stub.getRequests.partition(_._2 == "shallow=true")
+      assert(shallow.map(_._1).sorted == Seq("/", "/fat"))
+      assert(pages.map(_._1).sorted ==
+        (Seq("/fat", "/tiny", "/cfg") ++ (0 until 30).map(i => s"/fat/c$i")).sorted)
+      assert(pages.forall(_._2.contains(s"limitToFirst=${LiveExport.MinIpp}")),
+        s"probe not floor-sized: ${pages.map(_._2).distinct}")
+      assert(stub.getCount.get() == 35)
       val df = LiveExport.export(spark, () => new HttpRestClient(u))
       val got = df.collect().map(r =>
         TreeCodec.Edge(r.getString(0), r.getString(1), r.getString(2))).toSet
-      assert(got == edgesOf(json))
+      assert(got == edgesOf(fatTree))
     } finally stub.stop()
   }
 
@@ -618,5 +634,140 @@ class LiveSpec extends SparkSuite {
       Restore.restore(back, new Restore.HttpKVSink(dst.url))
       assert(TreeCodec.jsonEqual(dst.snapshot(), wideTree))
     } finally { src.stop(); dst.stop() }
+  }
+
+  private def edgeRows(df: org.apache.spark.sql.DataFrame): Seq[TreeCodec.Edge] =
+    df.collect().toSeq.map(r =>
+      TreeCodec.Edge(r.getString(0), r.getString(1), r.getString(2)))
+
+  private def ordered(es: Seq[TreeCodec.Edge]): Seq[TreeCodec.Edge] =
+    es.sortBy(e => (e.path, e.key, e.valueJson))
+
+  test("kept-alive connections: one walker reuses its sockets") {
+    // a 300-byte cap interleaves 400 answers with the pages, so the
+    // error-body path must hand its socket back too
+    val stub = new FirebaseStub(maxPayloadBytes = 300)
+    try {
+      stub.seed(wideTree)
+      val walker = new LiveExport.Walker(new HttpRestClient(stub.url))
+      assert(walker.fetchTree("/users").toSet ==
+        edgesOf(wideTree).filter(_.path.startsWith("/users")))
+      val ports = stub.remotePorts
+      assert(ports.size >= 8)
+      assert(ports.distinct.size < ports.size,
+        s"every one of ${ports.size} requests opened a new connection")
+    } finally stub.stop()
+  }
+
+  test("export + writeBackup fetches every (path, query) once") {
+    val stub = new FirebaseStub(maxPayloadBytes = 600)
+    try {
+      stub.seed(fatTree)
+      val u = stub.url
+      val dir = Files.createTempDirectory("live_once").toString
+      Export.writeBackup(LiveExport.export(spark, () => new HttpRestClient(u)),
+        dir, numPartitions = 4)
+      val repeats = stub.getRequests.groupBy(identity)
+        .collect { case (req, n) if n.size > 1 => req -> n.size }
+      assert(repeats.isEmpty,
+        s"${repeats.size} requests served more than once, e.g. ${repeats.take(3)}")
+      assert(Export.readBackup(spark, dir).count() == edgesOf(fatTree).size)
+    } finally stub.stop()
+  }
+
+  test("export returns a snapshot: later database writes never show") {
+    val stub = new FirebaseStub()
+    try {
+      stub.seed(wideTree)
+      val u = stub.url
+      val df = LiveExport.export(spark, () => new HttpRestClient(u))
+      stub.seed("""{"other": {"k": 1}}""")
+      val before = stub.getCount.get()
+      val same = ordered(edgeRows(df)) == ordered(TreeCodec.flatten(wideTree))
+      assert(same, "the frame re-read the re-seeded database")
+      assert(stub.getCount.get() == before, "collect() walked the database again")
+    } finally stub.stop()
+  }
+
+  test("random trees: export is exact and plan splits iff the floor page is too large") {
+    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import scala.jdk.CollectionConverters._
+
+    // unicode, integer-like (cursor-ordered first, numerically) and
+    // plain keys; no key Firebase forbids (. $ # [ ] /) and no quote,
+    // which the walker's startAt cursor does not escape
+    val keyGen: Gen[String] = Gen.frequency(
+      3 -> Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.alphaNumChar)).map(_.mkString),
+      2 -> Gen.oneOf("é", "ключ", "日本", "ü1", "naïve", "😀", "a b"),
+      2 -> Gen.oneOf(Gen.choose(-5, 40).map(_.toString), Gen.oneOf("007", "01", "2147483648")))
+    val scalarGen: Gen[String] = Gen.oneOf(
+      Gen.alphaNumStr.map(v => "\"" + v.take(10) + "\""),
+      Gen.choose(-1000, 1000).map(_.toString),
+      Gen.oneOf("true", "false"))
+    // a fat child: one string large enough to blow most caps on its own
+    val fatGen: Gen[String] = Gen.choose(80, 700).map(n => "\"" + "f" * n + "\"")
+    def nodeGen(depth: Int): Gen[String] =
+      Gen.choose(1, 6).flatMap { width =>
+        Gen.listOfN(width, for {
+          k <- keyGen
+          v <- if (depth <= 0) Gen.frequency(4 -> scalarGen, 1 -> fatGen)
+               else Gen.frequency(3 -> scalarGen, 1 -> fatGen,
+                 3 -> Gen.lzy(nodeGen(depth - 1)))
+        } yield k -> v)
+      }.map(_.distinctBy(_._1)
+        .map { case (k, v) => "\"" + k + "\": " + v }.mkString("{", ", ", "}"))
+
+    val mapper = new ObjectMapper()
+    val cursor = FirebaseStub.NameCompare
+    // the stub's answer to a floor page, rebuilt from the tree itself:
+    // the first MinIpp children in cursor order, rendered as JSON
+    def floorPageBytes(o: ObjectNode): Int = {
+      val page = mapper.createObjectNode()
+      o.fieldNames().asScala.toVector.sorted(cursor).take(LiveExport.MinIpp)
+        .foreach(k => page.set[JsonNode](k, o.get(k)))
+      mapper.writeValueAsString(page).getBytes("UTF-8").length
+    }
+
+    var seed = Seed(20261017L)
+    var splitRounds = 0
+    (1 to 24).foreach { round =>
+      val json = nodeGen(3).apply(Gen.Parameters.default, seed)
+        .getOrElse(sys.error("gen failed"))
+      val cap = Gen.choose(150, 1500).apply(Gen.Parameters.default, seed.next)
+        .getOrElse(sys.error("gen failed"))
+      seed = seed.next.next
+      val tree = mapper.readTree(json).asInstanceOf[ObjectNode]
+      val split = scala.collection.mutable.ArrayBuffer.empty[String]
+      def expectWork(path: String, n: JsonNode): Seq[String] =
+        n match {
+          case o: ObjectNode if floorPageBytes(o) > cap =>
+            split += path
+            o.fieldNames().asScala.toVector.flatMap(k =>
+              expectWork(TreeCodec.childPath(path, k), o.get(k)))
+          case _ => Seq(path)
+        }
+      val wantWork = tree.fieldNames().asScala.toVector.flatMap(k =>
+        expectWork(TreeCodec.childPath("/", k), tree.get(k)))
+      if (split.nonEmpty) splitRounds += 1
+
+      val stub = new FirebaseStub(maxPayloadBytes = cap)
+      try {
+        stub.seed(json)
+        val u = stub.url
+        val work = LiveExport.plan(spark, () => new HttpRestClient(u))
+        val listed = stub.getRequests.collect { case (p, "shallow=true") => p }
+        val ctx = s"round $round, cap $cap, tree $json"
+        assert(listed.sorted == ("/" +: split.toSeq).sorted, s"split set differs: $ctx")
+        assert(work.sorted == wantWork.sorted, s"work list differs: $ctx")
+        val got = edgeRows(LiveExport.export(spark, () => new HttpRestClient(u)))
+        val same = ordered(got) == ordered(TreeCodec.flatten(json))
+        assert(same, s"export differs: $ctx")
+      } finally stub.stop()
+    }
+    // the generator must reach both verdicts
+    assert(splitRounds > 0 && splitRounds < 24, s"$splitRounds of 24 rounds split")
   }
 }
