@@ -52,6 +52,11 @@ object LiveExport {
   val ShallowRetries = 10
   val GrowAfter = 5
 
+  /** Shared by every Walker: an ObjectMapper is thread-safe once
+    * configured, and a Walker per work item is cheap only if it does
+    * not build its own. */
+  private val Mapper = new ObjectMapper()
+
   /** The BackupFailureException analog (exceptions/
     * BackupFailureException.php): shallow listing failed 10x. */
   final class BackupFailure(msg: String) extends RuntimeException(msg)
@@ -122,8 +127,8 @@ object LiveExport {
     * shallow key whose value is not a container). */
   private final case class ScalarLeaf(json: String) extends PageOut
 
-  /** One walker instance per task/thread (holds per-path IPP state; not
-    * thread-safe by design — cheap to construct).
+  /** One walker instance per work item or thread (holds per-path IPP
+    * state; not thread-safe by design — cheap to construct).
     *
     * @param sleep retry pacing seam: called with the backoff delay in
     *        ms before every shallow-listing RETRY (never on the first
@@ -146,7 +151,7 @@ object LiveExport {
                      startIpp: Option[Int] = None) {
     private val initIpp: Int =
       math.max(MinIpp, math.min(startIpp.getOrElse(DefaultMaxIpp), maxIpp))
-    private val mapper = new ObjectMapper()
+    private val mapper = Mapper
     /** path -> (current ipp, consecutive successes) — the reference's
       * `intelligent_IPP` map (BackupProcessor.php:151-155). */
     private val ipp = mutable.Map.empty[String, (Int, Int)]
@@ -412,7 +417,10 @@ object LiveExport {
   /** Work-list planner for the distributed export. Round 0 is the
     * root's shallow children; each round probes every pending path IN
     * PARALLEL ([[Walker.probeSplit]]: one floor-page fetch) and splits
-    * the too-fat ones into their children for the next round. Only
+    * the too-fat ones into their children for the next round. Each task
+    * keeps up to [[InFlight.Window]] of its probes in flight, one
+    * Walker per probed path, so a round costs about
+    * paths / (tasks x Window) round trips, not paths / tasks. Only
     * PATHS flow through the driver — never edge data — and the number
     * of rounds is bounded by the depth of the fat spine, not the tree.
     *
@@ -431,8 +439,9 @@ object LiveExport {
     while (pending.nonEmpty) {
       val verdicts = slices(spark, pending)
         .mapPartitions { it =>
-          val w = new Walker(clientFactory())
-          it.flatten.map(p => p -> w.probeSplit(p))
+          val paths = it.flatten.toVector
+          paths.iterator.zip(InFlight.map(paths)(p =>
+            new Walker(clientFactory()).probeSplit(p)).iterator)
         }
         .collect()
       pending = verdicts.flatMap(_._2).toSeq
@@ -443,8 +452,13 @@ object LiveExport {
 
   /** Distributed live export: [[plan]] builds the work list (splitting
     * fat subtrees so no single task owns one), then each executor task
-    * walks its assigned subtrees with its own Walker — the
-    * cluster-wide form of the reference's single-process tree walk.
+    * walks its assigned subtrees, up to [[InFlight.Window]] at once with
+    * one Walker each — the cluster-wide form of the reference's
+    * single-process tree walk. Work items are disjoint paths and each
+    * path's page-size state lives in its item's Walker, so the C1-C3
+    * laws and the requests sent are those of a serial walk; only their
+    * timing overlaps. A task's edges come out in work-item order, once
+    * its last item is walked.
     *
     * The walk runs ONCE, here: the returned frame is an eager
     * `localCheckpoint` of the walked edges, a materialized snapshot of
@@ -453,8 +467,9 @@ object LiveExport {
     * instead of re-running the HTTP walk, so a write to the database
     * after `export` returns never shows in the frame.
     *
-    * @param clientFactory built once per partition ON THE EXECUTOR (the
-    *        closure must be serializable; HttpRestClient instances are)
+    * @param clientFactory called once per work item ON THE EXECUTOR (the
+    *        closure must be serializable; HttpRestClient instances are),
+    *        from up to [[InFlight.Window]] threads of one task at once
     */
   def export(spark: SparkSession, clientFactory: () => RestClient,
              root: String = "/", maxIpp: Int = DefaultMaxIpp,
@@ -462,8 +477,9 @@ object LiveExport {
     import spark.implicits._
     val items = plan(spark, clientFactory, root)
     val edges = slices(spark, items).mapPartitions { it =>
-      val walker = new Walker(clientFactory(), maxIpp, startIpp = startIpp)
-      it.flatten.flatMap(p => walker.fetchTree(p))
+      InFlight.map(it.flatten.toVector)(p =>
+        new Walker(clientFactory(), maxIpp, startIpp = startIpp).fetchTree(p))
+        .iterator.flatten
     }
     spark.createDataset(edges).toDF("path", "key", "value_json")
       .localCheckpoint(eager = true)

@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import java.io.IOException
-import java.net.{HttpURLConnection, URI, URLEncoder}
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.{URI, URLEncoder}
 import java.nio.charset.StandardCharsets
+import java.time.Duration
 
 /** Transport abstraction over the slice of the Firebase REST surface the
   * reference uses (via FirebaseLib — BackupProcessor.php:172 `get`,
@@ -61,27 +63,31 @@ trait RestClient extends Serializable {
   def patch(path: String, bodyJson: String): Boolean
 }
 
-/** `java.net.HttpURLConnection`-based client (JDK-only, no extra
+/** `java.net.http.HttpClient`-based client (JDK-only, no extra
   * dependencies). Stateless per call, so a single instance is safe to
-  * share across partition tasks; all fields are plain Strings so the
-  * instance serializes into closures.
+  * share across threads and partition tasks; all fields are plain
+  * Strings so the instance serializes into closures.
   *
-  * Every answered request reads its body to the end and closes the
-  * stream, which hands the socket back to the JDK's keep-alive cache:
-  * the next request to the same host reuses it (one TLS handshake
-  * saved per request against the real service). `disconnect()`, which
-  * may close an idle kept-alive socket, runs only after a transport
-  * failure.
+  * Every instance in a JVM sends through ONE shared `HttpClient`
+  * ([[HttpRestClient.shared]]), whose connection pool keeps every idle
+  * socket: with [[InFlight.Window]] requests in flight per task, each
+  * finished request hands its socket to the next one (one TLS handshake
+  * saved per request against the real service). The JDK's older
+  * `HttpURLConnection` keeps at most 5 idle sockets per host per JVM
+  * (`http.maxConnections`), so at that width most sockets would close
+  * after one request. Over https the client negotiates HTTP/2 and
+  * multiplexes the requests on one connection; plain http (test
+  * stand-ins) stays on HTTP/1.1. PATCH is sent as PATCH.
   *
   * @param baseUrl   e.g. `https://<project>.firebaseio.com` (or a test
   *                  stub's `http://localhost:<port>`)
   * @param authToken Firebase database secret / ID token, sent as the
   *                  `auth` query param exactly like the reference's
   *                  FirebaseLib (frdbackup config `project_key`)
+  * @param readTimeoutMs how long one request may wait for its response
   */
 final class HttpRestClient(baseUrl: String,
                            authToken: Option[String] = None,
-                           connectTimeoutMs: Int = 10000,
                            readTimeoutMs: Int = 120000) extends RestClient {
 
   private def enc(s: String): String =
@@ -95,56 +101,52 @@ final class HttpRestClient(baseUrl: String,
     path.split("/", -1).map(seg =>
       enc(seg).replace("+", "%20")).mkString("/")
 
-  private def urlFor(path: String, query: Map[String, String]): URI = {
+  private def request(path: String, query: Map[String, String]): HttpRequest.Builder = {
     val p = if (path == "/" || path.isEmpty) "/" else encPath(path)
     val q = (query ++ authToken.map("auth" -> _))
       .map { case (k, v) => enc(k) + "=" + enc(v) }.mkString("&")
-    new URI(baseUrl.stripSuffix("/") + p + ".json" +
+    val uri = new URI(baseUrl.stripSuffix("/") + p + ".json" +
       (if (q.isEmpty) "" else "?" + q))
+    HttpRequest.newBuilder(uri)
+      .version(if (uri.getScheme == "https") HttpClient.Version.HTTP_2
+               else HttpClient.Version.HTTP_1_1)
+      .timeout(Duration.ofMillis(readTimeoutMs.toLong))
   }
 
-  private def readAll(conn: HttpURLConnection): String = {
-    val is = if (conn.getResponseCode < 400) conn.getInputStream
-             else conn.getErrorStream
-    if (is == null) ""
-    else try new String(is.readAllBytes(), StandardCharsets.UTF_8)
-    finally is.close()
-  }
+  private def send(req: HttpRequest): HttpResponse[String] =
+    HttpRestClient.shared.send(req,
+      HttpResponse.BodyHandlers.ofString(StandardCharsets.UTF_8))
 
   override def getR(path: String,
                     query: Map[String, String]): RestResponse = {
-    val conn = urlFor(path, query).toURL.openConnection()
-      .asInstanceOf[HttpURLConnection]
-    conn.setConnectTimeout(connectTimeoutMs)
-    conn.setReadTimeout(readTimeoutMs)
-    conn.setRequestMethod("GET")
-    try RestResponse(conn.getResponseCode, readAll(conn))
-    catch { case e: IOException => conn.disconnect(); throw e }
+    val resp = send(request(path, query).GET().build())
+    RestResponse(resp.statusCode, resp.body)
   }
 
   override def patch(path: String, bodyJson: String): Boolean = {
-    val conn = urlFor(path, Map.empty).toURL.openConnection()
-      .asInstanceOf[HttpURLConnection]
-    conn.setConnectTimeout(connectTimeoutMs)
-    conn.setReadTimeout(readTimeoutMs)
-    // HttpURLConnection rejects PATCH as a method; the standard
-    // workaround Firebase itself documents is POST + X-HTTP-Method-
-    // Override (REST docs, "Conditional requests" / method override).
-    conn.setRequestMethod("POST")
-    conn.setRequestProperty("X-HTTP-Method-Override", "PATCH")
-    conn.setRequestProperty("Content-Type", "application/json")
-    conn.setDoOutput(true)
+    val req = request(path, Map.empty)
+      .header("Content-Type", "application/json")
+      .method("PATCH", HttpRequest.BodyPublishers.ofString(bodyJson,
+        StandardCharsets.UTF_8))
+      .build()
     try {
-      val os = conn.getOutputStream
-      try os.write(bodyJson.getBytes(StandardCharsets.UTF_8))
-      finally os.close()
-      val code = conn.getResponseCode
-      readAll(conn) // drain so the connection is reusable
+      val code = send(req).statusCode
       code >= 200 && code < 300
     } catch {
-      case _: IOException =>
-        conn.disconnect()
-        false // transport failure == failed batch
+      case _: IOException => false // transport failure == failed batch
     }
   }
+}
+
+object HttpRestClient {
+  private val ConnectTimeout = Duration.ofSeconds(10)
+
+  /** The JVM's one HTTP client: thread-safe, with a connection pool
+    * that has no idle cap, so every executor JVM reuses its sockets at
+    * any request concurrency. Redirects are followed as a browser
+    * would (never https to http). */
+  lazy val shared: HttpClient = HttpClient.newBuilder()
+    .connectTimeout(ConnectTimeout)
+    .followRedirects(HttpClient.Redirect.NORMAL)
+    .build()
 }

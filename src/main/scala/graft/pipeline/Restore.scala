@@ -13,16 +13,22 @@ import org.apache.spark.sql.DataFrame
   *
   * Spark shape: the data plane is `foreachPartition` — every partition
   * drains independently on its executor, so restore throughput scales
-  * with the cluster, not with one PHP process. The adaptive batching
-  * logic is preserved verbatim per partition against a pluggable
-  * [[KVSink]] (HTTP in production, in-memory in tests — no network in
-  * CI, SURVEY.md §7).
+  * with the cluster, not with one PHP process. Inside a task, up to
+  * [[InFlight.Window]] paths drain at once, so a task's wall time is
+  * not the sum of its PATCH round trips. The adaptive batching logic
+  * is preserved verbatim per path against a pluggable [[KVSink]] (HTTP
+  * in production, in-memory in tests — no network in CI, SURVEY.md §7).
   */
 object Restore {
 
   /** Destination abstraction over Firebase's `update(path, map)` PATCH
     * (RestoreProcessor.php:80). Returns true on success. Implementations
-    * must be idempotent — the drain loop may retry written keys. */
+    * must be idempotent — the drain loop may retry written keys.
+    *
+    * Thread safety: [[restore]] drains up to [[InFlight.Window]] paths
+    * of one task at once, so `update` may be called concurrently on one
+    * instance for DISTINCT paths. Calls for one path never overlap: a
+    * path is drained by one thread at a time, in input order. */
   trait KVSink extends Serializable {
     def update(path: String, batch: Map[String, String]): Boolean
   }
@@ -89,31 +95,45 @@ object Restore {
   }
 
   /** Restore a backup rows DataFrame: partitions drain concurrently,
-    * grouped by path within each partition.
+    * grouped by path within each partition, and each task keeps up to
+    * [[InFlight.Window]] paths draining at once. Full-backup writes at
+    * distinct paths commute (a node is either a leaf or a parent, never
+    * both), so the final state does not depend on the order paths
+    * finish in.
     *
     * Memory contract: the backup artifact is range-partitioned AND
     * sorted by (path, key) within partitions (Export.writeBackup), so a
-    * path's rows are a contiguous run — the drain walks the iterator
-    * run by run and never materializes more than ONE path's keys at a
-    * time. Executor memory is bounded by the largest single path, not
-    * the partition (a 128 MB partition of many small paths restores in
-    * page-sized working sets). Unsorted input still restores correctly:
-    * each contiguous run of a path drains as its own idempotent batch
-    * sequence (PATCH semantics make replays safe), it just costs more
-    * update() calls. */
-  def restore(rows: DataFrame, sink: KVSink): Unit = {
+    * path's rows are a contiguous run — the task reads the iterator run
+    * by run and holds at most `InFlight.Window + 1` paths' keys at a
+    * time: the paths draining plus the one waiting for a free slot.
+    * Executor memory is bounded by the largest paths, not the partition
+    * (a 128 MB partition of many small paths restores in page-sized
+    * working sets). Unsorted input still restores correctly: each
+    * contiguous run of a path drains as its own idempotent batch
+    * sequence after the path's earlier runs have finished (PATCH
+    * semantics make replays safe), it just costs more update() calls.
+    *
+    * `maxStalled` and `sleep` are passed to every [[drainPath]]. */
+  def restore(rows: DataFrame, sink: KVSink, maxStalled: Int = 64,
+              sleep: Long => Unit = Thread.sleep): Unit = {
     rows.select("path", "key", "value_json").foreachPartition {
       it: Iterator[org.apache.spark.sql.Row] =>
         val edges = it.map(r => (r.getString(0), r.getString(1), r.getString(2)))
           .buffered
-        while (edges.hasNext) {
-          val path = edges.head._1
-          val run = Map.newBuilder[String, String]
-          while (edges.hasNext && edges.head._1 == path) {
-            val e = edges.next()
-            run += (e._2 -> e._3)
+        val runs = new Iterator[(String, Map[String, String])] {
+          def hasNext: Boolean = edges.hasNext
+          def next(): (String, Map[String, String]) = {
+            val path = edges.head._1
+            val run = Map.newBuilder[String, String]
+            while (edges.hasNext && edges.head._1 == path) {
+              val e = edges.next()
+              run += (e._2 -> e._3)
+            }
+            (path, run.result())
           }
-          drainPath(sink, path, run.result())
+        }
+        InFlight.foreach(runs)(_._1) {
+          case (path, data) => drainPath(sink, path, data, maxStalled, sleep)
         }
     }
   }
@@ -124,11 +144,59 @@ object Restore {
     * update semantics DELETES the key — so one idempotent pass brings
     * the destination from the old snapshot to the new one without
     * touching the unchanged 99%. Same partition-drain machinery as
-    * [[restore]] (adaptive batches, quarantine, backoff). */
+    * [[restore]] (adaptive batches, window, quarantine, backoff).
+    *
+    * A removed leaf whose location is an ancestor or a descendant of a
+    * written leaf is not sent ([[dropSubsumed]]). A key that turned
+    * from a scalar into an object is a removed row `P {k: null}` plus
+    * written rows `P/k {j: v}`; one that turned from an object into a
+    * scalar is the reverse. Paths drain in any order, and a null PATCH
+    * that lands after its write would delete the new value. It is not
+    * needed either: a write replaces whatever is at or above its
+    * location, leaf or subtree. Every other removal is at a location no
+    * write touches, so all rows sent commute.
+    *
+    * Nested locations share their first segment, so one shuffle on it
+    * brings each such pair into one partition, where a sort on the
+    * location puts the ancestor right before its subtree. */
   def restoreDiff(diff: DataFrame, sink: KVSink): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    restore(diff.select(col("path"), col("key"),
-      coalesce(col("new_value"), lit("null")).as("value_json")), sink)
+    import org.apache.spark.sql.functions.{array, coalesce, col, concat, filter, lit, split}
+    val spark = diff.sparkSession
+    import spark.implicits._
+    val loc = concat(filter(split(col("path"), "/"), _ =!= ""), array(col("key")))
+    val kept = diff.select(loc.as("loc"), col("path"), col("key"), col("new_value"))
+      .repartition(col("loc")(0))
+      .sortWithinPartitions("loc")
+      .as[(Seq[String], String, String, String)]
+      .mapPartitions(dropSubsumed)
+      .toDF("path", "key", "new_value")
+    restore(kept.sortWithinPartitions("path")
+      .select(col("path"), col("key"),
+        coalesce(col("new_value"), lit("null")).as("value_json")), sink)
+  }
+
+  /** Diff rows `(location segments, path, key, new_value)` in location
+    * order, so that an ancestor comes right before its subtree, as
+    * `(path, key, new_value)` without the removals (null new_value)
+    * that are nested with a write. In a diff the only nested pairs are
+    * a removal and a write: the prev and cur snapshots are each a tree,
+    * in which no leaf lies under another. So the open ancestors of a
+    * row number at most one. */
+  private[pipeline] def dropSubsumed(
+      rows: Iterator[(Seq[String], String, String, String)])
+      : Iterator[(String, String, String)] = {
+    final class Open(val loc: Seq[String], val row: (String, String, String),
+                     var drop: Boolean)
+    var open = List.empty[Open] // the ancestors of the current row, nearest first
+    def close(o: Open) = if (o.drop) None else Some(o.row)
+    rows.flatMap { case (loc, p, k, v) =>
+      val (ancestors, closed) = open.partition(o => loc.startsWith(o.loc))
+      val removal = v == null
+      if (!removal) ancestors.foreach(o => if (o.row._3 == null) o.drop = true)
+      open = new Open(loc, (p, k, v),
+        removal && ancestors.exists(_.row._3 != null)) :: ancestors
+      closed.flatMap(close)
+    } ++ open.flatMap(close)
   }
 
   /** Live HTTP sink — the reference's `firebase->update` PATCH
@@ -138,7 +206,15 @@ object Restore {
     * or transport failure returns false, which drainPath answers with
     * the reference's halve-and-retry. Fields are plain strings so the
     * sink serializes into foreachPartition closures; each executor
-    * makes its own connections. */
+    * makes its own connections.
+    *
+    * Meets the [[KVSink]] thread-safety contract: the transient fields
+    * are lazy vals (initialized once, under a lock, on first use); the
+    * ObjectMapper is configured inside its initializer and only read
+    * afterwards, which Jackson documents as thread-safe; the client
+    * keeps no per-call state (see [[HttpRestClient]]); the quarantine
+    * counter is a LongAdder, and the accumulator, which is not
+    * thread-safe, is added to under its own lock. */
   final class HttpKVSink(baseUrl: String,
                          authToken: Option[String] = None,
                          quarantineAcc: Option[org.apache.spark.util.LongAccumulator] = None)
@@ -176,7 +252,7 @@ object Restore {
       val bad = batch.size - parsed.size
       if (bad > 0) {
         quarantined.add(bad.toLong)
-        quarantineAcc.foreach(_.add(bad.toLong))
+        quarantineAcc.foreach(acc => acc.synchronized(acc.add(bad.toLong)))
         val badKeys = (batch.keySet -- parsed.keySet).take(3)
         System.err.println(s"HttpKVSink: quarantined $bad " +
           s"malformed value(s) at $path: ${badKeys.mkString(", ")}")

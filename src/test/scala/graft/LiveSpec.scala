@@ -659,6 +659,28 @@ class LiveSpec extends SparkSuite {
     } finally stub.stop()
   }
 
+  test("one-task restores of 120 paths reuse at most Window + 2 sockets") {
+    // each restore keeps InFlight.Window PATCHes in flight, and all its
+    // sockets go idle together when its task ends; a client that keeps
+    // at most 5 idle sockets per host (HttpURLConnection's default)
+    // opens new ones for the next restore
+    val stub = new FirebaseStub()
+    try {
+      val sp = spark; import sp.implicits._
+      val rows = for (p <- 0 until 120; k <- 0 until 3)
+        yield (f"/r/p$p%03d", s"k$k", s"${p * 10 + k}")
+      val df = rows.toDF("path", "key", "value_json").coalesce(1)
+      Restore.restore(df, new Restore.HttpKVSink(stub.url))
+      Restore.restore(df, new Restore.HttpKVSink(stub.url))
+      assert(TreeCodec.jsonEqual(stub.snapshot(),
+        TreeCodec.assemble(rows.map { case (p, k, v) => TreeCodec.Edge(p, k, v) })))
+      val ports = stub.remotePorts
+      assert(ports.size == 240)
+      assert(ports.distinct.size <= graft.pipeline.InFlight.Window + 2,
+        s"${ports.distinct.size} sockets for ${ports.size} PATCHes")
+    } finally stub.stop()
+  }
+
   test("export + writeBackup fetches every (path, query) once") {
     val stub = new FirebaseStub(maxPayloadBytes = 600)
     try {

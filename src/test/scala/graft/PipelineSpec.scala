@@ -7,6 +7,7 @@ import org.scalacheck.rng.Seed
 
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** The reference's implicit contract: export then import reproduces the
@@ -93,9 +94,9 @@ class PipelineSpec extends SparkSuite {
   private class MemorySink(failAbove: Int = Int.MaxValue)
       extends Restore.KVSink {
     val store = new ConcurrentHashMap[(String, String), String]()
-    var calls = 0
+    val calls = new AtomicInteger() // restore may call update concurrently
     override def update(path: String, batch: Map[String, String]): Boolean = {
-      calls += 1
+      calls.incrementAndGet()
       if (batch.size > failAbove) false
       else { batch.foreach { case (k, v) => store.put((path, k), v) }; true }
     }
@@ -116,7 +117,7 @@ class PipelineSpec extends SparkSuite {
     assert(sink.store.size == 100)
     // must have shrunk 1000->...->7 wards: more calls than a perfect
     // 100/7 split but bounded well below per-key writes + retries
-    assert(sink.calls > 100 / 7 && sink.calls < 100)
+    assert(sink.calls.get > 100 / 7 && sink.calls.get < 100)
   }
 
   test("drainPath grows the batch after sustained success") {
@@ -162,6 +163,135 @@ class PipelineSpec extends SparkSuite {
       Restore.drainPath(sink, "/p", Map("k" -> "1"), maxStalled = 8,
         sleep = _ => ())
     }
+  }
+
+  test("drainPath law: random keys under random sink-failure schedules") {
+    // The i-th update call answers schedule(i): (succeeds, applied). A
+    // failed call may still have been applied (the response was lost),
+    // which only an idempotent drain survives. Past the schedule every
+    // call succeeds, so each call drains at least one key and a drain
+    // the stall guard does not stop makes at most
+    // schedule.size + keys calls.
+    val keyGen: Gen[String] = Gen.frequency(
+      4 -> Gen.choose(1, 8).flatMap(Gen.listOfN(_, Gen.alphaNumChar)).map(_.mkString),
+      1 -> Gen.oneOf("é", "ключ", "日本", "😀", "a b", "007", "-1", "10", "2"))
+    val caseGen = for {
+      keys <- Gen.choose(0, 300).flatMap(Gen.listOfN(_, keyGen))
+      maxStalled <- Gen.choose(1, 6)
+      runs <- Gen.choose(0, 30).flatMap(Gen.listOfN(_, for {
+        ok <- Gen.oneOf(true, false)
+        len <- Gen.choose(1, 9)
+        applied <- Gen.oneOf(true, false)
+      } yield Vector.fill(len)((ok, ok || applied))))
+    } yield (keys.distinct.map(k => k -> s""""v-$k"""").toMap, maxStalled,
+      runs.flatten.toVector)
+
+    final class ScheduledSink(schedule: Vector[(Boolean, Boolean)], cap: Int)
+        extends Restore.KVSink {
+      val store = scala.collection.mutable.Map.empty[String, String]
+      val outcomes = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+      val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
+      override def update(p: String, b: Map[String, String]): Boolean = {
+        if (outcomes.size >= cap) throw new AssertionError(s"no end after $cap calls")
+        val (ok, applied) = schedule.lift(outcomes.size).getOrElse((true, true))
+        if (applied) store ++= b
+        outcomes += ok
+        sizes += b.size
+        ok
+      }
+    }
+    def longestFailRun(xs: Seq[Boolean]): Int =
+      xs.foldLeft((0, 0)) { case ((best, cur), ok) =>
+        if (ok) (best, 0) else (math.max(best, cur + 1), cur + 1)
+      }._1
+
+    var seed = Seed(20261017L)
+    var stalls = 0
+    (1 to 300).foreach { round =>
+      val (data, maxStalled, schedule) =
+        caseGen.apply(Gen.Parameters.default, seed).getOrElse(sys.error("gen failed"))
+      seed = seed.next
+      val sink = new ScheduledSink(schedule, schedule.size + data.size + 1)
+      def ctx = s"round $round: ${data.size} keys, maxStalled $maxStalled, " +
+        s"outcomes ${sink.outcomes.map(if (_) 1 else 0).mkString}"
+      val result =
+        try Right(Restore.drainPath(sink, "/p", data, maxStalled, _ => ()))
+        catch { case e: IllegalStateException => Left(e) }
+      val failRun = longestFailRun(sink.outcomes.toSeq)
+      result match {
+        case Left(e) =>
+          stalls += 1
+          assert(e.getMessage.contains("stalled"), ctx)
+          assert(failRun == maxStalled + 1, ctx)
+          assert(sink.outcomes.takeRight(maxStalled + 1).forall(!_), ctx)
+        case Right(calls) =>
+          assert(failRun <= maxStalled, ctx)
+          assert(calls == sink.outcomes.size, ctx)
+          assert(sink.store == data, ctx)
+      }
+      assert(sink.sizes.forall(n => n >= Restore.MinBatch && n <= Restore.InitialBatch), ctx)
+    }
+    // the generator must reach both verdicts
+    assert(stalls > 0 && stalls < 300, s"$stalls of 300 drains stalled")
+  }
+
+  /** Records how a restore calls it: calls for one path that overlap,
+    * and the most paths in flight at once. `failing` paths are always
+    * refused. */
+  private class RecordingSink(failing: Set[String] = Set.empty)
+      extends Restore.KVSink {
+    val store = new ConcurrentHashMap[(String, String), String]()
+    val overlaps = new AtomicInteger()
+    val maxInFlight = new AtomicInteger()
+    private val inFlight = new AtomicInteger()
+    private val busy = ConcurrentHashMap.newKeySet[String]()
+    override def update(path: String, batch: Map[String, String]): Boolean = {
+      if (!busy.add(path)) overlaps.incrementAndGet()
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      try {
+        Thread.sleep(2) // a round trip, so calls have time to overlap
+        if (failing(path)) false
+        else { batch.foreach { case (k, v) => store.put((path, k), v) }; true }
+      } finally { inFlight.decrementAndGet(); busy.remove(path) }
+    }
+  }
+
+  private def windowThreads(): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => t.isAlive && t.getName.startsWith(graft.pipeline.InFlight.ThreadPrefix))
+
+  test("restore drains several paths at once, never one path twice at once") {
+    val sp = spark; import sp.implicits._
+    // one partition; every path comes back in three separate runs, and
+    // each run rewrites "last", so the final value shows whether a
+    // path's runs drained in input order
+    val rows = for {
+      run <- 0 until 3
+      p <- 0 until 40
+      k <- Seq(s"k$run-a", s"k$run-b", "last")
+    } yield (f"/p$p%02d", k, if (k == "last") run.toString else s"$p")
+    val df = rows.toDF("path", "key", "value_json").coalesce(1)
+    assert(df.rdd.getNumPartitions == 1)
+    val expected = rows.map { case (p, k, v) => (p, k) -> v }.toMap
+
+    val sink = new RecordingSink()
+    SinkRegistry.sinks.put("window", sink)
+    Restore.restore(df, RegistrySink("window"))
+    assert(sink.overlaps.get == 0, "two update calls for one path overlapped")
+    assert(sink.maxInFlight.get > 1, "never more than one path in flight")
+    assert(sink.store.asScala.toMap == expected)
+
+    // a path the sink always refuses fails the job with the drain's
+    // stall error instead of hanging the task
+    SinkRegistry.sinks.put("window-bad", new RecordingSink(failing = Set("/p07")))
+    val e = intercept[org.apache.spark.SparkException] {
+      Restore.restore(df, RegistrySink("window-bad"), maxStalled = 8, sleep = _ => ())
+    }
+    assert(e.getMessage.contains("restore of /p07 stalled"), e.getMessage)
+
+    val deadline = System.nanoTime() + 10000000000L
+    while (windowThreads().nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(windowThreads().isEmpty, s"window threads outlived the tasks: ${windowThreads()}")
   }
 
   // --- full Spark path: flatten -> export -> read -> restore ----------
