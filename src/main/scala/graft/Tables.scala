@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -37,6 +37,18 @@ object Tables {
     * Spark assigns whole row groups to splits by midpoint, so low
     * maxPartitionBytes yields empty splits, not parallelism.
     *
+    * `keys` hash-partitions instead of round-robin: every keyless
+    * repartition(n) first LOCAL-SORTS its input
+    * (spark.sql.execution.sortBeforeRepartition, on by default since
+    * SPARK-23207, so retried tasks reproduce the same row-to-partition
+    * assignment — guide §2.5). Hash partitioning is deterministic per
+    * row, needs no such sort, is retry-safe by construction, and lets
+    * a downstream shuffle keyed on the same column reuse the layout
+    * outright; pass a high-cardinality natural key (doc_id,
+    * l_orderkey) so the hash spreads evenly. Measured (r21 ABBA, 5
+    * reps): q_sql_tpch_q3 0.57x, q_agg_basic 0.75x keyed vs keyless.
+    * No keys keeps round-robin (BpeScaleGate's whole-corpus fan-out).
+    *
     * The guard reads `queryExecution.toRdd` (a cached lazy val on the
     * Dataset) rather than `df.rdd`, which would wrap the same physical
     * RDD in an extra InternalRow->Row conversion stage per call just to
@@ -47,28 +59,8 @@ object Tables {
     * upstream shuffle stages just to answer getNumPartitions — the
     * real job would then run them again. Every call site hands this a
     * scan/select-shaped frame; keep it that way. */
-  def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.queryExecution.toRdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
-  }
-
-  /** [[spread]] hash-partitioned on `keys` instead of round-robin:
-    * every keyless repartition(n) first LOCAL-SORTS its input
-    * (spark.sql.execution.sortBeforeRepartition, on by default since
-    * SPARK-23207, so retried tasks reproduce the same row-to-partition
-    * assignment — guide §2.5). Hash partitioning is deterministic per
-    * row, needs no such sort, and is retry-safe by construction; pass
-    * a high-cardinality natural key (doc_id, l_orderkey) so the hash
-    * spreads evenly. Same fan-out rule as [[spread]] otherwise. */
-  def spreadBy(df: DataFrame, keys: org.apache.spark.sql.Column*)
-      : DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.queryExecution.toRdd.getNumPartitions < target)
-      df.repartition(target, keys: _*)
-    else df
-  }
+  def spread(df: DataFrame, keys: Column*): DataFrame =
+    spreadTo(df, df.sparkSession.sparkContext.defaultParallelism, keys)
 
   /** [[spread]] with the fan-out SIZED to the input instead of pinned
     * at defaultParallelism (guide §2: derive partitioning from input
@@ -81,43 +73,30 @@ object Tables {
     * overhead (the r21 q_dedup_delta probe: eight 32-task stages over
     * a 0.4 MB cached batch, 3-5 task-seconds each, zero GC) — and a
     * GB-scale slice fans out exactly like [[spread]]. Unestimable
-    * inputs (LogicalRDD pins, streams: sizeInBytes = defaultSize =
-    * Long.Max) fall back to the full fan-out, never below it. For
+    * inputs (RDD-built frames, streams: sizeInBytes = defaultSize =
+    * Long.Max) get the full fan-out, never below it; the division
+    * stays in BigInt so that estimate cannot overflow to a target of
+    * 1. A localCheckpoint pin keeps its origin's finite estimate. For
     * CPU-DENSE per-row work (regex redaction, image decode) keep
     * [[spread]]: 1 MB of input can carry seconds of compute there,
     * and those sites carry their own A/B numbers. */
-  def spreadSized(df: DataFrame, bytesPerTask: Long = 1L << 20): DataFrame = {
+  def spreadSized(df: DataFrame, bytesPerTask: Long,
+                  keys: Column*): DataFrame = {
     val max = df.sparkSession.sparkContext.defaultParallelism
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      .min(BigInt(Long.MaxValue)).toLong
-    val target = math.max(1L, math.min(max.toLong,
-      (est + bytesPerTask - 1) / bytesPerTask)).toInt
-    if (df.queryExecution.toRdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
+    val target = ((est + bytesPerTask - 1) / bytesPerTask)
+      .min(BigInt(max)).max(BigInt(1)).toInt
+    spreadTo(df, target, keys)
   }
 
-  /** [[spreadSized]] hash-partitioned on `keys` instead of round-robin
-    * (the [[spreadBy]] rationale — guide §2.5): a keyless
-    * repartition(n) LOCAL-SORTS its input before the exchange
-    * (sortBeforeRepartition, on by default since SPARK-23207, so task
-    * retries reproduce the row-to-partition assignment); hashing a
-    * high-cardinality natural key (doc_id, vec_id) is deterministic
-    * per row, skips that sort, and lets a downstream shuffle keyed on
-    * the same column reuse the layout outright. Measured (r21 ABBA,
-    * 5 reps): q_sql_tpch_q3 0.57x, q_agg_basic 0.75x on the
-    * [[spreadBy]] twins; family numbers at the call sites. */
-  def spreadSizedBy(df: DataFrame, bytesPerTask: Long,
-                    keys: org.apache.spark.sql.Column*): DataFrame = {
-    val max = df.sparkSession.sparkContext.defaultParallelism
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      .min(BigInt(Long.MaxValue)).toLong
-    val target = math.max(1L, math.min(max.toLong,
-      (est + bytesPerTask - 1) / bytesPerTask)).toInt
+  /** The one repartition body: fan `df` out to `target` partitions
+    * (hashed on `keys`, round-robin when empty) unless it already has
+    * at least that many. */
+  private def spreadTo(df: DataFrame, target: Int,
+                       keys: Seq[Column]): DataFrame =
     if (df.queryExecution.toRdd.getNumPartitions < target)
       df.repartition(target, keys: _*)
     else df
-  }
 
   /** Bucket count for the persisted index tables (shingle index, IVF
     * index) over an `n`-row corpus slice: 32 — the local[32]

@@ -49,7 +49,7 @@ object Curation {
     * shape size gate (None = auto, see TextAnalysis.lmOccAggregate). */
   def curate(s: SparkSession, d: String,
              occAgg: Option[Boolean] = None): Curated = {
-    val docs0 = Tables.spreadSizedBy(Tables.documents(s, d), 128L << 10, col("doc_id"))
+    val docs0 = Tables.spreadSized(Tables.documents(s, d), 128L << 10, col("doc_id"))
       .select(col("doc_id"), col("source"), col("text"))
     val evalDocs = docs0.filter(col("doc_id") % 41 === 0)
     val train0 = docs0.filter(col("doc_id") % 41 =!= 0)
@@ -142,7 +142,7 @@ object Curation {
     * engines. */
   def importanceWeights(s: SparkSession, d: String,
                         buckets: Int = 256): DataFrame =
-    importanceWeightsOf(Tables.spreadSizedBy(Tables.documents(s, d), 128L << 10, col("doc_id")),
+    importanceWeightsOf(Tables.spreadSized(Tables.documents(s, d), 128L << 10, col("doc_id")),
       col("lang") === "en", buckets)
 
   /** The shared DSIR scorer: (doc_id, n_tokens, logw) per document —
@@ -217,7 +217,7 @@ object Curation {
     * rows), never a global sort, at any corpus size. */
   def importanceSample(s: SparkSession, d: String, k: Int = 100,
                        buckets: Int = 256): DataFrame =
-    importanceSampleOf(Tables.spreadSizedBy(Tables.documents(s, d), 128L << 10, col("doc_id")),
+    importanceSampleOf(Tables.spreadSized(Tables.documents(s, d), 128L << 10, col("doc_id")),
       col("lang") === "en", k, buckets)
 
   private[graft] def importanceSampleOf(docs: DataFrame, isTarget: Column,

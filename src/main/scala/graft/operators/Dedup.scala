@@ -64,7 +64,7 @@ object Dedup {
     // family's dominant local cost, r21 probe); GB-scale slices fan
     // out exactly as before. A/B (5 interleaved reps, same window):
     // whole family 0.57-0.88x, see OPTIMIZATION_r21.md.
-    Tables.spreadSizedBy(df, 1L << 20, col("doc_id"))
+    Tables.spreadSized(df, 1L << 20, col("doc_id"))
       .select(col("doc_id"),
         explode(call_function("shingle_hashes", split(col("text"), " ")))
           .as("s"))
@@ -147,12 +147,8 @@ object Dedup {
     * frame DISK_ONLY instead of in-memory (see the comment at the
     * persist site). 2M sits between the measured-healthy 1.28M rung
     * and the 2.56M rung where the r13 ladder hit the storage-pool
-    * boundary (119.6 s, a 2.85x step for 2x data). Env-overridable
-    * (GRAFT_DISK_SHINGLES_MIN_DOCS) so rung A/Bs can pin either
-    * branch in the same host window. */
-  val DiskShinglesMinDocs: Long =
-    sys.env.get("GRAFT_DISK_SHINGLES_MIN_DOCS").map(_.toLong)
-      .getOrElse(2000000L)
+    * boundary (119.6 s, a 2.85x step for 2x data). */
+  val DiskShinglesMinDocs: Long = 2000000L
 
   /** Eagerly materialize `df` with truncated lineage (the
     * localCheckpoint contract), returning the frame plus the persisted
@@ -342,7 +338,7 @@ object Dedup {
     // 1 MB default read 1.09 -> 1.22 s, 1.11x WORSE; 32 KB read
     // 1.40 -> 0.94 s, 0.67x — fan-out tracks the denser per-byte
     // cost while KB-scale batches still stay near-single-split)
-    Tables.spreadSizedBy(docs, 32L << 10, col("doc_id")).withColumn("sig",
+    Tables.spreadSized(docs, 32L << 10, col("doc_id")).withColumn("sig",
       call_function("minhash_sig", split(col("text"), " ")))
 
   /** LSH candidate pairs (da < db): docs sharing any band bucket. */
@@ -903,7 +899,7 @@ object Dedup {
         "never shuffled. The distinct-3-gram count is the standard " +
         "n-gram-overlap contamination signal.",
       (s, d) => {
-        val ng = gramHashes(Tables.spreadSizedBy(Tables.documents(s, d), 1L << 20, col("doc_id")))
+        val ng = gramHashes(Tables.spreadSized(Tables.documents(s, d), 1L << 20, col("doc_id")))
         contamination(
           ng.filter(col("doc_id") % 41 =!= 0),
           ng.filter(col("doc_id") % 41 === 0))
@@ -974,7 +970,7 @@ object Dedup {
         "identical to q_decontaminate (the bloom is results-invisible " +
         "by construction — differentially proven every run).",
       (s, d) => {
-        val ng = gramHashes(Tables.spreadSizedBy(Tables.documents(s, d), 1L << 20, col("doc_id")))
+        val ng = gramHashes(Tables.spreadSized(Tables.documents(s, d), 1L << 20, col("doc_id")))
         val ev = ng.filter(col("doc_id") % 41 === 0)
         val members = ev.select("g").distinct()
           .collect().map(_.getLong(0))
@@ -1133,7 +1129,7 @@ object Dedup {
         "pigeonhole blocking, exact hamming filter <= 3 via " +
         "bit_count(xor). Oracle-exempt; laws in DedupSpec.",
       (s, d) => {
-        val sigs = Tables.spreadSizedBy(Tables.documents(s, d), 1L << 20, col("doc_id"))
+        val sigs = Tables.spreadSized(Tables.documents(s, d), 1L << 20, col("doc_id"))
           .select(col("doc_id"), simhash(col("text")).as("sig"))
         val chunks = sigs.select(col("doc_id"), col("sig"),
           explode(transform(sequence(lit(0), lit(3)),
@@ -1174,7 +1170,7 @@ object Dedup {
         "oracle recomputes over span STRINGS — equality modulo a " +
         "2^-64 xxhash collision.",
       (s, d) => {
-        val spans = Tables.spreadSizedBy(Tables.documents(s, d), 1L << 20, col("doc_id"))
+        val spans = Tables.spreadSized(Tables.documents(s, d), 1L << 20, col("doc_id"))
           .select(col("doc_id"),
             explode(call_function("shingle_hashes",
               split(col("text"), " "), lit(8))).as("h"))

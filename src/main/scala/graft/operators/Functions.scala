@@ -150,7 +150,7 @@ object Functions {
       "JSON path extraction over events.props — the reference's whole " +
         "data plane is opaque JSON (BackupProcessor.php:172,213); typed " +
         "views are projected on demand with get_json_object.",
-      (s, d) => Tables.spreadSizedBy(Tables.events(s, d), 256L << 10, col("event_id")).select(
+      (s, d) => Tables.spreadSized(Tables.events(s, d), 256L << 10, col("event_id")).select(
         col("event_id"),
         get_json_object(col("props"), "$.k").cast("bigint").as("k_val"))
         .withColumn("k_parity", col("k_val") % 2)
@@ -168,7 +168,7 @@ object Functions {
         "reference's whole data model (a JSON tree normalized to " +
         "path/key/value rows, SURVEY.md §1.4) as a relational explode " +
         "of a MapType projection.",
-      (s, d) => Tables.spreadSizedBy(Tables.events(s, d), 256L << 10, col("event_id"))
+      (s, d) => Tables.spreadSized(Tables.events(s, d), 256L << 10, col("event_id"))
         .select(col("event_id"),
           explode(from_json(col("props"),
             org.apache.spark.sql.types.DataType.fromDDL("map<string,string>")))
@@ -245,7 +245,7 @@ object Functions {
       (s, d) => {
         val m = from_json(col("props"),
           org.apache.spark.sql.types.DataType.fromDDL("map<string,string>"))
-        Tables.spreadSizedBy(Tables.events(s, d), 256L << 10, col("event_id")).select(
+        Tables.spreadSized(Tables.events(s, d), 256L << 10, col("event_id")).select(
           col("event_id"),
           size(map_keys(m)).cast("bigint").as("n_keys"),
           array_join(sort_array(map_keys(m)), ",").as("keys_csv"),

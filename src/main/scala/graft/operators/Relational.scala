@@ -329,7 +329,7 @@ object Relational {
         // the one agg map phase heavy enough to amortize the fan-out
         // (its siblings all measured spread SLOWER — see q_agg_stats /
         // q_agg_distinct / q_agg_percentile / q_agg_udaf)
-        Tables.spreadBy(Tables.lineitem(s, d), col("l_orderkey"))
+        Tables.spread(Tables.lineitem(s, d), col("l_orderkey"))
           .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
           .groupBy("l_returnflag", "l_linestatus")
           .agg(

@@ -151,7 +151,7 @@ object Similarity {
   def lshBuckets(spark: SparkSession, vecs: DataFrame,
                  bits: Int = BitsPerTable,
                  spreadInput: Boolean = true): DataFrame =
-    (if (spreadInput) Tables.spreadSizedBy(vecs, 1L << 20, col("vec_id")) else vecs)
+    (if (spreadInput) Tables.spreadSized(vecs, 1L << 20, col("vec_id")) else vecs)
       .select(col("vec_id"),
         posexplode(call_function("lsh_bucket_ids",
           col("embedding"), lit(LshTables), lit(bits))))
@@ -163,7 +163,7 @@ object Similarity {
     * computations; the per-pair work drops to one dot product). The
     * fold order matches the inline form, so scores are bit-identical. */
   private def scorable(df: DataFrame): DataFrame =
-    Tables.spreadSizedBy(df, 1L << 20, col("vec_id"))
+    Tables.spreadSized(df, 1L << 20, col("vec_id"))
       .select(col("vec_id"), col("embedding").as("ce"),
       norm(col("embedding")).as("cn"))
 
@@ -188,20 +188,6 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         norm(col("embedding")).as("qn"))
 
-  /** Flat A/B override for the probe-ring cap (env
-    * GRAFT_KNNG_NPROBE_CAP); production uses [[knngNprobeCap]]'s
-    * measured power rule. Clamped to >= 4 HERE — the one shared
-    * clamp — so [[npCapSql]]'s oracle twin (which mirrors max(4, c))
-    * can never diverge from the Spark-side value under a low env cap
-    * (r19 advice), and malformed input fails with the variable
-    * named instead of a bare NumberFormatException. */
-  private[graft] val KnngNprobeCapEnv: Option[Int] =
-    sys.env.get("GRAFT_KNNG_NPROBE_CAP").map { v =>
-      require(v.matches("\\d{1,9}"),
-        s"GRAFT_KNNG_NPROBE_CAP must be a positive integer, got: '$v'")
-      math.max(4, v.toInt)
-    }
-
   /** CAP on the graph family's probe-ring width. History of the rule,
     * all measured: uncapped, np tracks nlist/8 ~ sqrt(n)/8 while
     * occupancy tracks n/nlist, so exact-build pairs = n·np·occupancy
@@ -225,25 +211,14 @@ object Similarity {
     * nlist/8 binds below ~262k vectors, so every oracled scale is
     * unchanged; the built np is pinned in the graph manifest, so a
     * changed cap rule reads as staleness, never silent drift. */
-  private[graft] def knngNprobeCap(n: Long): Int =
-    KnngNprobeCapEnv.getOrElse(64)
+  private[graft] def knngNprobeCap(n: Long): Int = 64
 
   /** The probe-ring cap as a DuckDB SQL expression —
-    * [[knngNprobeCap]]'s oracle twin (flat env override mirrored so
-    * A/B runs stay differentially oracled; already >= 4 — the shared
-    * clamp lives in [[KnngNprobeCapEnv]]). */
-  private def npCapSql: String =
-    KnngNprobeCapEnv.map(_.toString).getOrElse("64")
+    * [[knngNprobeCap]]'s oracle twin. */
+  private def npCapSql: String = "64"
 
-  /** A/B + test override for the refine-round rule ([[knngRefineRounds]]);
-    * the env form drives same-window A/Bs without a code edit, the var
+  /** Test override for the refine-round rule ([[knngRefineRounds]]):
     * the law tests' ring-only foils. Read ONCE per decision site. */
-  private[graft] val KnngRefineEnv: Option[Int] =
-    sys.env.get("GRAFT_KNNG_REFINE").map { v =>
-      require(v.matches("\\d{1,3}"),
-        s"GRAFT_KNNG_REFINE must be a small non-negative integer, got: '$v'")
-      v.toInt
-    }
   @volatile private[graft] var KnngRefineOverride: Option[Int] = None
 
   /** NN-descent rounds baked into the PERSISTED graph build — the
@@ -263,7 +238,7 @@ object Similarity {
     * string. Part of the graph manifest identity (#rf=) — a changed
     * rule reads as staleness. */
   private[graft] def knngRefineRounds: Int =
-    KnngRefineOverride.orElse(KnngRefineEnv).getOrElse(1)
+    KnngRefineOverride.getOrElse(1)
 
   /** The graph family's probe-ring width — the IVF probe rule
     * (nprobe = max(4, nlist/8)) re-derived from the corpus count so
@@ -1018,8 +993,8 @@ object Similarity {
     * covers the batch, capped at [[FallbackKeyCap]] (buffer state is
     * |qids| x (r x 16 B + overhead) per task ≈ 450 MB at the cap).
     * Past the cap the caller must CHUNK the probe batch (hash qid
-    * into ceil(n/cap) chunks and union — the graph build's chunkQ
-    * contract); the require below makes that boundary loud instead
+    * into ceil(n/cap) chunks and union — the graph build's q-side
+    * chunk contract); the require below makes that boundary loud instead
     * of a silent disk-filling fallback.
     *
     * Call sites must MATERIALIZE the shortlist under the returned
@@ -1113,14 +1088,11 @@ object Similarity {
     * (codebook-specific); SimilaritySpec pins the encode law, the
     * determinism law, and the recall floor vs brute force. */
   private[graft] def pqTopK(s: SparkSession, d: String, k: Int = 5,
-                            refineOverride: Option[Int] = None,
                             shortlistWindow: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(s, d)
     val n = math.max(1L, emb.count())
-    val refine = refineOverride
-      .orElse(sys.env.get("GRAFT_PQ_REFINE").map(_.toInt))
-      .getOrElse(pqRefine(n))
+    val refine = pqRefine(n)
     val cb = pqTrain(s, emb, n)
     // probe extraction is a corpus scan — materialize once (the
     // q_ann_lsh probe-extraction rule)
@@ -1425,11 +1397,9 @@ object Similarity {
     // at n=16k the cell scan is ~2000 rows and 1/32 of it (63) held
     // only 0.400 vs ivf 0.540; 320 → 0.520, 640 → 0.540 = 1.00x the
     // exact cell probe. Engages while cell candidates < ~20k, i.e.
-    // below the 256k rung (whose 1/32 is already 1012); env override
-    // is the same-window A/B knob.
-    val r = sys.env.get("GRAFT_IVFPQ_SHORTLIST").map(_.toInt).getOrElse(
-      math.max(k * 128,
-        math.ceil(n.toDouble * nprobe / nlist / 32.0).toInt))
+    // below the 256k rung (whose 1/32 is already 1012).
+    val r = math.max(k * 128,
+      math.ceil(n.toDouble * nprobe / nlist / 32.0).toInt)
     // shortlist through the SORT-FREE native aggregate (TopKEdges):
     // same single exchange the former row_number window paid, but the
     // map-side partial collapses each partition to <= r buffer entries
@@ -1507,7 +1477,7 @@ object Similarity {
     // localCheckpoint materializes (vec_id, e, nn, cid) once, the
     // knnGraph-consumer `edges` pattern; PlanSpec pins at most one
     // nearest_centroid eval in the plan.
-    val asg = Tables.spreadSizedBy(emb, 1L << 20, col("vec_id"))
+    val asg = Tables.spreadSized(emb, 1L << 20, col("vec_id"))
       .select(col("vec_id"),
         col("embedding").as("e"), norm(col("embedding")).as("nn"),
         graft.functions.GraftFunctions
@@ -1614,14 +1584,14 @@ object Similarity {
     // non-null embeddings, and a null qcid can never satisfy the
     // equi-join, so outer semantics are row-identical here. PlanSpec
     // pins exactly one nearest_cells eval per plan.
-    val q = Tables.spreadSizedBy(emb, 1L << 20, col("vec_id"))
+    val q = Tables.spreadSized(emb, 1L << 20, col("vec_id"))
       .select(col("vec_id").as("qid"),
         col("embedding").as("qe"), norm(col("embedding")).as("qn"),
         graft.functions.GraftFunctions
           .nearestCells(col("embedding"), nprobe, handle).as("qcids"))
       .select(col("qid"), col("qe"), col("qn"),
         explode_outer(col("qcids")).as("qcid"))
-    val mates = Tables.spreadSizedBy(emb, 1L << 20, col("vec_id"))
+    val mates = Tables.spreadSized(emb, 1L << 20, col("vec_id"))
       .select(col("vec_id").as("nid"),
       col("embedding").as("ne"), norm(col("embedding")).as("nn"),
       graft.functions.GraftFunctions
@@ -2048,28 +2018,6 @@ object Similarity {
     names
   }
 
-  /** The one-shot build body: one probe-ring pass over the IVF
-    * assignment table. The ring (the expensive native NearestCells
-    * eval) is computed ONCE into a localCheckpoint'd frame feeding
-    * both artifacts; the mates side reuses the STORED cell
-    * assignments (no nearestCentroid re-eval — the build's argmax was
-    * already paid by ensureIvfIndex).
-    *
-    * The top-k pass runs in Q-SIDE CHUNKS sized so each pass's
-    * candidate volume stays at the measured-safe budget: the window's
-    * partial top-k needs a LOCAL SORT of every scored pair, and at
-    * 256k vectors the single-pass form's ~8.3G pairs spilled past
-    * this host's disk ("No space left on device" — the one-shot
-    * build died where the 64k rung's 518M pairs were fine). Chunking
-    * by qid keeps every qid's window total (content-identical — the
-    * law test covers a multi-chunk build), bounds spill to
-    * budget x row width per pass, and costs only C re-scans of the
-    * 8-byte-key mates side. A real cluster keeps the same bound per
-    * EXECUTOR disk; the budget is the knob (var: the law test forces
-    * a multi-chunk build on the spec fixture and pins it
-    * row-identical to the single-pass form). */
-  private[graft] var GraphBuildPairBudget = 600000000L
-
   /** Diagnostics of the LAST graph build this JVM ran (chunk count,
     * q rows, wall seconds) — written by [[buildKnnGraphTables]], read
     * by [[graft.GraphRecall]]'s report line so ladder rungs record
@@ -2079,34 +2027,22 @@ object Similarity {
   @volatile private[graft] var LastGraphBuild: (Int, Long, Double) =
     (0, 0L, 0.0)
 
-  /** A/B + law-test hook: force the graph build's top-k pass back to
-    * the window form (the TopKEdges aggregate's foil). Production
-    * default is the cell-block kernel — sort-free, spill-free,
-    * pair-machinery-free; the env form (GRAFT_GRAPH_WINDOW_BUILD=1)
-    * drives same-window A/Bs without a code edit. */
-  @volatile private[graft] var GraphBuildUseWindow =
-    sys.env.get("GRAFT_GRAPH_WINDOW_BUILD").contains("1")
-
-  /** Second foil: the r17 chunked PAIR-STREAM aggregate form (explode
-    * every (query, member) pair through join machinery, TopKEdges
-    * partials, pair-budget q-side chunks). Kept runnable
-    * (GRAFT_GRAPH_AGG_BUILD=1) because it is the any-shape fallback
-    * and the multi-chunk content-identity law's subject; the r18
-    * profile measured its cost as ~2 µs of row machinery PER SCORED
-    * PAIR (BuildProbe at the 512k rung: 1935 s, ~1921 of them in the
-    * four join+aggregate stages over 32.8G pairs = n²·np/nlist·occ
-    * with np ~ nlist/8 — n²/8, nlist cancels), which the cell-block
-    * kernel removes by scoring whole member blocks per probe row. */
-  @volatile private[graft] var GraphBuildUseChunkedAgg =
-    sys.env.get("GRAFT_GRAPH_AGG_BUILD").contains("1")
+  /** Law-test hook: run the graph build's per-chunk top-k in the
+    * window form ([[windowTopK]]), the kernel's reference foil.
+    * Production is the cell-block kernel — sort-free, spill-free,
+    * pair-machinery-free; the r18 profile measured the pair-stream
+    * forms at ~2 µs of row machinery PER SCORED PAIR (BuildProbe at
+    * the 512k rung: 1935 s, ~1921 of them in the join+aggregate
+    * stages over 32.8G pairs = n²·np/nlist·occ with np ~ nlist/8 —
+    * n²/8, nlist cancels), which the kernel removes by scoring whole
+    * member blocks per probe row. */
+  @volatile private[graft] var GraphBuildUseWindow = false
 
   /** Hard ceiling for the build's ObjectHashAggregate fallback
     * threshold: ~112 B of top-k state per src key puts 4M keys at
     * ~450 MB/task — the most in-memory aggregation state a build
-    * task is allowed. chunkQ is CAPPED under it (more chunks instead)
-    * so the threshold always covers a chunk's src count and the
-    * sort-free guarantee cannot silently lapse under a budget
-    * override or a low-fan shape (r17 advice). */
+    * task is allowed. Past it [[cellBlockTopK]] hash-repartitions
+    * before the merge so per-task keys stay bounded (r17 advice). */
   private[graft] val FallbackKeyCap = 4000000L
 
   /** Law-test hook: invoked once per build AFTER the build session's
@@ -2116,7 +2052,7 @@ object Similarity {
   @volatile private[graft] var GraphBuildConfProbe
       : Option[() => Unit] = None
 
-  /** A/B + law-test hook: force [[foldGraphBatch]]'s two scoring
+  /** Law-test hook: force [[foldGraphBatch]]'s two scoring
     * passes back to the pair-stream window form. Production default
     * is the cell-block kernel ([[cellBlockTopK]]): the fold's batch
     * adjacency pass scores batch x ring-occupancy pairs — batch x
@@ -2124,10 +2060,8 @@ object Similarity {
     * a 5k-vector batch is ~0.6G pairs — and the rule-35 ~2 µs/pair
     * row machinery would make ONE FOLD cost several times the
     * kernel-built index itself. SimilaritySpec pins both fold forms
-    * row-identical; the env (GRAFT_GRAPH_WINDOW_FOLD=1) drives
-    * same-window A/Bs without a code edit. */
-  @volatile private[graft] var GraphFoldUseWindow =
-    sys.env.get("GRAFT_GRAPH_WINDOW_FOLD").contains("1")
+    * row-identical. */
+  @volatile private[graft] var GraphFoldUseWindow = false
 
   /** The cell-block guard bound for corpus-sized kernel passes: 16x
     * the healthy mean occupancy (the maintenance hot-cell trigger's
@@ -2292,11 +2226,41 @@ object Similarity {
       et, "src", eBuckets, SaveMode.Overwrite)
   }
 
+  /** The pair-stream window form of a top-k scoring pass — the
+    * reference foil [[cellBlockTopK]] is pinned against (the build
+    * under [[GraphBuildUseWindow]], the fold's batch adjacency under
+    * [[GraphFoldUseWindow]]). Same inputs and output columns as the
+    * kernel: every (query, member) pair becomes a row, exact-scored
+    * and ranked by (score desc, dst asc). NaN scores (a zero-norm
+    * vector's 0/0 cosine) are dropped BEFORE the top-k so both forms
+    * agree by construction: desc ordering ranks NaN above every
+    * double while the kernel skips it — a neighbor with no defined
+    * similarity is not an edge. */
+  private def windowTopK(qx: DataFrame, members: DataFrame,
+                         k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("src").orderBy(desc("score"), asc("dst"))
+    qx.join(members,
+        col("qcid") === col("cid") && col("qid") =!= col("nid"))
+      .select(col("qid").as("src"), col("nid").as("dst"),
+        round(dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6)
+          .as("score"))
+      .filter(!isnan(col("score")))
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .filter(col("rn") <= k)
+  }
+
+  /** The one-shot build body: one probe-ring pass over the IVF
+    * assignment table. The ring (the expensive native NearestCells
+    * eval) is computed ONCE into a localCheckpoint'd frame feeding
+    * both artifacts; the mates side reuses the STORED cell
+    * assignments (no nearestCentroid re-eval — the build's argmax was
+    * already paid by ensureIvfIndex). The top-k pass runs in q-side
+    * chunks sized by [[GraphBuildShuffleBudget]]. */
   private def buildKnnGraphTables(s: SparkSession, k: Int,
                                   et: String, rt: String,
                                   at: String, ct: String,
                                   np: Int, eBuckets: Int): Unit = {
-    import org.apache.spark.sql.expressions.Window
     // The build runs its queries in a CLONED session: the raised
     // ObjectHashAggregate fallback threshold below is plan-time
     // session conf, and setting it on the caller's session (the r17
@@ -2328,124 +2292,48 @@ object Similarity {
     val rows = math.max(1L, q.count()) // checkpointed: metadata-cheap
     val nlist = math.max(1L, bs.table(ct).count())
     val useWindow = GraphBuildUseWindow
-    val useChunkedAgg = GraphBuildUseChunkedAgg
-    val buildT00 = System.nanoTime()
-    if (!useWindow && !useChunkedAgg) {
-      // ---- cell-block kernel (production form, r18) ----
-      // The exact contract scores n x np x occupancy pairs = n²·np/
-      // nlist ~ n²/8 (np tracks nlist/8, so nlist CANCELS — the build
-      // is quadratic whatever the cell count). The r18 BuildProbe
-      // measured the r17 pair-stream form paying ~2 µs of join +
-      // project + aggregate-update machinery PER PAIR (32.8G pairs =
-      // 1935 s at 512k; the 64-FLOP dot is ~50 ns of it). This form
-      // feeds the SAME dots through one fused kernel per (query x
-      // probed cell) row instead: per-cell member BLOCKS (parallel
-      // arrays: ids, flattened vectors, norms) join to the exploded
-      // probe rows (n x np — a mean-occupancy factor fewer rows), and
-      // TopKInCell runs score + selection over primitive arrays,
-      // ranked by the same round-6 score as the window foil (bit
-      // -identical selection; SimilaritySpec pins all three forms).
-      // No pair row ever exists, so nothing sorts or spills: per-pass
-      // disk is the probe-side shuffle (n x np x ~(48 B + vector))
-      // and the block-side shuffle (n x ~528 B). The probe shuffle is
-      // the form's one n^1.5 disk term — past GraphBuildShuffleBudget
-      // the q side splits into hash chunks (each qid wholly in one
-      // chunk keeps per-src top-k total; blocks re-group per chunk, a
-      // seconds-scale n-row groupBy).
-      // ObjectHashAggregate threshold: the block collect_list sees
-      // nlist keys and the final merge sees up to `rows` srcs per map
-      // task — cover rows (capped; beyond the cap the pre-merge
-      // repartition bounds per-task keys to rows/partitions).
-      bs.conf.set(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        math.min(FallbackKeyCap, rows + 1024L).toString)
-      GraphBuildConfProbe.foreach(_())
-      val elemBytes = asg.schema("ce").dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, _) => 4L
-        case _ => 8L
-      }
-      val dim = asg.select(size(col("ce"))).head.getInt(0).toLong
-      val qRowBytes = 48L + dim * elemBytes
-      val chunks = math.max(1L, math.ceil(
-        rows.toDouble * np * qRowBytes / GraphBuildShuffleBudget
-      ).toLong).toInt
-      (0 until chunks).foreach { c =>
-        val qc = if (chunks == 1) q
-          else q.filter(pmod(xxhash64(col("qid")), lit(chunks)) === c)
-        val qx = qc.select(col("qid"), col("qe"), col("qn"),
-          explode_outer(col("qcids")).as("qcid"))
-        val edges = cellBlockTopK(qx, mates, k, rows,
-          blockRowCap = blockGuardCap(rows, nlist))
-          .withColumn("gen", lit(null).cast("string"))
-        PersistedIndex.writeBucketed(s, edges, et, "src", eBuckets,
-          if (c == 0) SaveMode.Overwrite else SaveMode.Append)
-        // chunk shuffles are freed by the GC-driven ContextCleaner,
-        // whose periodic-GC default (30 min) outlives a multi-chunk
-        // build — without a prompt each chunk's ~budget of shuffle
-        // files ACCUMULATES until the build dies ENOSPC (rule 31a
-        // one layer up; the 4M rung died exactly here with 2 x 40 GB
-        // live). Prompting after each chunk's job completes lets the
-        // async cleaner delete the now-unreferenced shuffle while
-        // the next chunk warms, bounding live shuffle near ONE
-        // budget rather than chunks x budget.
-        if (chunks > 1) System.gc()
-      }
-      refineBuiltEdges(s, bs, et, asg, k, eBuckets)
-      PersistedIndex.writeBucketed(s,
-        q.select(col("qid"), explode_outer(col("qcids")).as("qcid"),
-          col("acid")), rt, "qcid", eBuckets, SaveMode.Overwrite)
-      LastGraphBuild =
-        (chunks, rows, (System.nanoTime() - buildT00) / 1e9)
-      return
-    }
-    // ---- legacy pair-stream forms (law foils, any-shape fallback) ----
-    // read the budget knob ONCE per build: it is global JVM state (a
-    // test override), and a concurrent mutation mid-build must not
-    // split one build across two budgets (r16 advice)
-    val baseBudget = GraphBuildPairBudget
-    // the aggregate form never SORTS the scored pairs, so the pair
-    // budget no longer sizes a sort-spill buffer (~40 B x budget under
-    // the window form) — per-pass disk becomes the chunk's q-side
-    // JOIN shuffle (~rowWidth(q) x budget / fan ≈ 550 B x chunkQ x np).
-    // Scaling the budget 16x keeps the same per-pass disk envelope
-    // (24 GB sort spill -> ~7 GB shuffle at the 512k shape) while
-    // cutting the chunk count — and with it the C re-scans of the
-    // mates side — 16-fold (52 -> 4 at 512k).
-    val budget =
-      if (useWindow) baseBudget else 16L * baseBudget
-    // per-q candidate fan-out = np x mean occupancy
-    val fan = math.max(1.0, np.toDouble * rows / nlist)
-    // a chunk's src count must stay UNDER the 4M fallback-threshold
-    // cap below, or the aggregate silently reverts to sort-based
-    // aggregation of the full pair stream — the exact rule-31a
-    // hazard this build claims to remove structurally, with no log
-    // line. A budget override or a low-fan shape can push budget/fan
-    // past 4M; shrinking chunkQ (more chunks, same per-pass safety)
-    // keeps the sort-free guarantee unconditional instead of silent.
-    val chunkQ = math.min(FallbackKeyCap - 1024L,
-      math.max(1L, (budget / fan).toLong))
-    val chunks = math.max(1, math.ceil(rows.toDouble / chunkQ).toInt)
     val buildT0 = System.nanoTime()
-    // ObjectHashAggregate silently falls back to SORT-BASED
-    // aggregation once a task's hash map passes
-    // spark.sql.objectHashAggregate.sortBased.fallbackThreshold —
-    // default 128 KEYS, so the "sort-free" top-k would re-sort the
-    // whole pair stream per chunk (measured: the 512k build filled
-    // the disk through exactly this fallback at the 16x budget).
-    // A map task can see every src in the chunk, so the threshold
-    // must cover chunkQ: state is |srcs| x (k x 16 B + overhead)
-    // ≈ 112 B/key — 150k keys ≈ 17 MB, trivially in-memory; chunkQ
-    // is capped under FallbackKeyCap above so chunkQ + 1024 always
-    // fits. Set on the BUILD session only — the caller's session
-    // keeps the default (GraphBuildConfProbe lets the law test
-    // observe exactly that, mid-build).
-    val fallbackKey =
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    if (!useWindow)
-      bs.conf.set(fallbackKey, (chunkQ + 1024L).toString)
+    // The exact contract scores n x np x occupancy pairs = n²·np/
+    // nlist ~ n²/8 (np tracks nlist/8, so nlist CANCELS — the build
+    // is quadratic whatever the cell count). The r18 BuildProbe
+    // measured the r17 pair-stream form paying ~2 µs of join +
+    // project + aggregate-update machinery PER PAIR (32.8G pairs =
+    // 1935 s at 512k; the 64-FLOP dot is ~50 ns of it). The kernel
+    // form feeds the SAME dots through one fused kernel per (query x
+    // probed cell) row instead: per-cell member BLOCKS (parallel
+    // arrays: ids, flattened vectors, norms) join to the exploded
+    // probe rows (n x np — a mean-occupancy factor fewer rows), and
+    // TopKInCell runs score + selection over primitive arrays,
+    // ranked by the same round-6 score as the window foil (bit
+    // -identical selection; SimilaritySpec pins both forms).
+    // No pair row ever exists, so nothing sorts or spills: per-pass
+    // disk is the probe-side shuffle (n x np x ~(48 B + vector))
+    // and the block-side shuffle (n x ~528 B). The probe shuffle is
+    // the form's one n^1.5 disk term — past GraphBuildShuffleBudget
+    // the q side splits into hash chunks (each qid wholly in one
+    // chunk keeps per-src top-k total; blocks re-group per chunk, a
+    // seconds-scale n-row groupBy).
+    // ObjectHashAggregate threshold: the block collect_list sees
+    // nlist keys and the final merge sees up to `rows` srcs per map
+    // task — cover rows (capped; beyond the cap the pre-merge
+    // repartition bounds per-task keys to rows/partitions). Set on
+    // the BUILD session only — the caller's session keeps the default
+    // (GraphBuildConfProbe lets the law test observe exactly that,
+    // mid-build).
+    bs.conf.set(
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+      math.min(FallbackKeyCap, rows + 1024L).toString)
     GraphBuildConfProbe.foreach(_())
-    val w = Window.partitionBy("src").orderBy(desc("score"), asc("dst"))
+    val elemBytes = asg.schema("ce").dataType match {
+      case org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType, _) => 4L
+      case _ => 8L
+    }
+    val dim = asg.select(size(col("ce"))).head.getInt(0).toLong
+    val qRowBytes = 48L + dim * elemBytes
+    val chunks = math.max(1L, math.ceil(
+      rows.toDouble * np * qRowBytes / GraphBuildShuffleBudget
+    ).toLong).toInt
     (0 until chunks).foreach { c =>
       val qc = if (chunks == 1) q
         else q.filter(pmod(xxhash64(col("qid")), lit(chunks)) === c)
@@ -2454,48 +2342,22 @@ object Similarity {
       // ring (here a checkpointed attribute, but keep the idiom)
       val qx = qc.select(col("qid"), col("qe"), col("qn"),
         explode_outer(col("qcids")).as("qcid"))
-      val scored = qx
-        .join(mates,
-          col("qcid") === col("cid") && col("qid") =!= col("nid"))
-        .select(col("qid").as("src"), col("nid").as("dst"),
-          round(dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6)
-            .as("score"))
-        // NaN scores (a zero-norm vector's 0/0 cosine) are dropped
-        // BEFORE the top-k so the aggregate and window forms agree by
-        // construction: desc ordering ranks NaN above every double
-        // (the window would keep it first) while TopKEdges' ordered
-        // buffer would rank it worst — a silent foil divergence on
-        // any non-unit-norm corpus. A neighbor with no defined
-        // similarity is not an edge. TopKEdges also skips NaN in
-        // update() for callers outside this build.
-        .filter(!isnan(col("score")))
-      // top-k per src through the SORT-FREE native aggregate
-      // (TopKEdges): the window form's partial WindowGroupLimit must
-      // LOCAL-SORT every scored pair before it prunes — the rule-31a
-      // disk hazard the pair budget bounds — while the aggregate's
-      // map-side partial collapses each partition to <= k entries per
-      // src before the exchange, so nothing ever sorts or spills the
-      // candidate stream. Row-identical to the window (the ordering
-      // is the same (score desc, dst asc); SimilaritySpec pins the
-      // foil equality and GraphBuildUseWindow keeps the old form
-      // runnable for the law test and A/Bs). Measured: 55.1 -> 41.1 s
-      // at the 64k rung (single chunk, identical output); the larger
-      // win is structural — the 256k one-shot's 8.3G-pair sort filled
-      // this host's DISK, while the aggregate's peak state is
-      // |srcs-in-chunk| x k entries.
-      val edges = (if (useWindow)
-          scored.withColumn("rn", row_number().over(w).cast("long"))
-            .filter(col("rn") <= k)
-        else scored.groupBy("src")
-          .agg(graft.functions.GraftFunctions
-            .topKEdges(col("dst"), col("score"), k).as("tk"))
-          .select(col("src"), posexplode(col("tk")).as(Seq("p", "e")))
-          .select(col("src"), col("e.dst").as("dst"),
-            col("e.score").as("score"),
-            (col("p") + 1).cast("long").as("rn")))
+      val edges = (if (useWindow) windowTopK(qx, mates, k)
+        else cellBlockTopK(qx, mates, k, rows,
+          blockRowCap = blockGuardCap(rows, nlist)))
         .withColumn("gen", lit(null).cast("string"))
       PersistedIndex.writeBucketed(s, edges, et, "src", eBuckets,
         if (c == 0) SaveMode.Overwrite else SaveMode.Append)
+      // chunk shuffles are freed by the GC-driven ContextCleaner,
+      // whose periodic-GC default (30 min) outlives a multi-chunk
+      // build — without a prompt each chunk's ~budget of shuffle
+      // files ACCUMULATES until the build dies ENOSPC (rule 31a
+      // one layer up; the 4M rung died exactly here with 2 x 40 GB
+      // live). Prompting after each chunk's job completes lets the
+      // async cleaner delete the now-unreferenced shuffle while
+      // the next chunk warms, bounding live shuffle near ONE
+      // budget rather than chunks x budget.
+      if (chunks > 1) System.gc()
     }
     refineBuiltEdges(s, bs, et, asg, k, eBuckets)
     PersistedIndex.writeBucketed(s,
@@ -2629,8 +2491,7 @@ object Similarity {
     // ~ batch x n/8). The kernel form never materializes a pair row
     // (rule 35 — the pair-stream machinery would make one production
     // fold cost several times the kernel BUILD); the window form
-    // stays runnable as the law foil / A-B hook, NaN-filtered so both
-    // forms agree by construction (the build's foil idiom).
+    // ([[windowTopK]]) stays runnable as the law foil.
     val ringCells = b.select(explode(col("bring")).as("c")).distinct()
       .collect().map(_.getLong(0)) // <= nlist ~ sqrt(n): driver-safe
     val mates = s.table(at).filter(col("cid").isin(ringCells: _*))
@@ -2658,14 +2519,7 @@ object Similarity {
         blockRowCap = blockGuardCap(
           IndexManifest.indexRowsOf(storedTxt, storedBatches),
           math.max(1L, s.table(ct).count())))
-      else bq
-        .join(mates, col("qcid") === col("cid") && col("qid") =!= col("nid"))
-        .select(col("qid").as("src"), col("nid").as("dst"),
-          round(dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6)
-            .as("score"))
-        .filter(!isnan(col("score")))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= k)
+      else windowTopK(bq, mates, k)
     // 2. reverse updates
     val bCells = b.select(col("bcid")).distinct()
       .collect().map(_.getLong(0))
@@ -3526,7 +3380,7 @@ object Similarity {
           emb.filter(centroidPick(mod))
             .select(col("vec_id").as("cid"), col("embedding").as("ke"),
               norm(col("embedding")).as("kn")))
-        Tables.spreadSizedBy(emb, 1L << 20, col("vec_id"))
+        Tables.spreadSized(emb, 1L << 20, col("vec_id"))
           .select(col("vec_id"),
             graft.functions.GraftFunctions
               .nearestCentroid(col("embedding"), handle).as("cid"))
@@ -3588,7 +3442,7 @@ object Similarity {
         // by ExtractGenerator with the expression in the project ABOVE
         // the Generate — re-evaluated once per exploded ELEMENT (64x
         // the argmax work; this was 28 of the query's 31 s at 128x)
-        val upd = Tables.spreadSizedBy(emb, 1L << 20, col("vec_id"))
+        val upd = Tables.spreadSized(emb, 1L << 20, col("vec_id"))
           .select(graft.functions.GraftFunctions
               .nearestCentroid(col("embedding"), handle0).as("cid"),
             col("embedding"))
@@ -3615,7 +3469,7 @@ object Similarity {
           math.sqrt(ss)
         }
         val handle1 = s.sparkContext.broadcast((cids1, flat, norms1))
-        Tables.spreadSizedBy(emb, 1L << 20, col("vec_id"))
+        Tables.spreadSized(emb, 1L << 20, col("vec_id"))
           .select(col("vec_id"),
             graft.functions.GraftFunctions
               .nearestCentroid(col("embedding"), handle1).as("cid"))

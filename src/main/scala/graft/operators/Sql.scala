@@ -28,7 +28,7 @@ object Sql {
                        (sql: String): DataFrame = {
     Tables.orders(s, d).createOrReplaceTempView("orders")
     val li = Tables.lineitem(s, d)
-    (if (spreadLineitem) Tables.spreadBy(li, col("l_orderkey")) else li)
+    (if (spreadLineitem) Tables.spread(li, col("l_orderkey")) else li)
       .createOrReplaceTempView("lineitem")
     Tables.customer(s, d).createOrReplaceTempView("customer")
     Tables.supplier(s, d).createOrReplaceTempView("supplier")

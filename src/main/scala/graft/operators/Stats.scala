@@ -148,7 +148,7 @@ object Stats {
         "variant_get extraction — the engine-native form of the " +
         "reference's opaque-JSON round-trip, with shredded storage at " +
         "scale.",
-      (s, d) => Tables.spreadSizedBy(Tables.events(s, d), 256L << 10, col("event_id"))
+      (s, d) => Tables.spreadSized(Tables.events(s, d), 256L << 10, col("event_id"))
         .select(col("event_id"),
           variant_get(parse_json(col("props")), "$.k", "bigint").as("k_val"))
         .filter(col("k_val").isNotNull)

@@ -81,7 +81,7 @@ object TextAnalysis {
         // interpreter); kept for the scale axis: one codegen'd eval
         // per row and the (doc_id, gram) shuffle drops from
         // string-sized to fixed-width rows (guide §2.3/§4.1).
-        Tables.spreadSizedBy(Tables.documents(s, d), 1L << 20, col("doc_id"))
+        Tables.spreadSized(Tables.documents(s, d), 1L << 20, col("doc_id"))
           .select(col("doc_id"),
             explode(call_function("bigram_hashes", split(col("text"), " ")))
               .as("bg"))
@@ -175,7 +175,7 @@ object TextAnalysis {
         val cDe = countIn(toks, deStops)
         val cEs = countIn(toks, esStops)
         val cFr = countIn(toks, frStops)
-        Tables.spreadSizedBy(Tables.documents(s, d), 1L << 20, col("doc_id")).select(
+        Tables.spreadSized(Tables.documents(s, d), 1L << 20, col("doc_id")).select(
           col("doc_id"), col("lang"),
           cEn.as("c_en"), cDe.as("c_de"), cEs.as("c_es"), cFr.as("c_fr"),
           when(cEn > lit(0) && cEn >= greatest(cDe, cEs, cFr), "en")
@@ -287,7 +287,7 @@ object TextAnalysis {
         val w = Window.partitionBy("source", "shard")
           .orderBy("skey", "doc_id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        Tables.spreadSizedBy(Tables.documents(s, d), 1L << 20, col("doc_id"))
+        Tables.spreadSized(Tables.documents(s, d), 1L << 20, col("doc_id"))
           .select(col("doc_id"), col("source"),
             pmod(col("doc_id"), lit(8)).as("shard"), skey.as("skey"),
             size(graft.functions.GraftFunctions
@@ -334,7 +334,7 @@ object TextAnalysis {
         "per row) and the null row an empty doc emits dies in the " +
         "vocab equi-join. Map-only until the presentation sort.",
       (s, d) => {
-        val enc = Tables.spreadSizedBy(Tables.documents(s, d), 128L << 10, col("doc_id"))
+        val enc = Tables.spreadSized(Tables.documents(s, d), 128L << 10, col("doc_id"))
           .select(col("doc_id"),
             graft.functions.GraftFunctions
               .bpeTokens(col("text"), CanonicalMerges).as("tk"))
@@ -365,7 +365,7 @@ object TextAnalysis {
         "bin boundary. Same scale shape (parallelism = |streams|, no " +
         "global order); the oracle reuses q_bpe_encode's recursive " +
         "CTE chain.",
-      (s, d) => seqPack(Tables.spreadSizedBy(Tables.documents(s, d), 128L << 10, col("doc_id")),
+      (s, d) => seqPack(Tables.spreadSized(Tables.documents(s, d), 128L << 10, col("doc_id")),
         nTokens = size(graft.functions.GraftFunctions
           .bpeTokens(col("text"), CanonicalMerges)).cast("bigint"))
         .orderBy("doc_id"),
@@ -610,7 +610,7 @@ object TextAnalysis {
         val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
         val phoneRe = "\\+[0-9][0-9-]{7,}[0-9]"
         val ipRe = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
-        Tables.spreadBy(Tables.documents(s, d), col("doc_id"))
+        Tables.spread(Tables.documents(s, d), col("doc_id"))
           .select(col("doc_id"), aug.as("aug"))
           .select(col("doc_id"),
             size(regexp_extract_all(col("aug"), lit(emailRe), lit(0)))
@@ -831,7 +831,7 @@ object TextAnalysis {
         "percentile_approx accuracy parameter: the mergeable " +
         "bounded-memory sketch keeps the same plan shape.",
       (s, d) => {
-        val scored = Tables.spreadSizedBy(Tables.documents(s, d), 128L << 10, col("doc_id"))
+        val scored = Tables.spreadSized(Tables.documents(s, d), 128L << 10, col("doc_id"))
           .select(col("doc_id"), qualityExpr.as("q"))
         // RANK-BASED cutoff (r9): percentile_approx at max accuracy
         // is Spark's exact discrete percentile — the smallest value
@@ -1020,7 +1020,7 @@ object TextAnalysis {
     require(window >= 1 && stride >= 1 && stride <= window,
       s"docChunks: need 1 <= stride <= window, got window=$window " +
         s"stride=$stride")
-    Tables.spreadSizedBy(docs, 1L << 20, col("doc_id"))
+    Tables.spreadSized(docs, 1L << 20, col("doc_id"))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("n", size(col("toks")))
       .select(col("doc_id"), col("toks"),
@@ -1359,7 +1359,7 @@ object TextAnalysis {
     * into its consumers). */
   private[graft] def bpeEncodedDocs(s: SparkSession, d: String,
       merges: Seq[(String, String)]): DataFrame =
-    Tables.spreadSizedBy(Tables.documents(s, d), 128L << 10, col("doc_id"))
+    Tables.spreadSized(Tables.documents(s, d), 128L << 10, col("doc_id"))
       .select(col("doc_id"),
         graft.functions.GraftFunctions.bpeTokens(col("text"), merges)
           .as("tk"))
@@ -1516,7 +1516,7 @@ object TextAnalysis {
     * `occAgg` overrides the [[lmOccAggregate]] size gate (tests). */
   private[graft] def lmNll(s: SparkSession, d: String,
                            occAgg: Option[Boolean] = None): DataFrame =
-    lmNllOf(Tables.spreadSizedBy(Tables.documents(s, d), 1L << 20, col("doc_id")),
+    lmNllOf(Tables.spreadSized(Tables.documents(s, d), 1L << 20, col("doc_id")),
       occAgg.getOrElse(lmOccAggregate(s, d)))
 
   /** [[lmNll]] over an arbitrary docs frame (doc_id, text, ...) — the

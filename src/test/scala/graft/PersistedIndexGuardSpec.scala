@@ -19,9 +19,7 @@ class PersistedIndexGuardSpec extends AnyFunSuite {
 
   /** (file name, pattern) pairs allowed outside the owner, each with
     * its reason. */
-  private val Allowed = Map(
-    ("DiffSmoke.scala", "DROP TABLE IF EXISTS") ->
-      "the diff smoke's own throwaway comparison tables, not an index")
+  private val Allowed = Map.empty[(String, String), String]
 
   private def sources(dir: java.io.File): Seq[java.io.File] =
     Option(dir.listFiles()).toSeq.flatten.flatMap { f =>

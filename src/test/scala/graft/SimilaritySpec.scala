@@ -1014,14 +1014,13 @@ class SimilaritySpec extends SparkSuite {
     val dir = new java.io.File(tmp.toFile, "d").toString
     (0L until 400L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    def edgesWith(form: String, budget: Long): Set[(Long, Long, Double, Long)] = {
+    def edgesWith(window: Boolean, shuffleBudget: Long)
+        : Set[(Long, Long, Double, Long)] = {
       Similarity.dropKnnGraphIndex(spark, dir, 3)
       val oldW = Similarity.GraphBuildUseWindow
-      val oldA = Similarity.GraphBuildUseChunkedAgg
-      val oldB = Similarity.GraphBuildPairBudget
-      Similarity.GraphBuildUseWindow = form == "window"
-      Similarity.GraphBuildUseChunkedAgg = form == "agg"
-      Similarity.GraphBuildPairBudget = budget
+      val oldSb = Similarity.GraphBuildShuffleBudget
+      Similarity.GraphBuildUseWindow = window
+      Similarity.GraphBuildShuffleBudget = shuffleBudget
       try {
         val (et, _) = Similarity.ensureKnnGraphIndex(spark, dir, 3)
         spark.table(et).select("src", "dst", "score", "rn").collect()
@@ -1029,34 +1028,32 @@ class SimilaritySpec extends SparkSuite {
             r.getLong(3))).toSet
       } finally {
         Similarity.GraphBuildUseWindow = oldW
-        Similarity.GraphBuildUseChunkedAgg = oldA
-        Similarity.GraphBuildPairBudget = oldB
+        Similarity.GraphBuildShuffleBudget = oldSb
       }
     }
-    // production CELL-BLOCK kernel vs both legacy pair-stream forms:
-    // all four builds bit-identical (scores are round()ed doubles —
-    // TopKInCell replicates Spark's double round — and ranks share
-    // the (score desc, dst asc) order)
-    val cell = edgesWith("cell", Long.MaxValue)
+    // production CELL-BLOCK kernel vs the pair-stream window foil,
+    // each single-pass and chunked: all four builds bit-identical
+    // (scores are round()ed doubles — TopKInCell replicates Spark's
+    // double round — and ranks share the (score desc, dst asc) order)
+    val cell = edgesWith(window = false, Long.MaxValue)
     assert(cell.nonEmpty && cell.exists(_._4 == 3L),
       "fixture must produce full-rank adjacencies")
-    assert(edgesWith("window", Long.MaxValue) == cell,
+    assert(edgesWith(window = true, Long.MaxValue) == cell,
       "cell-block build diverges from the window foil")
-    assert(edgesWith("agg", Long.MaxValue) == cell,
-      "cell-block build diverges from the pair-stream aggregate")
-    // 125 x the aggregate form's 16x budget scale = 2000 pairs/pass —
-    // a genuinely multi-chunk build on this fixture
-    assert(edgesWith("agg", 125L) == cell,
-      "chunked aggregate build diverges from the cell-block form")
-    // forced multi-chunk KERNEL build (the r18 probe-shuffle disk
-    // budget): a tiny byte budget splits the q side into many hash
-    // chunks; every qid is wholly in one chunk, so per-src top-k
-    // stays total and the output is identical
-    val oldSb = Similarity.GraphBuildShuffleBudget
-    Similarity.GraphBuildShuffleBudget = 64L * 1024L
-    try assert(edgesWith("cell", Long.MaxValue) == cell,
+    // forced multi-chunk builds (the probe-shuffle disk budget): a
+    // tiny byte budget splits the q side into many hash chunks; every
+    // qid is wholly in one chunk, so per-src top-k stays total and
+    // the output is identical, for either per-chunk top-k
+    assert(Similarity.LastGraphBuild._1 == 1,
+      s"unbudgeted build chunked: ${Similarity.LastGraphBuild}")
+    assert(edgesWith(window = false, 64L * 1024L) == cell,
       "multi-chunk kernel build diverges from the single-pass form")
-    finally Similarity.GraphBuildShuffleBudget = oldSb
+    assert(Similarity.LastGraphBuild._1 > 1,
+      s"budget did not force a multi-chunk build: ${Similarity.LastGraphBuild}")
+    assert(edgesWith(window = true, 64L * 1024L) == cell,
+      "multi-chunk window build diverges from the cell-block form")
+    assert(Similarity.LastGraphBuild._1 > 1,
+      s"budget did not force a multi-chunk build: ${Similarity.LastGraphBuild}")
   }
 
   test("graph fold: the cell-block kernel fold is row-identical to " +
@@ -1345,25 +1342,19 @@ class SimilaritySpec extends SparkSuite {
 
   test("a disk-budgeted multi-chunk graph build is row-identical to " +
     "the single-pass build") {
-    // the chunked top-k (q-side split by hashed qid, per-pass window)
-    // exists because the single-pass window's local sort of ALL
-    // scored pairs exceeded spill disk at the 256k rung; every qid
-    // lands wholly in one chunk, so the per-qid window is total and
-    // content identical. Force chunking on the spec fixture.
-    // `single` is the production CELL-BLOCK build (the default form);
-    // the chunked run below forces the legacy pair-stream aggregate
-    // (the pair budget is its knob — the cell form has no pair stream
-    // to budget), so this law now ALSO pins cell-block == chunked-agg
+    // the chunked top-k (q-side split by hashed qid) exists because
+    // a single pass's probe-side shuffle grows n^1.5 and outgrew
+    // the free disk at the large rungs; every qid lands wholly in
+    // one chunk, so the per-qid top-k is total and content
+    // identical. Force chunking on the spec fixture through the
+    // shuffle budget.
     val single = Similarity.graphEdges(spark, sf, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSeq.sorted
-    val budget0 = Similarity.GraphBuildPairBudget
-    val agg0 = Similarity.GraphBuildUseChunkedAgg
+    val budget0 = Similarity.GraphBuildShuffleBudget
     try {
-      // ~minimum: many chunks (the aggregate form scales the knob 16x,
-      // so 63 keeps the effective per-pass budget ~1000 pairs)
-      Similarity.GraphBuildPairBudget = 63L
-      Similarity.GraphBuildUseChunkedAgg = true
+      // a many-chunk build on the 500-vector fixture
+      Similarity.GraphBuildShuffleBudget = 16L * 1024L
       Similarity.dropKnnGraphIndex(spark, sf, 3)
       val (et, _) = Similarity.ensureKnnGraphIndex(spark, sf, 3)
       assert(spark.table(et).inputFiles.length > 8,
@@ -1374,8 +1365,7 @@ class SimilaritySpec extends SparkSuite {
       assert(chunked == single,
         "chunked build diverges from the single-pass build")
     } finally {
-      Similarity.GraphBuildPairBudget = budget0
-      Similarity.GraphBuildUseChunkedAgg = agg0
+      Similarity.GraphBuildShuffleBudget = budget0
       Similarity.dropKnnGraphIndex(spark, sf, 3)
     }
   }

@@ -76,8 +76,9 @@ cd "$(dirname "$0")/.."
 # weakest rung (0.747 at 2M); the judge-proposed 0.80 is NOT on the
 # achievable frontier at this wall — the measured refine-ceiling law
 # (refined tau ~ +0.105 per np doubling, SURVEY §24) prices it at
-# np ~ 90-100, ~35% more build wall; GRAFT_KNNG_NPROBE_CAP is the
-# documented knob for a deployment that wants that trade.
+# np ~ 90-100, ~35% more build wall; a deployment that wants that
+# trade edits the flat cap in Similarity.knngNprobeCap (and its oracle
+# twin npCapSql) — there is no env override.
 # r20 close: a 2048 rung (4,096k vectors) is measured but stays OFF
 # the default ladder — on this host it needs
 # GRAFT_GRAPH_SHUFFLE_BUDGET_GB=20 (the ~80 GB probe shuffle must
