@@ -746,8 +746,8 @@ object Dedup {
 
   /** Drop the persisted shingle index (tables, staging leftovers,
     * manifest, batch store, memo) so the next ensure rebuilds from
-    * scratch — the measurement hook [[graft.AppendSmoke]] uses to
-    * time a cold build against an append on the same corpus. */
+    * scratch — the cold-build reset of the gates and the lifecycle
+    * tests. */
   private[graft] def dropShingleIndex(s: SparkSession, d: String): Unit =
     PersistedIndex.drop(s, shingleIndex(d))
 

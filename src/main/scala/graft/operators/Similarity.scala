@@ -483,8 +483,8 @@ object Similarity {
   }
 
   /** Drop the persisted IVF index (tables, staging leftovers,
-    * manifest, batch store, memos) — the [[graft.AppendSmoke]]
-    * cold-build measurement hook. */
+    * manifest, batch store, memos) — the cold-build reset of the gates
+    * and the lifecycle tests. */
   private[graft] def dropIvfIndex(s: SparkSession, d: String): Unit = {
     PersistedIndex.drop(s, ivfIndex(d))
     forgetPqCodebooks(s, d)
@@ -1934,8 +1934,7 @@ object Similarity {
     PersistedIndex.exists(s, knngIndex(d, k))
 
   /** Drop the persisted kNN graph (tables, staging leftovers, manifest,
-    * memo) — the AppendSmoke cold-build hook and the law tests'
-    * reset. */
+    * memo) — the cold-build reset of the lifecycle and law tests. */
   private[graft] def dropKnnGraphIndex(s: SparkSession, d: String,
                                        k: Int): Unit =
     PersistedIndex.drop(s, knngIndex(d, k))

@@ -34,7 +34,9 @@ object Archive {
 
   /** Decode one archive's bytes into leaf edges (executor-side pure
     * function). Chunks are replayed in manifest order per path — the
-    * reference's restore order (RestoreProcessor.php:62-67). */
+    * reference's restore order (RestoreProcessor.php:62-67). A chunk is
+    * a page of one path's children: an object, or — as `json_encode`
+    * writes a page of a dense integer-keyed node — an array. */
   def edgesFromArchive(bytes: Array[Byte]): Seq[TreeCodec.Edge] = {
     val mapper = new ObjectMapper()
     val files = mutable.Map.empty[String, Array[Byte]]
@@ -55,21 +57,11 @@ object Archive {
     val manifest = mapper.readTree(files.getOrElse("metadata.json",
       throw new IllegalArgumentException(
         "not a reference backup archive: metadata.json missing")))
-    def childPath(parent: String, key: String): String =
-      TreeCodec.childPath(parent, key)
     val out = Vector.newBuilder[TreeCodec.Edge]
     manifest.fields().asScala.foreach { pathEntry =>
-      val path = pathEntry.getKey
       pathEntry.getValue.elements().asScala.foreach { chunkName =>
-        val chunk = mapper.readTree(files(chunkName.asText()))
-        chunk.fields().asScala.foreach { kv =>
-          val (key, value) = (kv.getKey, kv.getValue)
-          if (value.isObject || value.isArray)
-            out ++= TreeCodec.flatten(
-              mapper.writeValueAsString(value), childPath(path, key))
-          else
-            out += TreeCodec.Edge(path, key, mapper.writeValueAsString(value))
-        }
+        TreeCodec.flattenNode(mapper.readTree(files(chunkName.asText())),
+          pathEntry.getKey, out += _)
       }
     }
     out.result()

@@ -22,14 +22,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .load()                             // (path, key, value_json)
   * }}}
   *
-  * Planning mirrors [[LiveExport.plan]]'s split rule — one
-  * InputPartition per walkable subtree, fat subtrees (floor page too
-  * large, the go-deeper condition) split into their children — so a
-  * skewed database still spreads across the cluster. The probe loop
-  * here runs ON THE DRIVER (DSv2 planning cannot launch jobs): one
-  * floor-page GET per candidate subtree, which is fine for the
-  * planning fan-out; the function-API path (LiveExport.export)
-  * distributes even the probing when the top level is huge.
+  * Planning is [[LiveExport.plan]]'s loop ([[LiveExport.planRounds]]) —
+  * one InputPartition per walkable subtree, fat subtrees (floor page
+  * too large, the go-deeper condition) split into their children — so
+  * a skewed database still spreads across the cluster. Its probes run
+  * ON THE DRIVER (DSv2 planning cannot launch jobs), up to
+  * [[InFlight.Window]] floor-page GETs at once; the function-API path
+  * (LiveExport.export) distributes even the probing when the top level
+  * is huge.
   *
   * Each partition reader walks its subtree with its own [[LiveExport
   * .Walker]] (C1 keyset pagination, C2 adaptive IPP, C3 go-deeper
@@ -146,23 +146,16 @@ private[pipeline] object FirebasePushdown {
     case _                                    => true
   }
 
-  private def parent(p: String): String = {
-    val i = p.lastIndexOf('/')
-    if (i <= 0) "/" else p.substring(0, i)
-  }
-  private def lastSegment(p: String): String =
-    p.substring(p.lastIndexOf('/') + 1)
-
   def keep(p: String, fs: Seq[Filter]): Boolean = {
     val pathEqs  = fs.collect { case EqualTo("path", v: String) => v }
       .distinct.toList
     val prefixes = fs.collect { case StringStartsWith("path", v) => v }
-    val par = parent(p)
+    val (par, last) = TreeCodec.splitPath(p)
     // shape 1: p is a scalar leaf — row (parent(p), lastSegment(p), v)
     val scalarOk =
       pathEqs.forall(_ == par) &&
         prefixes.forall(par.startsWith) &&
-        keyInRange(lastSegment(p), fs)
+        keyInRange(last, fs)
     // shape 2: p is a container — rows at p or any descendant of p,
     // keys unconstrained
     val containerOk = pathEqs match {
@@ -269,20 +262,18 @@ final class FirebaseScan(conf: FirebaseSource.Conf)
       s"limit: ${limit.getOrElse(-1)}, " +
       s"cursor: [${conf.startAt.getOrElse("")}..${conf.endAt.getOrElse("")}]"
 
-  /** The [[LiveExport.plan]] loop, driver-side: probe each pending
-    * subtree with one floor page; split the too-fat ones into their
-    * children until every work item is walkable whole. The option
-    * cursor bounds the top-level children (reference resume
-    * semantics); pushed filters prune every round's candidates before
-    * their probe fetch. */
+  /** [[LiveExport.planRounds]], driver-side: probe pending subtrees
+    * with one floor page each, up to [[InFlight.Window]] at once, and
+    * split the too-fat ones into their children until every work item
+    * is walkable whole. The option cursor bounds the top-level children
+    * (reference resume semantics); pushed filters prune every round's
+    * candidates before their probe fetch. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val walker = conf.walker()
-    def childPath(parent: String, key: String): String =
-      TreeCodec.childPath(parent, key)
-    var pending: Seq[String] = walker.shallowKeys(conf.root)
+    val keep = (p: String) => FirebasePushdown.keep(p, pushed.toSeq)
+    val roots = conf.walker().shallowKeys(conf.root)
       .filter(FirebasePushdown.inCursor(_, conf.startAt, conf.endAt))
-      .map(childPath(conf.root, _))
-      .filter(FirebasePushdown.keep(_, pushed.toSeq))
+      .map(TreeCodec.childPath(conf.root, _))
+      .filter(keep)
     // a pushed limit also caps PLANNING: every walkable subtree came
     // from a shallow listing, so it exists and emits >= 1 edge —
     // `limit` planned partitions emit >= limit rows, and probing the
@@ -291,21 +282,10 @@ final class FirebaseScan(conf: FirebaseSource.Conf)
     // concurrent delete loses those rows on ANY live scan — the
     // reference has the same read-skew, BackupProcessor.php:71-136.)
     val cap = effectiveLimit.getOrElse(Int.MaxValue)
-    var planned = 0
-    val work = Array.newBuilder[InputPartition]
-    while (pending.nonEmpty && planned < cap) {
-      val verdicts = pending.take(cap - planned)
-        .map(p => p -> walker.probeSplit(p))
-      pending = (verdicts.flatMap(_._2) ++ pending.drop(verdicts.size))
-        .filter(FirebasePushdown.keep(_, pushed.toSeq))
-      verdicts.foreach { case (p, splits) =>
-        if (splits.isEmpty && planned < cap) {
-          work += FirebasePartition(p)
-          planned += 1
-        }
-      }
-    }
-    work.result()
+    LiveExport.planRounds(roots, cap, batch =>
+      batch.zip(InFlight.map(batch.toVector)(p =>
+        conf.walker().probeSplit(p).filter(keep))))
+      .map(FirebasePartition(_)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -4,7 +4,6 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** The live Firebase-REST export path — the reference's actual reason to
   * exist (`firebase->get` pagination, BackupProcessor.php:150-200) for a
@@ -176,7 +175,7 @@ object LiveExport {
 
     private def isEmptyPayload(n: JsonNode): Boolean =
       n == null || n.isNull || n.isMissingNode ||
-        (n.isObject && n.size() == 0) || (n.isArray && n.size() == 0)
+        (n.isContainerNode && n.size() == 0)
 
     /** One page request of `itemsPerPage` children: the page (or the
       * scalar the path holds), or None when the answer says "shrink"
@@ -191,24 +190,16 @@ object LiveExport {
       failIfDenied(resp, path)
       val node = mapper.readTree(resp.body)
       if (isErrorResponse(resp) || isEmptyPayload(node)) None
-      else if (!node.isObject && !node.isArray)
+      else if (!node.isContainerNode)
         Some(ScalarLeaf(mapper.writeValueAsString(node)))
       else {
         // Firebase serializes dense integer-keyed nodes as JSON
         // ARRAYS (element index = key), padding skipped leading
-        // indices with nulls on filtered reads — an object-only
-        // fields() here returned an empty iterator and crashed on
-        // .last. Arrays translate to index-keyed fields; the normal
-        // startAt-duplicate drop and isLast logic then apply
-        // unchanged (the first non-null element IS the inclusive
-        // startAt key).
-        val fields: Vector[(String, JsonNode)] =
-          if (node.isArray)
-            node.elements().asScala.zipWithIndex.collect {
-              case (v, i) if !v.isNull => (i.toString, v)
-            }.toVector
-          else node.fields().asScala
-            .map(e => e.getKey -> e.getValue).toVector
+        // indices with nulls on filtered reads; TreeCodec.children
+        // reads them as index-keyed fields, so the startAt-duplicate
+        // drop and isLast logic apply unchanged (the first non-null
+        // element IS the inclusive startAt key).
+        val fields = TreeCodec.children(node).toVector
         if (fields.isEmpty)
           // an all-null padded array page past the end: final page
           Some(Page(Vector.empty, startKey.getOrElse(""), isLastPage = true))
@@ -263,9 +254,9 @@ object LiveExport {
       * retries back-to-back, which against a rate-limited live
       * database burns all 10 attempts in milliseconds; a transient
       * quota window outlives our whole schedule. Array nodes list as
-      * their non-null element indices in NUMERIC order — the same
-      * cursor order the server uses for integer keys, which the
-      * go-deeper resume (`shallow.indexOf(lastKey) + 1`) relies on. */
+      * their non-null element indices ([[TreeCodec.children]]). Keys
+      * sort in the server's cursor order, which the go-deeper resume
+      * (`shallow.indexOf(lastKey) + 1`) relies on. */
     def shallowKeys(path: String): Vector[String] = {
       var tries = 0
       while (tries < ShallowRetries) {
@@ -275,14 +266,11 @@ object LiveExport {
         val node = mapper.readTree(resp.body)
         tries += 1
         if (!isErrorResponse(resp)) {
-          if (node != null && node.isObject && node.size() > 0)
+          if (node != null && node.isContainerNode && node.size() > 0)
             // sorted in the SERVER's cursor order (integer keys first,
             // numerically) — the go-deeper resume depends on it
-            return node.fieldNames().asScala.toVector.sorted(KeyOrdering)
-          if (node != null && node.isArray && node.size() > 0)
-            return node.elements().asScala.zipWithIndex.collect {
-              case (v, i) if !v.isNull => i.toString
-            }.toVector
+            return TreeCodec.children(node).map(_._1).toVector
+              .sorted(KeyOrdering)
           // a 200 null/{}/[] is DEFINITIVE: the path is empty (an
           // empty database, or a subtree deleted since planning) —
           // retrying a correct answer ~33s just to abort the whole
@@ -295,16 +283,6 @@ object LiveExport {
           s"($ShallowRetries attempts)")
     }
 
-    private def childPath(parent: String, key: String): String =
-      TreeCodec.childPath(parent, key)
-
-    private def emitValue(path: String, key: String, v: JsonNode,
-                          emit: TreeCodec.Edge => Unit): Unit =
-      if (v.isObject || v.isArray)
-        TreeCodec.flatten(mapper.writeValueAsString(v),
-          childPath(path, key)).foreach(emit)
-      else emit(TreeCodec.Edge(path, key, mapper.writeValueAsString(v)))
-
     /** The reference's `getData` loop (BackupProcessor.php:71-136):
       * paginate `path`, recursing into children too large to page. */
     def fetchSubtree(path: String, emit: TreeCodec.Edge => Unit): Unit = {
@@ -316,17 +294,12 @@ object LiveExport {
         getPathsPaginated(path, firstKey, preserveLastKey) match {
           case ScalarLeaf(json) =>
             // the path itself is a leaf: it IS one edge at its parent
-            val (parent, key) =
-              if (path == "/") ("/", "")
-              else {
-                val i = path.lastIndexOf('/')
-                (if (i == 0) "/" else path.substring(0, i),
-                  path.substring(i + 1))
-              }
+            val (parent, key) = TreeCodec.splitPath(path)
             emit(TreeCodec.Edge(parent, key, json))
             isLastPage = true
           case Page(data, lastKey, last) =>
-            data.foreach { case (k, v) => emitValue(path, k, v, emit) }
+            data.foreach { case (k, v) =>
+              TreeCodec.flattenChild(path, k, v, emit) }
             firstKey = Some(lastKey)
             isLastPage = last
             preserveLastKey = false
@@ -346,7 +319,7 @@ object LiveExport {
                 case None => Some(0)
               }
               nextIdx.foreach { i =>
-                fetchSubtree(childPath(path, shallow(i)), emit)
+                fetchSubtree(TreeCodec.childPath(path, shallow(i)), emit)
                 if (i + 1 < shallow.size) {
                   firstKey = Some(shallow(i + 1))
                   preserveLastKey = true
@@ -397,7 +370,7 @@ object LiveExport {
       * halving ladder. */
     def probeSplit(path: String): Seq[String] =
       fetchPage(path, None, preserveLastKey = false, MinIpp) match {
-        case None => shallowKeys(path).map(childPath(path, _))
+        case None => shallowKeys(path).map(TreeCodec.childPath(path, _))
         case Some(_) => Nil
       }
   }
@@ -414,12 +387,35 @@ object LiveExport {
     spark.sparkContext.parallelize(dealt, par)
   }
 
-  /** Work-list planner for the distributed export. Round 0 is the
-    * root's shallow children; each round probes every pending path IN
-    * PARALLEL ([[Walker.probeSplit]]: one floor-page fetch) and splits
-    * the too-fat ones into their children for the next round. Each task
-    * keeps up to [[InFlight.Window]] of its probes in flight, one
-    * Walker per probed path, so a round costs about
+  /** The go-deeper split loop, written once for [[plan]] and the DSv2
+    * source's planning. Each round hands `probe` the first
+    * `cap - planned` pending paths; `probe` answers each path's splits
+    * (empty: the path is walkable whole). Walkable paths become work
+    * items in probe order; the splits, followed by the paths not yet
+    * probed, form the next round. The loop ends when nothing is
+    * pending or `cap` work items are planned. */
+  private[pipeline] def planRounds(
+      first: Seq[String], cap: Int,
+      probe: Seq[String] => Seq[(String, Seq[String])]): Seq[String] = {
+    var pending = first
+    val work = Vector.newBuilder[String]
+    var planned = 0
+    while (pending.nonEmpty && planned < cap) {
+      val batch = pending.take(cap - planned)
+      val verdicts = probe(batch)
+      val walkable = verdicts.collect { case (p, splits) if splits.isEmpty => p }
+      work ++= walkable
+      planned += walkable.size
+      pending = verdicts.flatMap(_._2) ++ pending.drop(batch.size)
+    }
+    work.result()
+  }
+
+  /** Work-list planner for the distributed export: [[planRounds]] from
+    * the root's shallow children, uncapped. Each round probes every
+    * pending path IN PARALLEL ([[Walker.probeSplit]]: one floor-page
+    * fetch). Each task keeps up to [[InFlight.Window]] of its probes in
+    * flight, one Walker per probed path, so a round costs about
     * paths / (tasks x Window) round trips, not paths / tasks. Only
     * PATHS flow through the driver — never edge data — and the number
     * of rounds is bounded by the depth of the fat spine, not the tree.
@@ -432,23 +428,16 @@ object LiveExport {
     * splits into its children and drains cluster-wide. Page-size
     * settings play no part: every probe is one floor page. */
   def plan(spark: SparkSession, clientFactory: () => RestClient,
-           root: String = "/"): Seq[String] = {
-    var pending: Seq[String] = new Walker(clientFactory())
-      .shallowKeys(root).map(TreeCodec.childPath(root, _))
-    val work = Seq.newBuilder[String]
-    while (pending.nonEmpty) {
-      val verdicts = slices(spark, pending)
-        .mapPartitions { it =>
-          val paths = it.flatten.toVector
-          paths.iterator.zip(InFlight.map(paths)(p =>
-            new Walker(clientFactory()).probeSplit(p)).iterator)
-        }
-        .collect()
-      pending = verdicts.flatMap(_._2).toSeq
-      work ++= verdicts.collect { case (p, splits) if splits.isEmpty => p }
-    }
-    work.result()
-  }
+           root: String = "/"): Seq[String] =
+    planRounds(
+      new Walker(clientFactory()).shallowKeys(root)
+        .map(TreeCodec.childPath(root, _)),
+      Int.MaxValue,
+      batch => slices(spark, batch).mapPartitions { it =>
+        val paths = it.flatten.toVector
+        paths.iterator.zip(InFlight.map(paths)(p =>
+          new Walker(clientFactory()).probeSplit(p)).iterator)
+      }.collect().toSeq)
 
   /** Distributed live export: [[plan]] builds the work list (splitting
     * fat subtrees so no single task owns one), then each executor task
@@ -484,12 +473,4 @@ object LiveExport {
     spark.createDataset(edges).toDF("path", "key", "value_json")
       .localCheckpoint(eager = true)
   }
-
-  /** Single URL convenience mirroring the reference CLI surface
-    * (`frdbackup export -u <url> -k <token>`). */
-  def export(spark: SparkSession, baseUrl: String,
-             authToken: Option[String], maxIpp: Int,
-             startIpp: Option[Int]): DataFrame =
-    export(spark, () => new HttpRestClient(baseUrl, authToken),
-      "/", maxIpp, startIpp)
 }

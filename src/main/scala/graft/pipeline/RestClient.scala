@@ -43,18 +43,12 @@ final case class RestResponse(status: Int, body: String)
 
 trait RestClient extends Serializable {
 
-  /** GET `path` with query params; returns the raw JSON body (Firebase
-    * reports in-band errors like `{"error":"Payload is too large"}` in
-    * the body, which callers inspect — BackupProcessor.php:174). Throws
+  /** GET `path` with query params: the HTTP status and the raw JSON
+    * body (see [[RestResponse]]). The reference's PHP lib discards the
+    * status, which is why it must classify errors by body shape; the
+    * walker here uses the status when the transport provides one.
+    * Implementations that cannot report a status answer 200. Throws
     * IOException only on transport failure. */
-  def get(path: String, query: Map[String, String]): String =
-    getR(path, query).body
-
-  /** As [[get]], but with the HTTP status (see [[RestResponse]]). The
-    * reference's PHP lib discards the status, which is why it must
-    * classify errors by body shape; the walker here uses the status
-    * when the transport provides one. Implementations that cannot
-    * report a status answer 200. */
   def getR(path: String, query: Map[String, String]): RestResponse
 
   /** PATCH `path` with a JSON object body (Firebase `update` — merge of
@@ -84,11 +78,9 @@ trait RestClient extends Serializable {
   * @param authToken Firebase database secret / ID token, sent as the
   *                  `auth` query param exactly like the reference's
   *                  FirebaseLib (frdbackup config `project_key`)
-  * @param readTimeoutMs how long one request may wait for its response
   */
 final class HttpRestClient(baseUrl: String,
-                           authToken: Option[String] = None,
-                           readTimeoutMs: Int = 120000) extends RestClient {
+                           authToken: Option[String] = None) extends RestClient {
 
   private def enc(s: String): String =
     URLEncoder.encode(s, StandardCharsets.UTF_8.name())
@@ -110,7 +102,7 @@ final class HttpRestClient(baseUrl: String,
     HttpRequest.newBuilder(uri)
       .version(if (uri.getScheme == "https") HttpClient.Version.HTTP_2
                else HttpClient.Version.HTTP_1_1)
-      .timeout(Duration.ofMillis(readTimeoutMs.toLong))
+      .timeout(HttpRestClient.ReadTimeout)
   }
 
   private def send(req: HttpRequest): HttpResponse[String] =
@@ -140,6 +132,8 @@ final class HttpRestClient(baseUrl: String,
 
 object HttpRestClient {
   private val ConnectTimeout = Duration.ofSeconds(10)
+  /** How long one request may wait for its response. */
+  private val ReadTimeout = Duration.ofSeconds(120)
 
   /** The JVM's one HTTP client: thread-safe, with a connection pool
     * that has no idle cap, so every executor JVM reuses its sockets at

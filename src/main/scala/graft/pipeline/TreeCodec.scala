@@ -23,7 +23,12 @@ import scala.jdk.CollectionConverters._
   * over data (SURVEY.md §3.4).
   *
   * JSON arrays are treated as objects with integer keys — Firebase's own
-  * array encoding (SURVEY.md §1.1).
+  * array encoding (SURVEY.md §1.1). A null array element is Firebase's
+  * padding for an absent index (Firebase stores no nulls), so it is not
+  * a child: `[null, "a"]` has the one child `"1" -> "a"`. [[children]]
+  * is the one place that rule lives; the walker's pages, its shallow
+  * listings, this codec and the archive decoder all read children
+  * through it.
   */
 object TreeCodec {
 
@@ -32,34 +37,46 @@ object TreeCodec {
   private val mapper = new ObjectMapper()
 
   /** The '/'-rooted path-join rule — load-bearing for backup/restore
-    * path identity, so it lives in exactly one place (previously five
-    * private copies across the walker, planner, archive decoder, DSv2
-    * scan, and this codec). */
+    * path identity, so it lives in exactly one place. */
   def childPath(parent: String, key: String): String =
     if (parent == "/") s"/$key" else s"$parent/$key"
 
-  /** Flatten one JSON document into leaf edges. Empty objects/arrays
-    * produce no edges (Firebase has no empty-node representation). */
+  /** The inverse of [[childPath]]: (parent, last segment). The root
+    * splits as ("/", ""), where Firebase keys a root-level scalar. */
+  def splitPath(path: String): (String, String) = {
+    val i = path.lastIndexOf('/')
+    (if (i <= 0) "/" else path.substring(0, i), path.substring(i + 1))
+  }
+
+  /** A container node's children in document order: an object's fields,
+    * or an array's non-null elements under their index. */
+  def children(node: JsonNode): Iterator[(String, JsonNode)] =
+    if (node.isArray) node.elements().asScala.zipWithIndex.collect {
+      case (v, i) if !v.isNull => (i.toString, v)
+    }
+    else node.fields().asScala.map(e => e.getKey -> e.getValue)
+
+  /** Emit the leaf edges of child `key` of `path`, holding `v`: one edge
+    * for a scalar, the flattened subtree for a container. */
+  def flattenChild(path: String, key: String, v: JsonNode,
+                   emit: Edge => Unit): Unit =
+    if (v.isContainerNode) flattenNode(v, childPath(path, key), emit)
+    else emit(Edge(path, key, mapper.writeValueAsString(v)))
+
+  /** Emit the leaf edges under `path` of the parsed container `node`.
+    * Empty objects/arrays produce no edges (Firebase has no empty-node
+    * representation). */
+  def flattenNode(node: JsonNode, path: String, emit: Edge => Unit): Unit =
+    children(node).foreach { case (k, v) => flattenChild(path, k, v, emit) }
+
+  /** Flatten one JSON document into leaf edges. */
   def flatten(json: String, rootPath: String = "/"): Seq[Edge] = {
     val buf = Vector.newBuilder[Edge]
-    def walk(path: String, node: JsonNode): Unit =
-      if (node.isObject) {
-        node.fields().asScala.foreach { e =>
-          val (k, v) = (e.getKey, e.getValue)
-          if (v.isObject || v.isArray) walk(childPath(path, k), v)
-          else buf += Edge(path, k, mapper.writeValueAsString(v))
-        }
-      } else if (node.isArray) {
-        node.elements().asScala.zipWithIndex.foreach { case (v, i) =>
-          if (v.isObject || v.isArray) walk(childPath(path, i.toString), v)
-          else buf += Edge(path, i.toString, mapper.writeValueAsString(v))
-        }
-      } else {
-        // scalar root: keyed under "" at its parent, like Firebase's
-        // root-value PUT; callers with tree roots never hit this.
-        buf += Edge(path, "", mapper.writeValueAsString(node))
-      }
-    walk(rootPath, mapper.readTree(json))
+    val node = mapper.readTree(json)
+    if (node.isContainerNode) flattenNode(node, rootPath, buf += _)
+    // scalar root: keyed under "" at its parent, like Firebase's
+    // root-value PUT; callers with tree roots never hit this.
+    else buf += Edge(rootPath, "", mapper.writeValueAsString(node))
     buf.result()
   }
 

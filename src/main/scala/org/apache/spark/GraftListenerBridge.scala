@@ -4,9 +4,9 @@ package org.apache.spark
   * listener-bus delivery is ASYNCHRONOUS, so a measurement tool that
   * removes its SparkListener right after the timed action returns can
   * lose the tail stage/task/job events of exactly the query it is
-  * attributing (r20 advice on QueryProbe). `LiveListenerBus
-  * .waitUntilEmpty` is private[spark]; this shim exposes the drain to
-  * graft's measurement mains. Returns false instead of throwing when
+  * attributing. `LiveListenerBus.waitUntilEmpty` is private[spark];
+  * this shim exposes the drain to graft's measurement code (perfbench's
+  * per-layer trace). Returns false instead of throwing when
   * the bus does not drain inside the timeout — attribution tools
   * prefer slightly-short numbers over a crash after the run. */
 object GraftListenerBridge {

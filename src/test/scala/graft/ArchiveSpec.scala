@@ -72,6 +72,38 @@ class ArchiveSpec extends SparkSuite {
         |  "u3": {"deep": {"x": true}}}}""".stripMargin))
   }
 
+  test("an array-shaped chunk decodes to index-keyed edges") {
+    // json_encode writes a page of a dense integer-keyed node as a JSON
+    // array; its null is the padding for the absent index 0
+    val bytes = buildArchive(Map(
+      "metadata.json" -> """{"/arr": ["c1.json"]}""",
+      "c1.json" -> """[null, "a", "b"]"""))
+    assert(Archive.edgesFromArchive(bytes).toSet == Set(
+      TreeCodec.Edge("/arr", "1", "\"a\""),
+      TreeCodec.Edge("/arr", "2", "\"b\"")))
+  }
+
+  test("random trees: decoding the written archive gives back the flattened edges") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    def sorted(es: Seq[TreeCodec.Edge]) = es.sortBy(e => (e.path, e.key))
+    var seed = Seed(20261018L)
+    var deepest = 0
+    (1 to 40).foreach { round =>
+      val json = RandomTrees.node(6).apply(Gen.Parameters.default, seed)
+        .getOrElse(sys.error("gen failed"))
+      seed = seed.next
+      val edges = sorted(TreeCodec.flatten(json))
+      val out = new ByteArrayOutputStream()
+      Archive.writeArchiveStream(edges.iterator, out)
+      val back = sorted(Archive.edgesFromArchive(out.toByteArray))
+      assert(back == edges, s"round $round, tree $json")
+      deepest = math.max(deepest, edges.map(_.path.count(_ == '/')).max)
+    }
+    // the generator must reach deep nesting
+    assert(deepest >= 5, s"deepest path has $deepest segments")
+  }
+
   test("an archive without metadata.json is rejected") {
     val bad = buildArchive(Map("c1.json" -> "{}"))
     intercept[IllegalArgumentException] { Archive.edgesFromArchive(bad) }

@@ -295,6 +295,37 @@ class LiveSpec extends SparkSuite {
     } finally stub.stop()
   }
 
+  test("a null-padded array exports the same edges paged whole or walked into") {
+    // the stub serves the seeded array as is: index 0 is Firebase's
+    // padding for an absent index, not a child. Uncapped, the array
+    // rides inside /x's page; at a 300-byte cap /x's floor page is too
+    // large, so the planner (export) and the walker's go-deeper
+    // (fetchTree) both fetch /x/arr as a path of its own.
+    val json = s"""{"x": {"arr": [null, "a", "b"], "y": "${"y" * 400}"}}"""
+    def exportAt(cap: Int): (Set[TreeCodec.Edge], Set[TreeCodec.Edge], Seq[String]) = {
+      val stub = new FirebaseStub(maxPayloadBytes = cap)
+      try {
+        stub.seed(json)
+        val u = stub.url
+        val exported = edgeRows(LiveExport.export(spark, () => new HttpRestClient(u))).toSet
+        val listed = stub.getRequests.collect { case (p, "shallow=true") => p }
+        val walked = new LiveExport.Walker(new HttpRestClient(u)).fetchTree("/").toSet
+        (exported, walked, listed)
+      } finally stub.stop()
+    }
+    val (whole, wholeWalk, wholeListed) = exportAt(Int.MaxValue)
+    val (deeper, deeperWalk, deeperListed) = exportAt(300)
+    assert(wholeListed == Seq("/"), s"uncapped export split: $wholeListed")
+    assert(deeperListed.contains("/x"), s"capped export did not split /x: $deeperListed")
+    val want = Set(TreeCodec.Edge("/x/arr", "1", "\"a\""),
+      TreeCodec.Edge("/x/arr", "2", "\"b\""),
+      TreeCodec.Edge("/x", "y", "\"" + "y" * 400 + "\""))
+    assert(whole == want, s"uncapped: $whole")
+    assert(deeper == want, s"capped: $deeper")
+    assert(wholeWalk == want && deeperWalk == want)
+    assert(TreeCodec.flatten(json).toSet == want)
+  }
+
   test("shallow retries pace out exponentially; happy path never sleeps") {
     val fat = (1 to 200).map(i => s""""k$i": "${"x" * 10}$i"""").mkString(",")
     val json = s"""{"big": {"fat": {$fat}}}"""
@@ -714,33 +745,11 @@ class LiveSpec extends SparkSuite {
   test("random trees: export is exact and plan splits iff the floor page is too large") {
     import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
     import com.fasterxml.jackson.databind.node.ObjectNode
+    import graft.pipeline.{FirebasePartition, FirebaseScan, FirebaseSource}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import scala.jdk.CollectionConverters._
-
-    // unicode, integer-like (cursor-ordered first, numerically) and
-    // plain keys; no key Firebase forbids (. $ # [ ] /) and no quote,
-    // which the walker's startAt cursor does not escape
-    val keyGen: Gen[String] = Gen.frequency(
-      3 -> Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.alphaNumChar)).map(_.mkString),
-      2 -> Gen.oneOf("é", "ключ", "日本", "ü1", "naïve", "😀", "a b"),
-      2 -> Gen.oneOf(Gen.choose(-5, 40).map(_.toString), Gen.oneOf("007", "01", "2147483648")))
-    val scalarGen: Gen[String] = Gen.oneOf(
-      Gen.alphaNumStr.map(v => "\"" + v.take(10) + "\""),
-      Gen.choose(-1000, 1000).map(_.toString),
-      Gen.oneOf("true", "false"))
-    // a fat child: one string large enough to blow most caps on its own
-    val fatGen: Gen[String] = Gen.choose(80, 700).map(n => "\"" + "f" * n + "\"")
-    def nodeGen(depth: Int): Gen[String] =
-      Gen.choose(1, 6).flatMap { width =>
-        Gen.listOfN(width, for {
-          k <- keyGen
-          v <- if (depth <= 0) Gen.frequency(4 -> scalarGen, 1 -> fatGen)
-               else Gen.frequency(3 -> scalarGen, 1 -> fatGen,
-                 3 -> Gen.lzy(nodeGen(depth - 1)))
-        } yield k -> v)
-      }.map(_.distinctBy(_._1)
-        .map { case (k, v) => "\"" + k + "\": " + v }.mkString("{", ", ", "}"))
 
     val mapper = new ObjectMapper()
     val cursor = FirebaseStub.NameCompare
@@ -756,7 +765,7 @@ class LiveSpec extends SparkSuite {
     var seed = Seed(20261017L)
     var splitRounds = 0
     (1 to 24).foreach { round =>
-      val json = nodeGen(3).apply(Gen.Parameters.default, seed)
+      val json = RandomTrees.node(3).apply(Gen.Parameters.default, seed)
         .getOrElse(sys.error("gen failed"))
       val cap = Gen.choose(150, 1500).apply(Gen.Parameters.default, seed.next)
         .getOrElse(sys.error("gen failed"))
@@ -787,6 +796,13 @@ class LiveSpec extends SparkSuite {
         val got = edgeRows(LiveExport.export(spark, () => new HttpRestClient(u)))
         val same = ordered(got) == ordered(TreeCodec.flatten(json))
         assert(same, s"export differs: $ctx")
+        // the DSv2 source plans with the same loop and walks the same way
+        val parts = new FirebaseScan(FirebaseSource.conf(
+            new CaseInsensitiveStringMap(java.util.Map.of("url", u))))
+          .planInputPartitions().map(_.asInstanceOf[FirebasePartition].path)
+        assert(parts.toSeq.sorted == work.sorted, s"DSv2 partitions differ: $ctx")
+        val rows = edgeRows(spark.read.format("firebase").option("url", u).load())
+        assert(ordered(rows) == ordered(TreeCodec.flatten(json)), s"DSv2 rows differ: $ctx")
       } finally stub.stop()
     }
     // the generator must reach both verdicts
