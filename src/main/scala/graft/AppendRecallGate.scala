@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Quality gate for INCREMENTALLY-BUILT persisted indexes — closes the
@@ -37,15 +37,7 @@ object AppendRecallGate {
     val dir = args(0)
     val ivfFloor = args(1).toDouble
     val work = if (args.length > 2) args(2) else "/tmp/graft_append_gate"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     functions.GraftFunctions.register(spark)
 
     // ---- shingle: appended-index probe == one-shot-index probe ----

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** K-independence gate for the native BPE encoder at a REALISTIC
@@ -40,15 +39,7 @@ object BpeScaleGate {
     val dir = args(0)
     val ratioMax = if (args.length > 1) args(1).toDouble else 1.5
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     functions.GraftFunctions.register(spark)
 
     val base = operators.TextAnalysis.CanonicalMerges

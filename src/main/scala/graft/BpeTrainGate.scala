@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale gate for BPE TRAINING at realistic vocabulary size — the
@@ -39,15 +38,7 @@ object BpeTrainGate {
     val k = if (args.length > 0) args(0).toInt else 32000
     val vocabN = if (args.length > 1) args(1).toInt else 80000
     val foilK = if (args.length > 2) args(2).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     functions.GraftFunctions.register(spark)
     import spark.implicits._
 
@@ -68,7 +59,8 @@ object BpeTrainGate {
     val docs = vocab.zipWithIndex.map { case (w, i) =>
       (i.toLong, ((w + " ") * countOf(i)).trim)
     }.toSeq.toDF("doc_id", "text")
-      .repartition(cpus.toInt).localCheckpoint()
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .localCheckpoint()
 
     def trainedRules(df: org.apache.spark.sql.DataFrame, depth: Int) =
       operators.TextAnalysis.bpeMerges(df, depth).orderBy("step")

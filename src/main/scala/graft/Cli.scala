@@ -142,18 +142,10 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val (_, opts) = parseArgs(args.toIndexedSeq)
-    val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
     // the reference's --temp_dir (ExportCommand.php:19-24): where
     // intermediate files live — for Spark that is local scratch/spill
-    opts.get("temp_dir").foreach(builder.config("spark.local.dir", _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(
+      conf = opts.get("temp_dir").map("spark.local.dir" -> _).toMap)
     try run(args, spark) finally spark.stop()
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures what FROZEN IVF centroids actually cost under ingest
@@ -64,15 +64,7 @@ object DriftGate {
     val dir = args(0)
     val floor = args(1).toDouble
     val workBase = if (args.length > 2) args(2) else "/tmp/graft_drift_gate"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     functions.GraftFunctions.register(spark)
     import operators.Similarity
 
@@ -103,10 +95,7 @@ object DriftGate {
     }
 
     def probesOf(src: DataFrame, n: Int): DataFrame =
-      src.orderBy("vec_id").limit(n)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-          Similarity.norm(col("embedding")).as("qn"))
-        .localCheckpoint()
+      Similarity.querySide(src.orderBy("vec_id").limit(n)).localCheckpoint()
     val pDrift = probesOf(drifted, 10)
     val pBase = probesOf(base, 10)
     val corpus = Tables.embeddings(spark, merged)

@@ -55,9 +55,7 @@ object GraphRecall {
                                 corpus: org.apache.spark.sql.DataFrame,
                                 k: Int, every: Long): Truth = {
     val pick = operators.Similarity.hashPick(col("vec_id"), "#gr42", every)
-    val probes = corpus.filter(pick)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        operators.Similarity.norm(col("embedding")).as("qn"))
+    val probes = operators.Similarity.querySide(corpus.filter(pick))
     grouped(operators.Similarity
       .bruteForceKnn(probes, corpus, k).select("qid", "nid", "score")
       .collect())
@@ -108,15 +106,7 @@ object GraphRecall {
     val floor = if (args.length > 1) Some(args(1).toDouble) else None
     val sampleArg = if (args.length > 2) args(2).toLong else 0L
     val refineRounds = if (args.length > 3) args(3).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     functions.GraftFunctions.register(spark)
 
     val k = 3

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Result-quality gate for the oracle-exempt sketch operators at
   * replicated scale.
@@ -51,15 +50,7 @@ object RecallGate {
     val ivfFloor = args(2).toDouble
     val mhFloor = args(3).toDouble
     val pqFloor = if (args.length > 4) args(4).toDouble else 0.85
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
 
     def topk(name: String): Map[Long, Set[Long]] =
       SparkEntry.queries(name)(spark, dir)

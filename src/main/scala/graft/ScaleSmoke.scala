@@ -204,15 +204,7 @@ object ScaleSmoke {
     val k = if (args.nonEmpty) args(0).toInt else 8
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val work = if (args.length > 2) args(2) else "/tmp/graft_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
 
     // SPARK_GRAFT_SMOKE_REUSE=1 skips replication when the work dir
     // already holds THIS run's corpus: the manifest written after a

@@ -10,6 +10,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** The local session every main runs on: `local[cpus]` with `cpus`
+    * shuffle partitions, UTC session time (rule 7), AQE on and the UI
+    * off. `cpus` defaults to SPARK_GRAFT_CPUS (32 when unset); `conf`
+    * adds settings (Cli's --temp_dir). */
+  def localSession(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+                   logLevel: String = "WARN",
+                   conf: Map[String, String] = Map.empty): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .config(conf)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Every registered query, in module order. */
   def all: Seq[GraftQuery] = {
     val qs =

@@ -1014,16 +1014,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Distinct 64-bit hashes of the 3-token shingles of a token array —
-  * the fused native form of
-  * `array_distinct(transform(sequence(...), i => concat_ws(" ",
-  * slice(toks, i, 3))))` followed by `xxhash64(sh)`, which costs one
-  * INTERPRETED HOF step per shingle (the single hottest interpreted
-  * loop in the engine: every shingle-based dedup starts here). Seed 42
-  * is Spark's `xxhash64` default, so the produced longs are
-  * bit-identical to the expression chain this replaces. Dedup happens
-  * on hashes, not strings — the same set w.h.p. (collisions ~ n²/2⁶⁵),
-  * and only set cardinalities flow downstream. */
 /** Adjacent-token xxhash64 pairs (h1, h2) of a string array — the
   * per-row work of bigram-LM scoring (q_ngram_lm) as ONE eval per row:
   * each token is hashed once (the equivalent
@@ -1118,6 +1108,16 @@ object ShingleHashes {
   }
 }
 
+/** Distinct 64-bit hashes of the 3-token shingles of a token array —
+  * the fused native form of
+  * `array_distinct(transform(sequence(...), i => concat_ws(" ",
+  * slice(toks, i, 3))))` followed by `xxhash64(sh)`, which costs one
+  * INTERPRETED HOF step per shingle (the single hottest interpreted
+  * loop in the engine: every shingle-based dedup starts here). Seed 42
+  * is Spark's `xxhash64` default, so the produced longs are
+  * bit-identical to the expression chain this replaces. Dedup happens
+  * on hashes, not strings — the same set w.h.p. (collisions ~ n²/2⁶⁵),
+  * and only set cardinalities flow downstream. */
 case class ShingleHashes(child: Expression, width: Int = 3)
     extends UnaryExpression with CodegenFallback {
 

@@ -399,9 +399,8 @@ object Retrieval {
   /** Top-20 cosine ranking (doc_id, vrank) against the vec_id=0 probe
     * (doc ids and vector ids share the id space in the corpus). */
   private def vecTop20(s: SparkSession, d: String): DataFrame = {
-    val probe = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        Similarity.norm(col("embedding")).as("qn"))
+    val probe = Similarity.querySide(
+      Tables.embeddings(s, d).filter(col("vec_id") === 0))
     Similarity.bruteForceKnn(probe, Tables.embeddings(s, d), 20)
       .select(col("nid").as("doc_id"), col("rn").as("vrank"))
   }

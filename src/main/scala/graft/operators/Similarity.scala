@@ -34,6 +34,14 @@ import org.apache.spark.sql.functions._
   *
   * ANN variants are oracle-exempt (hash/sample specific); SimilaritySpec
   * asserts recall against the brute-force baseline.
+  *
+  * Every ANN operator is pick candidates → score → exact re-rank, and
+  * each probe rule is written once, in one of six shared functions:
+  * [[querySide]] (the probe frame, `scorable`'s counterpart),
+  * [[ivfNprobe]] (cells per probe), [[probeCells]] (the top-nprobe
+  * centroid probe), [[exactTopK]] (the unrounded-cosine re-rank),
+  * [[adcShortlist]] (the PQ top-R), and [[raisedThresholdSession]]
+  * (the cloned session with a raised aggregation fallback threshold).
   */
 object Similarity {
 
@@ -167,8 +175,18 @@ object Similarity {
       .select(col("vec_id"), col("embedding").as("ce"),
       norm(col("embedding")).as("cn"))
 
-  private def pairScore: Column =
-    round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6)
+  /** Probe side pre-shaped for scoring — [[scorable]]'s counterpart:
+    * (vec_id → qid, embedding → qe, norm → qn), the norm once per
+    * probe row. */
+  private[graft] def querySide(df: DataFrame): DataFrame =
+    df.select(col("vec_id").as("qid"), col("embedding").as("qe"),
+      norm(col("embedding")).as("qn"))
+
+  /** Unrounded cosine of a (query side, corpus side) pair row. */
+  private def rawCos: Column =
+    dot(col("qe"), col("ce")) / (col("qn") * col("cn"))
+
+  private def pairScore: Column = round(rawCos, 6)
 
   /** Brute-force top-k cosine neighbors for a probe set
     * (probes: qid, qe, qn). */
@@ -184,9 +202,22 @@ object Similarity {
   }
 
   private def probes(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        norm(col("embedding")).as("qn"))
+    querySide(Tables.embeddings(s, d).filter(col("vec_id") < 10))
+
+  /** The exact re-rank every ANN operator ends in: per qid, rank the
+    * UNROUNDED `raw` cosine descending with nid as the tiebreak, keep
+    * rn <= k, and present round(raw, 6) — ranking rounded values
+    * manufactures quantized ties (CLAUDE.md rule 14), so the output
+    * scores are exact and only recall is approximate. `scored`
+    * carries (qid, nid, raw). */
+  private[graft] def exactTopK(scored: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("qid").orderBy(desc("raw"), asc("nid"))
+    scored.withColumn("rn", row_number().over(w).cast("long"))
+      .filter(col("rn") <= k)
+      .select(col("qid"), col("nid"),
+        round(col("raw"), 6).as("score"), col("rn"))
+  }
 
   /** CAP on the graph family's probe-ring width. History of the rule,
     * all measured: uncapped, np tracks nlist/8 ~ sqrt(n)/8 while
@@ -248,8 +279,39 @@ object Similarity {
     * [[ensureKnnGraphIndex]] so the persisted graph and the foil can
     * never drift. */
   private[graft] def knngNprobe(n: Long): Int =
-    math.min(knngNprobeCap(n),
-      math.max(4, math.ceil(n / (8.0 * centroidMod(n))).toInt))
+    math.min(knngNprobeCap(n), ivfNprobe(n))
+
+  /** The IVF probe width: nprobe = max(4, ceil(nlist/8)), nlist =
+    * n / [[centroidMod]](n), shared by q_ann_ivf, [[ivfProbe]],
+    * [[ivfPqProbe]] and (capped) [[knngNprobe]]. nprobe tracks nlist
+    * so the searched fraction — and so recall — holds steady as cells
+    * multiply. /8 (12.5% of cells), raised from /10 in r12: the 64x
+    * gate measured recall 0.480 at n=32k — below the 0.5 floor — with
+    * the 10% fraction (16k: 0.540, 512k: 0.600, 1M: 0.640 were above
+    * it); the wider probe set lifts every rung at +25% probe-side
+    * candidate cost, which assignment dominates anyway. */
+  private[graft] def ivfNprobe(n: Long): Int =
+    math.max(4, math.ceil(n / (8.0 * centroidMod(n))).toInt)
+
+  /** The cell probe: each probe row's top-`nprobe` centroids by
+    * UNROUNDED cosine `ccos` descending, cid as the tiebreak — one rule
+    * for q_ann_ivf, [[ivfProbe]] and [[ivfPqProbe]], which is what
+    * keeps q_ann_ivf's results identical to q_ann_ivf_probe's (whose
+    * DuckDB oracle gives the shared policy differential coverage).
+    * `query` is a [[querySide]] frame, `centroids` (cid, ke, kn) and
+    * broadcast. Returns (qid, qe, qn, cid); callers that read it twice
+    * pin it. */
+  private[graft] def probeCells(query: DataFrame, centroids: DataFrame,
+                                nprobe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("qid").orderBy(desc("ccos"), asc("cid"))
+    query.crossJoin(broadcast(centroids))
+      .select(col("qid"), col("qe"), col("qn"), col("cid"),
+        (dot(col("qe"), col("ke")) / (col("qn") * col("kn"))).as("ccos"))
+      .withColumn("crn", row_number().over(w))
+      .filter(col("crn") <= nprobe)
+      .select(col("qid"), col("qe"), col("qn"), col("cid"))
+  }
 
   /** IVF coarse-quantizer sizing: |centroids| ~ sqrt(n) via a modulo
     * sample (floor 53 pins test-scale behavior — see q_ann_ivf). */
@@ -688,30 +750,6 @@ object Similarity {
     if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
   }
 
-  /** Condition-driven maintenance for the persisted IVF index — runs
-    * the right op exactly when its measured symptom appears, instead
-    * of the blind cadences (`refreshEvery`/`compactEvery`):
-    *
-    *  1. hot cell (max > `hotCellRatio` x median occupancy, the
-    *     DriftGate drift signature) -> [[refreshIvfCentroids]], which
-    *     re-fits the quantizer AND folds the file layout + re-buckets
-    *     in its rewrite — the expensive O(n x nlist) reassignment is
-    *     paid only when cells have actually degraded;
-    *  2. otherwise, >= `compactAfter` uncompacted appended batches or
-    *     a bucket spec the grown row count has outsized ->
-    *     [[compactIvfIndex]] (pure layout, probes exactly unchanged);
-    *  3. otherwise nothing.
-    *
-    * A manifest with no appended batches short-circuits to "none"
-    * without measuring occupancy: the base build fit the whole corpus,
-    * so neither symptom can exist (and refresh would no-op by the same
-    * rule). Idempotent: a pass that acted leaves the next pass at
-    * "none" until new appends arrive. `dryRun` reports the decision
-    * without executing it AND without any write at all — including
-    * the fit canary's baseline-on-first-read manifest migration
-    * (a pre-baseline manifest reads as fit (-1, -1) on a dry run;
-    * a real run establishes the baseline). Thresholds and their
-    * measurements: [[Maintenance]]. */
   /** GAP sample for the verdict-symptom (fit-gap) canary: per sampled
     * indexed row, (max cosine to any OTHER row of its own cell) minus
     * (cosine to its assigned centroid). A healthy cell's members are
@@ -809,6 +847,30 @@ object Similarity {
     else (gaps.count(_ > baseline).toDouble / gaps.length, baseline)
   }
 
+  /** Condition-driven maintenance for the persisted IVF index — runs
+    * the right op exactly when its measured symptom appears, instead
+    * of the blind cadences (`refreshEvery`/`compactEvery`):
+    *
+    *  1. hot cell (max > `hotCellRatio` x median occupancy, the
+    *     DriftGate drift signature) -> [[refreshIvfCentroids]], which
+    *     re-fits the quantizer AND folds the file layout + re-buckets
+    *     in its rewrite — the expensive O(n x nlist) reassignment is
+    *     paid only when cells have actually degraded;
+    *  2. otherwise, >= `compactAfter` uncompacted appended batches or
+    *     a bucket spec the grown row count has outsized ->
+    *     [[compactIvfIndex]] (pure layout, probes exactly unchanged);
+    *  3. otherwise nothing.
+    *
+    * A manifest with no appended batches short-circuits to "none"
+    * without measuring occupancy: the base build fit the whole corpus,
+    * so neither symptom can exist (and refresh would no-op by the same
+    * rule). Idempotent: a pass that acted leaves the next pass at
+    * "none" until new appends arrive. `dryRun` reports the decision
+    * without executing it AND without any write at all — including
+    * the fit canary's baseline-on-first-read manifest migration
+    * (a pre-baseline manifest reads as fit (-1, -1) on a dry run;
+    * a real run establishes the baseline). Thresholds and their
+    * measurements: [[Maintenance]]. */
   def maintainIvfIndex(s: SparkSession, d: String,
                        compactAfter: Int = Maintenance.DefaultCompactAfter,
                        hotCellRatio: Double = Maintenance.DefaultHotCellRatio,
@@ -844,31 +906,27 @@ object Similarity {
     else report("none", ran = false, hot, fit)
   }
 
-  /** ADC shortlist width multiplier (R = k x refine) for q_ann_pq,
-    * scaled with n: the ADC error band is n-independent (it depends
-    * only on the codebook resolution), but the NUMBER of candidates
-    * whose true cosine falls inside that band around the top-5 cut
-    * grows LINEARLY with the corpus, so a fixed shortlist loses
-    * recall as n grows (the 128x ladder measured refine=8 at 0.500
-    * vs 0.86 at unit scale; widening R restored it: R=160 -> 0.700,
-    * 640 -> 0.880, 2560 -> 0.960 at 256k). The honest consequence:
-    * brute-ADC holds recall by keeping R a constant FRACTION of n
-    * (R ≈ n/256 here) — a constant-factor reduction of exact-scoring
-    * work (~256x) on top of the 32x payload compression, not a
-    * sublinear method; sublinear comes from composing the code
-    * column with IVF cell pruning (the documented scale path). The
-    * floor pins unit-scale behavior (n <= 51k -> refine 8, R = 40,
-    * today's test-scale shortlists unchanged). */
-  /** Brute-ADC re-rank width per result slot: a constant FRACTION of n
-    * (the rule-16 lesson — the ADC error band is n-independent but its
-    * candidate population grows linearly), with a small-n FLOOR of 128
-    * slots (engages below n ≈ 164k): at a fixed fraction the shortlist
-    * shrinks with n while the error band does not, so small corpora
-    * starve — measured at n=16k (the 32x scale_gate rung, R = 5x
-    * refine): refine 12 (the unfloored rule) → recall 0.580, 32 →
-    * 0.740, 64 → 0.860, 128 → 0.940. The floor is invisible at the
-    * ladder rungs (n/1280 ≥ 128 from 164k up) and costs ~nothing where
-    * it does engage (R=640 of a ≤164k corpus). */
+  /** Brute-ADC re-rank width per result slot (R = k x refine) for
+    * q_ann_pq, scaled with n: the ADC error band is n-independent (it
+    * depends only on the codebook resolution), but the NUMBER of
+    * candidates whose true cosine falls inside that band around the
+    * top-5 cut grows LINEARLY with the corpus, so a fixed shortlist
+    * loses recall as n grows (the 128x ladder measured refine=8 at
+    * 0.500 vs 0.86 at unit scale; widening R restored it: R=160 ->
+    * 0.700, 640 -> 0.880, 2560 -> 0.960 at 256k). Brute-ADC therefore
+    * holds recall by keeping R a constant FRACTION of n (the rule-16
+    * lesson) — a constant-factor reduction of exact-scoring work on
+    * top of the 32x payload compression, not a sublinear method;
+    * sublinear comes from composing the code column with IVF cell
+    * pruning ([[ivfPqProbe]]).
+    *
+    * A small-n FLOOR of 128 slots (engages below n ≈ 164k): at a fixed
+    * fraction the shortlist shrinks with n while the error band does
+    * not, so small corpora starve — measured at n=16k (the 32x
+    * scale_gate rung, R = 5x refine): refine 12 (the unfloored rule) →
+    * recall 0.580, 32 → 0.740, 64 → 0.860, 128 → 0.940. The floor is
+    * invisible at the ladder rungs (n/1280 ≥ 128 from 164k up) and
+    * costs ~nothing where it does engage (R=640 of a ≤164k corpus). */
   private[graft] def pqRefine(n: Long): Int =
     math.max(128L, n / 1280L).toInt
 
@@ -967,10 +1025,6 @@ object Similarity {
     graft.functions.PqCodebooks(m, ks, dsub, s.sparkContext.broadcast(flat))
   }
 
-  /** Per-probe ADC lookup tables, built on the driver from a (tiny,
-    * by the probe-query contract) probe frame:
-    * lut[s*ks + j] = dot(q_slice_s, codebook[s][j]), so the
-    * executor-side score of a code is m array reads + adds. */
   /** Fallback-threshold guard for the ANN shortlist TopKEdges
     * aggregates (pqTopK, ivfPqProbe) — the rule-36 discipline applied
     * to a QUERY path: ObjectHashAggregate silently falls back to
@@ -986,44 +1040,111 @@ object Similarity {
     * Returns None when the session's current threshold already covers
     * the batch — the declared queries probe <= 10 vectors and take
     * this path with zero extra machinery (bench plans unchanged).
-    * Otherwise returns a CLONED session (shared context + catalog,
-    * isolated runtime conf: the caller's conf is copied across, so
-    * the raise can never leak to queries the caller plans
-    * concurrently — the r17 set+finally-restore bug) whose threshold
-    * covers the batch, capped at [[FallbackKeyCap]] (buffer state is
-    * |qids| x (r x 16 B + overhead) per task ≈ 450 MB at the cap).
+    * Otherwise returns a [[raisedThresholdSession]] clone whose
+    * threshold covers the batch, up to [[FallbackKeyCap]] (buffer
+    * state is |qids| x (r x 16 B + overhead) per task ≈ 450 MB at the
+    * cap).
     * Past the cap the caller must CHUNK the probe batch (hash qid
     * into ceil(n/cap) chunks and union — the graph build's q-side
     * chunk contract); the require below makes that boundary loud instead
     * of a silent disk-filling fallback.
     *
     * Call sites must MATERIALIZE the shortlist under the returned
-    * session (localCheckpoint) — the threshold is read at PHYSICAL
-    * PLANNING of the action's root dataset, so lazily composing the
-    * aggregate into a caller-rooted consumer would plan it under the
-    * caller's default threshold and the clone would be dead weight. */
+    * session ([[adcShortlist]]'s `pinned`) — the threshold is read at
+    * PHYSICAL PLANNING of the action's root dataset, so lazily
+    * composing the aggregate into a caller-rooted consumer would plan
+    * it under the caller's default threshold and the clone would be
+    * dead weight. */
   private def shortlistSession(s: SparkSession,
                                nProbes: Long): Option[SparkSession] = {
-    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val current = scala.util.Try(s.conf.get(key).toLong).getOrElse(128L)
+    val current =
+      scala.util.Try(s.conf.get(FallbackThresholdKey).toLong).getOrElse(128L)
     if (nProbes + 64L <= current) None
     else {
       require(nProbes + 1024L <= FallbackKeyCap,
         s"ANN shortlist: $nProbes probe vectors in one batch exceeds " +
           s"FallbackKeyCap=$FallbackKeyCap — chunk the probe batch " +
           "(hash qid into ceil(n/cap) chunks and union the results)")
-      val bs = s.newSession()
-      s.conf.getAll.foreach { case (ck, cv) =>
-        try bs.conf.set(ck, cv)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-      }
-      // session state: the shortlist chain calls vector_dot by name
-      graft.functions.GraftFunctions.register(bs)
-      bs.conf.set(key, (nProbes + 1024L).toString)
-      Some(bs)
+      Some(raisedThresholdSession(s, nProbes))
     }
   }
 
+  private val FallbackThresholdKey =
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+
+  /** A CLONED session whose ObjectHashAggregate fallback threshold
+    * covers `keys` aggregation keys per task (keys + 1024, capped at
+    * [[FallbackKeyCap]]) — the one form of the rule-36 raise, used by
+    * the ANN shortlist ([[shortlistSession]]), the graph build and the
+    * graph fold. The threshold is plan-time session conf, and setting
+    * it on the caller's session (the r17 form, set + finally-restore)
+    * leaks it to any query that session plans concurrently.
+    * newSession() shares the SparkContext and catalog (saveAsTable
+    * targets, persisted indexes) but isolates runtime SQL conf; the
+    * caller's runtime conf is copied across first so the clone plans
+    * under the same shuffle partitions / AQE settings (static and
+    * non-modifiable keys are skipped — they are shared through the
+    * context anyway). The FunctionRegistry is session state too, so
+    * the clone registers the native functions its plans call by name
+    * (vector_dot, nearest_cells, top_k_edges). */
+  private[graft] def raisedThresholdSession(s: SparkSession,
+                                            keys: Long): SparkSession = {
+    val bs = s.newSession()
+    s.conf.getAll.foreach { case (ck, cv) =>
+      try bs.conf.set(ck, cv)
+      catch { case _: org.apache.spark.sql.AnalysisException => () }
+    }
+    graft.functions.GraftFunctions.register(bs)
+    bs.conf.set(FallbackThresholdKey,
+      math.min(FallbackKeyCap, keys + 1024L).toString)
+    bs
+  }
+
+  /** The ADC shortlist of [[pqTopK]] and [[ivfPqProbe]]: per qid, the
+    * top-`r` candidates of `cand` (qid, nid, adc) by (adc desc, nid
+    * asc), as (qid, nid). NaN adc (a zero-norm corpus vector's 0/0) is
+    * dropped first — the graph build's rule; no unit-norm corpus row
+    * produces one.
+    *
+    * Production runs the SORT-FREE native aggregate (TopKEdges, the
+    * graph-build kernel): its map-side partial collapses each
+    * partition to <= r buffer entries per qid before the ONE exchange,
+    * where a row_number window LOCAL-SORTS every scored pair (the
+    * rule-31a hazard — the candidate volume grows with the corpus).
+    * r20 A/B (sf0.1, 5 interleaved reps): pq 1.223 -> 0.871 s min,
+    * ivfpq 1.141 -> 0.981 s. `window = true` is that global window,
+    * kept as the law tests' reference: (adc desc, nid asc) is a total
+    * order, so both forms select the same set (SimilaritySpec pins
+    * row equality for both operators).
+    *
+    * `pinned`: the candidates were planned under a
+    * [[shortlistSession]] clone, so the shortlist MATERIALIZES there
+    * (lazy composition into the caller-rooted re-rank would plan the
+    * aggregate under the caller's default threshold); the pin is
+    * probes x r ids. */
+  private[graft] def adcShortlist(cand: DataFrame, r: Int, window: Boolean,
+                                  pinned: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val live = cand.filter(!isnan(col("adc")))
+    val top =
+      if (window)
+        live.withColumn("arn", row_number().over(
+            Window.partitionBy("qid").orderBy(desc("adc"), asc("nid"))))
+          .filter(col("arn") <= r)
+          .select("qid", "nid")
+      else
+        live.groupBy("qid")
+          .agg(graft.functions.GraftFunctions
+            .topKEdges(col("nid"), col("adc"), r).as("tk"))
+          .select(col("qid"), explode(col("tk")).as("e"))
+          .select(col("qid"), col("e.dst").as("nid"))
+    if (pinned) top.localCheckpoint() else top
+  }
+
+  /** Per-probe ADC lookup tables, built on the driver from a (tiny,
+    * by the probe-query contract) probe frame:
+    * lut[s*ks + j] = dot(q_slice_s, codebook[s][j]), so the
+    * executor-side score of a code is m array reads + adds. */
   private def pqLuts(s: SparkSession, cb: graft.functions.PqCodebooks,
                      probeVecs: DataFrame): Map[Long, Array[Double]] = {
     val flat = cb.flat
@@ -1071,14 +1192,15 @@ object Similarity {
     *     [[graft.functions.PqAdcScore]]): m ADDS per (probe, vector)
     *     instead of dim multiply-adds; ranking by adc/norm is
     *     norm-corrected approximate cosine (the probe's own norm
-    *     scales every candidate equally). Two-stage top-R (salted
-    *     partial then global — the distributed-top-k shape) keeps
-    *     every sort bounded: no single task ever sorts n rows.
-    *  4. Exact re-rank: only the R = k x refine survivors (a few
-    *     hundred rows) rejoin the full vectors for exact cosine, so
-    *     output scores are EXACT (the ANN-family contract: the
-    *     approximation affects only recall, never reported scores),
-    *     rounded 6 dp for presentation with ties on nid.
+    *     scales every candidate equally). The top-R per probe is
+    *     [[adcShortlist]]'s sort-free aggregate: no task ever sorts
+    *     the candidate stream.
+    *  4. Exact re-rank ([[exactTopK]]): only the R = k x refine
+    *     survivors (a few hundred rows) rejoin the full vectors for
+    *     exact cosine, so output scores are EXACT (the ANN-family
+    *     contract: the approximation affects only recall, never
+    *     reported scores), rounded 6 dp for presentation with ties on
+    *     nid.
     *
     * The standalone query scans all codes per probe (the brute-ADC
     * form — at the probe counts of the test contract that is one
@@ -1089,7 +1211,6 @@ object Similarity {
     * determinism law, and the recall floor vs brute force. */
   private[graft] def pqTopK(s: SparkSession, d: String, k: Int = 5,
                             shortlistWindow: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(s, d)
     val n = math.max(1L, emb.count())
     val refine = pqRefine(n)
@@ -1097,9 +1218,7 @@ object Similarity {
     // probe extraction is a corpus scan — materialize once (the
     // q_ann_lsh probe-extraction rule)
     val probe0 = emb.filter(col("vec_id") < 10).localCheckpoint()
-    val probeQ = probe0
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        norm(col("embedding")).as("qn"))
+    val probeQ = querySide(probe0)
     val luts = pqLuts(s, cb, probe0)
     val lutH = s.sparkContext.broadcast(luts)
     // luts is keyed by qid, so its size IS the probe count — free
@@ -1116,53 +1235,12 @@ object Similarity {
       .select(col("qid"), col("nid"),
         (graft.functions.GraftFunctions.pqAdcScore(col("qid"), col("code"),
           cb.m, cb.ks, lutH) / col("ncn")).as("adc"))
-    // shortlist through the SORT-FREE native aggregate (TopKEdges, the
-    // graph-build kernel): the former salted two-stage row_number kept
-    // any one task from sorting a whole candidate set, but its partial
-    // WindowGroupLimit still LOCAL-SORTED every scored pair (the
-    // rule-31a hazard) and paid an extra exchange for the salt stage.
-    // The aggregate's map-side partial collapses each partition to
-    // <= r buffer entries per qid before the ONE exchange — identical
-    // top-R set ((adc desc, nid asc) is a total order, and the global
-    // top-R of per-salt top-Rs IS the global top-R; SimilaritySpec
-    // pins equality against the window foil, kept runnable below).
-    // NaN adc (a zero-norm corpus vector's 0/0) is dropped before the
-    // top-k so both forms agree by construction — the graph build's
-    // rule; no unit-norm corpus row produces one. r20 A/B (sf0.1, 5
-    // interleaved reps): 1.223 -> 0.871 s min (0.71x).
-    val top = if (shortlistWindow) {
-      val wSalt = Window.partitionBy("qid", "salt")
-        .orderBy(desc("adc"), asc("nid"))
-      val wQ = Window.partitionBy("qid").orderBy(desc("adc"), asc("nid"))
-      cand.filter(!isnan(col("adc")))
-        .withColumn("salt", pmod(col("nid"), lit(32)).cast("int"))
-        .withColumn("srn", row_number().over(wSalt)).filter(col("srn") <= r)
-        .withColumn("arn", row_number().over(wQ)).filter(col("arn") <= r)
-        .select("qid", "nid")
-    } else {
-      val t = cand.filter(!isnan(col("adc")))
-        .groupBy("qid")
-        .agg(graft.functions.GraftFunctions
-          .topKEdges(col("nid"), col("adc"), r).as("tk"))
-        .select(col("qid"), explode(col("tk")).as("e"))
-        .select(col("qid"), col("e.dst").as("nid"))
-      // guarded batches must MATERIALIZE under the cloned session
-      // (shortlistSession scaladoc: lazy composition into the
-      // caller-rooted re-rank would plan the aggregate under the
-      // caller's default threshold); the pin is probes x r ids
-      aggS.fold(t)(_ => t.localCheckpoint())
-    }
+    val top = adcShortlist(cand, r, shortlistWindow, pinned = aggS.isDefined)
     val scored = scorable(emb).withColumnRenamed("vec_id", "nid")
       .join(broadcast(top), "nid")
       .join(broadcast(probeQ), "qid")
-      .select(col("qid"), col("nid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("raw"))
-    val w = Window.partitionBy("qid").orderBy(desc("raw"), asc("nid"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("nid"),
-        round(col("raw"), 6).as("score"), col("rn"))
-      .orderBy("qid", "rn")
+      .select(col("qid"), col("nid"), rawCos.as("raw"))
+    exactTopK(scored, k).orderBy("qid", "rn")
   }
 
   /** The q_ann_lsh pipeline, parameterized on the per-table probe
@@ -1200,7 +1278,6 @@ object Similarity {
   private[graft] def lshTopK(s: SparkSession, d: String,
                              perTableOverride: Option[Int] = None)
       : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(s, d)
     // parquet metadata count; sizes the bucket granularity so
     // occupancy (and so candidate cost) stays ~constant at scale
@@ -1222,27 +1299,17 @@ object Similarity {
       .select(col("qid"),
         floor(col("pos") / perTable).cast("int").as("qtable"),
         col("qbucket"))
-    val probeQ = probe0
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        norm(col("embedding")).as("qn"))
+    val probeQ = querySide(probe0)
     // candidates: union of the probe's bucket across tables
     val cands = buckets.join(broadcast(probeB),
         col("table_id") === col("qtable") &&
           col("bucket") === col("qbucket") && col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid")).distinct()
-    // rank UNROUNDED (round presentation only — ranking rounded
-    // values manufactures quantized ties, CLAUDE.md rule 14)
     val scored = cands
       .join(scorable(emb).withColumnRenamed("vec_id", "nid"), "nid")
       .join(broadcast(probeQ), "qid")
-      .select(col("qid"), col("nid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("raw"))
-    val w = Window.partitionBy("qid").orderBy(desc("raw"), asc("nid"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
-      .select(col("qid"), col("nid"),
-        round(col("raw"), 6).as("score"), col("rn"))
-      .orderBy("qid", "rn")
+      .select(col("qid"), col("nid"), rawCos.as("raw"))
+    exactTopK(scored, 5).orderBy("qid", "rn")
   }
 
   /** Probe the PERSISTED IVF index with an ARBITRARY (vec_id,
@@ -1263,32 +1330,20 @@ object Similarity {
   private[graft] def ivfProbe(s: SparkSession, d: String,
                               probeVecs: DataFrame, k: Int,
                               excludeProbes: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (at, ct) = ensureIvfIndex(s, d)
-    val centroids = s.table(ct) // (cid, ke, kn)
     val nExcluded = if (excludeProbes) probeVecs.count() else 0L
     val n = math.max(1L, s.table(at).count() - nExcluded)
-    val nprobe = math.max(4, math.ceil(n / (8.0 * centroidMod(n))).toInt)
-    val wProbe = Window.partitionBy("qid").orderBy(desc("ccos"), asc("cid"))
     // checkpointed: this <= |probes| x nprobe row frame is evaluated
     // for the cellIds collect AND the broadcast below —
     // uncheckpointed, each evaluation re-scans the probe source (the
     // q_ann_lsh probe-extraction lesson; measured 1.69x-vs-t1 instead
     // of flat at the 256k rung before this)
-    val probeCells = probeVecs
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        norm(col("embedding")).as("qn"))
-      .crossJoin(broadcast(centroids))
-      .select(col("qid"), col("qe"), col("qn"), col("cid"),
-        (dot(col("qe"), col("ke")) / (col("qn") * col("kn"))).as("ccos"))
-      .withColumn("crn", row_number().over(wProbe))
-      .filter(col("crn") <= nprobe)
-      .select(col("qid"), col("qe"), col("qn"), col("cid"))
+    val cells = probeCells(querySide(probeVecs), s.table(ct), ivfNprobe(n))
       .localCheckpoint()
     // the probed cell ids, collected (<= |probes| x nprobe rows): an
     // isin() on the bucket column is what lets the scan prune whole
     // buckets — a join alone reads every file
-    val cellIds = probeCells.select("cid").distinct()
+    val cellIds = cells.select("cid").distinct()
       .collect().map(_.getLong(0)).sorted
     val corpusSide =
       if (excludeProbes)
@@ -1297,15 +1352,10 @@ object Similarity {
           Seq("vec_id"), "left_anti")
       else s.table(at)
     val scored = corpusSide.filter(col("cid").isin(cellIds: _*))
-      .join(broadcast(probeCells), Seq("cid"))
+      .join(broadcast(cells), Seq("cid"))
       .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("raw"))
-    val w = Window.partitionBy("qid").orderBy(desc("raw"), asc("nid"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("nid"),
-        round(col("raw"), 6).as("score"), col("rn"))
+      .select(col("qid"), col("vec_id").as("nid"), rawCos.as("raw"))
+    exactTopK(scored, k)
   }
 
   /** IVFPQ: the cell-pruned probe with PQ scoring over the persisted
@@ -1321,8 +1371,9 @@ object Similarity {
     *  - shortlist: top-R per probe by norm-corrected ADC, R a
     *    constant fraction of the scanned cell population (the
     *    [[pqRefine]] lesson applied to the cell scan: R ≈
-    *    cell-candidates/256, floor k x 8), salted two-stage so no
-    *    task sorts a whole cell set;
+    *    cell-candidates/32, floor k x 128), through
+    *    [[adcShortlist]]'s sort-free aggregate so no task sorts a
+    *    whole cell set;
     *  - exact re-rank: only the R survivors rejoin the vector column
     *    (broadcast semi-join against the same cell-pruned scan), so
     *    reported scores are EXACT cosines — the ANN-family contract.
@@ -1351,28 +1402,18 @@ object Similarity {
   private[graft] def ivfPqProbe(s: SparkSession, d: String,
                                 probeVecs: DataFrame, k: Int,
                                 shortlistWindow: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (at, ct) = ensureIvfIndex(s, d)
     val cb = loadPqCodebooks(s, d)
     val centroids = s.table(ct)
     val n = math.max(1L, s.table(at).count())
     val nlist = math.max(1L, centroids.count())
-    val nprobe = math.max(4, math.ceil(n / (8.0 * centroidMod(n))).toInt)
-    val wProbe = Window.partitionBy("qid").orderBy(desc("ccos"), asc("cid"))
-    val probeCells = probeVecs
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        norm(col("embedding")).as("qn"))
-      .crossJoin(broadcast(centroids))
-      .select(col("qid"), col("qe"), col("qn"), col("cid"),
-        (dot(col("qe"), col("ke")) / (col("qn") * col("kn"))).as("ccos"))
-      .withColumn("crn", row_number().over(wProbe))
-      .filter(col("crn") <= nprobe)
-      .select(col("qid"), col("qe"), col("qn"), col("cid"))
+    val nprobe = ivfNprobe(n)
+    val cells = probeCells(querySide(probeVecs), centroids, nprobe)
       .localCheckpoint()
-    val cellIds = probeCells.select("cid").distinct()
+    val cellIds = cells.select("cid").distinct()
       .collect().map(_.getLong(0)).sorted
     val luts = pqLuts(s, cb,
-      probeCells.select(col("qid").as("vec_id"), col("qe").as("embedding"))
+      cells.select(col("qid").as("vec_id"), col("qe").as("embedding"))
         .dropDuplicates("vec_id"))
     val lutH = s.sparkContext.broadcast(luts)
     // luts is keyed by qid — its size is the distinct probe count,
@@ -1383,7 +1424,7 @@ object Similarity {
     val cand = aggS.map(_.table(at)).getOrElse(s.table(at))
       .filter(col("cid").isin(cellIds: _*))
       .select(col("cid"), col("vec_id"), col("code"), col("cn"))
-      .join(broadcast(probeCells.select("qid", "cid")), Seq("cid"))
+      .join(broadcast(cells.select("qid", "cid")), Seq("cid"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
         (graft.functions.GraftFunctions.pqAdcScore(col("qid"), col("code"),
@@ -1400,45 +1441,14 @@ object Similarity {
     // below the 256k rung (whose 1/32 is already 1012).
     val r = math.max(k * 128,
       math.ceil(n.toDouble * nprobe / nlist / 32.0).toInt)
-    // shortlist through the SORT-FREE native aggregate (TopKEdges):
-    // same single exchange the former row_number window paid, but the
-    // map-side partial collapses each partition to <= r buffer entries
-    // per qid instead of local-sorting every (probe, candidate) ADC
-    // pair (the rule-31a hazard — this stage's candidate volume is
-    // ~n x nprobe / nlist rows PER PROBE and grows with the corpus).
-    // Identical top-R set: (adc desc, nid asc) is a total order;
-    // SimilaritySpec pins equality against the window foil kept
-    // runnable below. NaN adc dropped first (the graph build's rule).
-    // r20 A/B (sf0.1, 5 interleaved reps): 1.141 -> 0.981 s min
-    // (0.86x).
-    val top = if (shortlistWindow) {
-      val wQ = Window.partitionBy("qid").orderBy(desc("adc"), asc("nid"))
-      cand.filter(!isnan(col("adc")))
-        .withColumn("arn", row_number().over(wQ)).filter(col("arn") <= r)
-        .select("qid", "nid")
-    } else {
-      val t = cand.filter(!isnan(col("adc")))
-        .groupBy("qid")
-        .agg(graft.functions.GraftFunctions
-          .topKEdges(col("nid"), col("adc"), r).as("tk"))
-        .select(col("qid"), explode(col("tk")).as("e"))
-        .select(col("qid"), col("e.dst").as("nid"))
-      // guarded batches materialize under the cloned session (the
-      // shortlistSession contract); the pin is probes x r ids
-      aggS.fold(t)(_ => t.localCheckpoint())
-    }
-    val probeQ = probeCells.select("qid", "qe", "qn").dropDuplicates("qid")
+    val top = adcShortlist(cand, r, shortlistWindow, pinned = aggS.isDefined)
+    val probeQ = cells.select("qid", "qe", "qn").dropDuplicates("qid")
     val scored = s.table(at).filter(col("cid").isin(cellIds: _*))
       .select(col("vec_id").as("nid"), col("ce"), col("cn"))
       .join(broadcast(top), "nid")
       .join(broadcast(probeQ), "qid")
-      .select(col("qid"), col("nid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("raw"))
-    val w = Window.partitionBy("qid").orderBy(desc("raw"), asc("nid"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("nid"),
-        round(col("raw"), 6).as("score"), col("rn"))
+      .select(col("qid"), col("nid"), rawCos.as("raw"))
+    exactTopK(scored, k)
   }
 
   /** SemDeDup-style semantic dedup (the cluster-then-prune recipe of
@@ -1487,10 +1497,9 @@ object Similarity {
       col("nn").as("qn"), col("cid").as("qcid"))
     val later = asg.select(col("vec_id"), col("e").as("ce"),
       col("nn").as("cn"), col("cid"))
-    val raw = dot(col("qe"), col("ce")) / (col("qn") * col("cn"))
     val dropped = later.join(earlier,
       col("qcid") === col("cid") && col("qid") < col("vec_id") &&
-        raw >= tau,
+        rawCos >= tau,
       "leftsemi")
     asg.join(dropped.select("vec_id"), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cid"))
@@ -1704,9 +1713,7 @@ object Similarity {
         .drop("vec_id")
         .join(v, col("nid") === col("vec_id"))
         .drop("vec_id")
-        .select(col("qid"), col("nid"),
-          round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6)
-            .as("score"))
+        .select(col("qid"), col("nid"), pairScore.as("score"))
       out = scored.withColumn("rn", row_number().over(w).cast("long"))
         .filter(col("rn") <= k)
         .select("qid", "nid", "score", "rn")
@@ -2260,25 +2267,19 @@ object Similarity {
                                   et: String, rt: String,
                                   at: String, ct: String,
                                   np: Int, eBuckets: Int): Unit = {
-    // The build runs its queries in a CLONED session: the raised
-    // ObjectHashAggregate fallback threshold below is plan-time
-    // session conf, and setting it on the caller's session (the r17
-    // form, set + finally-restore) leaks it to any query the same
-    // session plans concurrently with the build. newSession() shares
-    // the SparkContext and catalog (the saveAsTable targets) but
-    // isolates runtime SQL conf; the caller's runtime conf is copied
-    // across first so the build plans under the same shuffle
-    // partitions / AQE settings it would have inherited (static and
-    // non-modifiable keys are skipped — they are shared through the
-    // context anyway).
-    val bs = s.newSession()
-    s.conf.getAll.foreach { case (ck, cv) =>
-      try bs.conf.set(ck, cv)
-      catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    // the FunctionRegistry is session state too — the build's plans
-    // call vector_dot / nearest_cells / top_k_edges by name
-    graft.functions.GraftFunctions.register(bs)
+    // The build runs its queries in a CLONED session with the
+    // ObjectHashAggregate fallback threshold raised over the index
+    // rows: the block collect_list sees nlist keys and the final merge
+    // sees up to `rows` srcs per map task — cover rows (capped; beyond
+    // the cap the pre-merge repartition bounds per-task keys to
+    // rows/partitions). The caller's session keeps the default
+    // (GraphBuildConfProbe lets the law test observe exactly that,
+    // mid-build). `rows` is a path read (parquet metadata, fresh
+    // listing): the caller's cached relation for `at` may predate
+    // another session's rewrite.
+    val rows = math.max(1L, PersistedIndex.files(s, at).count())
+    val bs = raisedThresholdSession(s, rows)
+    GraphBuildConfProbe.foreach(_())
     val handle = centroidHandle(bs, bs.table(ct))
     val asg = bs.table(at)
     val q = asg.select(col("vec_id").as("qid"), col("ce").as("qe"),
@@ -2288,7 +2289,6 @@ object Similarity {
       .localCheckpoint()
     val mates = asg.select(col("cid"), col("vec_id").as("nid"),
       col("ce").as("ne"), col("cn").as("nn"))
-    val rows = math.max(1L, q.count()) // checkpointed: metadata-cheap
     val nlist = math.max(1L, bs.table(ct).count())
     val useWindow = GraphBuildUseWindow
     val buildT0 = System.nanoTime()
@@ -2312,17 +2312,6 @@ object Similarity {
     // the q side splits into hash chunks (each qid wholly in one
     // chunk keeps per-src top-k total; blocks re-group per chunk, a
     // seconds-scale n-row groupBy).
-    // ObjectHashAggregate threshold: the block collect_list sees
-    // nlist keys and the final merge sees up to `rows` srcs per map
-    // task — cover rows (capped; beyond the cap the pre-merge
-    // repartition bounds per-task keys to rows/partitions). Set on
-    // the BUILD session only — the caller's session keeps the default
-    // (GraphBuildConfProbe lets the law test observe exactly that,
-    // mid-build).
-    bs.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      math.min(FallbackKeyCap, rows + 1024L).toString)
-    GraphBuildConfProbe.foreach(_())
     val elemBytes = asg.schema("ce").dataType match {
       case org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, _) => 4L
@@ -2457,17 +2446,8 @@ object Similarity {
     // 283 task-s with 1.1 GB of sort spill). The threshold raise
     // covers index rows + batch (capped), scoped so the caller's
     // concurrently planned queries never see it.
-    val s = s0.newSession()
-    s0.conf.getAll.foreach { case (ck, cv) =>
-      try s.conf.set(ck, cv)
-      catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    graft.functions.GraftFunctions.register(s)
-    s.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      math.min(FallbackKeyCap,
-        IndexManifest.indexRowsOf(storedTxt, storedBatches) + 1024L)
-        .toString)
+    val s = raisedThresholdSession(s0,
+      IndexManifest.indexRowsOf(storedTxt, storedBatches))
     val handle = centroidHandle(s, s.table(ct))
     // the batch frame belongs to the CALLER's session — re-anchor its
     // checkpointed partitions in the cloned session (RDDs are
@@ -2975,18 +2955,15 @@ object Similarity {
         "(vec_id % 50 = 0) against the corpus, pairs with cosine >= 0.35. " +
         "At scale the sample bound keeps this a single broadcast scan.",
       (s, d) => {
-        val sample = Tables.embeddings(s, d)
-          .filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-            norm(col("embedding")).as("qn"))
+        val sample = querySide(Tables.embeddings(s, d)
+          .filter(col("vec_id") % 50 === 0))
         // gate on the UNROUNDED cosine (the oracle filters unrounded
         // too); round only in the projection — else a true score in
         // [0.3499995, 0.35) flips the compare
-        val raw = dot(col("qe"), col("ce")) / (col("qn") * col("cn"))
         scorable(Tables.embeddings(s, d)).crossJoin(broadcast(sample))
-          .filter(col("qid") < col("vec_id") && raw >= 0.35)
+          .filter(col("qid") < col("vec_id") && rawCos >= 0.35)
           .select(col("qid").as("da"), col("vec_id").as("db"),
-            round(raw, 6).as("cos"))
+            pairScore.as("cos"))
           .orderBy("da", "db")
       },
       Some("WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) " +
@@ -3221,25 +3198,17 @@ object Similarity {
         "probes search nprobe≈nlist/8 cells (floor 4). Oracle-exempt; " +
         "recall in SimilaritySpec.",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val emb = Tables.embeddings(s, d)
         // Centroid count scales as ~sqrt(n), NOT a fixed fraction: a
         // fixed modulus makes |centroids| ∝ n, so the assignment
         // crossJoin costs n x |centroids| = O(n²) — the 32x ScaleSmoke
         // measured q_ann_ivf at 7.7x for 32x data under mod 53. With
         // nlist ≈ sqrt(n) assignment is O(n^1.5) (the standard IVF
-        // sizing); nprobe tracks nlist/8 so the searched fraction —
-        // and so recall — holds steady instead of collapsing as cells
-        // multiply. Floors pin today's behavior at the test scale
-        // factors (n<=2809 -> mod 53, nprobe 4, unchanged).
+        // sizing); nprobe tracks nlist/8 ([[ivfNprobe]]). Floors pin
+        // today's behavior at the test scale factors (n<=2809 -> mod
+        // 53, nprobe 4, unchanged).
         val n = math.max(1L, emb.count())
         val mod = centroidMod(n)
-        // /8 (12.5% of cells), raised from /10 in r12: the 64x gate
-        // measured recall 0.480 at n=32k — below the 0.5 floor — with
-        // the 10% fraction (16k: 0.540, 512k: 0.600, 1M: 0.640 were
-        // above it); the wider probe set lifts every rung at +25%
-        // probe-side candidate cost, which assignment dominates anyway
-        val nprobe = math.max(4, math.ceil(n / (8.0 * mod)).toInt)
         // the centroid frame is ~sqrt(n) rows read out of a full
         // corpus scan (modulo filters cannot range-prune); it feeds
         // the probe crossJoin AND the driver collect below, so
@@ -3266,29 +3235,14 @@ object Similarity {
         val assigned = scorable(emb)
           .withColumn("cid",
             graft.functions.GraftFunctions.nearestCentroid(col("ce"), handle))
-        // probe cells: top-nprobe centroids per probe
-        // cell rank and neighbor rank both UNROUNDED (round
-        // presentation only, CLAUDE.md rule 14) — also keeps this
-        // query's results identical to q_ann_ivf_probe's, whose
-        // DuckDB oracle gives the shared probe policy differential
-        // coverage
-        val wProbe = Window.partitionBy("qid").orderBy(desc("ccos"), asc("cid"))
-        val probeCells = probes(s, d).crossJoin(broadcast(centroids))
-          .select(col("qid"), col("qe"), col("qn"), col("cid"),
-            (dot(col("qe"), col("ke")) / (col("qn") * col("kn"))).as("ccos"))
-          .withColumn("crn", row_number().over(wProbe))
-          .filter(col("crn") <= nprobe)
-          .select(col("qid"), col("qe"), col("qn"), col("cid"))
-        val scored = assigned.join(broadcast(probeCells), Seq("cid"))
+        // the same cell probe and exact re-rank as q_ann_ivf_probe, so
+        // the two queries' results are identical and that query's
+        // DuckDB oracle covers this one's probe policy too
+        val cells = probeCells(probes(s, d), centroids, ivfNprobe(n))
+        val scored = assigned.join(broadcast(cells), Seq("cid"))
           .filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id").as("nid"),
-            (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("raw"))
-        val w = Window.partitionBy("qid").orderBy(desc("raw"), asc("nid"))
-        scored.withColumn("rn", row_number().over(w).cast("long"))
-          .filter(col("rn") <= 5)
-          .select(col("qid"), col("nid"),
-            round(col("raw"), 6).as("score"), col("rn"))
-          .orderBy("qid", "rn")
+          .select(col("qid"), col("vec_id").as("nid"), rawCos.as("raw"))
+        exactTopK(scored, 5).orderBy("qid", "rn")
       },
       None),
 

@@ -27,12 +27,12 @@ import org.apache.spark.sql.functions._
   */
 object Export {
 
-  /** Distributed flatten: one JSON document per input row -> leaf-edge
-    * rows. Runs in flatMap on executors; scales with the corpus. */
   /** Key under which unparseable documents surface in PERMISSIVE mode —
     * the same convention as spark.read.json's corrupt-record column. */
   val CorruptKey = "_corrupt_record"
 
+  /** Distributed flatten: one JSON document per input row -> leaf-edge
+    * rows. Runs in flatMap on executors; scales with the corpus. */
   def flattenTrees(trees: Dataset[(String, String)],
                    permissive: Boolean = true): DataFrame = {
     import trees.sparkSession.implicits._
@@ -108,6 +108,25 @@ object Export {
     else rows.filter(col("path") === node ||
       col("path").startsWith(node + "/"))
 
+  /** Changed-key count above which [[diffBackups]]' value-fetch joins
+    * fall back from broadcast to shuffle: 1M (path, key) string pairs
+    * ≈ 50 MB framed — inside guide-§3.1's "a few hundred MB is fine"
+    * with margin for long paths; an incremental diff larger than that
+    * is no longer the small side of anything. */
+  val DiffBroadcastMaxKeys = 1000000L
+
+  /** Estimated-byte companion to the key cap (r20 advice): a count
+    * gate alone plus an explicit broadcast() hint overrides ALL
+    * planner size safety, and 1M keys of adversarially long paths can
+    * be far larger than the ~50 MB the count cap assumes. 256 MB of
+    * measured key bytes (count x actual summed string lengths, one
+    * cheap job over the pinned keyset) keeps the hash relation inside
+    * guide-§3.1's "a few hundred MB is usually fine" — the framed
+    * relation carries UTF-8 strings plus ~32 B/row of offsets and
+    * hash-table overhead, so the gate compares estimated FRAMED bytes
+    * (raw chars + 32 x rows) against this cap. */
+  val DiffBroadcastMaxBytes = 256L * 1024 * 1024
+
   /** Snapshot diff — the incremental-backup primitive. Two backup
     * frames in, one change frame out: `(path, key, change ∈
     * added|removed|changed, old_value, new_value)`; unchanged rows are
@@ -132,25 +151,6 @@ object Export {
     * collision masking at 2^-128 per pair (below hardware error rates;
     * a single 64-bit hash would make silent drop a real event at
     * 10^12-row scale). */
-  /** Changed-key count above which [[diffBackups]]' value-fetch joins
-    * fall back from broadcast to shuffle: 1M (path, key) string pairs
-    * ≈ 50 MB framed — inside guide-§3.1's "a few hundred MB is fine"
-    * with margin for long paths; an incremental diff larger than that
-    * is no longer the small side of anything. */
-  val DiffBroadcastMaxKeys = 1000000L
-
-  /** Estimated-byte companion to the key cap (r20 advice): a count
-    * gate alone plus an explicit broadcast() hint overrides ALL
-    * planner size safety, and 1M keys of adversarially long paths can
-    * be far larger than the ~50 MB the count cap assumes. 256 MB of
-    * measured key bytes (count x actual summed string lengths, one
-    * cheap job over the pinned keyset) keeps the hash relation inside
-    * guide-§3.1's "a few hundred MB is usually fine" — the framed
-    * relation carries UTF-8 strings plus ~32 B/row of offsets and
-    * hash-table overhead, so the gate compares estimated FRAMED bytes
-    * (raw chars + 32 x rows) against this cap. */
-  val DiffBroadcastMaxBytes = 256L * 1024 * 1024
-
   def diffBackups(prev: DataFrame, cur: DataFrame,
                   broadcastMaxKeys: Long = DiffBroadcastMaxKeys)
       : DataFrame = {

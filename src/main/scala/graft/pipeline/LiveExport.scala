@@ -183,9 +183,11 @@ object LiveExport {
     private def fetchPage(path: String, startKey: Option[String],
                           preserveLastKey: Boolean,
                           itemsPerPage: Int): Option[PageOut] = {
+      // startAt is a JSON value, so a key holding '"' or '\' is
+      // escaped (Firebase allows both in keys)
       val query = Map("orderBy" -> "\"$key\"",
         "limitToFirst" -> itemsPerPage.toString) ++
-        startKey.map(k => "startAt" -> ("\"" + k + "\""))
+        startKey.map(k => "startAt" -> mapper.writeValueAsString(k))
       val resp = client.getR(path, query)
       failIfDenied(resp, path)
       val node = mapper.readTree(resp.body)

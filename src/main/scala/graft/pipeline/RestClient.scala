@@ -6,19 +6,6 @@ import java.net.{URI, URLEncoder}
 import java.nio.charset.StandardCharsets
 import java.time.Duration
 
-/** Transport abstraction over the slice of the Firebase REST surface the
-  * reference uses (via FirebaseLib — BackupProcessor.php:172 `get`,
-  * RestoreProcessor.php:80 `update`):
-  *
-  *   GET   <base><path>.json?orderBy="$key"&limitToFirst=N[&startAt="k"]
-  *   GET   <base><path>.json?shallow=true
-  *   PATCH <base><path>.json   (merge-update of direct children)
-  *
-  * A trait so the pagination/restore logic is testable against an
-  * in-process stub server (no network in CI) and fault-injectable;
-  * Serializable so executor tasks can carry a client per partition in
-  * the distributed export (LiveExport.export).
-  */
 /** Exponential retry pacing shared by the live walker's shallow-retry
   * loop and the restore drain. The reference retries back-to-back
   * (BackupProcessor.php:80-87, RestoreProcessor.php:82-94) — against a
@@ -41,6 +28,19 @@ object Backoff {
   * indistinguishable from an error payload by shape alone. */
 final case class RestResponse(status: Int, body: String)
 
+/** Transport abstraction over the slice of the Firebase REST surface the
+  * reference uses (via FirebaseLib — BackupProcessor.php:172 `get`,
+  * RestoreProcessor.php:80 `update`):
+  *
+  *   GET   <base><path>.json?orderBy="$key"&limitToFirst=N[&startAt="k"]
+  *   GET   <base><path>.json?shallow=true
+  *   PATCH <base><path>.json   (merge-update of direct children)
+  *
+  * A trait so the pagination/restore logic is testable against an
+  * in-process stub server (no network in CI) and fault-injectable;
+  * Serializable so executor tasks can carry a client per partition in
+  * the distributed export (LiveExport.export).
+  */
 trait RestClient extends Serializable {
 
   /** GET `path` with query params: the HTTP status and the raw JSON

@@ -390,29 +390,6 @@ object CorpusStreams {
     * node id). A node re-emits whenever a merge changes its label. */
   final case class CcUpdate(node: Long, lbl: Long)
 
-  /** Incremental connected components over a STREAM of near-dup pairs
-    * — the groups-side ingest twin ([[deltaDedupStream]] emits the
-    * pairs; this maintains `q_dedup_groups`' (node, lbl) view of them
-    * without ever recomputing the graph). Each micro-batch's pairs
-    * fold into a driver-side union-find with path compression
-    * (microseconds per edge); `sink` receives the CHANGED label rows
-    * — every node whose component label differs from what was last
-    * emitted, including ripple relabels when a bridge pair merges two
-    * existing components. Labels are lbl = min node id, so they are
-    * deterministic and NEVER depend on arrival order: after any
-    * prefix of batches the cumulative emitted state equals
-    * `Dedup.connectedComponents` over the union of pairs so far
-    * (StreamingSpec law).
-    *
-    * Scale posture: the state is the DUP-PAIR graph, which is small
-    * relative to its corpus by construction (it IS the duplicate
-    * list) — the same LocalCcMaxEdges argument that sizes the batch
-    * operator's driver branch; a corpus whose dup graph outgrows
-    * driver memory re-shards the stream by component-connected key
-    * ranges or falls back to the batch operator's distributed
-    * pointer-jumping on a cadence. Replays re-apply the same unions
-    * (idempotent merges): an at-least-once replay emits nothing new
-    * and converges to the same state. */
   /** The driver-side incremental union-find behind [[ccStream]] and
     * [[dedupIngestStream]]: path compression, union-by-min-id (so
     * labels are deterministic and arrival-order-independent), and
@@ -512,7 +489,31 @@ object CorpusStreams {
         s"b_$id").toString)
   }
 
-  /** With `stateDir` set, the union-find survives a DRIVER RESTART:
+  /** Incremental connected components over a STREAM of near-dup pairs
+    * — the groups-side ingest twin ([[deltaDedupStream]] emits the
+    * pairs; this maintains `q_dedup_groups`' (node, lbl) view of them
+    * without ever recomputing the graph). Each micro-batch's pairs
+    * fold into a driver-side union-find with path compression
+    * (microseconds per edge); `sink` receives the CHANGED label rows
+    * — every node whose component label differs from what was last
+    * emitted, including ripple relabels when a bridge pair merges two
+    * existing components. Labels are lbl = min node id, so they are
+    * deterministic and NEVER depend on arrival order: after any
+    * prefix of batches the cumulative emitted state equals
+    * `Dedup.connectedComponents` over the union of pairs so far
+    * (StreamingSpec law).
+    *
+    * Scale posture: the state is the DUP-PAIR graph, which is small
+    * relative to its corpus by construction (it IS the duplicate
+    * list) — the same LocalCcMaxEdges argument that sizes the batch
+    * operator's driver branch; a corpus whose dup graph outgrows
+    * driver memory re-shards the stream by component-connected key
+    * ranges or falls back to the batch operator's distributed
+    * pointer-jumping on a cadence. Replays re-apply the same unions
+    * (idempotent merges): an at-least-once replay emits nothing new
+    * and converges to the same state.
+    *
+    * With `stateDir` set, the union-find survives a DRIVER RESTART:
     * each batch's pairs are logged durably (after `sink` returns,
     * before the checkpoint commits), and a new ccStream call over the
     * same stateDir seeds its state from the log — so the documented

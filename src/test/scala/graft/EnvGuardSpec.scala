@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Structural guard: the operator packages read only the environment
   * variables listed here. Every other tuning decision is a constant
   * or a law-test var, so one operator decision has one code path. A
-  * new read must name its reason below, or become a constant. */
+  * new read must name its reason below, or become a constant. The
+  * mains build their local session in one function,
+  * `SparkEntry.localSession`. */
 class EnvGuardSpec extends AnyFunSuite {
 
   private val Packages =
@@ -59,5 +61,21 @@ class EnvGuardSpec extends AnyFunSuite {
           .map { case (n, f) => s"$n ($f)" }.mkString(", ") +
         s"; allow-listed but no longer read: " +
         (Allowed.keySet -- names).mkString(", "))
+  }
+
+  test("SparkSession.builder() appears in src/main only in localSession") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: $root")
+    val Builder = """SparkSession\s*\.\s*builder""".r
+    val hits = sources(root).flatMap { f =>
+      val t = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      Builder.findAllMatchIn(t).map(m => f.getName -> t.substring(0, m.start))
+    }
+    assert(hits.map(_._1) == Seq("SparkEntry.scala"),
+      s"session builders outside SparkEntry.localSession: ${hits.map(_._1)}")
+    // the one builder sits inside localSession's body
+    val before = hits.head._2
+    assert(before.lastIndexOf("def ") == before.lastIndexOf("def localSession"),
+      "SparkEntry's builder is not in localSession")
   }
 }

@@ -88,6 +88,10 @@ final class FirebaseStub(maxPayloadBytes: Int = Int.MaxValue,
       if (i < 0) dec(kv) -> "" else dec(kv.take(i)) -> dec(kv.drop(i + 1))
     }.toMap
 
+  /** A `startAt` parameter is a JSON value, as the server reads it: a
+    * key holding '"' or '\' arrives escaped. */
+  private def startKey(raw: String): String = mapper.readTree(raw).asText()
+
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -169,7 +173,7 @@ final class FirebaseStub(maxPayloadBytes: Int = Int.MaxValue,
       (q.get("orderBy"), node) match {
         case (Some("\"$key\""), o: ObjectNode) =>
           val limit = q.get("limitToFirst").map(_.toInt).getOrElse(Int.MaxValue)
-          val startAt = q.get("startAt").map(_.stripPrefix("\"").stripSuffix("\""))
+          val startAt = q.get("startAt").map(startKey)
           val ord = FirebaseStub.NameCompare
           val keys = o.fieldNames().asScala.toVector.sorted(ord)
             .dropWhile(k => startAt.exists(s => ord.lt(k, s)))
@@ -185,8 +189,7 @@ final class FirebaseStub(maxPayloadBytes: Int = Int.MaxValue,
           // array node answers an ARRAY padded with nulls below the
           // first included index (Firebase REST array encoding)
           val limit = q.get("limitToFirst").map(_.toInt).getOrElse(Int.MaxValue)
-          val start = q.get("startAt")
-            .map(_.stripPrefix("\"").stripSuffix("\"").toInt).getOrElse(0)
+          val start = q.get("startAt").map(startKey(_).toInt).getOrElse(0)
           val page = mapper.createArrayNode()
           (0 until math.min(start, a.size())).foreach(_ => page.addNull())
           (start until math.min(a.size(), start + limit))

@@ -163,6 +163,30 @@ class LiveSpec extends SparkSuite {
     } finally stub.stop()
   }
 
+  test("go-deeper resumes at a key holding backslashes and quotes") {
+    // /mix's children in cursor order: a, b (fat), k\\m, k\\z, q"r, z.
+    // After descending into b the walker resumes at k\\m. Sent
+    // unescaped, the server reads the cursor "k\\m" as the JSON string
+    // k\m, which sorts after k\\m and k\\z, so both would be skipped.
+    val blob = (1 to 40).map(i => s""""k$i": "${"v" * 12}"""").mkString(",")
+    val json = s"""{"mix": {"a": 1, "b": {$blob}, "k\\\\\\\\m": 2,
+                   "k\\\\\\\\z": 3, "q\\"r": {"s": 4}, "z": 5}}"""
+    assert(TreeCodec.flatten(json).map(_.key).contains("k\\\\m"))
+    val stub = new FirebaseStub(maxPayloadBytes = 400)
+    try {
+      stub.seed(json)
+      val walker = new LiveExport.Walker(new HttpRestClient(stub.url),
+        sleep = _ => ())
+      val got = walker.fetchTree("/mix")
+      def sorted(es: Seq[TreeCodec.Edge]) = es.sortBy(e => (e.path, e.key))
+      assert(sorted(got) == sorted(TreeCodec.flatten(json)))
+      // the cursor went out as the JSON string for k\\m
+      val mixQueries = stub.getRequests.collect { case ("/mix", q) =>
+        java.net.URLDecoder.decode(q, "UTF-8") }
+      assert(mixQueries.exists(_.contains("startAt=\"k\\\\\\\\m\"")))
+    } finally stub.stop()
+  }
+
   test("empty database exports an empty frame instead of failing") {
     // a 200 null/{} shallow answer is DEFINITIVE — retrying a correct
     // 'nothing here' ~33s and then aborting would turn an empty (or
