@@ -29,12 +29,12 @@ final case class MaintenanceReport(index: String, action: String,
 
 /** Measured default thresholds for condition-driven index maintenance.
   *
-  * The cadence knobs the streams already carry (`compactEvery`,
-  * `refreshEvery`) are BLIND: a fixed refresh cadence pays the
-  * O(n x nlist) reassignment even when every cell is healthy, and
-  * misses drift that arrives faster than the cadence. These
-  * thresholds instead trigger each op exactly when its measured
-  * symptom appears:
+  * The ingest streams' fixed compaction and refresh cadences were
+  * removed: a blind refresh cadence pays the O(n x nlist)
+  * reassignment even when every cell is healthy, and misses drift
+  * that arrives faster than the cadence. The streams' `maintainEvery`
+  * runs the family's `maintain*` policy instead, and these thresholds
+  * trigger each op exactly when its measured symptom appears:
   *
   *  - `DefaultCompactAfter` = 8: at N=8 appends the probe-side
   *    file-layout tax measured 1.20x (shingle) / ~1.0x (IVF) and at

@@ -849,7 +849,8 @@ object Similarity {
 
   /** Condition-driven maintenance for the persisted IVF index — runs
     * the right op exactly when its measured symptom appears, instead
-    * of the blind cadences (`refreshEvery`/`compactEvery`):
+    * of a fixed refresh or compaction schedule (the ingest streams'
+    * `maintainEvery` runs this policy; [[Maintenance]]):
     *
     *  1. hot cell (max > `hotCellRatio` x median occupancy, the
     *     DriftGate drift signature) -> [[refreshIvfCentroids]], which

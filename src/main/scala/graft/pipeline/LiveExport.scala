@@ -3,6 +3,7 @@ package graft.pipeline
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import java.io.IOException
 import scala.collection.mutable
 
 /** The live Firebase-REST export path — the reference's actual reason to
@@ -81,8 +82,17 @@ object LiveExport {
     * first among integers while the server pages it among strings
     * re-creates the resume-skip bug for that key's subtree. Equal
     * integer values ("1" vs "01" vs "-0"/"0") tie-break by string
-    * LENGTH, the server's deterministic rule (distinct same-value
-    * same-length keys are impossible, so length settles every tie). */
+    * LENGTH, the server's rule. That leaves one class of distinct keys
+    * that compare EQUAL: a negative zero and the all-zero key of the
+    * same length ("-0"/"00", "-00"/"000", ...) — the only distinct
+    * integer keys of equal value and equal length; the server's
+    * `nameCompare` (and the test stub's) ties them too. No tie-break
+    * is added here, because any other rule (say, by string) would
+    * disagree with the server's. The go-deeper resume
+    * (`shallow.indexOf(lastKey)` and the inclusive `startAt` drop)
+    * therefore relies on the server listing and paging a tied pair in
+    * ONE order, which the test stub does (a stable sort of the stored
+    * field order). */
   val KeyOrdering: Ordering[String] = Ordering.by { k: String =>
     parseIntKey(k) match {
       case Some(v) => (0, v.toLong, k.length, "")
@@ -252,37 +262,51 @@ object LiveExport {
 
     /** `shallow=true` key listing with the reference's retry law
       * (BackupProcessor.php:80-87): <=10 attempts, then BackupFailure.
-      * Retries pace out exponentially via [[Backoff]] — the reference
-      * retries back-to-back, which against a rate-limited live
-      * database burns all 10 attempts in milliseconds; a transient
-      * quota window outlives our whole schedule. Array nodes list as
-      * their non-null element indices ([[TreeCodec.children]]). Keys
-      * sort in the server's cursor order, which the go-deeper resume
+      * An error status and a transport failure (the IOException
+      * `getR` throws — a connection reset, a timeout) are both a
+      * failed attempt; the final BackupFailure carries the last
+      * IOException as its cause. Retries pace out exponentially via
+      * [[Backoff]] — the reference retries back-to-back, which against
+      * a rate-limited live database burns all 10 attempts in
+      * milliseconds; a transient quota window outlives our whole
+      * schedule. Array nodes list as their non-null element indices
+      * ([[TreeCodec.children]]). Keys sort in the server's cursor
+      * order, which the go-deeper resume
       * (`shallow.indexOf(lastKey) + 1`) relies on. */
     def shallowKeys(path: String): Vector[String] = {
       var tries = 0
+      var transport: Option[IOException] = None
       while (tries < ShallowRetries) {
         if (tries > 0) sleep(Backoff.delayMs(tries - 1))
-        val resp = client.getR(path, Map("shallow" -> "true"))
-        failIfDenied(resp, path)
-        val node = mapper.readTree(resp.body)
         tries += 1
-        if (!isErrorResponse(resp)) {
-          if (node != null && node.isContainerNode && node.size() > 0)
-            // sorted in the SERVER's cursor order (integer keys first,
-            // numerically) — the go-deeper resume depends on it
-            return TreeCodec.children(node).map(_._1).toVector
-              .sorted(KeyOrdering)
-          // a 200 null/{}/[] is DEFINITIVE: the path is empty (an
-          // empty database, or a subtree deleted since planning) —
-          // retrying a correct answer ~33s just to abort the whole
-          // export would turn "nothing here" into a failure
-          if (isEmptyPayload(node)) return Vector.empty
+        val attempt =
+          try Right(client.getR(path, Map("shallow" -> "true")))
+          catch { case e: IOException => Left(e) }
+        attempt match {
+          case Left(e) => transport = Some(e)
+          case Right(resp) =>
+            failIfDenied(resp, path)
+            val node = mapper.readTree(resp.body)
+            if (!isErrorResponse(resp)) {
+              if (node != null && node.isContainerNode && node.size() > 0)
+                // sorted in the SERVER's cursor order (integer keys
+                // first, numerically) — the go-deeper resume depends
+                // on it
+                return TreeCodec.children(node).map(_._1).toVector
+                  .sorted(KeyOrdering)
+              // a 200 null/{}/[] is DEFINITIVE: the path is empty (an
+              // empty database, or a subtree deleted since planning) —
+              // retrying a correct answer ~33s just to abort the whole
+              // export would turn "nothing here" into a failure
+              if (isEmptyPayload(node)) return Vector.empty
+            }
         }
       }
-      throw new BackupFailure(
+      val failure = new BackupFailure(
         s"Could not get database shallow data for $path " +
           s"($ShallowRetries attempts)")
+      transport.foreach(failure.initCause)
+      throw failure
     }
 
     /** The reference's `getData` loop (BackupProcessor.php:71-136):

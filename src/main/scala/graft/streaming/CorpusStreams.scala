@@ -1,9 +1,11 @@
 package graft.streaming
 
 import graft.functions.ShingleHashes
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.operators.{Dedup, Retrieval, Similarity}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout,
+  OutputMode}
 
 /** Streaming twins of the corpus-hygiene batch operators
   * (operators.Dedup `q_decontaminate` / `q_span_dup`) — the ingest-time
@@ -276,11 +278,9 @@ object CorpusStreams {
     * the new snapshot). */
   def qualityFilterStreamCadenced(docs: DataFrame,
       recal: Recalibrator[Double])(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     docs.writeStream.outputMode("append").foreachBatch {
-      (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
+      (b: Dataset[Row], id: Long) =>
         sink(qualityFilterStream(b.toDF(), recal.onBatch(id)), id)
     }
 
@@ -290,13 +290,135 @@ object CorpusStreams {
     * LM with a stale cutoff. */
   def perplexityFilterStreamCadenced(docs: Dataset[Doc],
       recal: Recalibrator[(BigramLm, Double)])(
-      sink: (Dataset[LmVerdict], Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Doc] =
+      sink: (Dataset[LmVerdict], Long) => Unit): DataStreamWriter[Doc] =
     docs.writeStream.outputMode("append").foreachBatch {
       (b: Dataset[Doc], id: Long) =>
         val (lm, cutoff) = recal.onBatch(id)
         sink(perplexityFilterStream(b, lm, cutoff), id)
     }
+
+  /** One micro-batch of an index-backed ingest stream as [[ingest]]
+    * hands it to the stream's emit step: the pinned rows, the
+    * streaming batch id, its index tag `streamId_id`, and whether the
+    * family's manifest already lists that tag (a replay). */
+  private final case class Arrival(s: SparkSession, rows: DataFrame,
+                                   id: Long, tag: String, replay: Boolean)
+
+  /** An index family as [[ingest]] calls it: `applied` is the replay
+    * probe (None: the family never reports a replay), `append` folds
+    * the batch in (None: the emit step folds, because its emission
+    * must follow the fold), `maintain` is the family's measured
+    * maintenance policy. */
+  private final case class Family(
+      applied: Option[(SparkSession, String, String) => Boolean],
+      append: Option[(SparkSession, String, DataFrame, String) => Unit],
+      maintain: (SparkSession, String) => Unit)
+
+  private val Shingle = Family(
+    Some((s, d, t) => Dedup.isShingleBatchApplied(s, d, t)),
+    Some((s, d, b, t) => Dedup.appendToShingleIndex(s, d, b, t)),
+    (s, d) => Dedup.maintainShingleIndex(s, d))
+
+  private val Ivf = Family(
+    Some((s, d, t) => Similarity.isIvfBatchApplied(s, d, t)),
+    Some((s, d, b, t) => Similarity.appendToIvfIndex(s, d, b, t)),
+    (s, d) => Similarity.maintainIvfIndex(s, d))
+
+  private val Lex = Family(
+    Some((s, d, t) => Retrieval.isLexBatchApplied(s, d, t)),
+    Some((s, d, b, t) => Retrieval.appendToLexIndex(s, d, b, t)),
+    (s, d) => Retrieval.maintainLexIndex(s, d))
+
+  /** The kNN graph: no replay probe (its emission follows the fold, so
+    * a replay re-reads what it emitted), the fold is the emit step, and
+    * maintenance checks the vector layer FIRST — a drift-triggered
+    * refresh changes the quantizer fingerprint, which the graph
+    * maintain's own ensure detects as staleness and rebuilds right
+    * here, inside the stream (the r20 streamed ingest smoke measured
+    * this batch's wall); a healthy index makes both a measurement. */
+  private def graphFamily(k: Int) = Family(None, None, { (s, d) =>
+    Similarity.maintainIvfIndex(s, d)
+    Similarity.maintainKnnGraphIndex(s, d, k)
+  })
+
+  /** The one micro-batch loop of the six index-backed ingest streams
+    * ([[deltaDedupStream]], [[dedupIngestStream]], [[annStream]],
+    * [[graphIngestStream]], [[semanticIngestStream]],
+    * [[searchIngestStream]]). It runs at the foreachBatch boundary —
+    * driver-side code between jobs, where the probes' row_number
+    * windows (unsupported on an unbounded streaming frame) are plain
+    * batch code — and per micro-batch:
+    *
+    *  1. pins the batch (`localCheckpoint`), so the emit step, the
+    *     append and the maintain read the same rows;
+    *  2. forms the batch's index tag `streamId_id`;
+    *  3. asks the family's manifest whether that tag is already
+    *     applied. A listed tag arriving again is a foreachBatch REPLAY:
+    *     the driver crashed after the append committed and before the
+    *     streaming checkpoint did. The emit step then probes with the
+    *     batch's own rows excluded (the family's excludeBatch /
+    *     excludeProbes view), which restores the pre-append index, so
+    *     the replay emits what the original did instead of wedging on
+    *     the disjointness guard or finding the batch as its own
+    *     neighbour;
+    *  4. runs the stream's emit step, which hands the sink its frame;
+    *  5. with `maintainIndex`, appends the batch (idempotent per tag:
+    *     a replay's append no-ops; arriving ids must be new, or the
+    *     append throws). Later batches of the stream probe an index
+    *     that holds this one — the micro-batch session's relation
+    *     cache refreshes on write; any OTHER session that already read
+    *     the index sees the appends after `spark.catalog.refreshTable`,
+    *     standard Spark relation-cache semantics;
+    *  6. with `maintainIndex`, every `maintainEvery` batches (0 =
+    *     never; leave it to an external `Cli maintain`), runs the
+    *     family's measured policy (rule 24, [[graft.operators
+    *     .Maintenance]]): it measures each symptom and compacts,
+    *     refreshes or re-refines only when that symptom is present, so
+    *     a healthy index pays a manifest read or an occupancy scan,
+    *     never a rewrite. Never on a replay: a refresh over rows that
+    *     now include the batch would churn cells a second time; if the
+    *     crash fell before the original pass, the next hit catches up
+    *     (maintenance is never correctness). The loop SERIALIZES
+    *     maintenance with appends; an external refresh while a
+    *     maintaining stream runs is not supported (the append's
+    *     centroid read would race the table swap). Guarantee scope:
+    *     replay equality holds for every crash window EXCEPT between a
+    *     batch's own refresh and its checkpoint commit — there the
+    *     replayed emission is still an exact top-k over the pre-batch
+    *     corpus, but refreshed cells can admit a different neighbour
+    *     set at recall boundaries. Compaction is a pure layout fold,
+    *     so no emission depends on when it runs.
+    *
+    * `sink` must consume its frame before returning: the emit steps
+    * release or re-pin per-batch state after it. */
+  private def ingest[T](in: Dataset[T], dir: String, streamId: String,
+                        family: Family, maintainIndex: Boolean,
+                        maintainEvery: Int)(emit: Arrival => Unit)
+      : DataStreamWriter[T] =
+    in.writeStream.outputMode("append").foreachBatch {
+      (b: Dataset[T], id: Long) =>
+        val s = b.sparkSession
+        val rows = b.toDF().localCheckpoint()
+        val tag = s"${streamId}_$id"
+        val replay = family.applied.exists(_(s, dir, tag))
+        emit(Arrival(s, rows, id, tag, replay))
+        if (maintainIndex) {
+          family.append.foreach(_(s, dir, rows, tag))
+          if (!replay && maintainEvery > 0 && (id + 1) % maintainEvery == 0)
+            family.maintain(s, dir)
+        }
+    }
+
+  /** The shingle family's probe: the arrival's exact tau>=0.8 pairs in
+    * (da, db) order — in excludeBatch mode on a replay — handed to
+    * `use`, then the batch's shingle cache released (evaluating the
+    * frame later still yields correct rows, uncached). */
+  private def deltaPairs[A](dir: String, a: Arrival)(use: DataFrame => A): A = {
+    val (frame, sh) = Dedup.deltaDedupOf(a.s, dir, a.rows,
+      checkDisjoint = !a.replay, excludeBatch = a.replay)
+    try use(frame.orderBy("da", "db"))
+    finally sh.unpersist(blocking = false)
+  }
 
   /** Streaming twin of q_dedup_delta — the ingest-time dedup a 100 TB
     * pipeline actually runs: documents ARRIVE continuously and each
@@ -305,80 +427,34 @@ object CorpusStreams {
     * emitting every exact tau>=0.8 pair touching the arrivals —
     * arrival-vs-corpus and within-micro-batch, identical to the batch
     * operator on the same documents (StreamingSpec pins it per batch).
-    *
-    * Runs at the foreachBatch boundary: the prefix selection needs a
-    * row_number window, unsupported on an unbounded streaming frame
-    * but plain batch code on a micro-batch (the Recalibrator rule).
     * The index freshness check is memoized per context, so steady-
-    * state per-batch overhead is nil.
+    * state per-batch overhead is nil. The micro-batch runs through the
+    * [[ingest]] loop.
     *
     * Cross-micro-batch pairs — `maintainIndex` decides:
     *
     *  - `maintainIndex = true` (the ingest deployment): after `sink`
     *    returns, the micro-batch is FOLDED INTO the persisted index
-    *    ([[graft.operators.Dedup.appendToShingleIndex]], idempotent
-    *    per "streamId_batchId" so a replayed batch neither re-appends
-    *    nor double-counts). Batch k+1 then probes an index containing
-    *    batches 1..k, so the streamed union of emissions equals the
-    *    one-big-batch result EXACTLY — no blind spot, no cadence
-    *    caveat (StreamingSpec pins the equality). Append cost tracks
-    *    the batch, not the corpus.
+    *    ([[graft.operators.Dedup.appendToShingleIndex]]). Batch k+1
+    *    then probes an index containing batches 1..k, so the streamed
+    *    union of emissions equals the one-big-batch result EXACTLY —
+    *    no blind spot (StreamingSpec pins the equality). Append cost
+    *    tracks the batch, not the corpus. The emitted frame is computed
+    *    against the pre-append index (its own docs must not be in it:
+    *    disjointness).
     *  - `maintainIndex = false`: pairs between different micro-batches
     *    are out of the contract, and — precisely — stay out until an
     *    EXPLICIT index rebuild or appendToShingleIndex call, or an
     *    application restart whose freshness check sees a changed
-    *    corpus slice; no in-process cadence exists that would
-    *    retroactively surface them. Use only when batches are known
-    *    disjoint in content (e.g. partitioned by source).
-    *
-    * `sink` must consume its frame before returning (the batch's
-    * shingle cache is released after; evaluation later still yields
-    * correct rows, uncached). With maintainIndex the sink runs BEFORE
-    * the append — the emitted frame must be computed against the
-    * pre-append index (its own docs must not be in it: disjointness).
-    * A replayed batch whose append already committed (crash between
-    * append and checkpoint commit) is detected via the index manifest
-    * and probed in excludeBatch mode, which restores exactly that
-    * pre-append view — the replay emits the original frame and the
-    * append no-ops, instead of wedging on the disjointness guard. */
+    *    corpus slice. Use only when batches are known disjoint in
+    *    content (e.g. partitioned by source). */
   def deltaDedupStream(docs: Dataset[Doc], dir: String,
                        maintainIndex: Boolean = false,
                        streamId: String = "stream",
-                       compactEvery: Int = 0,
                        maintainEvery: Int = 0)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Doc] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (b: Dataset[Doc], id: Long) =>
-        val bdf = b.toDF().localCheckpoint()
-        // replay detection (the dedupIngestStream rule): only a
-        // maintaining stream can find its own batch in the index, but
-        // the manifest check is one small file read, so it is not
-        // gated on maintainIndex
-        val replay = graft.operators.Dedup.isShingleBatchApplied(
-          b.sparkSession, dir, s"${streamId}_$id")
-        val (frame, sh) = graft.operators.Dedup.deltaDedupOf(
-          b.sparkSession, dir, bdf,
-          checkDisjoint = !replay, excludeBatch = replay)
-        try sink(frame.orderBy("da", "db"), id)
-        finally sh.unpersist(blocking = false)
-        if (maintainIndex) {
-          graft.operators.Dedup.appendToShingleIndex(
-            b.sparkSession, dir, bdf, s"${streamId}_$id")
-          // cadenced df compaction (compactShingleIndex is a pure
-          // layout fold — probes are exactly unchanged — so the
-          // cadence only tunes the per-probe re-agg tax against the
-          // df rewrite cost; 0 = leave it to an external nightly)
-          if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-            graft.operators.Dedup.compactShingleIndex(b.sparkSession, dir)
-          // condition-driven alternative to the blind cadence above:
-          // every N batches, CHECK (manifest-only, one small file
-          // read) and compact only when the measured layout symptom
-          // is present (Maintenance thresholds)
-          if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-            graft.operators.Dedup.maintainShingleIndex(b.sparkSession, dir)
-          ()
-        }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Doc] =
+    ingest(docs, dir, streamId, Shingle, maintainIndex, maintainEvery) {
+      a => deltaPairs(dir, a)(sink(_, a.id))
     }
 
   /** An arriving near-dup pair for [[ccStream]] (da < db by the
@@ -390,11 +466,11 @@ object CorpusStreams {
     * node id). A node re-emits whenever a merge changes its label. */
   final case class CcUpdate(node: Long, lbl: Long)
 
-  /** The driver-side incremental union-find behind [[ccStream]] and
-    * [[dedupIngestStream]]: path compression, union-by-min-id (so
-    * labels are deterministic and arrival-order-independent), and
-    * changed-label draining against the last emission. State size is
-    * the dup-pair GRAPH (the LocalCcMaxEdges driver-branch argument). */
+  /** The driver-side incremental union-find behind [[Components]]:
+    * path compression, union-by-min-id (so labels are deterministic
+    * and arrival-order-independent), and changed-label draining
+    * against the last emission. State size is the dup-pair GRAPH (the
+    * LocalCcMaxEdges driver-branch argument). */
   private final class UnionFindState {
     private val parent = scala.collection.mutable.Map.empty[Long, Long]
     private val emitted = scala.collection.mutable.Map.empty[Long, Long]
@@ -433,18 +509,18 @@ object CorpusStreams {
   }
 
   /** Rebuild a [[UnionFindState]] from the durable per-batch edge log
-    * under `stateDir/pairs` — the restart-recovery path for
-    * [[ccStream]]/[[dedupIngestStream]]. Every batch whose streaming
-    * checkpoint committed also committed its edge-log dir (the log is
-    * written BEFORE the checkpoint commit, inside foreachBatch), so
-    * after a driver restart the seeded state contains at least every
-    * committed batch's edges; the one possibly-uncommitted batch
-    * replays and re-unions idempotently. Seeded labels are marked
-    * already-emitted: their CcUpdates were delivered before the
-    * restart (the log write happens AFTER `sink` returns, so a batch
-    * logged means a batch emitted). Edge-log size is the dup-pair
-    * graph — the LocalCcMaxEdges driver-branch argument. */
-  private def seededUnionFind(s: org.apache.spark.sql.SparkSession,
+    * under `stateDir/pairs` — the restart-recovery path of
+    * [[Components]]. Every batch whose streaming checkpoint committed
+    * also committed its edge-log dir (the log is written BEFORE the
+    * checkpoint commit, inside foreachBatch), so after a driver
+    * restart the seeded state contains at least every committed
+    * batch's edges; the one possibly-uncommitted batch replays and
+    * re-unions idempotently. Seeded labels are marked already-emitted:
+    * their CcUpdates were delivered before the restart (the log write
+    * happens AFTER `sink` returns, so a batch logged means a batch
+    * emitted). Edge-log size is the dup-pair graph — the
+    * LocalCcMaxEdges driver-branch argument. */
+  private def seededUnionFind(s: SparkSession,
                               stateDir: String): UnionFindState = {
     val state = new UnionFindState
     val p = new org.apache.hadoop.fs.Path(stateDir, "pairs")
@@ -478,8 +554,7 @@ object CorpusStreams {
   /** Durably log one batch's pairs under `stateDir/pairs/b_<id>` —
     * overwrite per batch id, so an at-least-once replay rewrites the
     * same rows (idempotent). */
-  private def logPairs(s: org.apache.spark.sql.SparkSession,
-                       stateDir: String, id: Long,
+  private def logPairs(s: SparkSession, stateDir: String, id: Long,
                        pairs: Seq[(Long, Long)]): Unit = {
     import s.implicits._
     pairs.toDF("da", "db").coalesce(1)
@@ -489,15 +564,37 @@ object CorpusStreams {
         s"b_$id").toString)
   }
 
+  /** The one union-find step of [[ccStream]], [[dedupIngestStream]]
+    * and [[semanticIngestStream]]: the state is seeded from
+    * `stateDir`'s edge log when one is given (process-local
+    * otherwise); each batch's pairs are unioned, the changed labels
+    * handed to the sink, and THEN the pairs logged. Sink before log: a
+    * logged batch is an emitted batch, because the restart seed marks
+    * logged labels delivered — logged first, a crash before the sink
+    * would leave a replay with no label change to drain. Replays
+    * re-apply the same unions (idempotent merges), so they emit
+    * nothing new. */
+  private final class Components(s: SparkSession,
+                                 stateDir: Option[String]) {
+    private val state =
+      stateDir.fold(new UnionFindState)(seededUnionFind(s, _))
+    def fold(b: SparkSession, id: Long, pairs: Seq[(Long, Long)])(
+        sink: Seq[CcUpdate] => Unit): Unit = {
+      pairs.foreach { case (x, y) => state.union(x, y) }
+      sink(state.drainChanged())
+      stateDir.foreach(logPairs(b, _, id, pairs))
+    }
+  }
+
   /** Incremental connected components over a STREAM of near-dup pairs
     * — the groups-side ingest twin ([[deltaDedupStream]] emits the
     * pairs; this maintains `q_dedup_groups`' (node, lbl) view of them
     * without ever recomputing the graph). Each micro-batch's pairs
-    * fold into a driver-side union-find with path compression
-    * (microseconds per edge); `sink` receives the CHANGED label rows
-    * — every node whose component label differs from what was last
-    * emitted, including ripple relabels when a bridge pair merges two
-    * existing components. Labels are lbl = min node id, so they are
+    * fold into the driver-side union-find ([[Components]], microseconds
+    * per edge); `sink` receives the CHANGED label rows — every node
+    * whose component label differs from what was last emitted,
+    * including ripple relabels when a bridge pair merges two existing
+    * components. Labels are lbl = min node id, so they are
     * deterministic and NEVER depend on arrival order: after any
     * prefix of batches the cumulative emitted state equals
     * `Dedup.connectedComponents` over the union of pairs so far
@@ -509,34 +606,22 @@ object CorpusStreams {
     * operator's driver branch; a corpus whose dup graph outgrows
     * driver memory re-shards the stream by component-connected key
     * ranges or falls back to the batch operator's distributed
-    * pointer-jumping on a cadence. Replays re-apply the same unions
-    * (idempotent merges): an at-least-once replay emits nothing new
-    * and converges to the same state.
+    * pointer-jumping on a cadence.
     *
-    * With `stateDir` set, the union-find survives a DRIVER RESTART:
-    * each batch's pairs are logged durably (after `sink` returns,
-    * before the checkpoint commits), and a new ccStream call over the
-    * same stateDir seeds its state from the log — so the documented
-    * cumulative-labels law holds across a stop + restart with the
-    * same checkpointLocation, not just within one process lifetime
-    * (StreamingSpec pins it). Without stateDir the state is process-
-    * local, as before. */
+    * With `stateDir` set, the union-find survives a DRIVER RESTART: a
+    * new ccStream call over the same stateDir seeds its state from the
+    * edge log, so the cumulative-labels law holds across a stop +
+    * restart with the same checkpointLocation, not just within one
+    * process lifetime (StreamingSpec pins it). */
   def ccStream(pairs: Dataset[Pair], stateDir: Option[String] = None)(
-      sink: (Seq[CcUpdate], Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Pair] = {
-    val state = stateDir.fold(new UnionFindState)(
-      sd => seededUnionFind(pairs.sparkSession, sd))
+      sink: (Seq[CcUpdate], Long) => Unit): DataStreamWriter[Pair] = {
+    val cc = new Components(pairs.sparkSession, stateDir)
     pairs.writeStream.outputMode("append").foreachBatch {
       (b: Dataset[Pair], id: Long) =>
         // the batch IS the duplicate list for these arrivals — small
         // by the same argument as the driver-CC gate
-        val rows = b.collect()
-        rows.foreach(p => state.union(p.da, p.db))
-        sink(state.drainChanged(), id)
-        // log AFTER sink: a logged batch is an emitted batch (the
-        // restart seed marks logged labels already-delivered)
-        stateDir.foreach(sd => logPairs(b.sparkSession, sd, id,
-          rows.toSeq.map(p => (p.da, p.db))))
+        cc.fold(b.sparkSession, id, b.collect().toSeq.map(p => (p.da, p.db)))(
+          sink(_, id))
     }
   }
 
@@ -546,64 +631,31 @@ object CorpusStreams {
     * pairs vs corpus, vs every earlier batch, and within-batch — the
     * [[deltaDedupStream]] maintenance contract), the verified pairs
     * fold straight into the incremental component state (the
-    * [[ccStream]] union-find, no intermediate topic needed), and the
-    * batch is appended to the index before the next one probes.
-    * `sink` receives (verified pairs of this batch, changed component
-    * labels, batch id) — the pair list is handed as collected rows
-    * because it feeds the driver-side union-find anyway and is
-    * dup-list-sized by construction.
+    * [[Components]] step of [[ccStream]], no intermediate topic
+    * needed), and the batch is appended to the index before the next
+    * one probes ([[ingest]]). `sink` receives (verified pairs of this
+    * batch, changed component labels, batch id) — the pair list is
+    * handed as collected rows because it feeds the driver-side
+    * union-find anyway and is dup-list-sized by construction.
     *
     * Laws (StreamingSpec): cumulative pairs == the one-big-batch
     * delta operator on the same docs; cumulative labels ==
     * `Dedup.connectedComponents` over those pairs — i.e. the stream
     * converges to exactly q_dedup_delta + q_dedup_groups semantics,
     * arrival-split-independent. Replays re-probe (emitting the same
-    * pairs), no-op the append (manifest id), and change no labels. */
+    * pairs), no-op the append, and change no labels. */
   def dedupIngestStream(docs: Dataset[Doc], dir: String,
                         streamId: String = "ingest",
-                        compactEvery: Int = 0,
                         maintainEvery: Int = 0,
                         stateDir: Option[String] = None)(
       sink: (Seq[(Long, Long, Double)], Seq[CcUpdate], Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Doc] = {
-    val state = stateDir.fold(new UnionFindState)(
-      sd => seededUnionFind(docs.sparkSession, sd))
-    docs.writeStream.outputMode("append").foreachBatch {
-      (b: Dataset[Doc], id: Long) =>
-        val bdf = b.toDF().localCheckpoint()
-        // replay detection (the r14 advice): a manifest-listed batch
-        // arriving again means the driver crashed AFTER its append
-        // committed but BEFORE the streaming checkpoint did. The
-        // disjointness guard would wedge the stream on it forever;
-        // instead probe with the batch's own doc_ids anti-joined out
-        // of the index (excludeBatch — restores the pre-append view,
-        // so the replayed emission equals the original) and let the
-        // append below no-op on the manifest id.
-        val replay = graft.operators.Dedup.isShingleBatchApplied(
-          b.sparkSession, dir, s"${streamId}_$id")
-        val (frame, sh) = graft.operators.Dedup.deltaDedupOf(
-          b.sparkSession, dir, bdf,
-          checkDisjoint = !replay, excludeBatch = replay)
-        val pairs = try frame.orderBy("da", "db").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-        finally sh.unpersist(blocking = false)
-        pairs.foreach { case (da, db, _) => state.union(da, db) }
-        sink(pairs, state.drainChanged(), id)
-        stateDir.foreach(sd => logPairs(b.sparkSession, sd, id,
-          pairs.map(p => (p._1, p._2))))
-        graft.operators.Dedup.appendToShingleIndex(
-          b.sparkSession, dir, bdf, s"${streamId}_$id")
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          graft.operators.Dedup.compactShingleIndex(b.sparkSession, dir)
-          ()
-        }
-        // condition-driven twin of compactEvery (the deltaDedupStream
-        // rule): check the manifest every N batches, act only when
-        // the measured layout symptom is present
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0) {
-          graft.operators.Dedup.maintainShingleIndex(b.sparkSession, dir)
-          ()
-        }
+      : DataStreamWriter[Doc] = {
+    val cc = new Components(docs.sparkSession, stateDir)
+    ingest(docs, dir, streamId, Shingle, maintainIndex = true,
+        maintainEvery) { a =>
+      val pairs = deltaPairs(dir, a)(_.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
+      cc.fold(a.s, a.id, pairs.map(p => (p._1, p._2)))(sink(pairs, _, a.id))
     }
   }
 
@@ -615,103 +667,35 @@ object CorpusStreams {
     * the PERSISTED IVF index over `dir`'s embeddings
     * (operators.Similarity.ensureIvfIndex) and `sink` receives the
     * exact-cosine top-k per probe, identical to the batch probe on
-    * the same vectors (StreamingSpec pins it per batch). Runs at the
-    * foreachBatch boundary (cell ranking needs a row_number window —
-    * the Recalibrator rule), and the index freshness check is
-    * memoized per context, so steady-state per-batch overhead is one
-    * bucket-pruned scan of the probed cells.
+    * the same vectors (StreamingSpec pins it per batch). The index
+    * freshness check is memoized per context, so steady-state
+    * per-batch overhead is one bucket-pruned scan of the probed cells.
+    * The micro-batch runs through the [[ingest]] loop.
     *
     * With `maintainIndex = true` the micro-batch is ALSO folded into
     * the index after `sink` returns
-    * ([[graft.operators.Similarity.appendToIvfIndex]], idempotent per
-    * "streamId_batchId"): arrivals become findable by every later
-    * batch's probes — the same closed-loop ingest shape as
-    * [[deltaDedupStream]]'s maintenance mode, with the same
-    * disjointness contract (arriving vec_ids must be new; violations
-    * throw). Centroids stay frozen between re-calibrations, so
+    * ([[graft.operators.Similarity.appendToIvfIndex]]): arrivals
+    * become findable by every later batch's probes — the same
+    * closed-loop ingest shape as [[deltaDedupStream]]'s maintenance
+    * mode. Centroids stay frozen between maintenance passes, so
     * appended vectors join existing cells — correctness never drifts,
     * but concentrated arrivals degrade cell occupancy (the DriftGate
     * measurement: a 25%% drifted ingest grew the hot cell to 92x the
-    * median at 256k vectors). `refreshEvery = N` re-fits the
-    * quantizer in-stream every N batches
-    * ([[graft.operators.Similarity.refreshIvfCentroids]]), leaving
-    * the index content-identical to a one-shot build over everything
-    * ingested so far; `maintainEvery = N` is the condition-driven
-    * form ([[graft.operators.Similarity.maintainIvfIndex]]) — it
-    * measures cell occupancy every N batches and refreshes only when
-    * the hot-cell drift symptom is actually present, so a healthy
-    * ingest never pays the O(n x nlist) reassignment.
-    *
-    * `sink` must consume its frame before returning (the probe-cell
-    * checkpoint is per-batch state). Appends are visible to LATER
-    * BATCHES of this stream automatically (one micro-batch session
-    * runs them all, and its relation cache refreshes on write); any
-    * OTHER session that already read the assignment table sees them
-    * after `spark.catalog.refreshTable` — standard Spark
-    * relation-cache semantics, same as any external writer. */
+    * median at 256k vectors). `maintainEvery = N` measures cell
+    * occupancy and the fit canary every N batches
+    * ([[graft.operators.Similarity.maintainIvfIndex]]) and re-fits the
+    * quantizer only when drift is actually present, leaving the index
+    * content-identical to a one-shot build over everything ingested
+    * so far; a healthy ingest never pays the O(n x nlist)
+    * reassignment. The probe-cell checkpoint is per-batch state. */
   def annStream(vecs: Dataset[Vec], dir: String, k: Int = 5,
                 maintainIndex: Boolean = false,
                 streamId: String = "ann",
-                compactEvery: Int = 0,
-                refreshEvery: Int = 0,
                 maintainEvery: Int = 0)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Vec] =
-    vecs.writeStream.outputMode("append").foreachBatch {
-      (b: Dataset[Vec], id: Long) =>
-        val bdf = b.toDF().localCheckpoint()
-        // replay detection (the dedupIngestStream rule): an already-
-        // appended batch probes with its own vec_ids excluded, so the
-        // replayed emission equals the original instead of silently
-        // including the batch's own vectors as neighbors
-        val replay = graft.operators.Similarity.isIvfBatchApplied(
-          b.sparkSession, dir, s"${streamId}_$id")
-        sink(graft.operators.Similarity
-          .ivfProbe(b.sparkSession, dir, bdf, k, excludeProbes = replay)
-          .orderBy("qid", "rn"), id)
-        if (maintainIndex) {
-          graft.operators.Similarity.appendToIvfIndex(
-            b.sparkSession, dir, bdf, s"${streamId}_$id")
-          // cadenced re-calibration (Similarity.refreshIvfCentroids:
-          // the DriftGate occupancy case — concentrated arrivals pile
-          // into few base cells until the quantizer is re-fit). The
-          // stream cadence SERIALIZES the refresh with appends; an
-          // external refresh while a maintaining stream runs is not
-          // supported (the append's centroid read would race the
-          // table swap). Guarantee scope: the replay-equality law
-          // holds for every crash window EXCEPT between a batch's own
-          // refresh and its checkpoint commit — there the replayed
-          // emission is still an exact-cosine top-k over the
-          // pre-batch corpus, but the refreshed cells can admit a
-          // different neighbor set at recall boundaries. Skipped on
-          // replay: re-fitting over rows that now include this batch
-          // would churn cells a second time; if the crash fell before
-          // the original refresh, the cadence just catches up at its
-          // next hit (refresh is maintenance, never correctness).
-          if (!replay && refreshEvery > 0 && (id + 1) % refreshEvery == 0) {
-            graft.operators.Similarity.refreshIvfCentroids(b.sparkSession, dir)
-            ()
-          }
-          // cadenced assignment-table layout fold (the
-          // deltaDedupStream compactEvery rule: pure layout, probes
-          // exactly unchanged; 0 = leave it to an external nightly).
-          // No-ops on a batch whose refresh just ran — the rewrite
-          // already folded the layout.
-          if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-            graft.operators.Similarity.compactIvfIndex(b.sparkSession, dir)
-            ()
-          }
-          // condition-driven alternative to both cadences: every N
-          // batches, measure (one cid-only occupancy scan) and run
-          // refresh/compact only when the measured symptom is present
-          // (Maintenance thresholds). Skipped on replay for the same
-          // reason refreshEvery is: a maintain-triggered refresh is
-          // subject to the identical guarantee-scope note above.
-          if (!replay && maintainEvery > 0 && (id + 1) % maintainEvery == 0) {
-            graft.operators.Similarity.maintainIvfIndex(b.sparkSession, dir)
-            ()
-          }
-        }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Vec] =
+    ingest(vecs, dir, streamId, Ivf, maintainIndex, maintainEvery) { a =>
+      sink(Similarity.ivfProbe(a.s, dir, a.rows, k, excludeProbes = a.replay)
+        .orderBy("qid", "rn"), a.id)
     }
 
   /** Graph-aware ingest — the kNN-graph twin of [[annStream]]: each
@@ -723,8 +707,8 @@ object CorpusStreams {
     * read back from the index AFTER the fold. Emission-after-fold
     * makes replay NATURALLY stable — a replayed batch's append no-ops
     * (idempotent per streamId_batchId) and generation resolution
-    * returns the same latest rows, so no excludeProbes analogue is
-    * needed. Later batches see earlier arrivals both as candidate
+    * returns the same latest rows, so the family needs no replay
+    * probe. Later batches see earlier arrivals both as candidate
     * mates and through reverse displacement of stored adjacencies
     * (StreamingSpec pins the cross-batch chain and the restated r20
     * fold laws through the stream: per-rank dominance over the
@@ -737,73 +721,44 @@ object CorpusStreams {
     * manifest pins the centroid-set fingerprint, so any
     * [[graft.operators.Similarity.refreshIvfCentroids]] makes the
     * next ensure REBUILD the graph (the documented staleness
-    * contract). `maintainEvery` drives CONDITION-driven maintenance
-    * of both layers (rule 24 — measure the symptom, never a blind
-    * cadence): [[graft.operators.Similarity.maintainIvfIndex]] first
-    * (hot-cell occupancy + the fit-gap canary; a drift-triggered
-    * refresh changes the quantizer and the graph maintain's ensure
-    * rebuilds IN-STREAM — the drift-repair path the r20 streamed
-    * ingest smoke measured, SURVEY §24), then
-    * [[graft.operators.Similarity.maintainKnnGraphIndex]] (refine
-    * staleness re-refines, layout compacts). `compactEvery` drives
-    * the unconditional layout fold (probes exactly unchanged). First
-    * batch pays the one-time ensure (a cold corpus builds the graph;
-    * a warehouse with intact files re-attaches). */
+    * contract). `maintainEvery` runs [[graft.operators.Similarity
+    * .maintainIvfIndex]] (hot-cell occupancy + the fit-gap canary; a
+    * drift-triggered refresh rebuilds the graph IN-STREAM — the
+    * drift-repair path the r20 streamed ingest smoke measured, SURVEY
+    * §24), then [[graft.operators.Similarity.maintainKnnGraphIndex]]
+    * (refine staleness re-refines, layout compacts). First batch pays
+    * the one-time ensure (a cold corpus builds the graph; a warehouse
+    * with intact files re-attaches). */
   def graphIngestStream(vecs: Dataset[Vec], dir: String, k: Int = 3,
                         streamId: String = "graph",
-                        compactEvery: Int = 0,
                         maintainEvery: Int = 0)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Vec] =
-    vecs.writeStream.outputMode("append").foreachBatch {
-      (b: Dataset[Vec], id: Long) =>
-        val s = b.sparkSession
-        val bdf = b.toDF().localCheckpoint()
-        graft.operators.Similarity.appendToKnnGraphIndex(
-          s, dir, k, bdf, s"${streamId}_$id")
-        // the handed-off adjacency is MATERIALIZED before the sink
-        // sees it (rule 33's sibling): a lazy frame over the live
-        // edge table, retained by a sink and evaluated only after a
-        // later batch's fold or an in-stream compact (which drops and
-        // renames files), would observe later-generation rows or
-        // FAILED_READ_FILE — localCheckpoint pins THIS batch's
-        // resolved rows whatever the sink's lifetime (the
-        // semanticIngestStream eager-handoff contract)
-        sink(graft.operators.Similarity.graphEdges(s, dir, k)
-          .join(broadcast(bdf.select(col("vec_id"))),
-            col("qid") === col("vec_id"), "leftsemi")
-          .orderBy("qid", "rn").localCheckpoint(), id)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          graft.operators.Similarity.compactKnnGraphIndex(s, dir, k)
-          ()
-        }
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0) {
-          // vector-layer health FIRST (one exchange-free occupancy
-          // scan + the fit canary): a concentrated-drift refresh
-          // changes the quantizer fingerprint, which the graph
-          // maintain's own ensure — next line — detects as staleness
-          // and REBUILDS right here, inside the stream (the r20
-          // streamed ingest smoke measured this batch's wall).
-          // A healthy index makes this a measurement, not a rewrite.
-          graft.operators.Similarity.maintainIvfIndex(s, dir)
-          graft.operators.Similarity.maintainKnnGraphIndex(s, dir, k)
-          ()
-        }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Vec] =
+    ingest(vecs, dir, streamId, graphFamily(k), maintainIndex = true,
+        maintainEvery) { a =>
+      Similarity.appendToKnnGraphIndex(a.s, dir, k, a.rows, a.tag)
+      // the handed-off adjacency is MATERIALIZED before the sink
+      // sees it (rule 33's sibling): a lazy frame over the live
+      // edge table, retained by a sink and evaluated only after a
+      // later batch's fold or an in-stream compact (which drops and
+      // renames files), would observe later-generation rows or
+      // FAILED_READ_FILE — localCheckpoint pins THIS batch's
+      // resolved rows whatever the sink's lifetime
+      sink(Similarity.graphEdges(a.s, dir, k)
+        .join(broadcast(a.rows.select(col("vec_id"))),
+          col("qid") === col("vec_id"), "leftsemi")
+        .orderBy("qid", "rn").localCheckpoint(), a.id)
     }
 
-  /** The SemDeDup ingest loop — semantic clustering as arrivals land,
-    * composing the family's pieces into one foreachBatch: each
-    * micro-batch of vectors (1) probes the persisted IVF index for
-    * its exact-cosine top-k ([[annStream]]'s probe, replay-safe via
-    * excludeProbes), (2) links every probe pair at cosine >= tau into
-    * the durable union-find (the [[ccStream]] machinery: per-batch
-    * edge log under `stateDir`, restart reseeds from the log, labels
-    * are component-min ids), (3) hands `sink` the batch's accepted
-    * pairs and changed labels, and (4) appends the batch to the index
-    * ([[graft.operators.Similarity.appendToIvfIndex]], idempotent per
-    * streamId_batchId) so later arrivals cluster against everything
-    * ingested so far — with the same refresh/compact/maintain
-    * cadences and guarantee scopes as [[annStream]].
+  /** The SemDeDup ingest loop — semantic clustering as arrivals land:
+    * each micro-batch of vectors (1) probes the persisted IVF index
+    * for its exact-cosine top-k ([[annStream]]'s probe), (2) links
+    * every probe pair at cosine >= tau into the durable union-find
+    * ([[Components]], the [[ccStream]] step: per-batch edge log under
+    * `stateDir`, restart reseeds from the log, labels are
+    * component-min ids), (3) hands `sink` the batch's accepted pairs
+    * and changed labels, and (4) appends the batch to the index
+    * ([[ingest]]) so later arrivals cluster against everything
+    * ingested so far.
     *
     * Edge semantics are PROBE-BOUNDED: a pair is observed iff the
     * neighbor ranks in the arrival's top-k within its probed cells
@@ -816,49 +771,24 @@ object CorpusStreams {
   def semanticIngestStream(vecs: Dataset[Vec], dir: String,
                            tau: Double, k: Int = 5,
                            streamId: String = "semcc",
-                           compactEvery: Int = 0,
-                           refreshEvery: Int = 0,
                            maintainEvery: Int = 0,
                            stateDir: Option[String] = None)(
       sink: (Seq[(Long, Long, Double)], Seq[CcUpdate], Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Vec] = {
-    val state = stateDir.fold(new UnionFindState)(
-      sd => seededUnionFind(vecs.sparkSession, sd))
-    vecs.writeStream.outputMode("append").foreachBatch {
-      (b: Dataset[Vec], id: Long) =>
-        val bdf = b.toDF().localCheckpoint()
-        val replay = graft.operators.Similarity.isIvfBatchApplied(
-          b.sparkSession, dir, s"${streamId}_$id")
-        // pairs: the probe's top-k filtered at tau — duplicate-sized
-        // (the dedupIngestStream collect bound), total (qid, nid)
-        // order so replays emit identically
-        val pairs = graft.operators.Similarity
-          .ivfProbe(b.sparkSession, dir, bdf, k, excludeProbes = replay)
-          .filter(col("score") >= tau)
-          .select("qid", "nid", "score")
-          .orderBy("qid", "nid")
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-        pairs.foreach { case (a, n, _) => state.union(a, n) }
-        sink(pairs, state.drainChanged(), id)
-        stateDir.foreach(sd => logPairs(b.sparkSession, sd, id,
-          pairs.map(p => (p._1, p._2))))
-        graft.operators.Similarity.appendToIvfIndex(
-          b.sparkSession, dir, bdf, s"${streamId}_$id")
-        // cadences + replay scopes exactly as annStream (see its
-        // scaladoc for the refresh guarantee-scope note)
-        if (!replay && refreshEvery > 0 && (id + 1) % refreshEvery == 0) {
-          graft.operators.Similarity.refreshIvfCentroids(b.sparkSession, dir)
-          ()
-        }
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          graft.operators.Similarity.compactIvfIndex(b.sparkSession, dir)
-          ()
-        }
-        if (!replay && maintainEvery > 0 && (id + 1) % maintainEvery == 0) {
-          graft.operators.Similarity.maintainIvfIndex(b.sparkSession, dir)
-          ()
-        }
+      : DataStreamWriter[Vec] = {
+    val cc = new Components(vecs.sparkSession, stateDir)
+    ingest(vecs, dir, streamId, Ivf, maintainIndex = true,
+        maintainEvery) { a =>
+      // pairs: the probe's top-k filtered at tau — duplicate-sized
+      // (the dedupIngestStream collect bound), total (qid, nid)
+      // order so replays emit identically
+      val pairs = Similarity
+        .ivfProbe(a.s, dir, a.rows, k, excludeProbes = a.replay)
+        .filter(col("score") >= tau)
+        .select("qid", "nid", "score")
+        .orderBy("qid", "nid")
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      cc.fold(a.s, a.id, pairs.map(p => (p._1, p._2)))(sink(pairs, _, a.id))
     }
   }
 
@@ -869,49 +799,22 @@ object CorpusStreams {
     * .bm25BatchScores]] — the standing-query/alerting probe, tf+dl
     * from the batch, df/n_docs/avgdl from the index), the emission
     * handed to `sink` as (doc_id, score) rows in total doc_id order,
-    * and the batch appended to the index before the next one probes
-    * — so tomorrow's arrivals are scored against a corpus that
-    * includes today's, with no rebuild.
-    *
-    * Crash-safety follows the family contract: appends are
-    * idempotent per `streamId_batchId`; a replayed batch is detected
-    * by its manifest id and probes in excludeBatch mode (its own
-    * rows anti-joined out of the df scan, its own (n, sum_dl)
-    * contribution subtracted from the generation stats — exact long
-    * arithmetic), so the replayed emission EQUALS the original and
-    * the re-append no-ops. `compactEvery` runs the pure-layout fold
-    * on a cadence; `maintainEvery` runs the condition-driven policy
-    * instead (measure, act only on present symptoms); 0 leaves each
-    * to an external nightly `Cli maintain`. */
+    * and, with `maintainIndex`, the batch appended to the index before
+    * the next one probes ([[ingest]]) — so tomorrow's arrivals are
+    * scored against a corpus that includes today's, with no rebuild.
+    * A replay's excludeBatch probe anti-joins its own rows out of the
+    * df scan and subtracts its own (n, sum_dl) contribution from the
+    * generation stats — exact long arithmetic, so the replayed
+    * emission EQUALS the original. */
   def searchIngestStream(docs: Dataset[Doc], dir: String,
                          terms: Seq[String],
                          maintainIndex: Boolean = false,
                          streamId: String = "search",
-                         compactEvery: Int = 0,
                          maintainEvery: Int = 0)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Doc] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (b: Dataset[Doc], id: Long) =>
-        val bdf = b.toDF().localCheckpoint()
-        val replay = graft.operators.Retrieval.isLexBatchApplied(
-          b.sparkSession, dir, s"${streamId}_$id")
-        sink(graft.operators.Retrieval.bm25BatchScores(
-          b.sparkSession, dir, bdf, terms, excludeBatch = replay)
-          .orderBy("doc_id"), id)
-        if (maintainIndex) {
-          graft.operators.Retrieval.appendToLexIndex(
-            b.sparkSession, dir, bdf, s"${streamId}_$id")
-          if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-            graft.operators.Retrieval.compactLexIndex(b.sparkSession, dir)
-            ()
-          }
-          if (!replay && maintainEvery > 0 &&
-              (id + 1) % maintainEvery == 0) {
-            graft.operators.Retrieval.maintainLexIndex(b.sparkSession, dir)
-            ()
-          }
-        }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Doc] =
+    ingest(docs, dir, streamId, Lex, maintainIndex, maintainEvery) { a =>
+      sink(Retrieval.bm25BatchScores(a.s, dir, a.rows, terms,
+        excludeBatch = a.replay).orderBy("doc_id"), a.id)
     }
 
   private def round8(x: Double): Double = java.math.BigDecimal.valueOf(x)

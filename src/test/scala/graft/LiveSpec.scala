@@ -1,6 +1,7 @@
 package graft
 
-import graft.pipeline.{Export, HttpRestClient, LiveExport, Restore, TreeCodec}
+import graft.pipeline.{Export, HttpRestClient, LiveExport, Restore,
+  RestClient, RestResponse, TreeCodec}
 import org.apache.spark.sql.functions.col
 
 import java.nio.file.Files
@@ -233,28 +234,53 @@ class LiveSpec extends SparkSuite {
     } finally stub.stop()
   }
 
+  /** An `HttpRestClient` whose first `n` shallow listings fail in
+    * transport: `getR` throws IOException, as on a connection reset. */
+  private def transportFailing(url: String, n: Int): RestClient =
+    new RestClient {
+      private val http = new HttpRestClient(url)
+      private val left = new java.util.concurrent.atomic.AtomicInteger(n)
+      def getR(path: String, query: Map[String, String]): RestResponse =
+        if (query.get("shallow").contains("true") && left.get() > 0) {
+          left.decrementAndGet()
+          throw new java.io.IOException("connection reset")
+        } else http.getR(path, query)
+      def patch(path: String, bodyJson: String): Boolean =
+        http.patch(path, bodyJson)
+    }
+
+  /** One walker per failure mode of the first `n` shallow listings: the
+    * server answers 503, or the transport throws IOException. */
+  private def shallowFailing(json: String, n: Int)(
+      check: (LiveExport.Walker, Boolean) => Unit): Unit =
+    Seq(false, true).foreach { transport =>
+      val stub = new FirebaseStub(maxPayloadBytes = 600,
+        failShallow = if (transport) 0 else n)
+      try {
+        stub.seed(json)
+        val client =
+          if (transport) transportFailing(stub.url, n)
+          else new HttpRestClient(stub.url)
+        check(new LiveExport.Walker(client, sleep = _ => ()), transport)
+      } finally stub.stop()
+    }
+
   test("shallow listing failing 10x raises BackupFailure (retry cap)") {
-    // go-deeper needs shallow keys; the stub answers null 10 times
+    // go-deeper needs shallow keys; the listing fails 10 times
     val fat = (1 to 200).map(i => s""""k$i": "${"x" * 10}$i"""").mkString(",")
-    val stub = new FirebaseStub(maxPayloadBytes = 600, failShallow = 10)
-    try {
-      stub.seed(s"""{"big": {"fat": {$fat}}}""")
-      val walker = new LiveExport.Walker(new HttpRestClient(stub.url),
-        sleep = _ => ())
-      intercept[LiveExport.BackupFailure] { walker.fetchTree("/big") }
-    } finally stub.stop()
+    shallowFailing(s"""{"big": {"fat": {$fat}}}""", 10) { (walker, transport) =>
+      val e = intercept[LiveExport.BackupFailure] { walker.fetchTree("/big") }
+      assert(e.getCause.isInstanceOf[java.io.IOException] == transport,
+        s"cause: ${e.getCause}")
+    }
   }
 
   test("shallow listing recovering within 10 tries succeeds") {
     val fat = (1 to 200).map(i => s""""k$i": "${"x" * 10}$i"""").mkString(",")
     val json = s"""{"big": {"fat": {$fat}}}"""
-    val stub = new FirebaseStub(maxPayloadBytes = 600, failShallow = 9)
-    try {
-      stub.seed(json)
-      val walker = new LiveExport.Walker(new HttpRestClient(stub.url),
-        sleep = _ => ())
+    shallowFailing(json, 9) { (walker, _) =>
       assert(walker.fetchTree("/big").toSet == edgesOf(json))
-    } finally stub.stop()
+    }
   }
 
   test("distributed export reads the live database into the edge frame") {

@@ -936,7 +936,7 @@ class StreamingSpec extends SparkSuite {
     val labels = scala.collection.mutable.Map.empty[Long, Long]
     val input = MemoryStream[CorpusStreams.Doc]
     val q = CorpusStreams.dedupIngestStream(input.toDS(), dir,
-      streamId = "ing1", compactEvery = 2) { (pairs, changed, _) =>
+      streamId = "ing1") { (pairs, changed, _) =>
       allPairs ++= pairs
       changed.foreach(u => labels(u.node) = u.lbl)
     }.start()
@@ -1369,66 +1369,6 @@ class StreamingSpec extends SparkSuite {
       s"post-maintain state must be settled: ${rep.render}")
   }
 
-  test("ann stream refreshEvery re-fits the quantizer in-stream; the " +
-    "maintained index ends content-identical to a one-shot build") {
-    val sp = spark; import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    graft.functions.GraftFunctions.register(spark)
-    import graft.streaming.CorpusStreams
-    def vec(seed: Long): Array[Float] = {
-      val r = new scala.util.Random(seed)
-      Array.fill(64)(r.nextFloat() * 2 - 1)
-    }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_annref")
-    val dir = new java.io.File(tmp.toFile, "d").toString
-    val merged = new java.io.File(tmp.toFile, "m").toString
-    val base = (0L until 150L).map(i => (i, vec(i)))
-    base.toDF("vec_id", "embedding").coalesce(1).write
-      .parquet(s"$dir/embeddings.parquet")
-    // ranges include 1031 and 1146 — the ids the HASHED centroid pick
-    // (mod 53) selects, keeping the cadence-strength assert below
-    // non-vacuous
-    val b0 = (1020L until 1040L).map(i => CorpusStreams.Vec(i, vec(i)))
-    // 1160 probes with an exact copy of arrival 1025's vector — the
-    // cross-batch visibility check, probed BEFORE b1's own append
-    val b1 = (1140L until 1160L).map(i => CorpusStreams.Vec(i, vec(i))) :+
-      CorpusStreams.Vec(1160L, vec(1025L))
-    val got = scala.collection.mutable.Map.empty[Long, Set[(Long, Long, Double, Long)]]
-    val input = MemoryStream[CorpusStreams.Vec]
-    val q = CorpusStreams.annStream(input.toDS(), dir,
-      maintainIndex = true, streamId = "ar", refreshEvery = 2) { (df, id) =>
-      got(id) = df.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    }.start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-    } finally q.stop()
-    assert(got(1L).exists { case (qid, nid, s, rn) =>
-      qid == 1160L && nid == 1025L && s == 1.0 && rn == 1L },
-      "batch-0 arrival not rank-1 for its batch-1 copy probe")
-    // batch 1 hit the refresh cadence ((1+1) % 2 == 0): the index must
-    // now be content-identical to a one-shot build over base + b0 + b1
-    (base ++ (b0 ++ b1).map(v => (v.vec_id, v.embedding)))
-      .toDF("vec_id", "embedding").coalesce(1).write
-      .parquet(s"$merged/embeddings.parquet")
-    val (atM, ctM) = graft.operators.Similarity.ensureIvfIndex(spark, merged)
-    val (at, ct) = graft.operators.Similarity.ensureIvfIndex(spark, dir)
-    Seq(at, ct, atM, ctM).foreach(spark.catalog.refreshTable)
-    def cents(t: String): Set[(Long, Seq[Float], Double)] =
-      spark.table(t).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSet
-    def cells(t: String): Set[(Long, Long, Long)] =
-      spark.table(t).select("cid", "vec_id", "code").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(cents(ct) == cents(ctM),
-      "stream-refreshed centroids diverge from the one-shot build")
-    assert(cells(at) == cells(atM),
-      "stream-refreshed assignment diverges from the one-shot build")
-    assert(cents(ct).exists(_._1 >= 1000L),
-      "no streamed arrival contributes a centroid — cadence vacuous")
-  }
-
   test("ann stream maintainEvery refreshes only when the hot-cell " +
     "symptom appears") {
     val sp = spark; import sp.implicits._
@@ -1452,13 +1392,18 @@ class StreamingSpec extends SparkSuite {
     }
     val tmp = java.nio.file.Files.createTempDirectory("graft_annmnt")
     val dir = new java.io.File(tmp.toFile, "d").toString
-    (0L until 6000L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+    val merged = new java.io.File(tmp.toFile, "m").toString
+    val base = (0L until 6000L).map(i => (i, vec(i)))
+    base.toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     val (_, ct) = graft.operators.Similarity.ensureIvfIndex(spark, dir)
     def centroidIds(): Set[Long] = {
       spark.catalog.refreshTable(ct)
       spark.table(ct).select("cid").collect().map(_.getLong(0)).toSet
     }
+    val healthy = (10000L until 10020L).map(i => CorpusStreams.Vec(i, vec(i)))
+    val drifted =
+      (50000L until 53000L).map(i => CorpusStreams.Vec(i, drift(i)))
     val input = MemoryStream[CorpusStreams.Vec]
     val q = CorpusStreams.annStream(input.toDS(), dir,
       maintainIndex = true, streamId = "am", maintainEvery = 1) {
@@ -1467,16 +1412,14 @@ class StreamingSpec extends SparkSuite {
     try {
       // healthy i.i.d. batch: the maintain pass measures and leaves
       // the index alone — no appended id may appear as a centroid
-      input.addData((10000L until 10020L).map(i =>
-        CorpusStreams.Vec(i, vec(i))))
+      input.addData(healthy)
       q.processAllAvailable()
       assert(centroidIds().forall(_ < 10000L),
         "healthy batch must not trigger a refresh")
       // concentrated drift batch: the same cadence now measures a hot
       // cell and refreshes — appended mass contributes centroids and
       // occupancy is healthy again
-      input.addData((50000L until 53000L).map(i =>
-        CorpusStreams.Vec(i, drift(i))))
+      input.addData(drifted)
       q.processAllAvailable()
     } finally q.stop()
     assert(centroidIds().exists(_ >= 50000L),
@@ -1485,6 +1428,24 @@ class StreamingSpec extends SparkSuite {
     assert(md > 0 &&
       mx <= graft.operators.Maintenance.DefaultHotCellRatio * md,
       s"post-refresh occupancy still hot: max $mx median $md")
+    // the drift batch's refresh was the last write: the index must now
+    // be content-identical to a one-shot build over base + both batches
+    (base ++ (healthy ++ drifted).map(v => (v.vec_id, v.embedding)))
+      .toDF("vec_id", "embedding").coalesce(1).write
+      .parquet(s"$merged/embeddings.parquet")
+    val (atM, ctM) = graft.operators.Similarity.ensureIvfIndex(spark, merged)
+    val (at, _) = graft.operators.Similarity.ensureIvfIndex(spark, dir)
+    Seq(at, ct, atM, ctM).foreach(spark.catalog.refreshTable)
+    def cents(t: String): Set[(Long, Seq[Float], Double)] =
+      spark.table(t).collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSet
+    def cells(t: String): Set[(Long, Long, Long)] =
+      spark.table(t).select("cid", "vec_id", "code").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(cents(ct) == cents(ctM),
+      "stream-refreshed centroids diverge from the one-shot build")
+    assert(cells(at) == cells(atM),
+      "stream-refreshed assignment diverges from the one-shot build")
   }
 
   test("delta dedup stream with maintainIndex catches cross-batch " +
@@ -1526,12 +1487,8 @@ class StreamingSpec extends SparkSuite {
 
     val got = scala.collection.mutable.Map.empty[Long, Set[(Long, Long, Double)]]
     val input = MemoryStream[CorpusStreams.Doc]
-    // compactEvery = 1: every batch folds df right after its append,
-    // so the stream ALSO exercises probe-after-compaction (a pure
-    // layout fold — the equality assertions below would catch any
-    // result drift it introduced)
     val q = CorpusStreams.deltaDedupStream(input.toDS(), dir,
-      maintainIndex = true, streamId = "t1", compactEvery = 1) { (df, id) =>
+      maintainIndex = true, streamId = "t1") { (df, id) =>
       got(id) = rowsOf(df)
     }.start()
     try {
@@ -1593,5 +1550,195 @@ class StreamingSpec extends SparkSuite {
       .collect().map(_.getLong(0)).toSet
     assert(all.contains(100L) && all.contains(200L),
       s"appended arrivals missing from the corpus ranking: $all")
+  }
+
+  /** Runs `writer` over micro-batches `b0` and `b1`, then simulates a
+    * driver crash after batch 1's append and before its checkpoint
+    * commit: `commits/1` is deleted and a NEW writer starts over the
+    * same MemoryStream and checkpointLocation, so Spark re-runs batch
+    * 1 under the same id (the restart mechanics of the "ingest stream
+    * with stateDir" test). Returns `state()` before and after the
+    * replay. */
+  private def replayLastBatch[T, A](input: MemoryStream[T], b0: Seq[T],
+      b1: Seq[T])(writer: () => org.apache.spark.sql.streaming
+        .DataStreamWriter[T])(state: () => A): (A, A) = {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_replay")
+      .resolve("ckpt").toString
+    val q1 = writer().option("checkpointLocation", ckpt).start()
+    try {
+      input.addData(b0); q1.processAllAvailable()
+      input.addData(b1); q1.processAllAvailable()
+    } finally q1.stop()
+    val before = state()
+    val commits = new java.io.File(ckpt, "commits")
+    Seq("1", ".1.crc").foreach(n => new java.io.File(commits, n).delete())
+    assert(!new java.io.File(commits, "1").exists())
+    val q2 = writer().option("checkpointLocation", ckpt).start()
+    try q2.processAllAvailable() finally q2.stop()
+    (before, state())
+  }
+
+  /** The applied-batch list of `dir`'s index in family `prefix`. */
+  private def appliedBatches(prefix: String, dir: String): Seq[(String, Long)] =
+    graft.operators.PersistedIndex.read(spark,
+      graft.operators.PersistedIndex.Spec(prefix, prefix, dir, Nil))
+      .map(_._2).getOrElse(Nil)
+
+  /** The replay law: batch 1 ran twice and emitted the same rows both
+    * times, and the index's applied-batch list (which holds both
+    * batches' tags) is unchanged by the replay. */
+  private def assertReplayed[E](got: Seq[(Long, E)], streamId: String,
+      before: Seq[(String, Long)], after: Seq[(String, Long)]): Unit = {
+    assert(got.map(_._1) == Seq(0L, 1L, 1L),
+      s"batch 1 did not re-run exactly once: ${got.map(_._1)}")
+    assert(got(1)._2 == got(2)._2,
+      s"replayed emission ${got(2)._2} != original ${got(1)._2}")
+    assert(Set(s"${streamId}_0", s"${streamId}_1")
+      .subsetOf(before.map(_._1).toSet), s"batches not appended: $before")
+    assert(after == before, s"replay changed the applied batches: $after")
+  }
+
+  private def emitted(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq)
+
+  test("delta dedup stream: a replayed micro-batch emits what it " +
+    "emitted before") {
+    val sp = spark; import sp.implicits._
+    implicit val sqlCtx = sp.sqlContext
+    graft.functions.GraftFunctions.register(spark)
+    import graft.streaming.CorpusStreams
+    def txt(g: Int, variant: Int = 0): String = {
+      val toks = (1 to 30).map(i => s"g${g}w$i").toArray
+      if (variant != 0) toks(29) = s"g${g}v$variant"
+      toks.mkString(" ")
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft_repdd")
+    val dir = new java.io.File(tmp.toFile, "d").toString
+    Seq(0L -> txt(0), 1L -> txt(1), 2L -> txt(2))
+      .toDF("doc_id", "text").coalesce(1).write
+      .parquet(s"$dir/documents.parquet")
+    // batch 1 pairs with batch 0 (400 ~ 301) and within itself
+    // (402 ~ 401): without the replay view the re-run would fail the
+    // disjointness guard on its own appended docs
+    val h1 = Seq(CorpusStreams.Doc(300L, txt(0, 1)),
+      CorpusStreams.Doc(301L, txt(9)))
+    val h2 = Seq(CorpusStreams.Doc(400L, txt(9, 1)),
+      CorpusStreams.Doc(401L, txt(10)), CorpusStreams.Doc(402L, txt(10, 1)))
+    val got = scala.collection.mutable.ListBuffer.empty[(Long, Seq[Seq[Any]])]
+    val input = MemoryStream[CorpusStreams.Doc]
+    val (before, after) = replayLastBatch(input, h1, h2) { () =>
+      CorpusStreams.deltaDedupStream(input.toDS(), dir,
+        maintainIndex = true, streamId = "rd") { (df, id) =>
+        got += id -> emitted(df)
+      }
+    } { () => appliedBatches("graft_shidx", dir) }
+    assert(got(1)._2.size == 2, s"batch 1 must emit two pairs: $got")
+    assertReplayed(got.toSeq, "rd", before, after)
+  }
+
+  test("ann stream: a replayed micro-batch emits what it emitted before") {
+    val sp = spark; import sp.implicits._
+    implicit val sqlCtx = sp.sqlContext
+    graft.functions.GraftFunctions.register(spark)
+    import graft.streaming.CorpusStreams
+    def vec(seed: Long): Array[Float] = {
+      val r = new scala.util.Random(seed)
+      Array.fill(64)(r.nextFloat() * 2 - 1)
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft_repann")
+    val dir = new java.io.File(tmp.toFile, "d").toString
+    (0L until 150L).map(i => (i, vec(i)))
+      .toDF("vec_id", "embedding").coalesce(1).write
+      .parquet(s"$dir/embeddings.parquet")
+    // 3000 copies batch 0's 2000 and 3001 copies 3000: without the
+    // replay view each would also find the other as its own batch's
+    // appended neighbour
+    val h1 = Seq(CorpusStreams.Vec(2000L, vec(777L)))
+    val h2 = Seq(CorpusStreams.Vec(3000L, vec(777L)),
+      CorpusStreams.Vec(3001L, vec(777L)))
+    val got = scala.collection.mutable.ListBuffer.empty[(Long, Seq[Seq[Any]])]
+    val input = MemoryStream[CorpusStreams.Vec]
+    val (before, after) = replayLastBatch(input, h1, h2) { () =>
+      CorpusStreams.annStream(input.toDS(), dir,
+        maintainIndex = true, streamId = "ra") { (df, id) =>
+        got += id -> emitted(df)
+      }
+    } { () => appliedBatches("graft_ivf", dir) }
+    assert(!got(1)._2.exists(r => r(0) == 3000L && r(1) == 3001L),
+      s"batch 1 saw its own rows: ${got(1)._2}")
+    assertReplayed(got.toSeq, "ra", before, after)
+  }
+
+  test("search ingest stream: a replayed micro-batch emits what it " +
+    "emitted before") {
+    val sp = spark; import sp.implicits._
+    implicit val sqlCtx = sp.sqlContext
+    import graft.streaming.CorpusStreams
+    val tmp = java.nio.file.Files.createTempDirectory("graft_replex")
+    val dir = new java.io.File(tmp.toFile, "d").toString
+    (0 until 10).map { g =>
+      (g.toLong, ((1 to 20).map(i => s"g${g}w$i") ++
+        Seq.fill(g % 3)("dup")).mkString(" "))
+    }.toDF("doc_id", "text").coalesce(1).write
+      .parquet(s"$dir/documents.parquet")
+    // batch 1's own 'dup' docs move df, n_docs and avgdl if the replay
+    // counted them
+    val b0 = Seq(CorpusStreams.Doc(100L, "dup dup alpha beta"),
+      CorpusStreams.Doc(101L, "gamma delta"))
+    val b1 = Seq(CorpusStreams.Doc(200L, "dup epsilon"),
+      CorpusStreams.Doc(201L, "dup dup dup zeta eta"))
+    val got = scala.collection.mutable.ListBuffer.empty[(Long, Seq[Seq[Any]])]
+    val input = MemoryStream[CorpusStreams.Doc]
+    val (before, after) = replayLastBatch(input, b0, b1) { () =>
+      CorpusStreams.searchIngestStream(input.toDS(), dir, Seq("dup"),
+        maintainIndex = true, streamId = "rs") { (df, id) =>
+        got += id -> emitted(df)
+      }
+    } { () => appliedBatches("graft_lexidx", dir) }
+    assert(got(1)._2.map(_.head) == Seq(200L, 201L),
+      s"batch-1 emission: ${got(1)._2}")
+    assertReplayed(got.toSeq, "rs", before, after)
+  }
+
+  test("semantic ingest stream: a replayed micro-batch emits the same " +
+    "pairs and leaves the cumulative labels unchanged") {
+    val sp = spark; import sp.implicits._
+    implicit val sqlCtx = sp.sqlContext
+    graft.functions.GraftFunctions.register(spark)
+    import graft.streaming.CorpusStreams
+    def vec(seed: Long): Array[Float] = {
+      val r = new scala.util.Random(seed)
+      Array.fill(64)(r.nextFloat() * 2 - 1)
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft_repsem")
+    val dir = new java.io.File(tmp.toFile, "d").toString
+    val sd = new java.io.File(tmp.toFile, "s").toString
+    (0L until 150L).map(i => (i, vec(i)))
+      .toDF("vec_id", "embedding").coalesce(1).write
+      .parquet(s"$dir/embeddings.parquet")
+    // the cross-batch chain 5 <- 2000 <- 3000, plus 3001 ~ 3000 inside
+    // batch 1 (a pair the replay must not double through its own rows)
+    val h1 = Seq(CorpusStreams.Vec(2000L, vec(5L)),
+      CorpusStreams.Vec(2001L, vec(888L)))
+    val h2 = Seq(CorpusStreams.Vec(3000L, vec(5L)),
+      CorpusStreams.Vec(3001L, vec(5L)))
+    val got = scala.collection.mutable.ListBuffer
+      .empty[(Long, Seq[(Long, Long, Double)])]
+    val labels = scala.collection.mutable.Map.empty[Long, Long]
+    val input = MemoryStream[CorpusStreams.Vec]
+    val (before, after) = replayLastBatch(input, h1, h2) { () =>
+      CorpusStreams.semanticIngestStream(input.toDS(), dir, tau = 0.99,
+        streamId = "rc", stateDir = Some(sd)) { (pairs, changed, id) =>
+        got += id -> pairs
+        changed.foreach(u => labels(u.node) = u.lbl)
+      }
+    } { () => (appliedBatches("graft_ivf", dir), labels.toMap) }
+    assert(got(1)._2.exists(p => p._1 == 3000L && p._2 == 2000L),
+      s"cross-batch link missing: ${got(1)._2}")
+    assert(before._2.get(3000L).contains(5L),
+      s"chain not merged before the replay: ${before._2}")
+    assertReplayed(got.toSeq, "rc", before._1, after._1)
+    assert(after._2 == before._2,
+      s"replay changed the cumulative labels: ${after._2}")
   }
 }

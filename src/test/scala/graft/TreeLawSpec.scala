@@ -39,6 +39,28 @@ class TreeLawSpec extends AnyFunSuite {
     }
   }
 
+  test("KeyOrdering ties only equal keys and equal-length integer keys " +
+    "of equal value") {
+    val ord = LiveExport.KeyOrdering
+    // the zero family: each negative zero ties the all-zero key of its
+    // length, and nothing else
+    val zeros = Seq("0", "00", "000", "0000", "-0", "-00", "-000")
+    val ties = scala.collection.mutable.Set.empty[(String, String)]
+    var seed = Seed(20261021L)
+    (1 to 300).foreach { round =>
+      val keys = draw(Gen.listOfN(12, cursorKey), seed) ++ zeros
+      seed = seed.next
+      for (a <- keys; b <- keys if a != b && ord.compare(a, b) == 0) {
+        val (x, y) = (LiveExport.parseIntKey(a), LiveExport.parseIntKey(b))
+        assert(x.isDefined && x == y && a.length == b.length,
+          s"round $round: '$a' ties '$b'")
+        ties += ((a, b))
+      }
+    }
+    assert(Set("-0" -> "00", "-00" -> "000", "-000" -> "0000")
+      .subsetOf(ties), s"tie set: $ties")
+  }
+
   test("flatten(assemble(flatten(t))) == flatten(t) on random trees") {
     def sorted(es: Seq[TreeCodec.Edge]) = es.sortBy(e => (e.path, e.key))
     var seed = Seed(20261020L)
