@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The Spark-native `do_backup` (SURVEY.md §7 step 3).
   *
@@ -13,9 +14,17 @@ import org.apache.spark.sql.functions._
   *
   *  - C1 pagination      -> `repartitionByRange(path, key)`: each output
   *    partition IS a key-range page, planned not looped.
-  *  - C2 adaptive sizing -> AQE + `maxPartitionBytes` right-size
-  *    partitions by bytes, the same quantity the reference's IPP
-  *    heuristically tracks.
+  *  - C2 adaptive sizing -> AQE sizes the backup's files by bytes, the
+  *    quantity the reference's IPP tracks heuristically. The range
+  *    shuffle starts at `spark.sql.shuffle.partitions` ranges (or
+  *    `spark.sql.adaptive.coalescePartitions.initialPartitionNum`
+  *    when set), and AQE merges neighbouring ranges up to a byte
+  *    target: `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  *    (64 MB), less when that would leave fewer files than the default
+  *    parallelism, never below
+  *    `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB).
+  *    At scale, set the initial count so that one range holds no more
+  *    than the target.
   *  - C3 go-deeper       -> range partitioning on (path, key) splits a
   *    fat node across as many partitions as it needs; no recursion.
   *
@@ -61,13 +70,16 @@ object Export {
     * Pass a materialized frame (LiveExport.export returns one; pin a
     * DSv2 `firebase` frame with `localCheckpoint()` first).
     *
-    * @param numPartitions output page count; at cluster scale set from
-    *        bytes/`maxPartitionBytes`, locally small.
+    * The file count follows the bytes, not a fixed page count: the
+    * range shuffle is given no partition count, so AQE may merge
+    * neighbouring ranges (see the C2 bullet above). A merge joins only
+    * contiguous ranges, so each file still holds one key range sorted
+    * by (path, key), and the files in part-number order are in global
+    * (path, key) order.
     */
-  def writeBackup(rows: DataFrame, outDir: String,
-                  numPartitions: Int = 8): Unit = {
+  def writeBackup(rows: DataFrame, outDir: String): Unit = {
     rows
-      .repartitionByRange(numPartitions, col("path"), col("key"))
+      .repartitionByRange(col("path"), col("key"))
       .sortWithinPartitions("path", "key")
       .write.mode(SaveMode.Overwrite)
       .option("compression", "zstd")
@@ -93,8 +105,20 @@ object Export {
            max("key").as("max_key"))
       .orderBy("path")
 
-  def readBackup(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/rows")
+  /** The schema of a backup's rows: [[writeBackup]] writes no other. */
+  val BackupSchema: StructType = StructType(
+    Seq("path", "key", "value_json").map(StructField(_, StringType)))
+
+  /** A backup's rows, read with the declared [[BackupSchema]], so no
+    * job runs to infer it from the file footers. A `rows/` directory
+    * with no data file (an empty or unfinished backup) fails here, as
+    * inference would, with a message naming `dir`; the check uses the
+    * listing the reader has already made. */
+  def readBackup(spark: SparkSession, dir: String): DataFrame = {
+    val rows = spark.read.schema(BackupSchema).parquet(s"$dir/rows")
+    require(rows.inputFiles.nonEmpty, s"backup $dir holds no row files")
+    rows
+  }
 
   /** Subtree restriction — the reference's `export <db> <path>` scope
     * (ExportCommand.php: the backup starts at an arbitrary node, not

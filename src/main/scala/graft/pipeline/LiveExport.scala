@@ -179,9 +179,10 @@ object LiveExport {
       * child KEY is "error" (a page of such a node answers
       * `{"error": <value>}` with 200), so here the status — which
       * Firebase does send (400 for size-capped reads) — is the signal,
-      * one of the deliberate production-shaped divergences. */
+      * one of the deliberate production-shaped divergences. Only a 2xx
+      * body is parsed. */
     private def isErrorResponse(resp: RestResponse): Boolean =
-      resp.status >= 400
+      resp.status < 200 || resp.status >= 300
 
     private def isEmptyPayload(n: JsonNode): Boolean =
       n == null || n.isNull || n.isMissingNode ||
@@ -189,7 +190,7 @@ object LiveExport {
 
     /** One page request of `itemsPerPage` children: the page (or the
       * scalar the path holds), or None when the answer says "shrink"
-      * (an error status or an empty payload). */
+      * (a transport failure, an error status or an empty payload). */
     private def fetchPage(path: String, startKey: Option[String],
                           preserveLastKey: Boolean,
                           itemsPerPage: Int): Option[PageOut] = {
@@ -198,10 +199,15 @@ object LiveExport {
       val query = Map("orderBy" -> "\"$key\"",
         "limitToFirst" -> itemsPerPage.toString) ++
         startKey.map(k => "startAt" -> mapper.writeValueAsString(k))
-      val resp = client.getR(path, query)
+      // a transport failure (the IOException getR throws) is a shrink,
+      // like an error status: a path that keeps failing reaches the
+      // floor, goes deeper, and ends in shallowKeys' capped retry
+      val resp = try client.getR(path, query)
+        catch { case _: IOException => return None }
       failIfDenied(resp, path)
-      val node = mapper.readTree(resp.body)
-      if (isErrorResponse(resp) || isEmptyPayload(node)) None
+      // an error body need not be JSON (a proxy's HTML 502 page)
+      val node = if (isErrorResponse(resp)) null else mapper.readTree(resp.body)
+      if (isEmptyPayload(node)) None
       else if (!node.isContainerNode)
         Some(ScalarLeaf(mapper.writeValueAsString(node)))
       else {
@@ -269,11 +275,13 @@ object LiveExport {
       * [[Backoff]] — the reference retries back-to-back, which against
       * a rate-limited live database burns all 10 attempts in
       * milliseconds; a transient quota window outlives our whole
-      * schedule. Array nodes list as their non-null element indices
+      * schedule. Any 2xx answer is definitive: the keys (`Right`), none
+      * for an empty path, or `Left` with the JSON of the scalar the
+      * path holds. Array nodes list as their non-null element indices
       * ([[TreeCodec.children]]). Keys sort in the server's cursor
       * order, which the go-deeper resume
       * (`shallow.indexOf(lastKey) + 1`) relies on. */
-    def shallowKeys(path: String): Vector[String] = {
+    private def listing(path: String): Either[String, Vector[String]] = {
       var tries = 0
       var transport: Option[IOException] = None
       while (tries < ShallowRetries) {
@@ -286,19 +294,18 @@ object LiveExport {
           case Left(e) => transport = Some(e)
           case Right(resp) =>
             failIfDenied(resp, path)
-            val node = mapper.readTree(resp.body)
             if (!isErrorResponse(resp)) {
-              if (node != null && node.isContainerNode && node.size() > 0)
-                // sorted in the SERVER's cursor order (integer keys
-                // first, numerically) — the go-deeper resume depends
-                // on it
-                return TreeCodec.children(node).map(_._1).toVector
-                  .sorted(KeyOrdering)
+              val node = mapper.readTree(resp.body)
               // a 200 null/{}/[] is DEFINITIVE: the path is empty (an
               // empty database, or a subtree deleted since planning) —
               // retrying a correct answer ~33s just to abort the whole
               // export would turn "nothing here" into a failure
-              if (isEmptyPayload(node)) return Vector.empty
+              if (isEmptyPayload(node)) return Right(Vector.empty)
+              if (!node.isContainerNode) return Left(mapper.writeValueAsString(node))
+              // sorted in the SERVER's cursor order (integer keys
+              // first, numerically) — the go-deeper resume depends on it
+              return Right(TreeCodec.children(node).map(_._1).toVector
+                .sorted(KeyOrdering))
             }
         }
       }
@@ -309,9 +316,18 @@ object LiveExport {
       throw failure
     }
 
+    /** The child keys of `path` by [[listing]]. A path that holds a
+      * scalar has none, as [[Export.subtree]] of it has no rows. */
+    def shallowKeys(path: String): Vector[String] = listing(path).getOrElse(Vector.empty)
+
     /** The reference's `getData` loop (BackupProcessor.php:71-136):
       * paginate `path`, recursing into children too large to page. */
     def fetchSubtree(path: String, emit: TreeCodec.Edge => Unit): Unit = {
+      // a path that holds a scalar IS one edge at its parent
+      def leaf(json: String): Unit = {
+        val (parent, key) = TreeCodec.splitPath(path)
+        emit(TreeCodec.Edge(parent, key, json))
+      }
       var firstKey: Option[String] = None
       var preserveLastKey = false
       var isLastPage = false
@@ -319,9 +335,7 @@ object LiveExport {
       while (!isLastPage) {
         getPathsPaginated(path, firstKey, preserveLastKey) match {
           case ScalarLeaf(json) =>
-            // the path itself is a leaf: it IS one edge at its parent
-            val (parent, key) = TreeCodec.splitPath(path)
-            emit(TreeCodec.Edge(parent, key, json))
+            leaf(json)
             isLastPage = true
           case Page(data, lastKey, last) =>
             data.foreach { case (k, v) =>
@@ -330,7 +344,9 @@ object LiveExport {
             isLastPage = last
             preserveLastKey = false
           case GoDeeper =>
-            if (shallowCache == null) shallowCache = shallowKeys(path)
+            // a leaf whose page GETs failed shows in its listing
+            if (shallowCache == null) shallowCache =
+              listing(path).fold(json => { leaf(json); Vector.empty }, identity)
             val shallow = shallowCache
             if (shallow.isEmpty) isLastPage = true
             else {
@@ -387,7 +403,8 @@ object LiveExport {
       * first page, so if even it is too large (the exact condition the
       * serial walker answers with recursion) no page size fits, and the
       * subtree is too fat to be one task's unit of work — return its
-      * shallow children as independent work items. Anything else (a
+      * shallow children as independent work items. A failed probe does
+      * the same, unless the listing finds a scalar. Anything else (a
       * normal page, a scalar leaf) means the path is walkable whole:
       * return empty. The probe page itself is discarded (edge data
       * never routes through the driver) and the walker's IPP state is
@@ -396,7 +413,8 @@ object LiveExport {
       * halving ladder. */
     def probeSplit(path: String): Seq[String] =
       fetchPage(path, None, preserveLastKey = false, MinIpp) match {
-        case None => shallowKeys(path).map(TreeCodec.childPath(path, _))
+        // a listing that finds a scalar: walk the leaf whole
+        case None => listing(path).fold(_ => Nil, _.map(TreeCodec.childPath(path, _)))
         case Some(_) => Nil
       }
   }

@@ -113,6 +113,20 @@ object Restore {
     * sequence after the path's earlier runs have finished (PATCH
     * semantics make replays safe), it just costs more update() calls.
     *
+    * One task drains each scan partition, and a small file is never
+    * split between two, so the backup's file count caps the restore's
+    * tasks; [[Export.writeBackup]] sizes the files by bytes. A backup
+    * below AQE's minimum partition size (1 MB by default) is one file,
+    * so its restore is one task with [[InFlight.Window]] PATCHes in
+    * flight, not one window per file, and takes about PATCHes x round
+    * trip / `Window`. Against a sink that waits 20 ms per PATCH and
+    * serves every one at once (`graft.RestoreLatency` in the tests,
+    * local[8]), 14,000 PATCHes (56,000 edges, 0.8 MB stored, one file)
+    * took 35.8 s, against 4.7 s for the same rows in 8 files. A backup
+    * of a few MB has fewer files than task slots and pays part of that;
+    * larger backups keep one task per file. It is still `Window` times
+    * the reference's serial replay.
+    *
     * `maxStalled` and `sleep` are passed to every [[drainPath]]. */
   def restore(rows: DataFrame, sink: KVSink, maxStalled: Int = 64,
               sleep: Long => Unit = Thread.sleep): Unit = {

@@ -1,15 +1,21 @@
 package graft
 
+import graft.pipeline.{Archive, Export, TreeCodec}
+import org.apache.spark.sql.functions.{col, sum}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.ByteArrayInputStream
+import java.nio.file.Files
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Instant
 
 /** CLI option surface parity with the reference's commands
   * (ExportCommand.php:15-48, ImportCommand.php:33-44): flag parsing,
   * the timestamped default backup name, and the stdin confirmation
-  * gate. Pure-function tests — no Spark session needed. */
+  * gate as pure-function tests; and the commands that write a backup
+  * (`export`, `migrate`) on the shared test session. */
 class CliSpec extends AnyFunSuite {
 
   test("parseArgs splits positionals from --key value / --key=value") {
@@ -68,5 +74,68 @@ class CliSpec extends AnyFunSuite {
     assert(!gate("y\n"))
     assert(!gate("YES\n")) // the reference compares exact lowercase
     assert(!gate(""))      // EOF = refuse
+  }
+
+  // --- the commands that write a backup -------------------------------
+  private def spark = TestSpark.session
+
+  /** The backup at `dir`: its rows as edges, checked against its
+    * manifest, whose `n_keys` must add up to the row count. */
+  private def backupEdges(dir: String): Seq[TreeCodec.Edge] = {
+    val rows = Export.readBackup(spark, dir).collect().toSeq
+      .map(r => TreeCodec.Edge(r.getString(0), r.getString(1), r.getString(2)))
+    val keys = spark.read.json(s"$dir/manifest").agg(sum(col("n_keys")))
+      .head().getLong(0)
+    assert(keys == rows.size, s"manifest n_keys $keys vs ${rows.size} rows")
+    rows
+  }
+
+  private def sorted(es: Seq[TreeCodec.Edge]) = es.sortBy(e => (e.path, e.key))
+
+  /** Eight random documents, one per line, each under its own top-level
+    * key `d<i>`. */
+  private lazy val docs: Seq[String] = {
+    var seed = Seed(20261019L)
+    (1 to 8).map { i =>
+      val tree = RandomTrees.node(3).apply(Gen.Parameters.default, seed)
+        .getOrElse(sys.error("gen failed"))
+      seed = seed.next
+      s"""{"d$i": $tree}"""
+    }
+  }
+
+  test("export writes a backup of the flattened edges, whole or one subtree") {
+    val in = Files.createTempDirectory("cli-trees")
+    Files.write(in.resolve("trees.json"), docs.mkString("\n").getBytes(UTF_8))
+    val edges = docs.flatMap(TreeCodec.flatten(_))
+    val out = Files.createTempDirectory("cli-export").toString
+    Console.withOut(new java.io.ByteArrayOutputStream()) {
+      Cli.run(Array("export", in.toString, out), spark)
+    }
+    assert(sorted(backupEdges(out)) == sorted(edges))
+
+    val sub = Files.createTempDirectory("cli-export-sub").toString
+    Console.withOut(new java.io.ByteArrayOutputStream()) {
+      Cli.run(Array("export", in.toString, sub, "/d3"), spark)
+    }
+    val under = edges.filter(e => e.path == "/d3" || e.path.startsWith("/d3/"))
+    assert(under.nonEmpty && under.size < edges.size)
+    assert(sorted(backupEdges(sub)) == sorted(under))
+  }
+
+  test("migrate turns a reference archive into a backup of its edges") {
+    val sp = spark; import sp.implicits._
+    val edges = docs.flatMap(TreeCodec.flatten(_))
+    val tar = Files.createTempDirectory("cli-archive").resolve("ref.tar.gz")
+    Archive.writeReferenceArchive(
+      edges.map(e => (e.path, e.key, e.valueJson)).toDF("path", "key", "value_json"),
+      tar.toString)
+    val archived = Archive.edgesFromArchive(Files.readAllBytes(tar))
+    assert(sorted(archived) == sorted(edges))
+    val out = Files.createTempDirectory("cli-migrate").toString
+    Console.withOut(new java.io.ByteArrayOutputStream()) {
+      Cli.run(Array("migrate", tar.toString, out), spark)
+    }
+    assert(sorted(backupEdges(out)) == sorted(archived))
   }
 }

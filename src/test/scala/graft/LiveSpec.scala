@@ -234,44 +234,37 @@ class LiveSpec extends SparkSuite {
     } finally stub.stop()
   }
 
-  /** An `HttpRestClient` whose first `n` shallow listings fail in
-    * transport: `getR` throws IOException, as on a connection reset. */
-  private def transportFailing(url: String, n: Int): RestClient =
-    new RestClient {
-      private val http = new HttpRestClient(url)
-      private val left = new java.util.concurrent.atomic.AtomicInteger(n)
-      def getR(path: String, query: Map[String, String]): RestResponse =
-        if (query.get("shallow").contains("true") && left.get() > 0) {
-          left.decrementAndGet()
-          throw new java.io.IOException("connection reset")
-        } else http.getR(path, query)
-      def patch(path: String, bodyJson: String): Boolean =
-        http.patch(path, bodyJson)
-    }
-
-  /** One walker per failure mode of the first `n` shallow listings: the
-    * server answers 503, or the transport throws IOException. */
-  private def shallowFailing(json: String, n: Int)(
+  /** One walker per failure mode of the first `n` shallow listings of
+    * `/big` (and of its first `pages` page GETs, where the client
+    * injects the fault): the server answers 503, a proxy answers an
+    * HTML 502, or the transport throws IOException. The check is told
+    * whether the failure was in transport. */
+  private def shallowFailing(json: String, n: Int, pages: Int = 0)(
       check: (LiveExport.Walker, Boolean) => Unit): Unit =
-    Seq(false, true).foreach { transport =>
+    Seq("503", "502", "reset").foreach { mode =>
       val stub = new FirebaseStub(maxPayloadBytes = 600,
-        failShallow = if (transport) 0 else n)
+        failShallow = if (mode == "503") n else 0)
       try {
         stub.seed(json)
         val client =
-          if (transport) transportFailing(stub.url, n)
-          else new HttpRestClient(stub.url)
-        check(new LiveExport.Walker(client, sleep = _ => ()), transport)
+          if (mode == "503") new HttpRestClient(stub.url)
+          else FaultyClient(stub.url, s"big-$mode-${System.nanoTime()}",
+            "/big", pages, n, html = mode == "502")
+        check(new LiveExport.Walker(client, sleep = _ => ()), mode == "reset")
       } finally stub.stop()
     }
 
   test("shallow listing failing 10x raises BackupFailure (retry cap)") {
-    // go-deeper needs shallow keys; the listing fails 10 times
+    // go-deeper needs shallow keys; the listing fails 10 times, after
+    // /big's page GETs failed for their size, or failed for good
     val fat = (1 to 200).map(i => s""""k$i": "${"x" * 10}$i"""").mkString(",")
-    shallowFailing(s"""{"big": {"fat": {$fat}}}""", 10) { (walker, transport) =>
-      val e = intercept[LiveExport.BackupFailure] { walker.fetchTree("/big") }
-      assert(e.getCause.isInstanceOf[java.io.IOException] == transport,
-        s"cause: ${e.getCause}")
+    Seq(0, Int.MaxValue).foreach { pages =>
+      shallowFailing(s"""{"big": {"fat": {$fat}}}""", 10, pages) {
+        (walker, transport) =>
+          val e = intercept[LiveExport.BackupFailure] { walker.fetchTree("/big") }
+          assert(e.getCause.isInstanceOf[java.io.IOException] == transport,
+            s"pages=$pages, cause: ${e.getCause}")
+      }
     }
   }
 
@@ -280,6 +273,56 @@ class LiveSpec extends SparkSuite {
     val json = s"""{"big": {"fat": {$fat}}}"""
     shallowFailing(json, 9) { (walker, _) =>
       assert(walker.fetchTree("/big").toSet == edgesOf(json))
+    }
+  }
+
+  test("failed page GETs and listings are retried smaller: walk and export stay exact") {
+    // each fault is a transport failure or a proxy's HTML 502
+    Seq(false, true).foreach { html =>
+      def client(url: String, path: String, pages: Int, listings: Int) =
+        FaultyClient(url, s"$path-$html-${System.nanoTime()}", path, pages,
+          listings, html)
+      // the walk: /users' first 12 page GETs fail, so it halves to the
+      // floor, goes deeper (its first listing fails too), and resumes
+      // paging once the faults stop
+      val stub = new FirebaseStub()
+      try {
+        stub.seed(wideTree)
+        val c = client(stub.url, "/users", 12, 1)
+        val got = new LiveExport.Walker(c, sleep = _ => ()).fetchTree("/users")
+        assert(got.toSet == edgesOf(wideTree).filter(_.path.startsWith("/users")),
+          s"html=$html")
+        assert(FaultyClient.seen(c.id, "page") > 12 &&
+          FaultyClient.seen(c.id, "listing") == 2, s"html=$html")
+      } finally stub.stop()
+      // a scalar whose page GETs all fail goes deeper, and its listing
+      // answers the leaf
+      val leafStub = new FirebaseStub()
+      try {
+        leafStub.seed(fatTree)
+        val c = client(leafStub.url, "/tiny", Int.MaxValue, 0)
+        val got = new LiveExport.Walker(c, sleep = _ => ()).fetchTree("/tiny")
+        assert(got == Seq(TreeCodec.Edge("/", "tiny", "1")), s"html=$html")
+        assert(FaultyClient.seen(c.id, "listing") == 1, s"html=$html")
+      } finally leafStub.stop()
+      // the export: the root listing fails 3 times; /fat's probe and 2
+      // listings fail while planning splits it; /cfg's failed probe
+      // splits it into its scalar child; the scalar /tiny's failed
+      // probe lists a leaf, which is walked whole
+      Seq(("/", 0, 3), ("/fat", 1, 2), ("/cfg", 1, 0), ("/tiny", 1, 0)).foreach {
+        case (path, pages, listings) =>
+          val stub = new FirebaseStub(maxPayloadBytes = 600)
+          try {
+            stub.seed(fatTree)
+            val c = client(stub.url, path, pages, listings)
+            val df = LiveExport.export(spark, () => c)
+            assert(ordered(edgeRows(df)) == ordered(TreeCodec.flatten(fatTree)),
+              s"$path, html=$html")
+            // every fault was injected
+            assert(FaultyClient.seen(c.id, "page") >= pages &&
+              FaultyClient.seen(c.id, "listing") >= listings, s"$path, html=$html")
+          } finally stub.stop()
+      }
     }
   }
 
@@ -710,7 +753,7 @@ class LiveSpec extends SparkSuite {
       val srcUrl = src.url
       val edges = LiveExport.export(spark, () => new HttpRestClient(srcUrl))
       val dir = Files.createTempDirectory("live_rt").toString
-      Export.writeBackup(edges, dir, numPartitions = 4)
+      Export.writeBackup(edges, dir)
       val back = Export.readBackup(spark, dir)
       Restore.restore(back, new Restore.HttpKVSink(dst.url))
       assert(TreeCodec.jsonEqual(dst.snapshot(), wideTree))
@@ -769,7 +812,7 @@ class LiveSpec extends SparkSuite {
       val u = stub.url
       val dir = Files.createTempDirectory("live_once").toString
       Export.writeBackup(LiveExport.export(spark, () => new HttpRestClient(u)),
-        dir, numPartitions = 4)
+        dir)
       val repeats = stub.getRequests.groupBy(identity)
         .collect { case (req, n) if n.size > 1 => req -> n.size }
       assert(repeats.isEmpty,
@@ -858,4 +901,37 @@ class LiveSpec extends SparkSuite {
     // the generator must reach both verdicts
     assert(splitRounds > 0 && splitRounds < 24, s"$splitRounds of 24 rounds split")
   }
+}
+
+/** An `HttpRestClient` whose first `pages` page GETs and first
+  * `listings` shallow listings of `path` fail: the transport throws
+  * IOException, as on a connection reset, or with `html` a proxy
+  * answers 502 with an HTML page. Serializable, since the export builds
+  * one per work item in its tasks; the counts live in the JVM, under
+  * `id`. */
+final case class FaultyClient(url: String, id: String, path: String,
+                              pages: Int, listings: Int, html: Boolean)
+    extends RestClient {
+  def getR(p: String, query: Map[String, String]): RestResponse = {
+    val listing = query.get("shallow").contains("true")
+    val budget = if (listing) listings else pages
+    if (p == path &&
+        FaultyClient.count(id, if (listing) "listing" else "page") <= budget) {
+      if (html) RestResponse(502, "<html>Bad Gateway</html>")
+      else throw new java.io.IOException("connection reset")
+    } else new HttpRestClient(url).getR(p, query)
+  }
+  def patch(p: String, bodyJson: String): Boolean =
+    new HttpRestClient(url).patch(p, bodyJson)
+}
+
+object FaultyClient {
+  private val counts =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), java.util.concurrent.atomic.AtomicInteger]()
+  private def counter(id: String, kind: String) =
+    counts.computeIfAbsent((id, kind), _ => new java.util.concurrent.atomic.AtomicInteger())
+  /** Counts one more GET of `kind` at the faulty path; its 1-based number. */
+  def count(id: String, kind: String): Int = counter(id, kind).incrementAndGet()
+  /** GETs of `kind` seen at the faulty path. */
+  def seen(id: String, kind: String): Int = counter(id, kind).get()
 }

@@ -2,9 +2,14 @@ package graft
 
 import graft.pipeline.{Export, Restore, TreeCodec}
 import graft.pipeline.TreeCodec.Edge
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+import java.io.File
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
@@ -305,7 +310,7 @@ class PipelineSpec extends SparkSuite {
     ).toDS()
     val rows = Export.flattenTrees(trees)
     val dir = Files.createTempDirectory("graft_backup").toString
-    Export.writeBackup(rows, dir, numPartitions = 3)
+    Export.writeBackup(rows, dir)
 
     val back = Export.readBackup(spark, dir)
     assert(back.count() == rows.count())
@@ -323,6 +328,119 @@ class PipelineSpec extends SparkSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(mf.values.sum == rows.count())
     assert(mf.keySet == expected.keySet.map(_._1))
+  }
+
+  // --- the backup artifact: files sized by bytes, read by schema ------
+  /** 12 `RandomTrees` frames under their own roots plus one path of
+    * 3,000 keys, as (path, key, value_json). */
+  private lazy val layoutRows: Seq[(String, String, String)] = {
+    var seed = Seed(20261019L)
+    val trees = (1 to 12).flatMap { i =>
+      val json = RandomTrees.node(3).apply(Gen.Parameters.default, seed)
+        .getOrElse(sys.error("gen failed"))
+      seed = seed.next
+      TreeCodec.flatten(json, s"/t$i")
+    }
+    val wide = (0 until 3000).map(i => Edge("/wide", f"k$i%05d", s""""v$i""""))
+    (trees ++ wide).map(e => (e.path, e.key, e.valueJson))
+  }
+
+  private def tuples(df: org.apache.spark.sql.DataFrame) =
+    df.select("path", "key", "value_json").collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+
+  /** Writes `layoutRows` under `session` and checks the layout law: the
+    * part files, read one at a time in name order, are in global
+    * (path, key) order under Spark's string order; the backup reads
+    * back as the input rows and restores to them; the manifest is the
+    * manifest of the rows read back. Returns each file's paths in name
+    * order. */
+  private def checkLayout(session: SparkSession, name: String): Seq[Set[String]] = {
+    import session.implicits._
+    val dir = Files.createTempDirectory("graft_layout").toString
+    Export.writeBackup(layoutRows.toDF("path", "key", "value_json"), dir)
+    val parts = new File(s"$dir/rows").listFiles().toSeq
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val perFile = parts.map(f => tuples(session.read.parquet(f.getPath)))
+    def utf8(s: String) = UTF8String.fromString(s)
+    val inOrder = perFile.flatten.map(t => (t._1, t._2)).sliding(2).forall {
+      case Seq((p1, k1), (p2, k2)) =>
+        val c = utf8(p1).compareTo(utf8(p2))
+        c < 0 || (c == 0 && utf8(k1).compareTo(utf8(k2)) < 0)
+      case _ => true
+    }
+    assert(inOrder, s"${parts.size} part files are not in global (path, key) order")
+    val back = Export.readBackup(session, dir)
+    assert(tuples(back).sortBy(t => (t._1, t._2)) == layoutRows.sortBy(t => (t._1, t._2)))
+    val sink = new MemorySink()
+    SinkRegistry.sinks.put(name, sink)
+    Restore.restore(back, RegistrySink(name))
+    assert(sink.store.asScala.toMap ==
+      layoutRows.map { case (p, k, v) => (p, k) -> v }.toMap)
+    def manifestRows(df: org.apache.spark.sql.DataFrame) =
+      df.select("path", "n_keys", "min_key", "max_key").collect().toSet
+        .map((r: org.apache.spark.sql.Row) =>
+          (r.getString(0), r.getLong(1), r.getString(2), r.getString(3)))
+    assert(manifestRows(session.read.json(s"$dir/manifest")) ==
+      manifestRows(Export.manifest(session, back)))
+    perFile.map(_.map(_._1).toSet)
+  }
+
+  test("backup layout: byte-sized files hold contiguous key ranges in global order") {
+    // the test session's AQE merges the small backup into one file
+    assert(checkLayout(spark, "layout-aqe").size == 1)
+    // without merging, 5 ranges: several files, and the 3,000-key path
+    // split across them
+    val ranged = spark.newSession()
+    ranged.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    ranged.conf.set("spark.sql.shuffle.partitions", "5")
+    val files = checkLayout(ranged, "layout-ranged")
+    assert(files.size > 1, s"${files.size} part files")
+    assert(files.count(_.contains("/wide")) > 1, "no path split across files")
+  }
+
+  /** Spark jobs `f` starts on this thread (its job group). */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try { f; assert(GraftListenerBridge.drain(sc, 30000L)) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    n.get
+  }
+
+  test("readBackup runs no job, reads BackupSchema, and refuses a backup with no row files") {
+    val sp = spark; import sp.implicits._
+    val rows = layoutRows.take(500)
+    val dir = Files.createTempDirectory("graft_reader").toString
+    Export.writeBackup(rows.toDF("path", "key", "value_json"), dir)
+
+    var back: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { back = Export.readBackup(spark, dir) } == 0)
+    assert(back.schema == Export.BackupSchema)
+
+    // the restore of a written backup is its one foreachPartition job
+    val sink = new MemorySink()
+    SinkRegistry.sinks.put("reader", sink)
+    assert(jobsOf {
+      Restore.restore(Export.readBackup(spark, dir), RegistrySink("reader"))
+    } == 1)
+    assert(sink.store.asScala.toMap ==
+      rows.map { case (p, k, v) => (p, k) -> v }.toMap)
+
+    // an unfinished backup: rows/ holds only the commit marker
+    val empty = Files.createTempDirectory("graft_no_rows")
+    Files.createDirectories(empty.resolve("rows"))
+    Files.createFile(empty.resolve("rows/_SUCCESS"))
+    val e = intercept[Exception](Export.readBackup(spark, empty.toString))
+    assert(e.getMessage.contains(empty.toString), e.getMessage)
   }
 
 }
