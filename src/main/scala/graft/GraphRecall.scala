@@ -117,8 +117,9 @@ object GraphRecall {
     // ids are orig + i*vecSpan, so `vec_id % every == 0` collapses the
     // probe set to origs ≡ 0 (mod gcd(every, vecSpan)) — at the 32x
     // gate (span 500, every 80) only 25 distinct source directions
-    // were ever probed, and an id-residue-structured slice (DriftGate's
-    // %4 drift ids) could be excluded from the gate wholesale.
+    // were ever probed, and an id-residue-structured slice (drift
+    // arriving on ids ≡ 3 mod 4) could be excluded from the gate
+    // wholesale.
     // measure() probes the PERSISTED graph, not the knnGraph foil:
     // content-identical by the SimilaritySpec build law, but the index
     // build runs the top-k pass in disk-budgeted q-side chunks — the

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   * runs the whole cell's scoring + selection in primitive loops, like
   * [[NearestCells]] does for the quantizer.
   *
-  * Selection contract (must stay bit-identical to the window foil
+  * Selection contract (must stay bit-identical to the window
   * `row_number over (partition by src order by round(cos, 6) desc,
   * dst asc)`):
   *  - ranking uses the ROUNDED score — two raw cosines that round

@@ -42,7 +42,7 @@ final case class MaintenanceReport(index: String, action: String,
   *    a base build and repays it (the r15 AppendSmoke curve) — so the
   *    fold fires just before the tax becomes measurable.
   *  - `DefaultHotCellRatio` = 16: healthy (fresh or refreshed) IVF
-  *    indexes sit at 4.3-4.9x median cell occupancy (DriftGate at
+  *    indexes sit at 4.3-4.9x median cell occupancy (drift-gate runs at
   *    256k and 1,024k vectors), while frozen centroids under a 25%
   *    concentrated drift collapse to 92-192x; 16 separates the two
   *    regimes with >3x margin on both sides.

@@ -324,7 +324,7 @@ object Similarity {
     * is a centroid iff its seeded md5 bucket ≡ 0 (mod `mod`) — the
     * q_data_split hash idiom, bit-identical in DuckDB so every
     * cell-deriving oracle re-computes the SAME sample. The first cut
-    * used raw `vec_id % mod == 0`, and the 64k DriftGate rung broke
+    * used raw `vec_id % mod == 0`, and the 64k drift-gate rung broke
     * it structurally: centroidMod(64000) = 252 ≡ 0 (mod 4), so a
     * drifted data source arriving on ids ≡ 3 (mod 4) could NEVER
     * contribute a centroid — the whole 16k drift cloud piled into one
@@ -342,8 +342,8 @@ object Similarity {
   /** The hash-sampling idiom itself (seeded md5 bucket ≡ 0 mod `mod`)
     * — EVERY deterministic 1/mod sample in the repo must go through
     * this, never a raw id modulus (rule 28: id-residue-structured
-    * ingest — replica strides, sharded id assignment, DriftGate's %4
-    * drift slice — correlates with any raw modulus and can be
+    * ingest — replica strides, sharded id assignment, a %4 drift
+    * slice — correlates with any raw modulus and can be
     * excluded or over-selected wholesale). */
   private[graft] def hashPick(id: Column, seed: String, mod: Long): Column =
     (conv(substring(md5(concat(id.cast("string"),
@@ -653,7 +653,7 @@ object Similarity {
     * but cell OCCUPANCY degrades: the drifted mass piles into the few
     * base cells nearest the new region, so every probe touching them
     * scans O(drift-fraction x n) rows instead of O(sqrt n)
-    * ([[graft.DriftGate]] measures exactly this).
+    * (SimilaritySpec's hot-cell maintenance case plants exactly this).
     *
     * The refresh re-picks centroids with the build's own deterministic
     * rule (vec_id % centroidMod(n) == 0) over the MERGED rows read
@@ -727,7 +727,7 @@ object Similarity {
     true
   }
 
-  /** (max, median) assignment rows per IVF cell — the DriftGate
+  /** (max, median) assignment rows per IVF cell — the drift-gate
     * occupancy statistic as a first-class health check. A hot cell is
     * the measured symptom of centroid staleness under concentrated
     * ingest drift: recall holds (arrivals land in their nearest stored
@@ -763,7 +763,7 @@ object Similarity {
     * canary used absolute fit and was refuted by its own spec
     * fixture). Planted near-dups sit in the BASELINE distribution
     * (the build-time sample sees them too), so they never read as
-    * drift. This is the marginal-coverage erosion DriftGate measured
+    * drift. This is the marginal-coverage erosion the drift gate measured
     * costing real tau-gate verdicts (sem_base_frozen 0.667 at 64k AND
     * 256k) in a regime the 16x occupancy trigger cannot see.
     *
@@ -853,7 +853,7 @@ object Similarity {
     * `maintainEvery` runs this policy; [[Maintenance]]):
     *
     *  1. hot cell (max > `hotCellRatio` x median occupancy, the
-    *     DriftGate drift signature) -> [[refreshIvfCentroids]], which
+    *     measured drift signature) -> [[refreshIvfCentroids]], which
     *     re-fits the quantizer AND folds the file layout + re-buckets
     *     in its rewrite — the expensive O(n x nlist) reassignment is
     *     paid only when cells have actually degraded;
@@ -1113,32 +1113,23 @@ object Similarity {
     * where a row_number window LOCAL-SORTS every scored pair (the
     * rule-31a hazard — the candidate volume grows with the corpus).
     * r20 A/B (sf0.1, 5 interleaved reps): pq 1.223 -> 0.871 s min,
-    * ivfpq 1.141 -> 0.981 s. `window = true` is that global window,
-    * kept as the law tests' reference: (adc desc, nid asc) is a total
-    * order, so both forms select the same set (SimilaritySpec pins
-    * row equality for both operators).
+    * ivfpq 1.141 -> 0.981 s. (adc desc, nid asc) is a total order, so
+    * the aggregate selects exactly the window's set; SimilaritySpec
+    * pins it against a row_number reference of its own.
     *
     * `pinned`: the candidates were planned under a
     * [[shortlistSession]] clone, so the shortlist MATERIALIZES there
     * (lazy composition into the caller-rooted re-rank would plan the
     * aggregate under the caller's default threshold); the pin is
     * probes x r ids. */
-  private[graft] def adcShortlist(cand: DataFrame, r: Int, window: Boolean,
+  private[graft] def adcShortlist(cand: DataFrame, r: Int,
                                   pinned: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val live = cand.filter(!isnan(col("adc")))
-    val top =
-      if (window)
-        live.withColumn("arn", row_number().over(
-            Window.partitionBy("qid").orderBy(desc("adc"), asc("nid"))))
-          .filter(col("arn") <= r)
-          .select("qid", "nid")
-      else
-        live.groupBy("qid")
-          .agg(graft.functions.GraftFunctions
-            .topKEdges(col("nid"), col("adc"), r).as("tk"))
-          .select(col("qid"), explode(col("tk")).as("e"))
-          .select(col("qid"), col("e.dst").as("nid"))
+    val top = cand.filter(!isnan(col("adc")))
+      .groupBy("qid")
+      .agg(graft.functions.GraftFunctions
+        .topKEdges(col("nid"), col("adc"), r).as("tk"))
+      .select(col("qid"), explode(col("tk")).as("e"))
+      .select(col("qid"), col("e.dst").as("nid"))
     if (pinned) top.localCheckpoint() else top
   }
 
@@ -1210,8 +1201,8 @@ object Similarity {
     * of the scale path. Oracle-exempt like the rest of the ANN family
     * (codebook-specific); SimilaritySpec pins the encode law, the
     * determinism law, and the recall floor vs brute force. */
-  private[graft] def pqTopK(s: SparkSession, d: String, k: Int = 5,
-                            shortlistWindow: Boolean = false): DataFrame = {
+  private[graft] def pqTopK(s: SparkSession, d: String,
+                            k: Int = 5): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val n = math.max(1L, emb.count())
     val refine = pqRefine(n)
@@ -1236,7 +1227,7 @@ object Similarity {
       .select(col("qid"), col("nid"),
         (graft.functions.GraftFunctions.pqAdcScore(col("qid"), col("code"),
           cb.m, cb.ks, lutH) / col("ncn")).as("adc"))
-    val top = adcShortlist(cand, r, shortlistWindow, pinned = aggS.isDefined)
+    val top = adcShortlist(cand, r, pinned = aggS.isDefined)
     val scored = scorable(emb).withColumnRenamed("vec_id", "nid")
       .join(broadcast(top), "nid")
       .join(broadcast(probeQ), "qid")
@@ -1401,8 +1392,7 @@ object Similarity {
     * lets a serving tier drop the vector column from hot storage
     * entirely. On a warm single node, use [[ivfProbe]]. */
   private[graft] def ivfPqProbe(s: SparkSession, d: String,
-                                probeVecs: DataFrame, k: Int,
-                                shortlistWindow: Boolean = false): DataFrame = {
+                                probeVecs: DataFrame, k: Int): DataFrame = {
     val (at, ct) = ensureIvfIndex(s, d)
     val cb = loadPqCodebooks(s, d)
     val centroids = s.table(ct)
@@ -1442,7 +1432,7 @@ object Similarity {
     // below the 256k rung (whose 1/32 is already 1012).
     val r = math.max(k * 128,
       math.ceil(n.toDouble * nprobe / nlist / 32.0).toInt)
-    val top = adcShortlist(cand, r, shortlistWindow, pinned = aggS.isDefined)
+    val top = adcShortlist(cand, r, pinned = aggS.isDefined)
     val probeQ = cells.select("qid", "qe", "qn").dropDuplicates("qid")
     val scored = s.table(at).filter(col("cid").isin(cellIds: _*))
       .select(col("vec_id").as("nid"), col("ce"), col("cn"))
@@ -2034,17 +2024,6 @@ object Similarity {
   @volatile private[graft] var LastGraphBuild: (Int, Long, Double) =
     (0, 0L, 0.0)
 
-  /** Law-test hook: run the graph build's per-chunk top-k in the
-    * window form ([[windowTopK]]), the kernel's reference foil.
-    * Production is the cell-block kernel — sort-free, spill-free,
-    * pair-machinery-free; the r18 profile measured the pair-stream
-    * forms at ~2 µs of row machinery PER SCORED PAIR (BuildProbe at
-    * the 512k rung: 1935 s, ~1921 of them in the join+aggregate
-    * stages over 32.8G pairs = n²·np/nlist·occ with np ~ nlist/8 —
-    * n²/8, nlist cancels), which the kernel removes by scoring whole
-    * member blocks per probe row. */
-  @volatile private[graft] var GraphBuildUseWindow = false
-
   /** Hard ceiling for the build's ObjectHashAggregate fallback
     * threshold: ~112 B of top-k state per src key puts 4M keys at
     * ~450 MB/task — the most in-memory aggregation state a build
@@ -2058,17 +2037,6 @@ object Similarity {
     * production. */
   @volatile private[graft] var GraphBuildConfProbe
       : Option[() => Unit] = None
-
-  /** Law-test hook: force [[foldGraphBatch]]'s two scoring
-    * passes back to the pair-stream window form. Production default
-    * is the cell-block kernel ([[cellBlockTopK]]): the fold's batch
-    * adjacency pass scores batch x ring-occupancy pairs — batch x
-    * np x n/nlist ~ batch x n/8 with np ~ nlist/8, so at 1M vectors
-    * a 5k-vector batch is ~0.6G pairs — and the rule-35 ~2 µs/pair
-    * row machinery would make ONE FOLD cost several times the
-    * kernel-built index itself. SimilaritySpec pins both fold forms
-    * row-identical. */
-  @volatile private[graft] var GraphFoldUseWindow = false
 
   /** The cell-block guard bound for corpus-sized kernel passes: 16x
     * the healthy mean occupancy (the maintenance hot-cell trigger's
@@ -2144,7 +2112,7 @@ object Similarity {
     // COUPLING: a cell's block is ONE collect_list row (~occupancy x
     // dim x width — ~345 KB healthy at 512k), so the kernel's memory
     // shape assumes a MAINTAINED index: under frozen-centroid drift a
-    // 212x-median hot cell (DriftGate r16) is a ~70 MB single block
+    // 212x-median hot cell (drift gate, r16) is a ~70 MB single block
     // that would OOM inside codegen with no legible error. Callers
     // scoring CORPUS-sized members pass blockRowCap = 16x the healthy
     // occupancy estimate (the maintenance hot-cell trigger's own
@@ -2233,30 +2201,6 @@ object Similarity {
       et, "src", eBuckets, SaveMode.Overwrite)
   }
 
-  /** The pair-stream window form of a top-k scoring pass — the
-    * reference foil [[cellBlockTopK]] is pinned against (the build
-    * under [[GraphBuildUseWindow]], the fold's batch adjacency under
-    * [[GraphFoldUseWindow]]). Same inputs and output columns as the
-    * kernel: every (query, member) pair becomes a row, exact-scored
-    * and ranked by (score desc, dst asc). NaN scores (a zero-norm
-    * vector's 0/0 cosine) are dropped BEFORE the top-k so both forms
-    * agree by construction: desc ordering ranks NaN above every
-    * double while the kernel skips it — a neighbor with no defined
-    * similarity is not an edge. */
-  private def windowTopK(qx: DataFrame, members: DataFrame,
-                         k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("src").orderBy(desc("score"), asc("dst"))
-    qx.join(members,
-        col("qcid") === col("cid") && col("qid") =!= col("nid"))
-      .select(col("qid").as("src"), col("nid").as("dst"),
-        round(dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6)
-          .as("score"))
-      .filter(!isnan(col("score")))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-  }
-
   /** The one-shot build body: one probe-ring pass over the IVF
     * assignment table. The ring (the expensive native NearestCells
     * eval) is computed ONCE into a localCheckpoint'd frame feeding
@@ -2291,7 +2235,6 @@ object Similarity {
     val mates = asg.select(col("cid"), col("vec_id").as("nid"),
       col("ce").as("ne"), col("cn").as("nn"))
     val nlist = math.max(1L, bs.table(ct).count())
-    val useWindow = GraphBuildUseWindow
     val buildT0 = System.nanoTime()
     // The exact contract scores n x np x occupancy pairs = n²·np/
     // nlist ~ n²/8 (np tracks nlist/8, so nlist CANCELS — the build
@@ -2304,8 +2247,8 @@ object Similarity {
     // arrays: ids, flattened vectors, norms) join to the exploded
     // probe rows (n x np — a mean-occupancy factor fewer rows), and
     // TopKInCell runs score + selection over primitive arrays,
-    // ranked by the same round-6 score as the window foil (bit
-    // -identical selection; SimilaritySpec pins both forms).
+    // ranked by round(cosine, 6) with dst breaking ties (SimilaritySpec
+    // pins the stored edges against a pair-stream window reference).
     // No pair row ever exists, so nothing sorts or spills: per-pass
     // disk is the probe-side shuffle (n x np x ~(48 B + vector))
     // and the block-side shuffle (n x ~528 B). The probe shuffle is
@@ -2331,9 +2274,8 @@ object Similarity {
       // ring (here a checkpointed attribute, but keep the idiom)
       val qx = qc.select(col("qid"), col("qe"), col("qn"),
         explode_outer(col("qcids")).as("qcid"))
-      val edges = (if (useWindow) windowTopK(qx, mates, k)
-        else cellBlockTopK(qx, mates, k, rows,
-          blockRowCap = blockGuardCap(rows, nlist)))
+      val edges = cellBlockTopK(qx, mates, k, rows,
+        blockRowCap = blockGuardCap(rows, nlist))
         .withColumn("gen", lit(null).cast("string"))
       PersistedIndex.writeBucketed(s, edges, et, "src", eBuckets,
         if (c == 0) SaveMode.Overwrite else SaveMode.Append)
@@ -2465,13 +2407,11 @@ object Similarity {
           .nearestCells(col("be"), np, handle).as("bring"))
       .localCheckpoint()
     val w = Window.partitionBy("src").orderBy(desc("score"), asc("dst"))
-    val useWindowFold = GraphFoldUseWindow
     // 1. batch adjacency — the fold's hot pass: batch queries against
     // every member of their ring cells (batch x np x occupancy pairs
     // ~ batch x n/8). The kernel form never materializes a pair row
     // (rule 35 — the pair-stream machinery would make one production
-    // fold cost several times the kernel BUILD); the window form
-    // ([[windowTopK]]) stays runnable as the law foil.
+    // fold cost several times the kernel BUILD).
     val ringCells = b.select(explode(col("bring")).as("c")).distinct()
       .collect().map(_.getLong(0)) // <= nlist ~ sqrt(n): driver-safe
     val mates = s.table(at).filter(col("cid").isin(ringCells: _*))
@@ -2494,12 +2434,10 @@ object Similarity {
       else b.select(size(col("be"))).head.getInt(0).toLong
     val bcastBatchBlocks =
       bRows * (bDim * bElemBytes + 24L) <= GraphFoldBroadcastBudget
-    val bEdges =
-      if (!useWindowFold) cellBlockTopK(bq, mates, k, bRows,
-        blockRowCap = blockGuardCap(
-          IndexManifest.indexRowsOf(storedTxt, storedBatches),
-          math.max(1L, s.table(ct).count())))
-      else windowTopK(bq, mates, k)
+    val bEdges = cellBlockTopK(bq, mates, k, bRows,
+      blockRowCap = blockGuardCap(
+        IndexManifest.indexRowsOf(storedTxt, storedBatches),
+        math.max(1L, s.table(ct).count())))
     // 2. reverse updates
     val bCells = b.select(col("bcid")).distinct()
       .collect().map(_.getLong(0))
@@ -2516,7 +2454,7 @@ object Similarity {
     // per-src by construction. acid is unique per qid (a node has
     // one assigned cell; crash dups repeat the same value) — max()
     // for determinism. Checkpointed: referenced by the vector
-    // attach, both scoring forms, and the resolve semijoin.
+    // attach, the reverse scoring pass, and the resolve semijoin.
     val touched = s.table(rt).filter(col("qcid").isin(bCells: _*))
       .join(broadcast(b.select(col("bid"))),
         col("qid") === col("bid"), "left_anti")
@@ -2545,27 +2483,19 @@ object Similarity {
     val touchedQx = touched.join(qVecs, Seq("qid"))
       .select(col("qid"), col("qe"), col("qn"),
         explode_outer(col("qcids")).as("qcid"))
-    val cand =
-      if (!useWindowFold)
-        cellBlockTopK(
-          touchedQx,
-          b.select(col("bcid").as("cid"), col("bid").as("nid"),
-            col("be").as("ne"), col("bn").as("nn")),
-          // srcRows 0: srcs here are the touched ring rows (unknown
-          // without a count job); past the 128-key default the merge
-          // falls back to SORTING the already-k-reduced stream
-          // (<= touched x k narrow rows) — small, and not a rule-31a
-          // pair-stream shape. broadcastBlocks: the members side is
-          // the BATCH (< 1 MB of blocks for stream-shaped batches) —
-          // size-GATED above, since batch size is caller-controlled
-          k, 0L, broadcastBlocks = bcastBatchBlocks)
-          .select(col("src").as("qid"), col("dst").as("nid"),
-            col("score"))
-      else touchedQx.join(b, col("qcid") === col("bcid"))
-        .select(col("qid"), col("bid").as("nid"),
-          round(dot(col("qe"), col("be")) / (col("qn") * col("bn")), 6)
-            .as("score"))
-        .filter(!isnan(col("score")))
+    val cand = cellBlockTopK(
+      touchedQx,
+      b.select(col("bcid").as("cid"), col("bid").as("nid"),
+        col("be").as("ne"), col("bn").as("nn")),
+      // srcRows 0: srcs here are the touched ring rows (unknown
+      // without a count job); past the 128-key default the merge
+      // falls back to SORTING the already-k-reduced stream
+      // (<= touched x k narrow rows) — small, and not a rule-31a
+      // pair-stream shape. broadcastBlocks: the members side is
+      // the BATCH (< 1 MB of blocks for stream-shaped batches) —
+      // size-GATED above, since batch size is caller-controlled
+      k, 0L, broadcastBlocks = bcastBatchBlocks)
+      .select(col("src").as("qid"), col("dst").as("nid"), col("score"))
     // the pre-batch view RESTRICTED to touched srcs before the
     // generation window: a full resolve is O(index rows) per fold —
     // rule-21 creep, measured 12.5 -> 16.9 s across 8 appends at the

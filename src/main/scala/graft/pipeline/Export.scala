@@ -92,13 +92,13 @@ object Export {
     // restore-verifies-completeness contract. Aggregate the written
     // artifact instead.
     val sp = rows.sparkSession
-    manifest(sp, readBackup(sp, outDir)).write
+    manifest(readBackup(sp, outDir)).write
       .mode(SaveMode.Overwrite).json(s"$outDir/manifest")
   }
 
   /** The metadata.json analog: per path, its member count and key range
     * — enough for a restore to plan batches and verify completeness. */
-  def manifest(spark: SparkSession, rows: DataFrame): DataFrame =
+  def manifest(rows: DataFrame): DataFrame =
     rows.groupBy("path")
       .agg(count(lit(1)).as("n_keys"),
            min("key").as("min_key"),

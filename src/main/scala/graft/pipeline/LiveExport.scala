@@ -158,6 +158,11 @@ object LiveExport {
   final class Walker(client: RestClient, maxIpp: Int = DefaultMaxIpp,
                      sleep: Long => Unit = Thread.sleep,
                      startIpp: Option[Int] = None) {
+    // below the floor, growth caps pages at one item, and a one-item
+    // page after an inclusive startAt holds only the cursor key — read
+    // as the last page, it would silently end the walk early
+    require(maxIpp >= MinIpp,
+      s"max_ipp must be at least $MinIpp (the walker's floor page size), got $maxIpp")
     private val initIpp: Int =
       math.max(MinIpp, math.min(startIpp.getOrElse(DefaultMaxIpp), maxIpp))
     private val mapper = Mapper
@@ -470,17 +475,19 @@ object LiveExport {
     * exists for, BackupProcessor.php:96-127) was walked serially by
     * ONE task while the rest of the cluster idled. Now that subtree
     * splits into its children and drains cluster-wide. Page-size
-    * settings play no part: every probe is one floor page. */
-  def plan(spark: SparkSession, clientFactory: () => RestClient,
+    * settings send no different request: every probe is one floor
+    * page. `walker` is called on the driver for the root listing, so
+    * a bad setting fails there, before any request. */
+  def plan(spark: SparkSession, walker: () => Walker,
            root: String = "/"): Seq[String] =
     planRounds(
-      new Walker(clientFactory()).shallowKeys(root)
+      walker().shallowKeys(root)
         .map(TreeCodec.childPath(root, _)),
       Int.MaxValue,
       batch => slices(spark, batch).mapPartitions { it =>
         val paths = it.flatten.toVector
         paths.iterator.zip(InFlight.map(paths)(p =>
-          new Walker(clientFactory()).probeSplit(p)).iterator)
+          walker().probeSplit(p)).iterator)
       }.collect().toSeq)
 
   /** Distributed live export: [[plan]] builds the work list (splitting
@@ -508,10 +515,10 @@ object LiveExport {
              root: String = "/", maxIpp: Int = DefaultMaxIpp,
              startIpp: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val items = plan(spark, clientFactory, root)
+    val walker = () => new Walker(clientFactory(), maxIpp, startIpp = startIpp)
+    val items = plan(spark, walker, root)
     val edges = slices(spark, items).mapPartitions { it =>
-      InFlight.map(it.flatten.toVector)(p =>
-        new Walker(clientFactory(), maxIpp, startIpp = startIpp).fetchTree(p))
+      InFlight.map(it.flatten.toVector)(p => walker().fetchTree(p))
         .iterator.flatten
     }
     spark.createDataset(edges).toDF("path", "key", "value_json")

@@ -679,9 +679,10 @@ object CorpusStreams {
     * closed-loop ingest shape as [[deltaDedupStream]]'s maintenance
     * mode. Centroids stay frozen between maintenance passes, so
     * appended vectors join existing cells — correctness never drifts,
-    * but concentrated arrivals degrade cell occupancy (the DriftGate
-    * measurement: a 25%% drifted ingest grew the hot cell to 92x the
-    * median at 256k vectors). `maintainEvery = N` measures cell
+    * but concentrated arrivals degrade cell occupancy (a 25%%
+    * drifted ingest grew the hot cell to 92x the median at 256k
+    * vectors; SimilaritySpec's hot-cell maintenance case plants the
+    * same drift at spec scale). `maintainEvery = N` measures cell
     * occupancy and the fit canary every N batches
     * ([[graft.operators.Similarity.maintainIvfIndex]]) and re-fits the
     * quantizer only when drift is actually present, leaving the index

@@ -1,10 +1,9 @@
 package graft
 
-import graft.pipeline.Bucketed
 import org.apache.spark.sql.functions._
 
 /** Plan-level properties that matter at 100 TB:
-  *  - bucketed tables join with no shuffle Exchange,
+  *  - the persisted-index bucket count tracks the corpus size,
   *  - range repartitioning is a set-preserving reshape (the C1
   *    page-union invariance: any partitioning of the key space unions
   *    back to the same set — SURVEY.md §5). */
@@ -19,68 +18,6 @@ class BucketingSpec extends SparkSuite {
     assert(Tables.indexBuckets(1000001) == 64)
     assert(Tables.indexBuckets(2048000) == 128) // the 512x doc rung
     assert(Tables.indexBuckets(1L << 40) == 4096)
-  }
-
-  test("bucketed join plans without a shuffle exchange") {
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-      .select("l_orderkey", "l_quantity")
-    val ord = spark.read.parquet(s"$sf/orders.parquet")
-      .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
-    Bucketed.writeBucketed(li, "li_b", "l_orderkey")
-    Bucketed.writeBucketed(ord, "ord_b", "l_orderkey")
-    // at test scale the planner would broadcast instead (which bypasses
-    // bucketing); disable it to exercise the large-table code path the
-    // bucketing exists for
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = Bucketed.colocatedJoin(spark, "li_b", "ord_b", "l_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must not shuffle:\n$plan")
-      // and it still computes the right thing
-      val expected = li.join(ord, "l_orderkey").count()
-      assert(joined.count() == expected)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-      spark.sql("DROP TABLE IF EXISTS li_b")
-      spark.sql("DROP TABLE IF EXISTS ord_b")
-    }
-  }
-
-  test("diff over bucketed snapshot tables drops the digest exchanges") {
-    import graft.pipeline.Export
-    val sp = spark; import sp.implicits._
-    val prev = (1 to 500).map(i => (s"/p${i % 9}", s"k$i", i.toString))
-      .toDF("path", "key", "value_json")
-    val cur = (1 to 500).map(i =>
-        (s"/p${i % 9}", s"k$i", if (i % 11 == 0) s"${i}x" else i.toString))
-      .toDF("path", "key", "value_json")
-    Bucketed.writeBackupTable(prev, "snap_prev")
-    Bucketed.writeBackupTable(cur, "snap_cur")
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      def exchanges(df: org.apache.spark.sql.DataFrame): Int =
-        "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).size
-      val plain = Export.diffBackups(prev, cur)
-      val bucketed = Export.diffBackups(
-        spark.table("snap_prev"), spark.table("snap_cur"))
-      // same answer either way...
-      val a = plain.collect().map(_.toString).sorted
-      val b = bucketed.collect().map(_.toString).sorted
-      assert(a.sameElements(b))
-      assert(a.count(_.contains("changed")) == 500 / 11)
-      // ...but the bucketed layout pre-pays the (path,key) shuffle at
-      // write time: the recurring diff plans strictly fewer exchanges
-      assert(exchanges(bucketed) < exchanges(plain),
-        s"bucketed diff did not drop exchanges: " +
-          s"${exchanges(bucketed)} vs ${exchanges(plain)}")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-      spark.sql("DROP TABLE IF EXISTS snap_prev")
-      spark.sql("DROP TABLE IF EXISTS snap_cur")
-    }
   }
 
   test("page-union invariance: any range partitioning unions to the same set") {

@@ -3,11 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structural guard: the operator packages read only the environment
-  * variables listed here. Every other tuning decision is a constant
-  * or a law-test var, so one operator decision has one code path. A
-  * new read must name its reason below, or become a constant. The
-  * mains build their local session in one function,
-  * `SparkEntry.localSession`. */
+  * variables listed here, and keep only the object-level vars listed
+  * here. Every other tuning decision is a constant, so one operator
+  * decision has one code path. A new read or var must name its reason
+  * below, or become a constant. The mains build their local session
+  * in one function, `SparkEntry.localSession`. */
 class EnvGuardSpec extends AnyFunSuite {
 
   private val Packages =
@@ -61,6 +61,59 @@ class EnvGuardSpec extends AnyFunSuite {
           .map { case (n, f) => s"$n ($f)" }.mkString(", ") +
         s"; allow-listed but no longer read: " +
         (Allowed.keySet -- names).mkString(", "))
+  }
+
+  /** object member -> why it is a settable var rather than a constant */
+  private val AllowedVars = Map(
+    "Similarity.KnngRefineOverride" ->
+      ("law tests build the ring-only graph (0 refine rounds) as the " +
+        "reference the refined and folded graphs are checked against"),
+    "Similarity.LastGraphBuild" ->
+      ("diagnostics of the last graph build, written by the build and " +
+        "read by GraphRecall's report and the chunk-count asserts"),
+    "Similarity.GraphBuildConfProbe" ->
+      ("called mid-build so a law test can observe that the caller's " +
+        "session keeps the default fallback threshold"),
+    "Similarity.GraphFoldBroadcastBudget" ->
+      ("size gate on the fold's reverse-pass broadcast; a law test sets " +
+        "it to 0 to pin the shuffle_hash form row-identical"),
+    "Similarity.GraphBuildShuffleBudget" ->
+      ("per-chunk disk budget of the graph build (env-sized); law tests " +
+        "shrink it to force a multi-chunk build"),
+    "TextAnalysis.DriverBpeMaxVocab" ->
+      ("vocabulary ceiling of the in-driver BPE trainer; BpeSpec lowers " +
+        "it to pin the Spark trainer row-identical"),
+    "PersistedIndex.faultHook" ->
+      "crash-matrix injection point; None in production")
+
+  /** a top-level declaration, and a member var of one (two-space
+    * indent: the body of a top-level object) */
+  private val TopLevel =
+    """^(?:(?:final|case|abstract|sealed|private(?:\[\w+\])?)\s+)*(object|class|trait)\s+(\w+)""".r.unanchored
+  private val MemberVar =
+    """^  (?:@volatile\s+)?(?:(?:private|protected)(?:\[\w+\])?\s+)?var\s+(\w+)""".r.unanchored
+
+  test("object-level vars in the operator packages are exactly the " +
+      "allow-listed ones") {
+    // a test-only switch that keeps a second production form beside
+    // the one in use must not come back unnoticed
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"run from the project root: $root")
+    val found = Packages.flatMap(p => sources(new java.io.File(root, p)))
+      .flatMap { f =>
+        val lines = new String(java.nio.file.Files.readAllBytes(f.toPath),
+          "UTF-8").split("\n").toSeq
+        lines.scanLeft(("", "", Option.empty[String])) {
+          case ((kind, name, _), line) => line match {
+            case TopLevel(k, n) => (k, n, None)
+            case MemberVar(v) if kind == "object" => (kind, name, Some(s"$name.$v"))
+            case _ => (kind, name, None)
+          }
+        }.flatMap(_._3)
+      }.toSet
+    assert(found == AllowedVars.keySet,
+      s"object vars not allow-listed: ${(found -- AllowedVars.keySet).mkString(", ")}" +
+        s"; allow-listed but gone: ${(AllowedVars.keySet -- found).mkString(", ")}")
   }
 
   test("SparkSession.builder() appears in src/main only in localSession") {

@@ -98,6 +98,41 @@ class LiveSpec extends SparkSuite {
     } finally stub.stop()
   }
 
+  test("max_ipp below the walker's floor fails on the driver before any request") {
+    // at max_ipp = 1, growth capped pages at one item, and a one-item
+    // page after an inclusive startAt holds only the cursor key: the
+    // walker read it as the last page and returned 7 of 50 edges
+    val flat = (0 until 50).map(i => s""""k$i": $i""").mkString(",")
+    val json = s"""{"flat": {$flat}}"""
+    val stub = new FirebaseStub()
+    try {
+      stub.seed(json)
+      val u = stub.url
+      def chain(t: Throwable): String =
+        if (t == null) "" else s"${t.getMessage}\n${chain(t.getCause)}"
+      val floor = s"max_ipp must be at least ${LiveExport.MinIpp}"
+      val walkerErr = intercept[IllegalArgumentException] {
+        new LiveExport.Walker(new HttpRestClient(u), maxIpp = 1)
+      }
+      assert(walkerErr.getMessage.contains(floor), walkerErr.getMessage)
+      val exportErr = intercept[IllegalArgumentException] {
+        LiveExport.export(spark, () => new HttpRestClient(u), maxIpp = 1)
+      }
+      assert(exportErr.getMessage.contains(floor), exportErr.getMessage)
+      val sourceErr = intercept[Exception] {
+        spark.read.format("firebase").option("url", u)
+          .option("maxIpp", "1").load().collect()
+      }
+      assert(chain(sourceErr).contains(floor), chain(sourceErr))
+      assert(stub.getCount.get() == 0,
+        s"a bad max_ipp sent ${stub.getCount.get()} requests before failing")
+      // the floor itself walks the whole node
+      val got = new LiveExport.Walker(new HttpRestClient(u),
+        maxIpp = LiveExport.MinIpp).fetchTree("/flat").toSet
+      assert(got == edgesOf(json))
+    } finally stub.stop()
+  }
+
   test("a child too fat for the floor triggers go-deeper recursion (C3)") {
     // /big/fat is one child whose serialized size exceeds the payload
     // cap, so even a MIN_IPP page at /big fails -> shallow listing ->
@@ -470,7 +505,8 @@ class LiveSpec extends SparkSuite {
     try {
       stub.seed(fatTree)
       val u = stub.url
-      val items = LiveExport.plan(spark, () => new HttpRestClient(u))
+      val items = LiveExport.plan(spark,
+        () => new LiveExport.Walker(new HttpRestClient(u)))
       assert(items.count(_.startsWith("/fat/")) == 30,
         s"fat subtree not split into its children: $items")
       assert(items.contains("/tiny") && items.contains("/cfg"))
@@ -881,7 +917,8 @@ class LiveSpec extends SparkSuite {
       try {
         stub.seed(json)
         val u = stub.url
-        val work = LiveExport.plan(spark, () => new HttpRestClient(u))
+        val work = LiveExport.plan(spark,
+          () => new LiveExport.Walker(new HttpRestClient(u)))
         val listed = stub.getRequests.collect { case (p, "shallow=true") => p }
         val ctx = s"round $round, cap $cap, tree $json"
         assert(listed.sorted == ("/" +: split.toSeq).sorted, s"split set differs: $ctx")

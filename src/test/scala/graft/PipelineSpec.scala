@@ -324,7 +324,7 @@ class PipelineSpec extends SparkSuite {
     assert(sink.store.asScala.toMap == expected)
 
     // manifest accounts for every path
-    val mf = Export.manifest(spark, back).collect()
+    val mf = Export.manifest(back).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(mf.values.sum == rows.count())
     assert(mf.keySet == expected.keySet.map(_._1))
@@ -382,7 +382,7 @@ class PipelineSpec extends SparkSuite {
         .map((r: org.apache.spark.sql.Row) =>
           (r.getString(0), r.getLong(1), r.getString(2), r.getString(3)))
     assert(manifestRows(session.read.json(s"$dir/manifest")) ==
-      manifestRows(Export.manifest(session, back)))
+      manifestRows(Export.manifest(back)))
     perFile.map(_.map(_._1).toSet)
   }
 

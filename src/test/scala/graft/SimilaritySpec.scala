@@ -129,7 +129,7 @@ class SimilaritySpec extends SparkSuite {
     val mod = math.max(53L, n / math.ceil(math.sqrt(n.toDouble)).toLong)
     val nprobe = math.max(4, math.ceil(n / (8.0 * mod)).toInt)
     // the hashed centroid pick (Similarity.centroidPick): md5 bucket
-    // of the id, never the raw id modulus (the 64k DriftGate finding)
+    // of the id, never the raw id modulus (the 64k drift-gate finding)
     def pickC(id: Long): Boolean = {
       val d = java.security.MessageDigest.getInstance("MD5")
         .digest(s"$id#cent42".getBytes("UTF-8"))
@@ -241,6 +241,34 @@ class SimilaritySpec extends SparkSuite {
     }
     val mean = recalls.sum / recalls.size
     assert(mean >= 0.5, s"ivf mean recall $mean < 0.5")
+  }
+
+  test("ivf recall floor holds on an index a quarter of which arrived " +
+      "by append, assigned against the frozen base centroids") {
+    // the base index sees vec_id % 4 != 3; the rest arrives in two
+    // batches, so the probed index holds the whole corpus that the
+    // brute-force baseline ranks
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfgrown")
+    val dir = new java.io.File(tmp.toFile, "d").toString
+    val emb = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    emb.filter(col("vec_id") % 4 =!= 3).coalesce(1).write
+      .parquet(s"$dir/embeddings.parquet")
+    Similarity.ensureIvfIndex(spark, dir)
+    Seq(3, 7).foreach { r =>
+      assert(Similarity.appendToIvfIndex(spark, dir,
+        emb.filter(col("vec_id") % 8 === r), s"arrival_$r"))
+    }
+    val ann = Similarity.ivfProbe(spark, dir,
+        emb.filter(col("vec_id") < 10), 5)
+      .select("qid", "nid").collect()
+      .groupBy(_.getLong(0)).map { case (q, rs) =>
+        q -> rs.map(_.getLong(1)).toSet
+      }
+    val recalls = brute.map { case (q, bf) =>
+      (bf & ann.getOrElse(q, Set.empty)).size.toDouble / bf.size
+    }
+    val mean = recalls.sum / recalls.size
+    assert(mean >= 0.5, s"append-grown ivf mean recall $mean < 0.5")
   }
 
   test("pq encode law: native argmin-per-subspace packing matches a " +
@@ -370,57 +398,82 @@ class SimilaritySpec extends SparkSuite {
       "persisted codebooks diverge from a deterministic re-train")
   }
 
-  test("ANN shortlist TopKEdges aggregate is row-identical to the " +
-      "window foil (pq and ivfpq)") {
+  test("adcShortlist is the per-qid top-r by (adc desc, nid asc) with " +
+      "NaN dropped: equal to a row_number reference, guarded path too") {
+    // (adc desc, nid asc) is a total order, so the sort-free TopKEdges
+    // aggregate must select exactly what the window it replaces
+    // selects. The reference is that window, written here.
+    import org.apache.spark.sql.expressions.Window
+    val r = 4
+    // 12 candidates per qid over 5 adc levels, so ties straddle the
+    // cut at r; nids are a per-qid permutation; one NaN per qid (desc
+    // ordering would rank it first if it were not dropped)
+    def rows(qids: Int): Seq[(Long, Long, Double)] =
+      (0 until qids).flatMap { q =>
+        (0 until 12).map { j =>
+          (q.toLong, 100L + (j * 5) % 12,
+            if (j == 5) Double.NaN else ((q * 7 + j * 3) % 5) / 4.0)
+        }
+      }
+    val tiedAtCut = rows(10).groupBy(_._1).values.exists { g =>
+      val adcs = g.map(_._3).filterNot(_.isNaN).sorted(Ordering[Double].reverse)
+      adcs(r - 1) == adcs(r)
+    }
+    assert(tiedAtCut, "fixture must tie at the shortlist cut")
+    def check(s: org.apache.spark.sql.SparkSession, qids: Int,
+              pinned: Boolean): Unit = {
+      val cand = s.createDataFrame(rows(qids)).toDF("qid", "nid", "adc")
+        .repartition(4)
+      val reference = cand.filter(!isnan(col("adc")))
+        .withColumn("arn", row_number().over(
+          Window.partitionBy("qid").orderBy(desc("adc"), asc("nid"))))
+        .filter(col("arn") <= r)
+        .select("qid", "nid").collect()
+        .map(x => (x.getLong(0), x.getLong(1))).toSet
+      val got = Similarity.adcShortlist(cand, r, pinned).collect()
+        .map(x => (x.getLong(0), x.getLong(1))).toSet
+      assert(reference.size == qids * r && got == reference,
+        s"$qids qids: shortlist ${got.size} rows vs reference " +
+          s"${reference.size}; ${(got diff reference).take(3)} / " +
+          s"${(reference diff got).take(3)}")
+    }
+    check(spark, 10, pinned = false)
+    // past the 128-key aggregation threshold: planned on the raised
+    // clone and materialized there, as pqTopK and ivfPqProbe do
+    check(Similarity.raisedThresholdSession(spark, 200L), 200, pinned = true)
+  }
+
+  test("ivfPqProbe: a 200-probe batch (guarded shortlist path) equals " +
+      "the union of four 50-probe batches; no conf leak") {
+    // a probe's rows depend only on its own cells, and r depends only
+    // on n, nprobe and nlist, so splitting the batch changes nothing.
+    // 50 + 64 <= 128: each small batch takes the unguarded path.
     val sp = spark; import sp.implicits._
-    // (adc desc, nid asc) is a total order, so the sort-free aggregate
-    // and the row_number window must produce the SAME shortlist — and
-    // therefore bit-identical final rows (r20 opt; the graph build's
-    // foil law, restated for the ANN paths). pq over the corpus:
-    val aggPq = Similarity.pqTopK(spark, sf, 5).collect().toSeq
-    val winPq = Similarity.pqTopK(spark, sf, 5, shortlistWindow = true)
-      .collect().toSeq
-    assert(aggPq.nonEmpty && aggPq == winPq,
-      "pq shortlist: aggregate vs window foil diverged")
-    // ivfpq over the random NON-unit-norm index fixture (exercises
-    // varying norms, not just the unit corpus)
     def vec(seed: Long): Array[Float] = {
       val r = new scala.util.Random(seed)
       Array.fill(64)(r.nextFloat() * 2 - 1)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_topk_foil")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_split")
     val dir = new java.io.File(tmp.toFile, "d").toString
     (0L until 150L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    val probesDf = (0L until 10L).map(i => (5000L + i, vec(i + 300L)))
-      .toDF("vec_id", "embedding")
-    val aggIp = Similarity.ivfPqProbe(spark, dir, probesDf, 5)
-      .orderBy("qid", "rn").collect().toSeq
-    val winIp = Similarity.ivfPqProbe(spark, dir, probesDf, 5,
-        shortlistWindow = true)
-      .orderBy("qid", "rn").collect().toSeq
-    assert(aggIp.nonEmpty && aggIp == winIp,
-      "ivfpq shortlist: aggregate vs window foil diverged")
-    // r21: a probe batch WIDER than the ObjectHashAggregate fallback
-    // threshold (default 128 keys) takes the guarded path — the
-    // shortlist plans on a cloned session with the threshold raised
-    // over the batch (shortlistSession) and materializes there. Rows
-    // must still equal the window foil, and the raise must NOT leak
-    // to the caller's session (the r17 set+restore bug this guards
-    // against).
+    def probe(ids: Range): Set[(Long, Long, Double, Long)] =
+      Similarity.ivfPqProbe(spark, dir,
+        ids.map(i => (5000L + i, vec(i + 300L))).toDF("vec_id", "embedding"),
+        5)
+        .select("qid", "nid", "score", "rn").collect()
+        .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2),
+          x.getLong(3))).toSet
     val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val before = scala.util.Try(spark.conf.get(key)).toOption
-    val bigProbes = (0L until 200L).map(i => (5000L + i, vec(i + 300L)))
-      .toDF("vec_id", "embedding")
-    val aggBig = Similarity.ivfPqProbe(spark, dir, bigProbes, 5)
-      .orderBy("qid", "rn").collect().toSeq
-    val winBig = Similarity.ivfPqProbe(spark, dir, bigProbes, 5,
-        shortlistWindow = true)
-      .orderBy("qid", "rn").collect().toSeq
-    assert(aggBig.nonEmpty && aggBig == winBig,
-      "ivfpq guarded (>128-probe) shortlist diverged from the window foil")
+    val big = probe(0 until 200)
     assert(scala.util.Try(spark.conf.get(key)).toOption == before,
       "shortlistSession leaked the fallback-threshold raise to the caller")
+    val parts = (0 until 4).map(c => probe(c * 50 until (c + 1) * 50))
+      .reduce(_ ++ _)
+    assert(big.map(_._1).size == 200 && big == parts,
+      s"guarded 200-probe batch diverges from four 50-probe batches: " +
+        s"${(big diff parts).take(3)} / ${(parts diff big).take(3)}")
   }
 
   test("native lsh_bucket_ids matches the spec-form Column buckets") {
@@ -866,7 +919,7 @@ class SimilaritySpec extends SparkSuite {
       val r = new scala.util.Random(seed)
       Array.fill(64)(r.nextFloat() * 2 - 1)
     }
-    // DriftGate's exact drift transform (shrink 0.2x + unit offset on
+    // the drift gate's transform (shrink 0.2x + unit offset on
     // dim 0): measured at the 64k-80k gate rungs to produce BOTH the
     // frozen hot cell and a refresh that settles. Base is 6000
     // vectors (~113 hashed-pick cells): pre-refresh concentration is
@@ -876,7 +929,7 @@ class SimilaritySpec extends SparkSuite {
     // 2-11-cell bases spread the cloud and the 16x trigger is
     // unreachable, since with 2 occupied cells the occupancy "median"
     // IS the max).
-    // the corpus embeddings DriftGate runs on are UNIT vectors — the
+    // the corpus embeddings that gate ran on are UNIT vectors — the
     // raw test vectors (norm ~4.6) must be normalized first or the
     // 0.2-shrink cloud is as wide as its offset and spreads
     def drift(seed: Long): Array[Float] = {
@@ -922,8 +975,8 @@ class SimilaritySpec extends SparkSuite {
     assert(spark.table(at).count() == nRows,
       "refresh must reassign, never add or drop rows")
     val (mx2, md2) = Similarity.ivfOccupancy(spark, dir)
-    assert(mx2 <= Maintenance.DefaultHotCellRatio * md2,
-      s"refresh left the hot cell standing: max $mx2 median $md2")
+    assert(mx2 <= Maintenance.DefaultHotCellRatio * md2 && mx2 < mx,
+      s"refresh left the hot cell standing: max $mx -> $mx2 median $md2")
     // pass after the action: healthy again (the rewrite recorded the
     // layout fold too)
     val after = Similarity.maintainIvfIndex(spark, dir)
@@ -1003,8 +1056,45 @@ class SimilaritySpec extends SparkSuite {
       s"fit baseline lost across append+compact: ${stored.map(_._1)}")
   }
 
-  test("graph build top-k: the sort-free TopKEdges aggregate is " +
-      "row-identical to the window form, chunked or not") {
+  /** The graph kernels' window reference, written from the stored
+    * tables: `ringPairs` scores each rings row (qid, qcid) against the
+    * `members` of qcid (assignment rows) as round(cos, 6), the node
+    * itself and NaN dropped; `topK` keeps per src the k best by
+    * (score desc, dst asc). */
+  private def ringPairs(rings: org.apache.spark.sql.DataFrame,
+                        asg: org.apache.spark.sql.DataFrame,
+                        members: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    rings.select("qid", "qcid")
+      .join(asg.select(col("vec_id").as("qid"), col("ce").as("qe"),
+        col("cn").as("qn")), "qid")
+      .join(members.select(col("cid").as("qcid"), col("vec_id").as("nid"),
+        col("ce").as("ne"), col("cn").as("nn")), "qcid")
+      .filter(col("qid") =!= col("nid"))
+      .select(col("qid").as("src"), col("nid").as("dst"),
+        round(Similarity.dot(col("qe"), col("ne")) /
+          (col("qn") * col("nn")), 6).as("score"))
+      .filter(!isnan(col("score")))
+
+  private def topK(pairs: org.apache.spark.sql.DataFrame, k: Int)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    pairs.withColumn("rn", row_number().over(Window.partitionBy("src")
+        .orderBy(desc("score"), asc("dst"))).cast("long"))
+      .filter(col("rn") <= k)
+  }
+
+  private def ringReference(rt: String, at: String, k: Int)
+      : org.apache.spark.sql.DataFrame =
+    topK(ringPairs(spark.table(rt), spark.table(at), spark.table(at)), k)
+
+  private def edgeSet(df: org.apache.spark.sql.DataFrame)
+      : Set[(Long, Long, Double, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+      r.getLong(3))).toSet
+
+  test("graph build: ring edges equal the window reference over the " +
+      "stored rings and assignment, single-pass and multi-chunk") {
     val sp = spark; import sp.implicits._
     def vec(seed: Long): Array[Float] = {
       val r = new scala.util.Random(seed)
@@ -1014,50 +1104,52 @@ class SimilaritySpec extends SparkSuite {
     val dir = new java.io.File(tmp.toFile, "d").toString
     (0L until 400L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    def edgesWith(window: Boolean, shuffleBudget: Long)
-        : Set[(Long, Long, Double, Long)] = {
+    // (stored edges, reference) of a fresh build
+    def build(shuffleBudget: Long, refine: Option[Int])
+        : (Set[(Long, Long, Double, Long)], Set[(Long, Long, Double, Long)]) = {
       Similarity.dropKnnGraphIndex(spark, dir, 3)
-      val oldW = Similarity.GraphBuildUseWindow
       val oldSb = Similarity.GraphBuildShuffleBudget
-      Similarity.GraphBuildUseWindow = window
+      val oldRf = Similarity.KnngRefineOverride
       Similarity.GraphBuildShuffleBudget = shuffleBudget
+      Similarity.KnngRefineOverride = refine
       try {
-        val (et, _) = Similarity.ensureKnnGraphIndex(spark, dir, 3)
-        spark.table(et).select("src", "dst", "score", "rn").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-            r.getLong(3))).toSet
+        val (et, rt) = Similarity.ensureKnnGraphIndex(spark, dir, 3)
+        val (at, _) = Similarity.ensureIvfIndex(spark, dir)
+        (edgeSet(spark.table(et).select("src", "dst", "score", "rn")),
+          edgeSet(ringReference(rt, at, 3)))
       } finally {
-        Similarity.GraphBuildUseWindow = oldW
         Similarity.GraphBuildShuffleBudget = oldSb
+        Similarity.KnngRefineOverride = oldRf
       }
     }
-    // production CELL-BLOCK kernel vs the pair-stream window foil,
-    // each single-pass and chunked: all four builds bit-identical
-    // (scores are round()ed doubles — TopKInCell replicates Spark's
-    // double round — and ranks share the (score desc, dst asc) order)
-    val cell = edgesWith(window = false, Long.MaxValue)
-    assert(cell.nonEmpty && cell.exists(_._4 == 3L),
+    // ring only (0 refine rounds): the stored edges ARE the kernel's
+    // top-k, so they must equal the reference
+    val (ring, reference) = build(Long.MaxValue, Some(0))
+    assert(ring.nonEmpty && ring.exists(_._4 == 3L),
       "fixture must produce full-rank adjacencies")
-    assert(edgesWith(window = true, Long.MaxValue) == cell,
-      "cell-block build diverges from the window foil")
-    // forced multi-chunk builds (the probe-shuffle disk budget): a
-    // tiny byte budget splits the q side into many hash chunks; every
-    // qid is wholly in one chunk, so per-src top-k stays total and
-    // the output is identical, for either per-chunk top-k
+    assert(ring == reference,
+      s"single-pass ring edges diverge from the window reference: " +
+        s"${(ring diff reference).take(3)} / ${(reference diff ring).take(3)}")
     assert(Similarity.LastGraphBuild._1 == 1,
       s"unbudgeted build chunked: ${Similarity.LastGraphBuild}")
-    assert(edgesWith(window = false, 64L * 1024L) == cell,
-      "multi-chunk kernel build diverges from the single-pass form")
+    // a tiny byte budget splits the q side into many hash chunks;
+    // every qid is wholly in one chunk, so per-src top-k stays total
+    val (ringChunked, referenceChunked) = build(64L * 1024L, Some(0))
     assert(Similarity.LastGraphBuild._1 > 1,
       s"budget did not force a multi-chunk build: ${Similarity.LastGraphBuild}")
-    assert(edgesWith(window = true, 64L * 1024L) == cell,
-      "multi-chunk window build diverges from the cell-block form")
+    assert(ringChunked == referenceChunked && ringChunked == ring,
+      "multi-chunk ring edges diverge from the window reference")
+    // the refined contract: single-pass and multi-chunk agree
+    val (refined, _) = build(Long.MaxValue, None)
+    val (refinedChunked, _) = build(64L * 1024L, None)
     assert(Similarity.LastGraphBuild._1 > 1,
       s"budget did not force a multi-chunk build: ${Similarity.LastGraphBuild}")
+    assert(refined.nonEmpty && refinedChunked == refined,
+      "multi-chunk refined build diverges from the single-pass form")
   }
 
-  test("graph fold: the cell-block kernel fold is row-identical to " +
-      "the pair-stream window fold") {
+  test("graph fold: batch nodes get the ring reference over the merged " +
+      "assignment; old nodes the top-k of old edges plus in-ring batch nodes") {
     val sp = spark; import sp.implicits._
     def vec(seed: Long): Array[Float] = {
       val r = new scala.util.Random(seed)
@@ -1069,37 +1161,48 @@ class SimilaritySpec extends SparkSuite {
     val corpus = (0L until 400L).map(i => (i, vec(i)))
     val batch = Seq((5000L, vec(7L)), (5001L, vec(777L)),
       (5002L, vec(42L)))
-    def foldedWith(window: Boolean): Set[(Long, Long, Double, Long)] = {
-      val tmp = java.nio.file.Files.createTempDirectory(
-        s"graft_foldform_$window")
+    val batchIds = batch.map(_._1)
+    // (dir, edges before the fold, edges after it)
+    def fold(tag: String): (String, Set[(Long, Long, Double, Long)],
+        Set[(Long, Long, Double, Long)]) = {
+      val tmp = java.nio.file.Files.createTempDirectory(s"graft_fold_$tag")
       val dir = new java.io.File(tmp.toFile, "d").toString
       corpus.toDF("vec_id", "embedding")
         .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-      Similarity.ensureKnnGraphIndex(spark, dir, 3)
-      val old = Similarity.GraphFoldUseWindow
-      Similarity.GraphFoldUseWindow = window
-      try {
-        assert(Similarity.appendToKnnGraphIndex(spark, dir, 3,
-          batch.toDF("vec_id", "embedding"), "f1"))
-        Similarity.graphEdges(spark, dir, 3).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-            r.getLong(3))).toSet
-      } finally { Similarity.GraphFoldUseWindow = old }
+      val before = edgeSet(Similarity.graphEdges(spark, dir, 3))
+      assert(Similarity.appendToKnnGraphIndex(spark, dir, 3,
+        batch.toDF("vec_id", "embedding"), "f1"))
+      (dir, before, edgeSet(Similarity.graphEdges(spark, dir, 3)))
     }
-    val kernel = foldedWith(window = false)
-    assert(kernel.exists(e => e._1 == 7L && e._2 == 5000L &&
+    val (dir, before, after) = fold("kernel")
+    assert(after.exists(e => e._1 == 7L && e._2 == 5000L &&
         e._3 == 1.0 && e._4 == 1L),
-      "kernel fold's reverse pass lost the planted displacement")
-    assert(kernel.exists(_._1 == 5000L) && kernel.exists(_._1 == 5001L),
-      "kernel fold's batch-adjacency pass lost the batch nodes")
-    assert(foldedWith(window = true) == kernel,
-      "cell-block kernel fold diverges from the window-fold foil")
-    // reverse-pass broadcast size gate (r18 advice): a zero budget
-    // forces the batch blocks through the shuffle_hash join — the
-    // unbounded-ingest-batch fallback must be row-identical
+      "the fold's reverse pass lost the planted displacement")
+    assert(after.exists(_._1 == 5000L) && after.exists(_._1 == 5001L),
+      "the fold's batch-adjacency pass lost the batch nodes")
+    val (et, rt) = Similarity.ensureKnnGraphIndex(spark, dir, 3)
+    val (at, _) = Similarity.ensureIvfIndex(spark, dir)
+    // batch nodes: the ring reference over the merged assignment
+    val batchRef = edgeSet(ringReference(rt, at, 3)
+      .filter(col("src").isin(batchIds: _*)))
+    assert(batchRef.nonEmpty && after.filter(e => batchIds.contains(e._1)) ==
+      batchRef, "batch adjacency diverges from the ring reference")
+    // old nodes: top-k of (old adjacency ∪ batch nodes whose assigned
+    // cell is in the node's ring)
+    val asg = spark.table(at)
+    val inRing = ringPairs(
+      spark.table(rt).filter(!col("qid").isin(batchIds: _*)), asg,
+      asg.filter(col("vec_id").isin(batchIds: _*)))
+    val oldRef = edgeSet(topK(before.toSeq.map(e => (e._1, e._2, e._3))
+      .toDF("src", "dst", "score").unionByName(inRing), 3))
+    assert(after.filter(e => !batchIds.contains(e._1)) == oldRef,
+      "old-node adjacency diverges from top-k(old edges ∪ in-ring batch)")
+    // reverse-pass broadcast size gate: a zero budget forces the batch
+    // blocks through the shuffle_hash join — the unbounded-ingest-
+    // batch fallback must be row-identical
     val oldBb = Similarity.GraphFoldBroadcastBudget
     Similarity.GraphFoldBroadcastBudget = 0L
-    try assert(foldedWith(window = false) == kernel,
+    try assert(fold("shuffle")._3 == after,
       "size-gated (shuffle_hash) reverse pass diverges from the " +
         "broadcast form")
     finally Similarity.GraphFoldBroadcastBudget = oldBb
@@ -1151,7 +1254,7 @@ class SimilaritySpec extends SparkSuite {
     // 1400 IDENTICAL vectors: every hash-picked centroid is the same
     // direction, assignment tie-breaks every row into ONE cell —
     // occupancy 1400 > the guard cap 16 x max(64, rows/nlist) = 1024.
-    // This is the frozen-drift hot-cell shape (DriftGate measured
+    // This is the frozen-drift hot-cell shape (the drift gate measured
     // 212x median): the kernel's per-cell collect_list block would be
     // one huge row, so the build must fail LEGIBLY (naming
     // maintainIvfIndex) instead of OOMing inside codegen.

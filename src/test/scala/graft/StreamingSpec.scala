@@ -1381,8 +1381,8 @@ class StreamingSpec extends SparkSuite {
     }
     // the SimilaritySpec maintainIvfIndex fixture rules: 6000-vector
     // base (hot-cell concentration is an extreme-value effect that
-    // needs ~100 cells), DriftGate's unit-normalized 0.2-shrink +
-    // offset transform (the corpus embeddings the gate runs on are
+    // needs ~100 cells), the drift gate's unit-normalized 0.2-shrink +
+    // offset transform (the corpus embeddings the gate ran on are
     // unit vectors)
     def drift(seed: Long): Array[Float] = {
       val v = vec(seed)
