@@ -263,7 +263,7 @@ object Cli {
       // the training-ready artifact — packed survivors plus the
       // shared LM score frame, with a manifest recording provenance
       // and per-split counts (the writeBackup manifest discipline:
-      // aggregated from the WRITTEN artifact, not the plan)
+      // taken from the WRITTEN artifact, not the plan)
       case "curate" :: dir :: out :: Nil =>
         functions.GraftFunctions.register(spark)
         val c = operators.Curation.curate(spark, dir)

@@ -1,8 +1,17 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 /** The Spark-native `do_backup` (SURVEY.md §7 step 3).
   *
@@ -28,11 +37,14 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *  - C3 go-deeper       -> range partitioning on (path, key) splits a
   *    fat node across as many partitions as it needs; no recursion.
   *
-  * The artifact is a Parquet directory (columnar, compressed, with
-  * statistics) instead of tar.gz'd JSON chunks (BackupProcessor.php:
-  * 202-242) — the directory is the unit, `_SUCCESS` the commit marker —
-  * plus an explicit manifest the restore can replay deterministically
-  * (the metadata.json analog, BackupProcessor.php:49-51).
+  * The artifact is a directory instead of tar.gz'd JSON chunks
+  * (BackupProcessor.php:202-242): `rows/` holds the Parquet part files
+  * (columnar, compressed, with statistics), and `manifest/files.json`,
+  * written last, lists them — the metadata.json analog
+  * (BackupProcessor.php:49-51, 206-210). The manifest is the commit
+  * record: [[readBackup]] refuses a backup whose part files are not
+  * exactly the ones it lists, at the sizes it lists, as the reference's
+  * restore fails on a chunk its metadata names and the archive lacks.
   */
 object Export {
 
@@ -76,48 +88,133 @@ object Export {
     * contiguous ranges, so each file still holds one key range sorted
     * by (path, key), and the files in part-number order are in global
     * (path, key) order.
-    */
+    *
+    * The manifest describes the files actually written, and costs no
+    * Spark job: the driver lists `rows/` and reads each part file's
+    * Parquet footer, up to [[InFlight.Window]] at once, then writes
+    * `manifest/files.json` with one JSON line per part file, in name
+    * order: `file` (its name), `bytes` (its length), `n_keys` (its row
+    * count) and, where the footer holds `path` statistics, `min_path`
+    * and `max_path`. The files are (path, key)-sorted ranges, so these
+    * map each path to the files that hold it. A previous manifest is
+    * deleted before the rows are written, so a write that fails leaves
+    * a backup [[readBackup]] refuses. */
   def writeBackup(rows: DataFrame, outDir: String): Unit = {
+    val manifestDir = new Path(outDir, "manifest")
+    val conf = rows.sparkSession.sparkContext.hadoopConfiguration
+    val fs = manifestDir.getFileSystem(conf)
+    fs.delete(manifestDir, true)
     rows
       .repartitionByRange(col("path"), col("key"))
       .sortWithinPartitions("path", "key")
       .write.mode(SaveMode.Overwrite)
       .option("compression", "zstd")
       .parquet(s"$outDir/rows")
-    // the manifest must describe the rows actually PERSISTED:
-    // re-evaluating an uncached `rows` lineage would re-run its source
-    // — for a live export, yet another full HTTP walk of the database
-    // (wall-clock and API quota), and any concurrent write between the
-    // walks would desynchronize manifest from rows, breaking the
-    // restore-verifies-completeness contract. Aggregate the written
-    // artifact instead.
-    val sp = rows.sparkSession
-    manifest(readBackup(sp, outDir)).write
-      .mode(SaveMode.Overwrite).json(s"$outDir/manifest")
+    val parts = fs.listStatus(new Path(outDir, "rows")).toVector
+      .filter(st => st.isFile && isDataFile(st.getPath.getName))
+      .sortBy(_.getPath.getName)
+    val lines = InFlight.map(parts)(manifestLine(_, conf))
+    val out = fs.create(new Path(manifestDir, ManifestFile), true)
+    try out.write(lines.map(_ + "\n").mkString.getBytes(UTF_8))
+    finally out.close()
   }
 
-  /** The metadata.json analog: per path, its member count and key range
-    * — enough for a restore to plan batches and verify completeness. */
-  def manifest(rows: DataFrame): DataFrame =
-    rows.groupBy("path")
-      .agg(count(lit(1)).as("n_keys"),
-           min("key").as("min_key"),
-           max("key").as("max_key"))
-      .orderBy("path")
+  /** The manifest's name under `manifest/`. */
+  private val ManifestFile = "files.json"
+
+  /** Only read after construction, which Jackson documents as
+    * thread-safe: the footer reads share it. */
+  private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Hadoop's rule for the files a reader skips (`_SUCCESS`, `.crc`). */
+  private def isDataFile(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  /** One part file's manifest line, from its listing and its footer. */
+  private def manifestLine(st: FileStatus,
+                           conf: org.apache.hadoop.conf.Configuration): String = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    val blocks = try reader.getFooter.getBlocks.asScala.toSeq
+      finally reader.close()
+    val line = mapper.createObjectNode()
+      .put("file", st.getPath.getName)
+      .put("bytes", st.getLen)
+      .put("n_keys", blocks.map(_.getRowCount).sum)
+    // each row group is a (path, key)-sorted run, so the first group's
+    // minimum and the last group's maximum bound the file
+    val stats = blocks.flatMap(_.getColumns.asScala
+      .find(_.getPath.toDotString == "path").map(_.getStatistics)
+      .filter(s => s != null && s.hasNonNullValue))
+    def utf8(v: Any) = v.asInstanceOf[Binary].toStringUsingUTF8
+    if (blocks.nonEmpty && stats.size == blocks.size) {
+      line.put("min_path", utf8(stats.head.genericGetMin))
+      line.put("max_path", utf8(stats.last.genericGetMax))
+    }
+    mapper.writeValueAsString(line)
+  }
 
   /** The schema of a backup's rows: [[writeBackup]] writes no other. */
   val BackupSchema: StructType = StructType(
     Seq("path", "key", "value_json").map(StructField(_, StringType)))
 
   /** A backup's rows, read with the declared [[BackupSchema]], so no
-    * job runs to infer it from the file footers. A `rows/` directory
-    * with no data file (an empty or unfinished backup) fails here, as
-    * inference would, with a message naming `dir`; the check uses the
-    * listing the reader has already made. */
+    * job runs to infer it from the file footers, and checked against
+    * the backup's manifest on the driver, so no job runs for that
+    * either.
+    *
+    * It refuses, naming `dir`:
+    *  - a `rows/` directory with no data file (an empty or unfinished
+    *    backup);
+    *  - a backup with no `manifest/files.json`: one whose write did not
+    *    finish, or one written before the manifest listed its files
+    *    (that manifest was one JSON row per path). Read the rows of
+    *    such a backup with `spark.read.parquet` and write them again
+    *    with [[writeBackup]];
+    *  - a part file that is missing, extra, or of another length than
+    *    the manifest says, naming the file.
+    *
+    * The part files' lengths come from the listing the reader has
+    * already made, so the check adds one read of the manifest and no
+    * listing. */
   def readBackup(spark: SparkSession, dir: String): DataFrame = {
     val rows = spark.read.schema(BackupSchema).parquet(s"$dir/rows")
-    require(rows.inputFiles.nonEmpty, s"backup $dir holds no row files")
+    val listed = rows.queryExecution.analyzed.collect {
+      case LogicalRelation(HadoopFsRelation(
+          idx: PartitioningAwareFileIndex, _, _, _, _, _), _, _, _, _) =>
+        idx.allFiles()
+    }.flatten.map(st => st.getPath.getName -> st.getLen).toMap
+    require(listed.nonEmpty, s"backup $dir holds no row files")
+    val manifest = readManifest(spark, dir)
+    val problems =
+      (manifest.keySet -- listed.keySet).toSeq.sorted
+        .map(f => s"$f is in the manifest but not in rows/") ++
+      (listed.keySet -- manifest.keySet).toSeq.sorted
+        .map(f => s"$f is in rows/ but not in the manifest") ++
+      (listed.keySet & manifest.keySet).toSeq.sorted
+        .filter(f => listed(f) != manifest(f))
+        .map(f => s"$f has ${listed(f)} bytes, the manifest says ${manifest(f)}")
+    require(problems.isEmpty,
+      s"backup $dir does not match its manifest: ${problems.mkString("; ")}")
     rows
+  }
+
+  /** `file -> bytes` from `dir`'s `manifest/files.json`, read on the
+    * driver. */
+  private def readManifest(spark: SparkSession, dir: String): Map[String, Long] = {
+    val p = new Path(new Path(dir, "manifest"), ManifestFile)
+    val in = try p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      catch {
+        case _: FileNotFoundException => throw new IllegalArgumentException(
+          s"backup $dir has no manifest/$ManifestFile: its write did not " +
+            "finish, or it was written before the manifest listed the " +
+            "files; read its rows with spark.read.parquet and write them " +
+            "again with Export.writeBackup")
+      }
+    val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    text.linesIterator.filter(_.trim.nonEmpty).map { l =>
+      val n = mapper.readTree(l)
+      n.get("file").asText -> n.get("bytes").asLong
+    }.toMap
   }
 
   /** Subtree restriction — the reference's `export <db> <path>` scope
@@ -182,7 +279,7 @@ object Export {
       df.select(col("path"), col("key"),
         xxhash64(col("value_json")).as(s"${tag}_h1"),
         xxhash64(lit(1), col("value_json")).as(s"${tag}_h2"))
-    val changedKeys = digests(prev, "o")
+    val changed = digests(prev, "o")
       .join(digests(cur, "n"), Seq("path", "key"), "full_outer")
       .withColumn("change",
         when(col("o_h1").isNull, lit("added"))
@@ -191,26 +288,28 @@ object Export {
                 col("o_h2") =!= col("n_h2"), lit("changed")))
       .filter(col("change").isNotNull)
       .select("path", "key", "change")
-      .localCheckpoint()
     // The scaladoc's "broadcast keyset" must be EXPLICIT: a
     // localCheckpoint'd frame reports the default (max) size estimate,
     // so the planner sort-merge-joined the value fetches — shuffling
     // BOTH full snapshots' payloads, the one thing this design exists
     // to avoid (r20 plan audit: 2 of the 3 joins ran as SMJ). The
-    // keyset is already materialized, so its exact row count AND its
-    // actual key bytes are one cheap job (the byte gate is the r20
-    // advice: an explicit broadcast() hint overrides all planner size
-    // safety, and a count cap alone assumes ~50 B/key — adversarially
-    // long paths would ride the hint into driver/executor memory
-    // pressure). Under both caps the snapshots are scanned but never
-    // shuffled. Past either — a diff so large it approaches a full
-    // re-export — the shuffle join is the right plan and the planner
-    // keeps it.
-    val sz = changedKeys.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(length(col("path")) + length(col("key"))), lit(0L))
-        .as("bytes")).head
-    val (nChanged, keyBytes) = (sz.getLong(0), sz.getLong(1))
+    // keyset's exact row count AND its actual key bytes are observed
+    // by the checkpoint's own job (the byte gate is the r20 advice: an
+    // explicit broadcast() hint overrides all planner size safety, and
+    // a count cap alone assumes ~50 B/key — adversarially long paths
+    // would ride the hint into driver/executor memory pressure). Under
+    // both caps the snapshots are scanned but never shuffled. Past
+    // either — a diff so large it approaches a full re-export — the
+    // shuffle join is the right plan and the planner keeps it.
+    val size = Observation()
+    val changedKeys = changed
+      .observe(size, count(lit(1)).as("n"),
+        coalesce(sum(length(col("path")) + length(col("key"))), lit(0L))
+          .as("bytes"))
+      .localCheckpoint()
+    val sz = size.get
+    val (nChanged, keyBytes) =
+      (sz("n").asInstanceOf[Long], sz("bytes").asInstanceOf[Long])
     val keyset0 = changedKeys.select("path", "key")
     val keyset =
       if (nChanged <= broadcastMaxKeys &&

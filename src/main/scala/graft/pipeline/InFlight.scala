@@ -36,20 +36,21 @@ private[graft] object InFlight {
     t
   }
 
-  /** Run `work` on every item, up to [[Window]] at once, and return
-    * when all have finished.
+  /** Run `work` on every item, up to `window` at once, and return when
+    * all have finished.
     *
     * Items are pulled from `items` on the calling thread (a Spark
     * partition iterator must stay on its task thread) and only when a
-    * slot is free, so at most `Window + 1` items are held at a time.
+    * slot is free, so at most `window + 1` items are held at a time.
     * Two items with equal `key` never run at once, and run in input
     * order: the second waits for the first.
     *
     * The first failure found fails the call with the work's own
     * exception, not an `ExecutionException`; the window's threads are
     * interrupted and gone before this returns or throws. */
-  def foreach[T](items: Iterator[T])(key: T => Any)(work: T => Unit): Unit = {
-    val pool = Executors.newFixedThreadPool(Window, daemons)
+  def foreach[T](items: Iterator[T], window: Int = Window)(key: T => Any)
+                (work: T => Unit): Unit = {
+    val pool = Executors.newFixedThreadPool(window, daemons)
     try {
       val done = new ExecutorCompletionService[Any](pool)
       // the latest submitted item per key, until it is reaped
@@ -64,7 +65,7 @@ private[graft] object InFlight {
       items.foreach { item =>
         val k = key(item)
         latest.get(k).foreach(await)
-        while (pending >= Window) reap()
+        while (pending >= window) reap()
         latest(k) = done.submit { () => work(item); k }
         pending += 1
       }

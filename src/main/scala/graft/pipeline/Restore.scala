@@ -14,7 +14,7 @@ import org.apache.spark.sql.DataFrame
   * Spark shape: the data plane is `foreachPartition` — every partition
   * drains independently on its executor, so restore throughput scales
   * with the cluster, not with one PHP process. Inside a task, up to
-  * [[InFlight.Window]] paths drain at once, so a task's wall time is
+  * [[taskWindow]] paths drain at once, so a task's wall time is
   * not the sum of its PATCH round trips. The adaptive batching logic
   * is preserved verbatim per path against a pluggable [[KVSink]] (HTTP
   * in production, in-memory in tests — no network in CI, SURVEY.md §7).
@@ -25,7 +25,7 @@ object Restore {
     * (RestoreProcessor.php:80). Returns true on success. Implementations
     * must be idempotent — the drain loop may retry written keys.
     *
-    * Thread safety: [[restore]] drains up to [[InFlight.Window]] paths
+    * Thread safety: [[restore]] drains up to [[taskWindow]] paths
     * of one task at once, so `update` may be called concurrently on one
     * instance for DISTINCT paths. Calls for one path never overlap: a
     * path is drained by one thread at a time, in input order. */
@@ -94,9 +94,20 @@ object Restore {
     calls
   }
 
+  /** PATCHes one restore task keeps in flight at most. */
+  val MaxWindow = 64
+
+  /** A restore task's window: [[InFlight.Window]] for each task slot
+    * the drain's `partitions` leave to it, capped at [[MaxWindow]]. A
+    * backup of fewer files than slots then keeps about as many PATCHes
+    * in flight as one of a file per slot. */
+  private[graft] def taskWindow(slots: Int, partitions: Int): Int =
+    math.min(MaxWindow,
+      InFlight.Window * math.max(1, slots / math.max(1, partitions)))
+
   /** Restore a backup rows DataFrame: partitions drain concurrently,
     * grouped by path within each partition, and each task keeps up to
-    * [[InFlight.Window]] paths draining at once. Full-backup writes at
+    * [[taskWindow]] paths draining at once. Full-backup writes at
     * distinct paths commute (a node is either a leaf or a parent, never
     * both), so the final state does not depend on the order paths
     * finish in.
@@ -104,10 +115,10 @@ object Restore {
     * Memory contract: the backup artifact is range-partitioned AND
     * sorted by (path, key) within partitions (Export.writeBackup), so a
     * path's rows are a contiguous run — the task reads the iterator run
-    * by run and holds at most `InFlight.Window + 1` paths' keys at a
-    * time: the paths draining plus the one waiting for a free slot.
-    * Executor memory is bounded by the largest paths, not the partition
-    * (a 128 MB partition of many small paths restores in page-sized
+    * by run and holds at most `window + 1` paths' keys at a time: the
+    * paths draining plus the one waiting for a free slot. Executor
+    * memory is bounded by the largest paths, not the partition (a
+    * 128 MB partition of many small paths restores in page-sized
     * working sets). Unsorted input still restores correctly: each
     * contiguous run of a path drains as its own idempotent batch
     * sequence after the path's earlier runs have finished (PATCH
@@ -115,22 +126,27 @@ object Restore {
     *
     * One task drains each scan partition, and a small file is never
     * split between two, so the backup's file count caps the restore's
-    * tasks; [[Export.writeBackup]] sizes the files by bytes. A backup
-    * below AQE's minimum partition size (1 MB by default) is one file,
-    * so its restore is one task with [[InFlight.Window]] PATCHes in
-    * flight, not one window per file, and takes about PATCHes x round
-    * trip / `Window`. Against a sink that waits 20 ms per PATCH and
-    * serves every one at once (`graft.RestoreLatency` in the tests,
-    * local[8]), 14,000 PATCHes (56,000 edges, 0.8 MB stored, one file)
-    * took 35.8 s, against 4.7 s for the same rows in 8 files. A backup
-    * of a few MB has fewer files than task slots and pays part of that;
-    * larger backups keep one task per file. It is still `Window` times
-    * the reference's serial replay.
+    * tasks; [[Export.writeBackup]] sizes the files by bytes, and a
+    * backup below AQE's minimum partition size (1 MB by default) is one
+    * file. So the window follows the task slots
+    * (`defaultParallelism`), not the file count: each task keeps
+    * `Window × max(1, slots / partitions)` PATCHes in flight, at most
+    * [[MaxWindow]]. The partition count comes from the RDD that drains
+    * (`Dataset.rdd` is the RDD `foreachPartition` runs), so reading it
+    * adds no job. Against a sink that waits 20 ms per PATCH and serves
+    * every one at once (`graft.RestoreLatency` in the tests, local[8],
+    * 4 vCPU), 14,000 PATCHes (56,000 edges, 0.8 MB stored, one file)
+    * took 4.6 s with 64 in flight, as long as the same rows in 8 files;
+    * one window of 8 had taken 35.6 s. It is still the window times the
+    * reference's serial replay.
     *
     * `maxStalled` and `sleep` are passed to every [[drainPath]]. */
   def restore(rows: DataFrame, sink: KVSink, maxStalled: Int = 64,
               sleep: Long => Unit = Thread.sleep): Unit = {
-    rows.select("path", "key", "value_json").foreachPartition {
+    val scan = rows.select("path", "key", "value_json")
+    val window = taskWindow(rows.sparkSession.sparkContext.defaultParallelism,
+      scan.rdd.getNumPartitions)
+    scan.foreachPartition {
       it: Iterator[org.apache.spark.sql.Row] =>
         val edges = it.map(r => (r.getString(0), r.getString(1), r.getString(2)))
           .buffered
@@ -146,7 +162,7 @@ object Restore {
             (path, run.result())
           }
         }
-        InFlight.foreach(runs)(_._1) {
+        InFlight.foreach(runs, window)(_._1) {
           case (path, data) => drainPath(sink, path, data, maxStalled, sleep)
         }
     }

@@ -820,10 +820,11 @@ class LiveSpec extends SparkSuite {
   }
 
   test("one-task restores of 120 paths reuse at most Window + 2 sockets") {
-    // each restore keeps InFlight.Window PATCHes in flight, and all its
-    // sockets go idle together when its task ends; a client that keeps
-    // at most 5 idle sockets per host (HttpURLConnection's default)
-    // opens new ones for the next restore
+    // each restore keeps its task's window of PATCHes in flight (one
+    // partition on all the test session's slots: Restore.taskWindow's
+    // cap), and all its sockets go idle together when its task ends; a
+    // client that keeps at most 5 idle sockets per host
+    // (HttpURLConnection's default) opens new ones for the next restore
     val stub = new FirebaseStub()
     try {
       val sp = spark; import sp.implicits._
@@ -836,7 +837,8 @@ class LiveSpec extends SparkSuite {
         TreeCodec.assemble(rows.map { case (p, k, v) => TreeCodec.Edge(p, k, v) })))
       val ports = stub.remotePorts
       assert(ports.size == 240)
-      assert(ports.distinct.size <= graft.pipeline.InFlight.Window + 2,
+      val window = Restore.taskWindow(spark.sparkContext.defaultParallelism, 1)
+      assert(ports.distinct.size <= window + 2,
         s"${ports.distinct.size} sockets for ${ports.size} PATCHes")
     } finally stub.stop()
   }

@@ -10,7 +10,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
@@ -323,11 +323,15 @@ class PipelineSpec extends SparkSuite {
       .map(r => ((r.getString(0), r.getString(1)), r.getString(2))).toMap
     assert(sink.store.asScala.toMap == expected)
 
-    // manifest accounts for every path
-    val mf = Export.manifest(back).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(mf.values.sum == rows.count())
-    assert(mf.keySet == expected.keySet.map(_._1))
+    // the manifest's row counts account for every row written
+    assert(manifestOf(dir).map(_.get("n_keys").asLong).sum == rows.count())
+  }
+
+  /** The lines of `dir`'s manifest, `manifest/files.json`, as written. */
+  private def manifestOf(dir: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    Files.readAllLines(Paths.get(dir, "manifest", "files.json")).asScala.toSeq
+      .map(mapper.readTree)
   }
 
   // --- the backup artifact: files sized by bytes, read by schema ------
@@ -352,9 +356,10 @@ class PipelineSpec extends SparkSuite {
   /** Writes `layoutRows` under `session` and checks the layout law: the
     * part files, read one at a time in name order, are in global
     * (path, key) order under Spark's string order; the backup reads
-    * back as the input rows and restores to them; the manifest is the
-    * manifest of the rows read back. Returns each file's paths in name
-    * order. */
+    * back as the input rows and restores to them; the manifest lists
+    * exactly the part files, in name order, each with its length, its
+    * row count and its first and last path. Returns each file's paths
+    * in name order. */
   private def checkLayout(session: SparkSession, name: String): Seq[Set[String]] = {
     import session.implicits._
     val dir = Files.createTempDirectory("graft_layout").toString
@@ -377,13 +382,24 @@ class PipelineSpec extends SparkSuite {
     Restore.restore(back, RegistrySink(name))
     assert(sink.store.asScala.toMap ==
       layoutRows.map { case (p, k, v) => (p, k) -> v }.toMap)
-    def manifestRows(df: org.apache.spark.sql.DataFrame) =
-      df.select("path", "n_keys", "min_key", "max_key").collect().toSet
-        .map((r: org.apache.spark.sql.Row) =>
-          (r.getString(0), r.getLong(1), r.getString(2), r.getString(3)))
-    assert(manifestRows(session.read.json(s"$dir/manifest")) ==
-      manifestRows(Export.manifest(back)))
+    val mf = manifestOf(dir)
+    assert(mf.map(_.get("file").asText) == parts.map(_.getName))
+    for (((line, file), rows) <- mf.zip(parts).zip(perFile)) {
+      val f = file.getName
+      assert(line.get("bytes").asLong == file.length, f)
+      assert(line.get("n_keys").asLong == rows.size, f)
+      assert(line.get("min_path").asText == rows.head._1, f)
+      assert(line.get("max_path").asText == rows.last._1, f)
+    }
     perFile.map(_.map(_._1).toSet)
+  }
+
+  /** A session whose range shuffle writes 5 ranges, unmerged. */
+  private lazy val fiveRanges: SparkSession = {
+    val ranged = spark.newSession()
+    ranged.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    ranged.conf.set("spark.sql.shuffle.partitions", "5")
+    ranged
   }
 
   test("backup layout: byte-sized files hold contiguous key ranges in global order") {
@@ -391,10 +407,7 @@ class PipelineSpec extends SparkSuite {
     assert(checkLayout(spark, "layout-aqe").size == 1)
     // without merging, 5 ranges: several files, and the 3,000-key path
     // split across them
-    val ranged = spark.newSession()
-    ranged.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    ranged.conf.set("spark.sql.shuffle.partitions", "5")
-    val files = checkLayout(ranged, "layout-ranged")
+    val files = checkLayout(fiveRanges, "layout-ranged")
     assert(files.size > 1, s"${files.size} part files")
     assert(files.count(_.contains("/wide")) > 1, "no path split across files")
   }
@@ -441,6 +454,76 @@ class PipelineSpec extends SparkSuite {
     Files.createFile(empty.resolve("rows/_SUCCESS"))
     val e = intercept[Exception](Export.readBackup(spark, empty.toString))
     assert(e.getMessage.contains(empty.toString), e.getMessage)
+  }
+
+  /** `layoutRows` written as 5 part files; the backup's directory and
+    * its part files in name order. */
+  private def fiveFileBackup(): (String, Seq[File]) = {
+    val ranged = fiveRanges; import ranged.implicits._
+    val dir = Files.createTempDirectory("graft_checked").toString
+    Export.writeBackup(layoutRows.toDF("path", "key", "value_json"), dir)
+    val parts = new File(s"$dir/rows").listFiles().toSeq
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    assert(parts.size == 5, s"${parts.size} part files")
+    (dir, parts)
+  }
+
+  test("readBackup refuses a lost, extra or resized part file, and a backup with no file list") {
+    def refused(dir: String): String =
+      intercept[IllegalArgumentException](Export.readBackup(spark, dir)).getMessage
+
+    val (whole, _) = fiveFileBackup()
+    assert(Export.readBackup(spark, whole).count() == layoutRows.size)
+
+    val (lost, lostParts) = fiveFileBackup()
+    Files.delete(lostParts(2).toPath)
+    val m1 = refused(lost)
+    assert(m1.contains(lostParts(2).getName) && m1.contains(lost), m1)
+
+    val (extra, extraParts) = fiveFileBackup()
+    val copy = extraParts(1).toPath.resolveSibling("part-00099-extra.zstd.parquet")
+    Files.copy(extraParts(1).toPath, copy)
+    val m2 = refused(extra)
+    assert(m2.contains(copy.getFileName.toString), m2)
+
+    val (resized, resizedParts) = fiveFileBackup()
+    val ch = java.nio.channels.FileChannel.open(resizedParts(4).toPath,
+      StandardOpenOption.WRITE)
+    try ch.truncate(ch.size - 16) finally ch.close()
+    val m3 = refused(resized)
+    assert(m3.contains(resizedParts(4).getName), m3)
+
+    // a backup whose manifest is one JSON row per path, as written
+    // before the manifest listed the files, has no file list
+    val (old, _) = fiveFileBackup()
+    Files.delete(Paths.get(old, "manifest", "files.json"))
+    Files.write(Paths.get(old, "manifest", "part-00000.json"),
+      """{"path":"/t1","n_keys":3,"min_key":"a","max_key":"c"}""".getBytes("UTF-8"))
+    val m4 = refused(old)
+    assert(m4.contains("files.json") && m4.contains(old), m4)
+  }
+
+  test("job budget: writeBackup runs at most 4 jobs, diffBackups' eager part at most 3") {
+    val sp = spark; import sp.implicits._
+    val dirA = Files.createTempDirectory("graft_budget_a").toString
+    val dirB = Files.createTempDirectory("graft_budget_b").toString
+    val rows = layoutRows.toDF("path", "key", "value_json").localCheckpoint()
+    assert(jobsOf(Export.writeBackup(rows, dirA)) <= 4)
+    val changed = layoutRows.zipWithIndex.map { case ((p, k, v), i) =>
+      (p, k, if (i % 97 == 0) "\"changed\"" else v) }
+    Export.writeBackup(changed.toDF("path", "key", "value_json"), dirB)
+    val (a, b) = (Export.readBackup(spark, dirA), Export.readBackup(spark, dirB))
+    var diff: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { diff = Export.diffBackups(a, b) } <= 3)
+    val n = (layoutRows.size + 96) / 97
+    assert(diff.count() == n)
+    // the observed count decides the broadcast gate: at the cap the
+    // keyset is hinted, one below it is not
+    def hinted(cap: Long) = Export.diffBackups(a, b, broadcastMaxKeys = cap)
+      .queryExecution.analyzed.collect {
+        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+      }.nonEmpty
+    assert(hinted(n.toLong) && !hinted(n - 1L))
   }
 
 }

@@ -13,8 +13,10 @@ import java.util.concurrent.atomic.AtomicLong
   * show this). The same rows, `edges` leaves four to a path, are
   * written twice: by [[Export.writeBackup]], whose files AQE sizes by
   * bytes, and as 8 fixed range partitions, the layout writeBackup wrote
-  * while it took a partition count. Each backup is restored into a sink
-  * that waits `ms` per PATCH and accepts it.
+  * while it took a partition count (as bare Parquet files: it has no
+  * manifest, so both layouts are read with [[Export.BackupSchema]]
+  * directly). Each backup is restored into a sink that waits `ms` per
+  * PATCH and accepts it.
   *
   * {{{
   * sbt "Test/runMain graft.RestoreLatency [edges] [ms,ms,...] [cpus]"
@@ -51,7 +53,7 @@ object RestoreLatency {
       .write.mode(SaveMode.Overwrite).option("compression", "zstd")
       .parquet(s"$fixed/rows")
     for (ms <- latencies; (layout, dir) <- Seq("fixed 8" -> fixed, "by bytes" -> bytes)) {
-      val back = Export.readBackup(spark, dir)
+      val back = spark.read.schema(Export.BackupSchema).parquet(s"$dir/rows")
       patches.set(0)
       val t0 = System.nanoTime()
       Restore.restore(back, SlowSink(ms))
